@@ -27,9 +27,12 @@ import graft.streaming.IncrementalIngest
   * bucket), never a table rewrite, and replaying a failed run
   * converges to the same bytes (the reference gets the same property
   * from Cassandra's row-level INSERT upserts). The two exceptions are
-  * hash-distributed tables with no block locality (the prefix index —
-  * its p2 dirs are touched by every batch — and the day-keyed rates),
-  * which are rewritten from everything up to `end`; a deployment that
+  * tables with no block locality, the hash prefix index (sorted by
+  * hash, so any batch lands all over it) and the day-keyed rates.
+  * They are rewritten from everything up to `end`. The index is one
+  * globally sorted run of files ([[ChainStore.writePrefixIndex]]), so
+  * the rewrite costs per row, not per directory, and its overwrite
+  * replaces an older layout of the index whole. A deployment that
   * needs ingest-cost index maintenance uses the epoch-keyed streaming
   * store ([[IncrementalIngest.ingestToStore]]) instead.
   */
@@ -187,7 +190,7 @@ object Export {
             col("block_id") <= end), args.out)
       }
       // the hash index rides with "tx", like the reference's per-tx
-      // INSERT; its p2 partitioning has no block locality, so it is
+      // INSERT; sorted by hash, it has no block locality, so it is
       // rewritten from everything up to `end` (see scaladoc). BIP30:
       // a duplicated hash must resolve to its NEWEST tx
       // (upsert_btc_duplicate_hashes, blocksci_export.py:469-476) —

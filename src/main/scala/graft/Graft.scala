@@ -74,15 +74,17 @@ object Graft {
     GraftCatalog.register(s, dir)
 
   /** Incremental ingest, batch catch-up form (AvailableNow): resume
-    * above `watermark` into the epoch-keyed store at `out`; refuses a
-    * resume below the sink max (see IncrementalIngest.resumeGuard). */
+    * above `watermark` into the epoch-keyed store at `out`, landing
+    * above the store's newest epoch; refuses a resume below the sink
+    * max (see IncrementalIngest.resumeGuard). */
   def ingest(s: SparkSession, dir: String, out: String, watermark: Long,
       tipMargin: Long = 0L): Unit =
     streaming.IncrementalIngest.ingestToStore(s, dir, out, watermark,
       tipMargin)
 
   /** The same ingest left running (processing-time trigger) — returns
-    * the live handle; new source files land each interval. */
+    * the live handle; new source files land each interval, above the
+    * store's newest epoch. */
   def ingestLive(s: SparkSession, dir: String, out: String,
       watermark: Long, tipMargin: Long = 0L)
       : org.apache.spark.sql.streaming.StreamingQuery =

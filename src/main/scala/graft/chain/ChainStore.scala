@@ -274,26 +274,30 @@ object ChainStore extends ChainSink {
       .parquet(s"$out/block")
   }
 
-  /** hash→id index: the reference fans out to 16^5 prefix partitions
-    * (schema.cql:36-41); as directories that would be 1M tiny dirs, so we
-    * bucket dirs on the first 2 hex chars (256 dirs) and keep the full
-    * 5-char prefix as a sorted column — same pruning, saner file counts. */
-  def writePrefixIndex(tx: DataFrame, out: String): Unit = {
-    dynamicOverwrite(tx.sparkSession)
+  /** hash→id index (schema.cql:36-41). The reference fans out to 16^5
+    * prefix partitions; as directories that would be 1M tiny dirs, and
+    * any fixed directory fan-out makes every write cost per directory,
+    * not per row — the index is rebuilt on each `--continue`. So the
+    * table is ONE globally sorted run of files: a range-partitioned
+    * `orderBy(tx_prefix, tx_hash)` whose file count AQE's partition
+    * coalescing sets from the data size, each file covering a disjoint,
+    * contiguous prefix range. A point lookup prunes on the parquet
+    * footers' min/max statistics of the sorted tx_prefix column (whole
+    * files, then row groups). The stored columns are exactly
+    * [[Schemas.transactionByTxPrefix]]; the plain overwrite (no
+    * partition columns, so never a dynamic one) replaces an index of
+    * any earlier layout whole. */
+  def writePrefixIndex(tx: DataFrame, out: String): Unit =
     tx.select(
-      substring(col("tx_hash"), 1, 2).as("p2"),
       substring(col("tx_hash"), 1, Chain.PrefixLen).as("tx_prefix"),
       col("tx_hash"),
       // storage-fidelity blob form (schema.cql:38): 32 bytes vs 64 hex
       // chars — halves the hash storage at 100 TB
       unhex(col("tx_hash")).as("tx_hash_bin"),
       col("tx_id"))
-      .repartition(col("p2"))
-      .sortWithinPartitions(col("tx_prefix"), col("tx_hash"))
+      .orderBy(col("tx_prefix"), col("tx_hash"))
       .write.mode("overwrite")
-      .partitionBy("p2")
       .parquet(s"$out/transaction_by_tx_prefix")
-  }
 
   /** block_transactions table: same layout as block (bucketed dirs,
     * block_id DESC inside, schema.cql:51-56). */
@@ -322,18 +326,19 @@ object ChainStore extends ChainSink {
     conf.coalesce(1).write.mode("overwrite")
       .parquet(s"$out/configuration")
 
-  /** Point lookup by full hash: prunes to one p2 directory, row-group
-    * skips on the sorted tx_prefix column, final equality on the binary
-    * hash (F1's unhex direction in the lookup path). Indexes written
-    * before the binary column existed fall back to hex-string equality —
-    * same pruning, same result, 2× the hash-column bytes scanned. */
+  /** Point lookup by full hash: the tx_prefix predicate skips every
+    * file and row group whose footer min/max range misses the prefix,
+    * and the final equality is on the binary hash (F1's unhex direction
+    * in the lookup path). Indexes written before the binary column
+    * existed fall back to hex-string equality — same pruning, 2× the
+    * hash-column bytes scanned. */
   def lookupByHash(s: SparkSession, out: String, hashHex: String): DataFrame = {
     val idx = s.read.parquet(s"$out/transaction_by_tx_prefix")
     val finalEq =
       if (idx.schema.fieldNames.contains("tx_hash_bin"))
         col("tx_hash_bin") === unhex(lit(hashHex))
       else col("tx_hash") === lit(hashHex)
-    idx.filter(col("p2") === hashHex.substring(0, 2) &&
+    idx.filter(
       col("tx_prefix") === hashHex.substring(0, Chain.PrefixLen) && finalEq)
   }
 

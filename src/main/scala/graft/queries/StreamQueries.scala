@@ -188,14 +188,11 @@ object StreamQueries {
       IncrementalIngest.ingestToStore(s, dir, out, Watermark,
         tipMargin = SecondRunDepth, checkpoint = Some(s"$out-ckpt"))
       val run1Max = s.read.parquet(s"$out/transaction")
-        .agg(max(col("block_id")), max(col("ingest_epoch").cast("long")))
-        .head()
-      // run 2: resume at the sink max, land the top blocks in an epoch
-      // namespace above run 1's (a fresh checkpoint restarts batch
-      // numbering, so the base offset keeps the runs' partitions apart)
+        .agg(max(col("block_id"))).head().getLong(0)
+      // run 2: resume at the sink max; its new checkpoint lands the top
+      // blocks in an epoch namespace above run 1's
       IncrementalIngest.ingestToStore(s, dir, out,
-        watermark = run1Max.getLong(0), checkpoint = Some(s"$out-ckpt2"),
-        epochBase = run1Max.getLong(1) + 1L)
+        watermark = run1Max, checkpoint = Some(s"$out-ckpt2"))
       val sinkMax = graft.chain.ChainStore.readTransactions(s, out)
         .agg(max(col("block_id"))).head().getLong(0)
       // ReorgDepth > SecondRunDepth: the orphaned range crosses the

@@ -33,17 +33,22 @@ object IncrementalIngest {
 
   /** ST2/ST3 resume precondition: when the target store already holds
     * rows, a new run must resume at or above the store's newest block.
-    * A fresh run's epoch numbering restarts at 0, so re-ingesting a
-    * range the store already holds would overwrite only the epoch
-    * partitions the new run happens to produce and leave any other
-    * stale epochs in place — duplicate rows instead of convergence.
+    * A fresh run lands in new epochs above the store's newest
+    * ([[landingBase]]), so re-ingesting a range the store already holds
+    * would keep the old epochs' copies of its rows next to the new ones
+    * — duplicate rows instead of convergence.
     * Full rebuild therefore requires an empty store (delete it first);
     * in-place, incremental resume is the supported path — the
     * reference's own "--continue resumes at sink max + 1" contract
     * (blocksci_export.py:489-505). Replays WITHIN one checkpoint are
-    * unaffected (same epoch ids → same partitions → idempotent). */
-  def resumeGuard(s: SparkSession, out: String, watermark: Long): Unit =
-    if (new java.io.File(s"$out/transaction").exists()) {
+    * unaffected (same epoch ids → same partitions → idempotent).
+    *
+    * Returns the store's newest `ingest_epoch` (None for an absent or
+    * empty store), taken in the same aggregate as the sink max. */
+  def resumeGuard(s: SparkSession, out: String,
+      watermark: Long): Option[Long] =
+    if (!new java.io.File(s"$out/transaction").exists()) None
+    else {
       val existing =
         try Some(s.read.parquet(s"$out/transaction"))
         catch {
@@ -65,18 +70,54 @@ object IncrementalIngest {
             "partition discovery — use a separate store directory, or " +
             "delete this one for a full streaming rebuild")
       }
-      val sinkMax = existing.flatMap { df =>
-        val r = df.agg(max(col("block_id"))).head()
-        if (r.isNullAt(0)) None else Some(r.getLong(0))
-      }
-      sinkMax.foreach { mx =>
+      val maxes = existing.map(_.agg(max(col("block_id")),
+        max(col("ingest_epoch").cast("long"))).head())
+      def maxOf(i: Int) = maxes.filterNot(_.isNullAt(i)).map(_.getLong(i))
+      maxOf(0).foreach { mx =>
         require(watermark >= mx,
           s"store at $out holds blocks up to $mx but the resume " +
             s"watermark is $watermark; resuming below the sink max " +
             "would duplicate rows across runs — resume at/above it, " +
             "or delete the store for a full rebuild")
       }
+      maxOf(1)
     }
+
+  /** Where a checkpoint records the epoch base it was started with. */
+  private val EpochBaseFile = "_graft_epoch_base"
+
+  /** The epoch base of a streaming run into the epoch-keyed store at
+    * `out`: its batch `b` lands in epoch `base + b`. Runs [[resumeGuard]]
+    * first, whose aggregate also yields the store's newest epoch.
+    *
+    * A new checkpoint numbers its batches from 0 again, so the run lands
+    * above every epoch already in the store, at `max(epochBase, newest +
+    * 1)`; otherwise its batches would dynamic-overwrite an earlier run's
+    * (tx_id_group, ingest_epoch) partitions and lose their rows. The base
+    * is recorded in the checkpoint before the query starts, and a run
+    * that resumes the checkpoint takes it from there, so a replayed
+    * batch rewrites exactly its own partitions (idempotent). A
+    * checkpoint that already holds an offset log but no record keeps
+    * `epochBase` as given. */
+  private def landingBase(s: SparkSession, out: String, watermark: Long,
+      ckpt: String, epochBase: Long): Long = {
+    val newest = resumeGuard(s, out, watermark)
+    val root = new org.apache.hadoop.fs.Path(ckpt)
+    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val record = new org.apache.hadoop.fs.Path(root, EpochBaseFile)
+    if (fs.exists(record)) {
+      val in = fs.open(record)
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
+      finally in.close()
+    } else if (fs.exists(new org.apache.hadoop.fs.Path(root, "offsets")))
+      epochBase
+    else {
+      val base = math.max(epochBase, newest.fold(0L)(_ + 1L))
+      val o = fs.create(record, false)
+      try o.write(base.toString.getBytes("UTF-8")) finally o.close()
+      base
+    }
+  }
 
   /** Run the incremental ingest synchronously: stream the orders source,
     * derive tx rows with the SAME projection as the batch path, keep only
@@ -135,37 +176,36 @@ object IncrementalIngest {
     * key, a bucket whose rows span several micro-batches keeps every
     * batch's rows (a bucket-only overwrite would wipe the earlier ones).
     * `maxFilesPerTrigger` caps epoch size — at 100 TB an AvailableNow
-    * catch-up run must bound its epochs or the first one is the backlog. */
+    * catch-up run must bound its epochs or the first one is the backlog.
+    *
+    * Epoch ids land at `base + batch id`, `base` as [[landingBase]]
+    * picks it (at least `epochBase`); returns `base`. */
   def ingestToStore(s: SparkSession, dir: String, out: String,
       watermark: Long, tipMargin: Long = 0L,
       maxFilesPerTrigger: Option[Int] = None,
       checkpoint: Option[String] = None,
-      epochBase: Long = 0L): Unit = {
-    resumeGuard(s, out, watermark)
+      epochBase: Long = 0L): Long = {
+    val name = s"ing_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    val ckpt = checkpoint.getOrElse(s"target/tmp/ckpt_$name")
+    val base = landingBase(s, out, watermark, ckpt, epochBase)
     val schema = s.read.parquet(s"$dir/orders.parquet").schema
     val reader = s.readStream.schema(schema)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     val stream = reader.parquet(s"$dir/orders*.parquet")
     val tx = Chain.txProjection(stream).filter(col("block_id") > watermark)
     val tip = tipFrame(s, dir)
-    val name = s"ing_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val ckpt = checkpoint.getOrElse(s"target/tmp/ckpt_$name")
     val q = tx.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epoch: Long) =>
         // ST5 inside the epoch: the margin cut is a broadcast join on the
         // (static) batch frame — the epoch stays fully distributed.
-        // epochBase offsets the landed epoch ids so a RECOVERY run (its
-        // own checkpoint restarts batch numbering at 0) lands in fresh
-        // partitions instead of dynamic-overwriting a prior run's epoch-0
-        // sub-partitions; within one checkpoint, replays of batch `epoch`
-        // still rewrite exactly (bucket, epochBase+epoch) — idempotent.
         graft.chain.ChainStore.writeTransactionsEpoch(
-          belowTip(batch.toDF(), tip, tipMargin), out, epochBase + epoch)
+          belowTip(batch.toDF(), tip, tipMargin), out, base + epoch)
       }
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
       .start()
     try { q.processAllAvailable() } finally { q.stop() }
+    base
   }
 
   /** Staging-complete marker for [[rollbackAbove]]'s swap protocol. */
@@ -279,19 +319,8 @@ object IncrementalIngest {
       newTip: Long, checkpoint: Option[String] = None): Long = {
     rollbackAbove(s, out, newTip)
     // the deepest reorg (fork below every landed block) leaves an EMPTY
-    // store — the read then fails schema inference, which means base 0,
-    // the same empty-store handling resumeGuard uses
-    val base =
-      try {
-        val r = s.read.parquet(s"$out/transaction")
-          .agg(max(col("ingest_epoch").cast("long"))).head()
-        if (r.isNullAt(0)) 0L else r.getLong(0) + 1L
-      } catch {
-        case _: org.apache.spark.sql.AnalysisException => 0L
-      }
-    ingestToStore(s, dir, out, watermark = newTip,
-      checkpoint = checkpoint, epochBase = base)
-    base
+    // store, which resumeGuard reports as no epoch: base 0
+    ingestToStore(s, dir, out, watermark = newTip, checkpoint = checkpoint)
   }
 
   /** Stateful streaming dedup (W2 in motion): the source re-delivers
@@ -303,17 +332,18 @@ object IncrementalIngest {
     * deployment uses [[dedupedIngestBounded]]. */
   def dedupedIngest(s: SparkSession, dir: String, out: String,
       watermark: Long, checkpoint: Option[String] = None): Unit = {
-    resumeGuard(s, out, watermark)
+    val name = s"dd_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    val ckpt = checkpoint.getOrElse(s"target/tmp/ckpt_$name")
+    val base = landingBase(s, out, watermark, ckpt, 0L)
     val schema = s.read.parquet(s"$dir/orders.parquet").schema
     val stream = s.readStream.schema(schema).parquet(s"$dir/orders*.parquet")
     val tx = Chain.txProjection(stream).filter(col("block_id") > watermark)
     val replayed = tx.unionByName(tx.filter(col("tx_id") % 97 === 0))
-    val name = s"dd_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val ckpt = checkpoint.getOrElse(s"target/tmp/ckpt_$name")
     val q = replayed.dropDuplicates("tx_hash")
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        graft.chain.ChainStore.writeTransactionsEpoch(batch.toDF(), out, epoch)
+        graft.chain.ChainStore.writeTransactionsEpoch(batch.toDF(), out,
+          base + epoch)
       }
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
@@ -335,15 +365,15 @@ object IncrementalIngest {
       watermark: Long, delay: String = "1 hour",
       maxFilesPerTrigger: Option[Int] = None,
       checkpoint: Option[String] = None): Unit = {
-    resumeGuard(s, out, watermark)
+    val name = s"ddb_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    val ckpt = checkpoint.getOrElse(s"target/tmp/ckpt_$name")
+    val base = landingBase(s, out, watermark, ckpt, 0L)
     val schema = s.read.parquet(s"$dir/orders.parquet").schema
     val reader = s.readStream.schema(schema)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     val stream = reader.parquet(s"$dir/orders*.parquet")
     val tx = Chain.txProjection(stream).filter(col("block_id") > watermark)
     val replayed = tx.unionByName(tx.filter(col("tx_id") % 97 === 0))
-    val name = s"ddb_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val ckpt = checkpoint.getOrElse(s"target/tmp/ckpt_$name")
     val q = replayed
       .withColumn("tsc", timestamp_seconds(col("ts")))
       .withWatermark("tsc", delay)
@@ -351,7 +381,7 @@ object IncrementalIngest {
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epoch: Long) =>
         graft.chain.ChainStore.writeTransactionsEpoch(
-          batch.drop("tsc"), out, epoch)
+          batch.drop("tsc"), out, base + epoch)
       }
       .option("checkpointLocation", ckpt)
       .trigger(Trigger.AvailableNow())
@@ -368,20 +398,21 @@ object IncrementalIngest {
   def ingestContinuously(s: SparkSession, dir: String, out: String,
       watermark: Long, intervalMs: Long = 500L, tipMargin: Long = 0L)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    resumeGuard(s, out, watermark)
+    val name = s"cont_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    val ckpt = s"target/tmp/ckpt_$name"
+    val base = landingBase(s, out, watermark, ckpt, 0L)
     val schema = s.read.parquet(s"$dir/orders.parquet").schema
     val stream = s.readStream.schema(schema).parquet(s"$dir/orders*.parquet")
     val tx = Chain.txProjection(stream).filter(col("block_id") > watermark)
     val tip = tipFrame(s, dir)
-    val name = s"cont_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     tx.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epoch: Long) =>
         // same ST5 margin cut as the batch catch-up path — switching
         // trigger modes must not silently widen what lands in the store
         graft.chain.ChainStore.writeTransactionsEpoch(
-          belowTip(batch.toDF(), tip, tipMargin), out, epoch)
+          belowTip(batch.toDF(), tip, tipMargin), out, base + epoch)
       }
-      .option("checkpointLocation", s"target/tmp/ckpt_$name")
+      .option("checkpointLocation", ckpt)
       .trigger(Trigger.ProcessingTime(intervalMs))
       .start()
   }

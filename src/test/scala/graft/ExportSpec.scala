@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.chain.Chain
@@ -9,12 +7,10 @@ import graft.chain.Chain
 /** The three export-CLI lifecycles (reference §3.1-3.3:
   * blocksci_export.py full run / --continue / --info) driven against a
   * temp parquet store, plus the argument-surface contracts. */
-class ExportSpec extends SparkSpec {
+class ExportSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
-  private def tmpOut(): String =
-    Files.createTempDirectory(java.nio.file.Paths.get("target"), "export_")
-      .toString
+  private def tmpOut(): String = tempDir("export_")
 
   private val dir = sf("sf0.001")
   private lazy val tx = Chain.transactions(spark, dir)
@@ -56,6 +52,18 @@ class ExportSpec extends SparkSpec {
     assert(got.count() === tx.count())
     assert(got.select(sum("tx_id")).as[Long].head() ===
       tx.select(sum("tx_id")).as[Long].head())
+    // the rebuilt hash index has the declared columns and equals the
+    // one-shot export's, as row multisets
+    val oneShot = tmpOut()
+    Export.run(spark, Export.Args(config = dir, out = oneShot))
+    val idx = spark.read.parquet(s"$out/transaction_by_tx_prefix")
+    val idxOneShot = spark.read.parquet(s"$oneShot/transaction_by_tx_prefix")
+    assert(graft.chain.Schemas.conforms(idx.schema,
+      graft.chain.Schemas.transactionByTxPrefix), s"${idx.schema}")
+    assert(idx.count() === tx.count())
+    assert(idx.exceptAll(idxOneShot).isEmpty &&
+      idxOneShot.exceptAll(idx).isEmpty,
+      "index after --continue differs from the one-shot export's")
     // a third continue has nothing to do
     val r3 = Export.run(spark,
       Export.Args(config = dir, out = out, continueIngest = true))

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.{BeforeAndAfterAll, Suite}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session base for all suites (getOrCreate → one JVM-wide session). */
@@ -24,3 +25,20 @@ trait SparkSpec extends AnyFunSuite {
   * session-global checkpoint dir (MaterializeSpec, PrefixCarrySpec)
   * serialize on this lock so they never see each other's dir. */
 object CheckpointDirLock
+
+/** Temp directories under `target/` that the suite deletes in afterAll. */
+trait TempDirs extends BeforeAndAfterAll { this: Suite =>
+  private val created =
+    new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
+
+  def tempDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get("target"), prefix).toFile
+    created.add(d)
+    d.toString
+  }
+
+  override protected def afterAll(): Unit =
+    try created.forEach(graft.ops.Tiers.deleteRecursively(_))
+    finally super.afterAll()
+}

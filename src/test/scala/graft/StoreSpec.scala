@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
@@ -8,12 +8,10 @@ import graft.chain.{CassandraShapedSink, Chain, ChainSink, ChainStore, SinkConfi
 
 /** Sink-layer contract: roundtrip, idempotent re-write (ST3), pruned
   * point lookups. */
-class StoreSpec extends SparkSpec {
+class StoreSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
-  private lazy val out =
-    Files.createTempDirectory(java.nio.file.Paths.get("target"), "store_")
-      .toString
+  private lazy val out = tempDir("store_")
 
   test("transaction write/read roundtrip + idempotent overwrite") {
     val dir = sf("sf0.001")
@@ -31,8 +29,7 @@ class StoreSpec extends SparkSpec {
 
   test("compaction seals an epoch store: same rows, one file per bucket") {
     val dir = sf("sf0.001")
-    val cout = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "compact_").toString
+    val cout = tempDir("compact_")
     val tx = Chain.transactions(spark, dir)
     // two epochs land separately → every bucket holds ≥2 epoch subdirs
     ChainStore.writeTransactionsEpoch(tx.filter(col("tx_id") % 2 === 0), cout, 0L)
@@ -69,8 +66,7 @@ class StoreSpec extends SparkSpec {
 
   test("compaction recovers the store after a crash between swap renames") {
     val dir = sf("sf0.001")
-    val cout = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "crash_").toString
+    val cout = tempDir("crash_")
     val tx = Chain.transactions(spark, dir)
     ChainStore.writeTransactionsEpoch(tx, cout, 0L)
     // simulate dying between rename(live->old) and rename(staged->live):
@@ -86,8 +82,7 @@ class StoreSpec extends SparkSpec {
   test("history vacuum folds epochs below the floor; expired snapshots " +
       "refuse; retained snapshots are bit-identical") {
     val dir = sf("sf0.001")
-    val vout = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "vacuum_").toString
+    val vout = tempDir("vacuum_")
     val tx = Chain.transactions(spark, dir)
     ChainStore.writeTransactionsEpoch(tx.filter(col("tx_id") % 3 === 0), vout, 0L)
     ChainStore.writeTransactionsEpoch(tx.filter(col("tx_id") % 3 === 1), vout, 1L)
@@ -122,8 +117,7 @@ class StoreSpec extends SparkSpec {
   test("as-of below a never-vacuumed store's first epoch is a valid " +
       "empty snapshot, not an 'expired' error") {
     val dir = sf("sf0.001")
-    val nout = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "novac_").toString
+    val nout = tempDir("novac_")
     val tx = Chain.transactions(spark, dir)
     // epoch numbering starts at 1 — nothing was ever vacuumed
     ChainStore.writeTransactionsEpoch(tx, nout, 1L)
@@ -135,8 +129,7 @@ class StoreSpec extends SparkSpec {
 
   test("as-of read returns each epoch's snapshot and prunes partitions") {
     val dir = sf("sf0.001")
-    val tout = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "asof_").toString
+    val tout = tempDir("asof_")
     val tx = Chain.transactions(spark, dir)
     ChainStore.writeTransactionsEpoch(tx.filter(col("tx_id") % 3 === 0), tout, 0L)
     ChainStore.writeTransactionsEpoch(tx.filter(col("tx_id") % 3 === 1), tout, 1L)
@@ -207,12 +200,97 @@ class StoreSpec extends SparkSpec {
     val h = tx.filter(col("tx_id") === 42L).select("tx_hash").as[String].head()
     val got = ChainStore.lookupByHash(spark, out, h)
     assert(got.select("tx_id").as[Long].collect().toSeq === Seq(42L))
+    // the prefix predicate reaches the parquet scan, where the footers'
+    // min/max statistics of the sorted column skip files and row groups
+    val plan = got.queryExecution.executedPlan.toString
+    assert(plan.matches("(?s).*PushedFilters: \\[[^\\]]*tx_prefix.*"),
+      s"tx_prefix predicate not pushed to the scan:\n$plan")
+  }
+
+  /** Per-file (min, max) of a string column across its row groups, read
+    * from the parquet footers of `dir`'s data files. */
+  private def footerRanges(dir: String, column: String): Seq[(String, String)] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
+      .toSeq.flatMap { f =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf))
+        try {
+          val stats = reader.getFooter.getBlocks.asScala.toSeq.map { b =>
+            b.getColumns.asScala.find(_.getPath.toDotString == column).get
+              .getStatistics
+              .asInstanceOf[org.apache.parquet.column.statistics.BinaryStatistics]
+          }.filter(_.hasNonNullValue)
+          if (stats.isEmpty) None
+          else Some((stats.map(_.genericGetMin.toStringUsingUTF8).min,
+            stats.map(_.genericGetMax.toStringUsingUTF8).max))
+        } finally reader.close()
+      }.sortBy(_._1)
+  }
+
+  test("prefix index is one sorted run of files with the declared columns") {
+    val dir = sf("sf0.001")
+    def check(s: org.apache.spark.sql.SparkSession, minFiles: Int): Unit = {
+      val iout = tempDir("prefix_")
+      val tx = Chain.transactions(s, dir)
+      ChainStore.writePrefixIndex(tx, iout)
+      val path = s"$iout/transaction_by_tx_prefix"
+      // exactly the declared contract on disk: no partition column
+      val idx = s.read.parquet(path)
+      assert(graft.chain.Schemas.conforms(idx.schema,
+        graft.chain.Schemas.transactionByTxPrefix), s"${idx.schema}")
+      assert(!new java.io.File(path).listFiles().exists(_.isDirectory))
+      assert(idx.count() === tx.count())
+      // AQE sets the file count; each file covers a disjoint range
+      val nParts = s.conf.get("spark.sql.shuffle.partitions").toInt
+      val prefixes = footerRanges(path, "tx_prefix")
+      val hashes = footerRanges(path, "tx_hash")
+      assert(prefixes.size >= minFiles && prefixes.size <= nParts,
+        s"${prefixes.size} files for $nParts shuffle partitions")
+      // a prefix may straddle two files at their boundary; the hashes
+      // (the full sort key) may not
+      for (Seq((_, hi), (lo, _)) <- prefixes.sliding(2))
+        assert(hi <= lo, s"prefix ranges overlap: $prefixes")
+      for (Seq((_, hi), (lo, _)) <- hashes.sliding(2))
+        assert(hi < lo, s"hash ranges overlap: $hashes")
+    }
+    check(spark, minFiles = 1)
+    // a smaller coalescing floor lets AQE keep several ranges apart
+    val small = spark.newSession()
+    small.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize",
+      "1k")
+    check(small, minFiles = 2)
+  }
+
+  test("hash lookup on a legacy p2-partitioned index returns exactly the " +
+      "target, and a rewrite replaces that layout") {
+    val dir = sf("sf0.001")
+    val lout = tempDir("legacy_")
+    val tx = Chain.transactions(spark, dir)
+    // the layout indexes were written in before: one directory per first
+    // two hex chars of the hash, p2 as a partition column
+    tx.select(substring(col("tx_hash"), 1, 2).as("p2"),
+        substring(col("tx_hash"), 1, Chain.PrefixLen).as("tx_prefix"),
+        col("tx_hash"), unhex(col("tx_hash")).as("tx_hash_bin"),
+        col("tx_id"))
+      .repartition(col("p2"))
+      .sortWithinPartitions(col("tx_prefix"), col("tx_hash"))
+      .write.partitionBy("p2").parquet(s"$lout/transaction_by_tx_prefix")
+    val h = tx.filter(col("tx_id") === 42L).select("tx_hash").as[String].head()
+    val legacy = ChainStore.lookupByHash(spark, lout, h)
+    assert(legacy.select("tx_id").as[Long].collect().toSeq === Seq(42L))
+    // the plain overwrite leaves no p2 directory behind
+    ChainStore.writePrefixIndex(tx, lout)
+    assert(!new java.io.File(s"$lout/transaction_by_tx_prefix").listFiles()
+      .exists(_.isDirectory))
+    assert(ChainStore.lookupByHash(spark, lout, h).select("tx_id").as[Long]
+      .collect().toSeq === Seq(42L))
   }
 
   test("writeChain exports all tables through the sink trait") {
     val dir = sf("sf0.001")
-    val chainOut = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "chain_").toString
+    val chainOut = tempDir("chain_")
     ChainSink.writeChain(spark, dir, chainOut)
     val n = Chain.transactions(spark, dir).count()
     val nBlocks = Chain.blocks(spark, dir).count()

@@ -147,6 +147,71 @@ class StreamingSpec extends SparkSpec {
       Chain.txProjection(orders).agg(sum("tx_id")).as[Long].head())
   }
 
+  test("a resumed Graft.ingest lands above the first run's epochs") {
+    val dir = sf("sf0.001")
+    val out = tmpDir("resume_")
+    val derived = Chain.transactions(spark, dir)
+    val tip = derived.agg(max("block_id")).as[Long].head()
+    // head: every block up to the middle height; each run gets a fresh
+    // checkpoint, so both runs number their batches from 0 and every
+    // sf0.001 tx shares tx bucket 0
+    Graft.ingest(spark, dir, out, -1L, tipMargin = tip / 2)
+    val head = graft.chain.ChainStore.readTransactions(spark, out)
+    val headMax = head.agg(max("block_id")).as[Long].head()
+    assert(head.count() === derived.filter(col("block_id") <= headMax).count())
+    // tail: resumes at the sink max and must not overwrite the head
+    Graft.ingest(spark, dir, out, headMax)
+    val epochs = spark.read.parquet(s"$out/transaction")
+      .select(col("ingest_epoch").cast("long")).distinct().as[Long]
+      .collect().sorted.toSeq
+    assert(epochs.size >= 2 && epochs.head === 0L, s"epochs: $epochs")
+    val got = graft.chain.ChainStore.readTransactions(spark, out)
+      .select(derived.columns.toIndexedSeq.map(col): _*)
+    assert(got.count() === derived.count())
+    assert(got.exceptAll(derived).isEmpty && derived.exceptAll(got).isEmpty)
+  }
+
+  test("Graft.ingestLive after a catch-up Graft.ingest keeps every row") {
+    val dir = sf("sf0.001")
+    val out = tmpDir("live_")
+    val derived = Chain.transactions(spark, dir)
+    val tip = derived.agg(max("block_id")).as[Long].head()
+    // the catch-up run lands the head in epoch 0; the live query's own
+    // checkpoint numbers its batches from 0 again
+    Graft.ingest(spark, dir, out, -1L, tipMargin = tip / 2)
+    val headMax = graft.chain.ChainStore.readTransactions(spark, out)
+      .agg(max("block_id")).as[Long].head()
+    val q = Graft.ingestLive(spark, dir, out, headMax)
+    try q.processAllAvailable() finally q.stop()
+    val got = graft.chain.ChainStore.readTransactions(spark, out)
+      .select(derived.columns.toIndexedSeq.map(col): _*)
+    assert(got.count() === derived.count())
+    assert(got.exceptAll(derived).isEmpty && derived.exceptAll(got).isEmpty)
+  }
+
+  test("a resumed checkpoint keeps the epoch base it was started with") {
+    val dir = sf("sf0.001")
+    val out = tmpDir("ckbase_")
+    val ckpt = s"$out-ckpt"
+    val tx = Chain.transactions(spark, dir)
+    val tip = tx.agg(max("block_id")).as[Long].head()
+    graft.chain.ChainStore.writeTransactionsEpoch(
+      tx.filter(col("block_id") <= tip / 2), out, 0L)
+    // a new checkpoint lands above the store's newest epoch...
+    assert(IncrementalIngest.ingestToStore(spark, dir, out, tip / 2,
+      checkpoint = Some(ckpt)) === 1L)
+    // ...and keeps that base when resumed, whatever landed since
+    graft.chain.ChainStore.writeTransactionsEpoch(
+      tx.filter(col("block_id") === tip), out, 7L)
+    assert(IncrementalIngest.ingestToStore(spark, dir, out, tip,
+      checkpoint = Some(ckpt)) === 1L)
+    // a checkpoint started without the record keeps the given base
+    graft.ops.Tiers.deleteRecursively(
+      new java.io.File(s"$ckpt/_graft_epoch_base"))
+    assert(IncrementalIngest.ingestToStore(spark, dir, out, tip,
+      checkpoint = Some(ckpt), epochBase = 3L) === 3L)
+  }
+
   test("quantile sample merges across epochs to the exact batch sketch") {
     val dir = sf("sf0.001")
     val src = tmpDir("qssrc_")
