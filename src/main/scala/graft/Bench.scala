@@ -1,5 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.ops.DedupMaterialize._
+import graft.queries.{GraphQueries, RefQueries}
+
 object Bench {
   /** Headline queries: the flagship of each operator family, timed first
     * and reported as "queries" (comparable round-over-round); the rest of
@@ -22,6 +26,75 @@ object Bench {
     "embed_lsh_ann",          // bucketed ANN
     "text_quality",           // narrow per-doc scoring
     "stream_incremental")     // AvailableNow streaming ingest
+
+  /** A build that parks `tables` in order, counting each. */
+  private def counts(tables: ((SparkSession, String) => DataFrame)*)
+      : (SparkSession, String) => Unit =
+    (s, dir) => tables.foreach(_(s, dir).count())
+
+  /** The cold-build inventory: one entry per parked tier (family), by
+    * entry name, in build order — the one list Bench's cold passes,
+    * BuildBench and BuildStats run. Order matters: components derive
+    * from bands, and entity flows read the entity labels. */
+  val coldBuilds: Seq[(String, (SparkSession, String) => Unit)] = Seq(
+    "dedup_materialize_bands" -> counts(bandTable),
+    // the cluster tiers: dedup_components/dedup_keep_one and the
+    // incremental-maintenance query then measure consumption of the
+    // parked fixpoints, not the CC builds
+    "dedup_materialize_components" -> counts(componentTable),
+    "dedup_materialize_base" -> counts(componentBaseTable),
+    // window-fingerprint tier consumed by text_dup_windows
+    "text_winfp_build" -> counts(windowFpTable),
+    // pre-batch frequency + score tiers consumed by the incremental
+    // dup-window maintenance query
+    "text_winfp_base_build" -> counts(winfpGdfBaseTable, winfpScoreBaseTable),
+    // segment tier consumed by text_segment_dedup
+    "text_segment_build" -> counts(segmentTable),
+    // pre-batch segment frequency + output tiers consumed by the
+    // incremental segment-dedup maintenance query
+    "text_segment_base_build" -> counts(segFreqBaseTable, segScoreBaseTable),
+    // pre-batch media fingerprint band + cluster-label tiers
+    // consumed by the incremental pHash cluster maintenance query
+    "phash_base_build" ->
+      counts(phashBandBaseTable(_, _), phashClusterBaseTable(_, _)),
+    // full-corpus media cluster labels consumed by the batch
+    // cluster rollup
+    "phash_build" -> counts(phashClusterTable),
+    // pre-batch packed-stream manifest consumed by the incremental
+    // shard-packing maintenance query
+    "pack_manifest_build" -> counts(packManifestBaseTable),
+    // pre-batch all-pairs result + frequency order consumed by the
+    // incremental exact-similarity maintenance query
+    "allpairs_base_build" -> counts(allPairsBaseTable(_, _),
+      allPairsDfBaseTable(_, _), allPairsPrefixBaseTable(_, _)),
+    // full-corpus similarity-pair table consumed by the keep-one
+    // rollup (the measured PPJoin pipeline stays
+    // text_allpairs_cosine)
+    "allpairs_build" -> counts(allPairsTable),
+    "bucketed_build" -> RefQueries.buildBucketedTables _,
+    "entity_build" -> RefQueries.buildEntityTiers _,
+    // the parked entity-flow frame consumed by entity_graph /
+    // entity_pagerank / entity_hits / entity_taint (r14) — after
+    // entity_build so the label tier it reads is already parked
+    "entityflow_build" -> GraphQueries.buildEntityFlowTier _,
+    "graph_build" -> GraphQueries.buildGraphTier _,
+    // the flow projection of the parked timed tier, split out of
+    // graph_build so both numbers compare round-over-round (r11:
+    // riding it on the graph wave read as a graph regression)
+    "flow_build" -> GraphQueries.buildFlowTier _,
+    // ann_recall's parked inputs: the six ANN variants' neighbor
+    // sets + brute-force ground truth (each variant's query entry
+    // still measures its own pipeline; this measures the one-time
+    // sweep materialization)
+    "ann_build" -> graft.ops.AnnMaterialize.buildAll _,
+    // the serving-layout transaction store consumed by
+    // store_keyset_page's pure-read pagination
+    "store_build" -> { (s: SparkSession, dir: String) =>
+      graft.ops.StoreMaterialize.transactionStore(s, dir)(out =>
+        graft.chain.ChainStore.writeTransactions(
+          graft.chain.Chain.transactions(s, dir), out)); ()
+    })
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -67,114 +140,7 @@ object Bench {
     def coldBuildPass(): Seq[(String, Double)] = {
       graft.ops.Tiers.wipe()
       graft.queries.RefQueries.invalidateBucketedCache()
-      // each parked tier is its own entry; build order matters —
-      // components derive from bands
-      Seq(
-        timed("dedup_materialize_bands") {
-          graft.ops.DedupMaterialize.bandTable(spark, sfDir).count(); ()
-        },
-        // the cluster tiers: dedup_components/dedup_keep_one and the
-        // incremental-maintenance query then measure consumption of the
-        // parked fixpoints, not the CC builds
-        timed("dedup_materialize_components") {
-          graft.ops.DedupMaterialize.componentTable(spark, sfDir).count(); ()
-        },
-        timed("dedup_materialize_base") {
-          graft.ops.DedupMaterialize.componentBaseTable(spark, sfDir)
-            .count(); ()
-        },
-        // window-fingerprint tier consumed by text_dup_windows
-        timed("text_winfp_build") {
-          graft.ops.DedupMaterialize.windowFpTable(spark, sfDir).count(); ()
-        },
-        // pre-batch frequency + score tiers consumed by the incremental
-        // dup-window maintenance query
-        timed("text_winfp_base_build") {
-          graft.ops.DedupMaterialize.winfpGdfBaseTable(spark, sfDir).count()
-          graft.ops.DedupMaterialize.winfpScoreBaseTable(spark, sfDir)
-            .count(); ()
-        },
-        // segment tier consumed by text_segment_dedup
-        timed("text_segment_build") {
-          graft.ops.DedupMaterialize.segmentTable(spark, sfDir).count(); ()
-        },
-        // pre-batch segment frequency + output tiers consumed by the
-        // incremental segment-dedup maintenance query
-        timed("text_segment_base_build") {
-          graft.ops.DedupMaterialize.segFreqBaseTable(spark, sfDir).count()
-          graft.ops.DedupMaterialize.segScoreBaseTable(spark, sfDir)
-            .count(); ()
-        },
-        // pre-batch media fingerprint band + cluster-label tiers
-        // consumed by the incremental pHash cluster maintenance query
-        timed("phash_base_build") {
-          graft.ops.DedupMaterialize.phashBandBaseTable(spark, sfDir)
-            .count()
-          graft.ops.DedupMaterialize.phashClusterBaseTable(spark, sfDir)
-            .count(); ()
-        },
-        // full-corpus media cluster labels consumed by the batch
-        // cluster rollup
-        timed("phash_build") {
-          graft.ops.DedupMaterialize.phashClusterTable(spark, sfDir)
-            .count(); ()
-        },
-        // pre-batch packed-stream manifest consumed by the incremental
-        // shard-packing maintenance query
-        timed("pack_manifest_build") {
-          graft.ops.DedupMaterialize.packManifestBaseTable(spark, sfDir)
-            .count(); ()
-        },
-        // pre-batch all-pairs result + frequency order consumed by the
-        // incremental exact-similarity maintenance query
-        timed("allpairs_base_build") {
-          graft.ops.DedupMaterialize.allPairsBaseTable(spark, sfDir).count()
-          graft.ops.DedupMaterialize.allPairsDfBaseTable(spark, sfDir).count()
-          graft.ops.DedupMaterialize.allPairsPrefixBaseTable(spark, sfDir)
-            .count(); ()
-        },
-        // full-corpus similarity-pair table consumed by the keep-one
-        // rollup (the measured PPJoin pipeline stays
-        // text_allpairs_cosine)
-        timed("allpairs_build") {
-          graft.ops.DedupMaterialize.allPairsTable(spark, sfDir)
-            .count(); ()
-        },
-        timed("bucketed_build") {
-          graft.queries.RefQueries.buildBucketedTables(spark, sfDir)
-        },
-        timed("entity_build") {
-          graft.queries.RefQueries.buildEntityTiers(spark, sfDir)
-        },
-        // the parked entity-flow frame consumed by entity_graph /
-        // entity_pagerank / entity_hits / entity_taint (r14) — after
-        // entity_build so the label tier it reads is already parked
-        timed("entityflow_build") {
-          graft.queries.GraphQueries.buildEntityFlowTier(spark, sfDir)
-        },
-        timed("graph_build") {
-          graft.queries.GraphQueries.buildGraphTier(spark, sfDir)
-        },
-        // the flow projection of the parked timed tier, split out of
-        // graph_build so both numbers compare round-over-round (r11:
-        // riding it on the graph wave read as a graph regression)
-        timed("flow_build") {
-          graft.queries.GraphQueries.buildFlowTier(spark, sfDir)
-        },
-        // ann_recall's parked inputs: the six ANN variants' neighbor
-        // sets + brute-force ground truth (each variant's query entry
-        // still measures its own pipeline; this measures the one-time
-        // sweep materialization)
-        timed("ann_build") {
-          graft.ops.AnnMaterialize.buildAll(spark, sfDir)
-        },
-        // the serving-layout transaction store consumed by
-        // store_keyset_page's pure-read pagination
-        timed("store_build") {
-          graft.ops.StoreMaterialize.transactionStore(spark, sfDir)(out =>
-            graft.chain.ChainStore.writeTransactions(
-              graft.chain.Chain.transactions(spark, sfDir), out)); ()
-        })
+      coldBuilds.map { case (name, build) => timed(name)(build(spark, sfDir)) }
     }
     // every entry's RAW pass samples, emitted into target/bench.json —
     // when a shared-box contention window inflates a number, the pass

@@ -5,10 +5,10 @@ import org.apache.spark.sql.SparkSession
   * first) at an arbitrary sf dir — the per-build scale datapoints for
   * SCALE.md. Usage:
   *   runMain graft.BuildBench [--repeat=N] [sfDir] [buildName...]
-  * Build names filter which tiers build (default: all); --repeat wipes
-  * and rebuilds N times INSIDE one session — the flatness probe for the
-  * Materialize.release discipline (a leaking session drifts upward
-  * round over round). */
+  * Builds run in [[Bench.coldBuilds]] order; build names filter which
+  * tiers build (default: all); --repeat wipes and rebuilds N times
+  * INSIDE one session — the flatness probe for the Materialize.release
+  * discipline (a leaking session drifts upward round over round). */
 object BuildBench {
   def main(args: Array[String]): Unit = {
     val (flags, rest) = args.partition(_.startsWith("--"))
@@ -23,85 +23,14 @@ object BuildBench {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
-    def timed(name: String, round: Int)(body: => Unit): Unit =
-      if (only.isEmpty || only(name)) {
-        val t0 = System.nanoTime()
-        body
-        val tag = if (repeat > 1) s" round$round" else ""
-        println(f"[buildbench] $name$tag ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      }
     for (r <- 1 to repeat) {
       graft.ops.Tiers.wipe()
-      timed("dedup_materialize_bands", r) {
-        graft.ops.DedupMaterialize.bandTable(spark, sfDir).count(); ()
-      }
-      timed("dedup_materialize_components", r) {
-        graft.ops.DedupMaterialize.componentTable(spark, sfDir).count(); ()
-      }
-      timed("dedup_materialize_base", r) {
-        graft.ops.DedupMaterialize.componentBaseTable(spark, sfDir).count(); ()
-      }
-      timed("text_winfp_build", r) {
-        graft.ops.DedupMaterialize.windowFpTable(spark, sfDir).count(); ()
-      }
-      timed("text_winfp_base_build", r) {
-        graft.ops.DedupMaterialize.winfpGdfBaseTable(spark, sfDir).count()
-        graft.ops.DedupMaterialize.winfpScoreBaseTable(spark, sfDir)
-          .count(); ()
-      }
-      timed("text_segment_build", r) {
-        graft.ops.DedupMaterialize.segmentTable(spark, sfDir).count(); ()
-      }
-      timed("text_segment_base_build", r) {
-        graft.ops.DedupMaterialize.segFreqBaseTable(spark, sfDir).count()
-        graft.ops.DedupMaterialize.segScoreBaseTable(spark, sfDir)
-          .count(); ()
-      }
-      timed("phash_base_build", r) {
-        graft.ops.DedupMaterialize.phashBandBaseTable(spark, sfDir).count()
-        graft.ops.DedupMaterialize.phashClusterBaseTable(spark, sfDir)
-          .count(); ()
-      }
-      timed("phash_build", r) {
-        graft.ops.DedupMaterialize.phashClusterTable(spark, sfDir)
-          .count(); ()
-      }
-      timed("pack_manifest_build", r) {
-        graft.ops.DedupMaterialize.packManifestBaseTable(spark, sfDir)
-          .count(); ()
-      }
-      timed("allpairs_build", r) {
-        graft.ops.DedupMaterialize.allPairsTable(spark, sfDir).count(); ()
-      }
-      timed("bucketed_build", r) {
-        graft.queries.RefQueries.invalidateBucketedCache()
-        graft.queries.RefQueries.buildBucketedTables(spark, sfDir)
-      }
-      timed("store_build", r) {
-        graft.ops.StoreMaterialize.transactionStore(spark, sfDir)(out =>
-          graft.chain.ChainStore.writeTransactions(
-            graft.chain.Chain.transactions(spark, sfDir), out)); ()
-      }
-      timed("entity_build", r) {
-        graft.queries.RefQueries.buildEntityTiers(spark, sfDir)
-      }
-      timed("entityflow_build", r) {
-        graft.queries.GraphQueries.buildEntityFlowTier(spark, sfDir)
-      }
-      timed("graph_build", r) {
-        graft.queries.GraphQueries.buildGraphTier(spark, sfDir)
-      }
-      timed("flow_build", r) {
-        graft.queries.GraphQueries.buildFlowTier(spark, sfDir)
-      }
-      timed("ann_build", r) {
-        graft.ops.AnnMaterialize.buildAll(spark, sfDir)
-      }
-      timed("allpairs_base_build", r) {
-        graft.ops.DedupMaterialize.allPairsBaseTable(spark, sfDir).count()
-        graft.ops.DedupMaterialize.allPairsDfBaseTable(spark, sfDir).count()
-        graft.ops.DedupMaterialize.allPairsPrefixBaseTable(spark, sfDir)
-          .count(); ()
+      graft.queries.RefQueries.invalidateBucketedCache()
+      for ((name, build) <- Bench.coldBuilds if only.isEmpty || only(name)) {
+        val t0 = System.nanoTime()
+        build(spark, sfDir)
+        val tag = if (repeat > 1) s" round$r" else ""
+        println(f"[buildbench] $name$tag ${(System.nanoTime() - t0) / 1e9}%.2f s")
       }
     }
     spark.stop()

@@ -8,7 +8,7 @@ import java.util.concurrent.atomic.AtomicLong
   * bytes/records, shuffle read/write bytes/records, total task time,
   * job/stage counts) accumulated from stage metrics — the
   * wall-clock-independent before/after evidence for path optimizations
-  * on a noisy box.
+  * on a noisy box. A build name is a [[Bench.coldBuilds]] entry.
   * Usage: runMain graft.BuildStats [sfDir] <buildName|queryName> [cpus]
   */
 object BuildStats {
@@ -42,48 +42,32 @@ object BuildStats {
       }
     })
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
+    // listener events are async: settle before zeroing the counters
+    def reset(): Unit = {
+      drainUntilStable(stages)
+      inB.set(0); inR.set(0); swB.set(0); swR.set(0); srB.set(0)
+      taskMs.set(0); stages.set(0)
+    }
     // builds are probed COLD (tier root wiped, bench policy); plain
     // query probes run WARM — one untimed pass parks whatever tiers
     // the query consumes (bench policy: builds precede queries), then
     // the measured pass starts from parked scans
-    val isBuild = Set("allpairs_base_build", "text_winfp_base_build",
-      "graph_build", "entity_build", "entityflow_build", "phash_build")
-    if (isBuild(which)) graft.ops.Tiers.wipe()
-    else if (SparkEntry.queries.contains(which)) {
+    val build = Bench.coldBuilds.toMap.get(which)
+    if (build.isDefined) {
+      graft.ops.Tiers.wipe()
+      graft.queries.RefQueries.invalidateBucketedCache()
+    } else if (SparkEntry.queries.contains(which)) {
       SparkEntry.queries(which)(spark, sfDir).count(); ()
-    }
-    // listener events are async: settle before zeroing the counters
-    drainUntilStable(stages)
-    inB.set(0); inR.set(0); swB.set(0); swR.set(0); srB.set(0); taskMs.set(0)
-    stages.set(0)
+    } else sys.error(s"unknown build/query $which")
+    // consumption-grain probe: park the upstream label tier OUTSIDE
+    // the measured region (the bench times it under entity_build)
+    if (which == "entityflow_build")
+      graft.queries.RefQueries.buildEntityTiers(spark, sfDir)
+    reset()
     val t0 = System.nanoTime()
-    which match {
-      case "allpairs_base_build" =>
-        graft.ops.DedupMaterialize.allPairsBaseTable(spark, sfDir).count()
-        graft.ops.DedupMaterialize.allPairsDfBaseTable(spark, sfDir).count()
-        graft.ops.DedupMaterialize.allPairsPrefixBaseTable(spark, sfDir)
-          .count()
-      case "text_winfp_base_build" =>
-        graft.ops.DedupMaterialize.winfpGdfBaseTable(spark, sfDir).count()
-        graft.ops.DedupMaterialize.winfpScoreBaseTable(spark, sfDir).count()
-      case "graph_build" =>
-        graft.queries.GraphQueries.buildGraphTier(spark, sfDir)
-      case "entity_build" =>
-        graft.queries.RefQueries.buildEntityTiers(spark, sfDir)
-      case "entityflow_build" =>
-        // consumption-grain probe: park the upstream label tier OUTSIDE
-        // the measured region (the bench times it under entity_build)
-        graft.queries.RefQueries.buildEntityTiers(spark, sfDir)
-        drainUntilStable(stages)
-        inB.set(0); inR.set(0); swB.set(0); swR.set(0); srB.set(0)
-        taskMs.set(0); stages.set(0)
-        graft.queries.GraphQueries.buildEntityFlowTier(spark, sfDir)
-      case "phash_build" =>
-        graft.ops.DedupMaterialize.phashClusterTable(spark, sfDir).count()
-      case q if SparkEntry.queries.contains(q) =>
-        SparkEntry.queries(q)(spark, sfDir).count(); ()
-      case other =>
-        sys.error(s"unknown build/query $other")
+    build match {
+      case Some(b) => b(spark, sfDir)
+      case None => SparkEntry.queries(which)(spark, sfDir).count()
     }
     val wall = (System.nanoTime() - t0) / 1e9
     drainUntilStable(stages)

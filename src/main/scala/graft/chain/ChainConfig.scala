@@ -21,8 +21,6 @@ import org.apache.spark.sql.functions._
   */
 object ChainConfig {
 
-  private val lock = new Object
-
   /** Stable fixture location — also referenced (as an absolute path) by
     * the DuckDB oracle, which re-parses the same files independently.
     * Resolved at runtime relative to the working directory, like every
@@ -61,19 +59,13 @@ object ChainConfig {
        |""".stripMargin
 
   /** The parked four-file config fixture dir, written on first access
-    * (lock + marker, like the sibling tiers). */
-  def fixtureDir(): String = lock.synchronized {
-    val root = new File(FixturePath)
-    if (!new File(root, "_SUCCESS").exists()) {
-      root.mkdirs()
-      fixtures.foreach { case (cur, json) =>
-        java.nio.file.Files.writeString(
-          new File(root, s"$cur.cfg").toPath, json)
-      }
+    * ([[graft.ops.Tiers.park]]). */
+  def fixtureDir(): String = graft.ops.Tiers.park(FixturePath) { root =>
+    new File(root).mkdirs()
+    fixtures.foreach { case (cur, json) =>
       java.nio.file.Files.writeString(
-        new File(root, "_SUCCESS").toPath, "")
+        new File(root, s"$cur.cfg").toPath, json)
     }
-    FixturePath
   }
 
   /** Chain-params table from a config directory: one row per `*.cfg`

@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.io.File
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Materialized tier for ann_recall's inputs: the brute-force ground
@@ -16,119 +14,60 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * while each variant's pipeline cost stays visible in its own
   * bench entry (and in `ann_build`).
   *
-  * Same cache discipline as [[DedupMaterialize]]: key = fixture path +
-  * mtime + format version, idempotent overwrite writes, JVM-local lock +
-  * _SUCCESS guard.
+  * Every tier here is parked by [[Tiers.park]]; the key is the
+  * embeddings stamp + format version.
   */
 object AnnMaterialize {
-
-  /** Per-tier build locks (keyed by output path): the seven tiers are
-    * independent pipelines and the cold build runs them as concurrent
-    * Spark jobs; same-tier requests still serialize and the second
-    * finds the _SUCCESS marker. */
-  private val locks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  private def lockFor(path: String): Object =
-    locks.computeIfAbsent(path, _ => new Object)
 
   /** Bump on any change to the ANN variant set or their parameters. */
   private val FormatVersion = 4 // r13: + ivfpq_rerank (composed serving)
   // (r12: QueryStride 250→50, KmeansK 16→64, KmeansProbes 3→12,
   //  multiprobe width 6 / Hamming<=2, + pq_rerank tier)
 
-  private def base(dir: String): String = {
-    val f = new File(s"$dir/embeddings.parquet")
-    val mtime =
-      if (f.isDirectory)
-        (f.lastModified() +: f.listFiles().map(_.lastModified()).toSeq).max
-      else f.lastModified()
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    s"target/intermediate/ann_v${FormatVersion}_${key}_$mtime"
-  }
+  private def tier(dir: String, sub: String): String =
+    s"target/intermediate/ann_v${FormatVersion}_" +
+      s"${Tiers.sourceStamp(dir, "embeddings")}/$sub"
 
   /** (query_id, neighbor_id) exact cosine top-3 — the recall denominator. */
-  def groundTruthTable(s: SparkSession, dir: String): DataFrame = {
-    val root = base(dir)
-    lockFor(s"$root/ground_truth").synchronized {
-      if (!new File(s"$root/ground_truth/_SUCCESS").exists()) {
-        graft.queries.SimilarityQueries.bruteForceTop3(s, dir)
-          .write.mode("overwrite").parquet(s"$root/ground_truth")
-      }
-    }
-    s.read.parquet(s"$root/ground_truth")
-  }
+  def groundTruthTable(s: SparkSession, dir: String): DataFrame =
+    Tiers.parquet(s, tier(dir, "ground_truth"))(
+      graft.queries.SimilarityQueries.bruteForceTop3(s, dir))
 
   /** (query_id, neighbor_id) for one ANN variant (see
     * [[graft.queries.SimilarityQueries.AnnMethods]]). */
-  def neighborTable(s: SparkSession, dir: String, method: String): DataFrame = {
-    val root = base(dir)
-    lockFor(s"$root/method_$method").synchronized {
-      if (!new File(s"$root/method_$method/_SUCCESS").exists()) {
-        graft.queries.SimilarityQueries.annMethodQuery(method)(s, dir)
-          .select("query_id", "neighbor_id")
-          .write.mode("overwrite").parquet(s"$root/method_$method")
-      }
-    }
-    s.read.parquet(s"$root/method_$method")
-  }
+  def neighborTable(s: SparkSession, dir: String, method: String): DataFrame =
+    Tiers.parquet(s, tier(dir, s"method_$method"))(
+      graft.queries.SimilarityQueries.annMethodQuery(method)(s, dir)
+        .select("query_id", "neighbor_id"))
 
   /** FROZEN k-means centroids trained on the PRE-BATCH corpus — the
     * artifact IVF index maintenance holds fixed while batches arrive
     * (retraining is a periodic rebuild, not an ingest step). 16 rows. */
-  def ivfCentroidTable(s: SparkSession, dir: String): DataFrame = {
-    val root = base(dir)
-    lockFor(s"$root/ivf_centroids").synchronized {
-      if (!new File(s"$root/ivf_centroids/_SUCCESS").exists()) {
-        graft.queries.SimilarityQueries.ivfFrozenCentroids(s, dir)
-          .write.mode("overwrite").parquet(s"$root/ivf_centroids")
-      }
-    }
-    s.read.parquet(s"$root/ivf_centroids")
-  }
+  def ivfCentroidTable(s: SparkSession, dir: String): DataFrame =
+    Tiers.parquet(s, tier(dir, "ivf_centroids"))(
+      graft.queries.SimilarityQueries.ivfFrozenCentroids(s, dir))
 
   /** FROZEN trained-PQ codebooks (k·m rows) — like the IVF centroids,
     * trained once per fixture and read by every PQ serving query
     * (embed_pq_rerank, embed_ivfpq_rerank, ann_candidates); the
     * oracles retrain from scratch, so parked == retrained is
     * hash-proven on every run. */
-  def pqCodebookTable(s: SparkSession, dir: String): DataFrame = {
-    val root = base(dir)
-    lockFor(s"$root/pq_codebooks").synchronized {
-      if (!new File(s"$root/pq_codebooks/_SUCCESS").exists()) {
-        graft.queries.SimilarityQueries.pqFrozenCodebooks(s, dir)
-          .write.mode("overwrite").parquet(s"$root/pq_codebooks")
-      }
-    }
-    s.read.parquet(s"$root/pq_codebooks")
-  }
+  def pqCodebookTable(s: SparkSession, dir: String): DataFrame =
+    Tiers.parquet(s, tier(dir, "pq_codebooks"))(
+      graft.queries.SimilarityQueries.pqFrozenCodebooks(s, dir))
 
   /** PRE-BATCH compressed code tier (vec_id, m, code) under the frozen
     * codebooks — what embed_pq_incremental appends a batch onto (the
     * code-tier analog of [[ivfListsTable]]). */
-  def pqCodesTable(s: SparkSession, dir: String): DataFrame = {
-    val root = base(dir)
-    lockFor(s"$root/pq_codes").synchronized {
-      if (!new File(s"$root/pq_codes/_SUCCESS").exists()) {
-        graft.queries.SimilarityQueries.pqFrozenCodes(s, dir)
-          .write.mode("overwrite").parquet(s"$root/pq_codes")
-      }
-    }
-    s.read.parquet(s"$root/pq_codes")
-  }
+  def pqCodesTable(s: SparkSession, dir: String): DataFrame =
+    Tiers.parquet(s, tier(dir, "pq_codes"))(
+      graft.queries.SimilarityQueries.pqFrozenCodes(s, dir))
 
   /** PRE-BATCH inverted lists (vec_id → cent_id) under the frozen
     * centroids — what embed_ivf_incremental appends a batch onto. */
-  def ivfListsTable(s: SparkSession, dir: String): DataFrame = {
-    val root = base(dir)
-    lockFor(s"$root/ivf_lists").synchronized {
-      if (!new File(s"$root/ivf_lists/_SUCCESS").exists()) {
-        graft.queries.SimilarityQueries.ivfPreLists(s, dir)
-          .write.mode("overwrite").parquet(s"$root/ivf_lists")
-      }
-    }
-    s.read.parquet(s"$root/ivf_lists")
-  }
+  def ivfListsTable(s: SparkSession, dir: String): DataFrame =
+    Tiers.parquet(s, tier(dir, "ivf_lists"))(
+      graft.queries.SimilarityQueries.ivfPreLists(s, dir))
 
   /** Build every tier (the bench's `ann_build` entry). The pipelines
     * share nothing but the input scan, so they run as concurrent

@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.io.File
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, xxhash64}
 
@@ -16,15 +14,9 @@ import graft.ops.TextCorpus._
   * dominant at 100 TB where shingles are ~10× the corpus. This tier
   * computes shingles and bands ONCE per corpus and parks them as
   * parquet; every consumer then starts from a column-pruned scan.
-  *
-  * The cache key is the corpus path + its modification time, so a
-  * regenerated fixture invalidates naturally. Writes are idempotent
-  * (deterministic content, overwrite mode) and guarded by a JVM-local
-  * lock + _SUCCESS marker — concurrent queries materialize at most once.
+  * Every tier here is parked by [[Tiers.park]].
   */
 object DedupMaterialize {
-
-  private val lock = new Object
 
   /** Minhash parameters the parked tier was built with — part of the
     * cache key, so changing them invalidates instead of silently reusing
@@ -36,50 +28,27 @@ object DedupMaterialize {
     * is not visible in the parameters (hash family, shingle width…). */
   private val FormatVersion = 3
 
-  /** Root is under target/ so `sbt clean` clears the tier. The key folds
-    * in corpus path, corpus mtime, the minhash parameters, and the code
-    * format version. */
-  private def base(dir: String): String = {
-    val f = new File(s"$dir/documents.parquet")
-    val mtime =
-      if (f.isDirectory)
-        // listFiles is empty for a bare directory → fall back to dir mtime
-        (f.lastModified() +: f.listFiles().map(_.lastModified()).toSeq).max
-      else f.lastModified()
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    s"target/intermediate/dedup_v${FormatVersion}_s${Seeds}b${Bands}_${key}_$mtime"
-  }
-
-  private def ensure(s: SparkSession, dir: String): String = {
-    val root = base(dir)
-    lock.synchronized {
-      if (!new File(s"$root/bands/_SUCCESS").exists() ||
-          !new File(s"$root/shingles/_SUCCESS").exists()) {
-        // sh_hash rides along so the verify-stage overlap joins shuffle
-        // 8-byte bigints instead of trigram text; a 64-bit hash makes a
-        // within-doc collision (the only thing that could skew an
-        // overlap count) ~n²/2^65 — negligible at any corpus size that
-        // fits a cluster, and the raw shingle stays in the tier for
-        // consumers that need the string (column pruning keeps it off
-        // the wire for those that don't)
-        val sh = shingles(words(corpus(s, dir)))
-          .withColumn("sh_hash", xxhash64(col("shingle")))
-        sh.write.mode("overwrite").parquet(s"$root/shingles")
-        // signatures/bands derive from the parked shingles — the
-        // explosion is never recomputed
-        val sigs = graft.api.Dedup.minhashSignatures(
-          s.read.parquet(s"$root/shingles"), Seeds)
-        graft.api.Dedup.lshBands(sigs, Seeds, Bands)
-          .write.mode("overwrite").parquet(s"$root/bands")
-      }
-    }
-    root
-  }
+  /** Root of one tier under target/ (so `sbt clean` clears it). The
+    * key folds in the corpus stamp, the minhash parameters, and the
+    * code format version. */
+  private def tier(dir: String, sub: String): String =
+    s"target/intermediate/dedup_v${FormatVersion}_s${Seeds}b${Bands}_" +
+      s"${Tiers.sourceStamp(dir, "documents")}/$sub"
 
   /** (doc_id, shingle, sh_hash) — may contain duplicate shingles per
     * doc; sh_hash = xxhash64(shingle) for bigint-keyed overlap joins. */
   def shingleTable(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, dir)}/shingles")
+    Tiers.parquet(s, tier(dir, "shingles")) {
+      // sh_hash rides along so the verify-stage overlap joins shuffle
+      // 8-byte bigints instead of trigram text; a 64-bit hash makes a
+      // within-doc collision (the only thing that could skew an
+      // overlap count) ~n²/2^65 — negligible at any corpus size that
+      // fits a cluster, and the raw shingle stays in the tier for
+      // consumers that need the string (column pruning keeps it off
+      // the wire for those that don't)
+      shingles(words(corpus(s, dir)))
+        .withColumn("sh_hash", xxhash64(col("shingle")))
+    }
 
   /** (doc_id, fp) — every 8-word window of the dup-injected corpus
     * fingerprinted to a BIGINT by [[graft.api.Text.windowFingerprints]].
@@ -92,16 +61,9 @@ object DedupMaterialize {
     * at 100 TB. Here the explode (and its one-md5-per-word hash) runs
     * once per corpus; every consumer starts from a two-bigint-column
     * pruned scan. */
-  def windowFpTable(s: SparkSession, dir: String): DataFrame = {
-    val root = base(dir)
-    lock.synchronized {
-      if (!new File(s"$root/winfp/_SUCCESS").exists()) {
-        graft.api.Text.windowFingerprints(words(corpus(s, dir)))
-          .write.mode("overwrite").parquet(s"$root/winfp")
-      }
-    }
-    s.read.parquet(s"$root/winfp")
-  }
+  def windowFpTable(s: SparkSession, dir: String): DataFrame =
+    Tiers.parquet(s, tier(dir, "winfp"))(
+      graft.api.Text.windowFingerprints(words(corpus(s, dir))))
 
   /** Segment width (words) of the parked segment tier. */
   val SegmentWidth = 10
@@ -111,33 +73,19 @@ object DedupMaterialize {
     * explode twice (global frequency + the per-doc probe side); both
     * consumers read pruned columns of one parquet tier instead of each
     * re-exploding the corpus. */
-  def segmentTable(s: SparkSession, dir: String): DataFrame = {
-    val root = base(dir)
-    lock.synchronized {
-      if (!new File(s"$root/segments_w$SegmentWidth/_SUCCESS").exists()) {
-        graft.api.Text.wordSegments(words(corpus(s, dir)), SegmentWidth)
-          .write.mode("overwrite").parquet(s"$root/segments_w$SegmentWidth")
-      }
-    }
-    s.read.parquet(s"$root/segments_w$SegmentWidth")
-  }
+  def segmentTable(s: SparkSession, dir: String): DataFrame =
+    Tiers.parquet(s, tier(dir, s"segments_w$SegmentWidth"))(
+      graft.api.Text.wordSegments(words(corpus(s, dir)), SegmentWidth))
 
   /** (seg_h, gdf) segment frequency over the corpus EXCLUDING the
     * arriving batch — pre-batch state for incremental segment-dedup
     * maintenance. */
-  def segFreqBaseTable(s: SparkSession, dir: String): DataFrame = {
-    val root = base(dir)
-    val sub = s"seg_freq_base_w${SegmentWidth}_m$IncrementalBatchMod"
-    lock.synchronized {
-      if (!new File(s"$root/$sub/_SUCCESS").exists()) {
-        graft.api.Text.keyFrequency(
-            segmentTable(s, dir)
-              .filter(col("doc_id") % IncrementalBatchMod =!= 0), "seg_h")
-          .write.mode("overwrite").parquet(s"$root/$sub")
-      }
-    }
-    s.read.parquet(s"$root/$sub")
-  }
+  def segFreqBaseTable(s: SparkSession, dir: String): DataFrame =
+    Tiers.parquet(s,
+        tier(dir, s"seg_freq_base_w${SegmentWidth}_m$IncrementalBatchMod"))(
+      graft.api.Text.keyFrequency(
+        segmentTable(s, dir)
+          .filter(col("doc_id") % IncrementalBatchMod =!= 0), "seg_h"))
 
   /** (doc_id, n_tokens, stream_offset) — the packed-stream MANIFEST of
     * the corpus EXCLUDING the arriving batch: pre-batch state for
@@ -147,93 +95,73 @@ object DedupMaterialize {
     * batch-sized while the manifest itself was built with the two-phase
     * PrefixCarry scan (no single-partition sort). */
   def packManifestBaseTable(s: SparkSession, dir: String): DataFrame = {
-    val root = base(dir)
-    val sub = s"pack_manifest_base_m$IncrementalBatchMod"
-    lock.synchronized {
-      if (!new File(s"$root/$sub/_SUCCESS").exists()) {
-        // the PLAIN document stream (no injected dedup twins — packing
-        // runs downstream of dedup, so the manifest never sees them)
-        val plain = graft.chain.Chain.table(s, dir, "documents")
-          .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-        val toks = words(plain)
-          .filter(col("doc_id") % IncrementalBatchMod =!= 0)
-          .select(col("doc_id"),
-            org.apache.spark.sql.functions.size(col("w")).cast("long")
-              .as("n_tokens"))
-        // park the manifest, then free the scan's pinned input — the
-        // parquet write IS the consumption point, so release is
-        // deterministic here (no GC dependence)
-        val c = graft.operators.PrefixCarry.exclusivePrefixSumCarried(
-          toks, Seq("doc_id"), "n_tokens")
-        c.result
-          .withColumnRenamed("prefix_sum", "stream_offset")
-          .write.mode("overwrite").parquet(s"$root/$sub")
-        c.releasePinned()
-      }
+    val root = Tiers.park(
+        tier(dir, s"pack_manifest_base_m$IncrementalBatchMod")) { root =>
+      // the PLAIN document stream (no injected dedup twins — packing
+      // runs downstream of dedup, so the manifest never sees them)
+      val plain = graft.chain.Chain.table(s, dir, "documents")
+        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+      val toks = words(plain)
+        .filter(col("doc_id") % IncrementalBatchMod =!= 0)
+        .select(col("doc_id"),
+          org.apache.spark.sql.functions.size(col("w")).cast("long")
+            .as("n_tokens"))
+      // park the manifest, then free the scan's pinned input — the
+      // parquet write IS the consumption point, so release is
+      // deterministic here (no GC dependence)
+      val c = graft.operators.PrefixCarry.exclusivePrefixSumCarried(
+        toks, Seq("doc_id"), "n_tokens")
+      c.result
+        .withColumnRenamed("prefix_sum", "stream_offset")
+        .write.mode("overwrite").parquet(root)
+      c.releasePinned()
     }
-    s.read.parquet(s"$root/$sub")
+    s.read.parquet(root)
   }
 
   /** Segment-dedup output over the corpus EXCLUDING the arriving
     * batch — the pre-batch result tier incremental maintenance keeps
     * verbatim for untouched docs. */
-  def segScoreBaseTable(s: SparkSession, dir: String): DataFrame = {
-    val root = base(dir)
-    val sub = s"seg_score_base_w${SegmentWidth}_m$IncrementalBatchMod"
-    lock.synchronized {
-      if (!new File(s"$root/$sub/_SUCCESS").exists()) {
-        val old = segmentTable(s, dir)
-          .filter(col("doc_id") % IncrementalBatchMod =!= 0)
-        // frequency side = the PARKED pre-batch tier (identical by
-        // construction: same keyFrequency over the same filtered rows) —
-        // not a recomputation of it (guide §2.4)
-        graft.api.Text.scoreSegments(old, segFreqBaseTable(s, dir))
-          .write.mode("overwrite").parquet(s"$root/$sub")
-      }
+  def segScoreBaseTable(s: SparkSession, dir: String): DataFrame =
+    Tiers.parquet(s,
+        tier(dir, s"seg_score_base_w${SegmentWidth}_m$IncrementalBatchMod")) {
+      val old = segmentTable(s, dir)
+        .filter(col("doc_id") % IncrementalBatchMod =!= 0)
+      // frequency side = the PARKED pre-batch tier (identical by
+      // construction: same keyFrequency over the same filtered rows) —
+      // not a recomputation of it (guide §2.4)
+      graft.api.Text.scoreSegments(old, segFreqBaseTable(s, dir))
     }
-    s.read.parquet(s"$root/$sub")
-  }
 
   /** (fp, gdf) global fingerprint frequency over the corpus EXCLUDING
     * the arriving batch — the pre-batch global state incremental
     * dup-window maintenance updates with the batch's delta counts. */
-  def winfpGdfBaseTable(s: SparkSession, dir: String): DataFrame = {
-    val root = base(dir)
-    val sub = s"winfp_gdf_base_m$IncrementalBatchMod"
-    lock.synchronized {
-      if (!new File(s"$root/$sub/_SUCCESS").exists()) {
-        graft.api.Text.windowFpFrequency(
-            windowFpTable(s, dir)
-              .filter(col("doc_id") % IncrementalBatchMod =!= 0))
-          .write.mode("overwrite").parquet(s"$root/$sub")
-      }
-    }
-    s.read.parquet(s"$root/$sub")
-  }
+  def winfpGdfBaseTable(s: SparkSession, dir: String): DataFrame =
+    Tiers.parquet(s, tier(dir, s"winfp_gdf_base_m$IncrementalBatchMod"))(
+      graft.api.Text.windowFpFrequency(
+        windowFpTable(s, dir)
+          .filter(col("doc_id") % IncrementalBatchMod =!= 0)))
 
   /** Per-doc dup-window scores over the corpus EXCLUDING the arriving
     * batch — the pre-batch score tier: incremental maintenance keeps
     * these rows verbatim for every doc no crossing fingerprint touches,
     * and re-scores only the rest. */
-  def winfpScoreBaseTable(s: SparkSession, dir: String): DataFrame = {
-    val root = base(dir)
-    val sub = s"winfp_score_base_m$IncrementalBatchMod"
-    lock.synchronized {
-      if (!new File(s"$root/$sub/_SUCCESS").exists()) {
-        val old = windowFpTable(s, dir)
-          .filter(col("doc_id") % IncrementalBatchMod =!= 0)
-        // frequency side = the PARKED pre-batch gdf tier (identical by
-        // construction), not a second corpus-sized frequency pass
-        graft.api.Text.scoreWindowFps(old, winfpGdfBaseTable(s, dir))
-          .write.mode("overwrite").parquet(s"$root/$sub")
-      }
+  def winfpScoreBaseTable(s: SparkSession, dir: String): DataFrame =
+    Tiers.parquet(s, tier(dir, s"winfp_score_base_m$IncrementalBatchMod")) {
+      val old = windowFpTable(s, dir)
+        .filter(col("doc_id") % IncrementalBatchMod =!= 0)
+      // frequency side = the PARKED pre-batch gdf tier (identical by
+      // construction), not a second corpus-sized frequency pass
+      graft.api.Text.scoreWindowFps(old, winfpGdfBaseTable(s, dir))
     }
-    s.read.parquet(s"$root/$sub")
-  }
 
-  /** (doc_id, band0, band1) LSH band keys. */
+  /** (doc_id, band0, band1) LSH band keys. Signatures and bands derive
+    * from the parked shingles — the explosion is never recomputed. */
   def bandTable(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(s"${ensure(s, dir)}/bands")
+    Tiers.parquet(s, tier(dir, "bands"))(
+      graft.api.Dedup.lshBands(
+        graft.api.Dedup.minhashSignatures(shingleTable(s, dir), Seeds),
+        Seeds, Bands))
 
   /** (node, component) near-dup cluster labels over the LSH candidate
     * pairs — the iterative connected-components fixpoint parked once per
@@ -242,19 +170,11 @@ object DedupMaterialize {
     * expensive stage of the chain, so recomputing it per reference would
     * dominate at scale. Derives from the parked band tier, so the
     * shingle explosion still happens exactly once. */
-  def componentTable(s: SparkSession, dir: String): DataFrame = {
-    val root = ensure(s, dir)
-    lock.synchronized {
-      if (!new File(s"$root/components/_SUCCESS").exists()) {
-        graft.operators.ConnectedComponents.labels(
-            corpus(s, dir).select("doc_id"),
-            graft.api.Dedup.candidatePairs(
-              s.read.parquet(s"$root/bands"), Bands))
-          .write.mode("overwrite").parquet(s"$root/components")
-      }
-    }
-    s.read.parquet(s"$root/components")
-  }
+  def componentTable(s: SparkSession, dir: String): DataFrame =
+    Tiers.parquet(s, tier(dir, "components"))(
+      graft.operators.ConnectedComponents.labels(
+        corpus(s, dir).select("doc_id"),
+        graft.api.Dedup.candidatePairs(bandTable(s, dir), Bands)))
 
   /** Modulus selecting the simulated "arriving batch" for the
     * incremental dedup/clustering queries (doc_id % this == 0). */
@@ -266,44 +186,32 @@ object DedupMaterialize {
     * tier as of the previous ingest; parking it keeps the checked
     * incremental query measuring ingest-sized work, not a from-scratch
     * rebuild of state it would already hold. */
-  def componentBaseTable(s: SparkSession, dir: String): DataFrame = {
-    val root = ensure(s, dir)
-    lock.synchronized {
-      if (!new File(s"$root/components_base_m$IncrementalBatchMod/_SUCCESS").exists()) {
-        val batch = col("doc_id") % IncrementalBatchMod === 0
-        graft.operators.ConnectedComponents.labels(
-            corpus(s, dir).filter(!batch).select("doc_id"),
-            graft.api.Dedup.candidatePairs(
-              s.read.parquet(s"$root/bands").filter(!batch), Bands))
-          .write.mode("overwrite").parquet(s"$root/components_base_m$IncrementalBatchMod")
-      }
+  def componentBaseTable(s: SparkSession, dir: String): DataFrame =
+    Tiers.parquet(s, tier(dir, s"components_base_m$IncrementalBatchMod")) {
+      val batch = col("doc_id") % IncrementalBatchMod === 0
+      graft.operators.ConnectedComponents.labels(
+        corpus(s, dir).filter(!batch).select("doc_id"),
+        graft.api.Dedup.candidatePairs(
+          bandTable(s, dir).filter(!batch), Bands))
     }
-    s.read.parquet(s"$root/components_base_m$IncrementalBatchMod")
-  }
 
   /** Parked FULL-corpus media cluster labels: connected components over
     * the verified pHash pairs with the pair-endpoint universe — the
     * label table the batch cluster rollup reads (park-once like
     * [[componentTable]]; the measured fingerprint→verify pipeline stays
     * multimodal_phash_pairs). */
-  def phashClusterTable(s: SparkSession, dir: String): DataFrame = {
-    val root = base(dir)
-    lock.synchronized {
-      if (!new File(s"$root/phash_clusters/_SUCCESS").exists()) {
-        // the self-join's two identical band subplans share one
-        // ReusedExchange within the query — no persist (measured
-        // slower; see allPairsTable)
-        val bands = graft.queries.MultimodalQueries
-          .phashBands(s, dir, lit(true))
-        graft.operators.ConnectedComponents.run(
-            graft.queries.MultimodalQueries
-              .phashVerifiedPairs(bands, bands)
-              .select(col("doc_a"), col("doc_b")))
-          .write.mode("overwrite").parquet(s"$root/phash_clusters")
-      }
+  def phashClusterTable(s: SparkSession, dir: String): DataFrame =
+    Tiers.parquet(s, tier(dir, "phash_clusters")) {
+      // the self-join's two identical band subplans share one
+      // ReusedExchange within the query — no persist (measured
+      // slower; see allPairsTable)
+      val bands = graft.queries.MultimodalQueries
+        .phashBands(s, dir, lit(true))
+      graft.operators.ConnectedComponents.run(
+        graft.queries.MultimodalQueries
+          .phashVerifiedPairs(bands, bands)
+          .select(col("doc_a"), col("doc_b")))
     }
-    s.read.parquet(s"$root/phash_clusters")
-  }
 
   /** Parked pre-batch MEDIA-fingerprint band tier (doc_id, phash, b,
     * bv) — the pHash analog of the text band tier: what a deployed
@@ -311,41 +219,25 @@ object DedupMaterialize {
     * cluster maintenance probes arriving fingerprints against these
     * rows instead of re-fingerprinting the corpus. */
   def phashBandBaseTable(s: SparkSession, dir: String,
-      mod: Int = IncrementalBatchMod): DataFrame = {
-    val root = base(dir)
-    val sub = s"phash_bands_base_m$mod"
-    lock.synchronized {
-      if (!new File(s"$root/$sub/_SUCCESS").exists()) {
-        graft.queries.MultimodalQueries.phashBands(s, dir,
-            col("doc_id") % mod =!= 0)
-          .write.mode("overwrite").parquet(s"$root/$sub")
-      }
-    }
-    s.read.parquet(s"$root/$sub")
-  }
+      mod: Int = IncrementalBatchMod): DataFrame =
+    Tiers.parquet(s, tier(dir, s"phash_bands_base_m$mod"))(
+      graft.queries.MultimodalQueries.phashBands(s, dir,
+        col("doc_id") % mod =!= 0))
 
   /** Parked pre-batch MEDIA cluster labels: connected components over
     * the pre-batch verified pHash pairs, with the FULL pre-batch doc
     * universe (singletons included) so incremental folding can contract
     * any old endpoint through its label. */
   def phashClusterBaseTable(s: SparkSession, dir: String,
-      mod: Int = IncrementalBatchMod): DataFrame = {
-    val root = base(dir)
-    val sub = s"phash_clusters_base_m$mod"
-    lock.synchronized {
-      if (!new File(s"$root/$sub/_SUCCESS").exists()) {
-        val bands = phashBandBaseTable(s, dir, mod)
-        graft.operators.ConnectedComponents.labels(
-            corpus(s, dir).filter(col("doc_id") % mod =!= 0)
-              .select("doc_id"),
-            graft.queries.MultimodalQueries
-              .phashVerifiedPairs(bands, bands)
-              .select(col("doc_a"), col("doc_b")))
-          .write.mode("overwrite").parquet(s"$root/$sub")
-      }
+      mod: Int = IncrementalBatchMod): DataFrame =
+    Tiers.parquet(s, tier(dir, s"phash_clusters_base_m$mod")) {
+      val bands = phashBandBaseTable(s, dir, mod)
+      graft.operators.ConnectedComponents.labels(
+        corpus(s, dir).filter(col("doc_id") % mod =!= 0).select("doc_id"),
+        graft.queries.MultimodalQueries
+          .phashVerifiedPairs(bands, bands)
+          .select(col("doc_a"), col("doc_b")))
     }
-    s.read.parquet(s"$root/$sub")
-  }
 
   /** Parked FULL-corpus all-pairs result (the qualifying pairs at
     * τ = 4/5): the similarity-pair table every downstream consumer
@@ -357,54 +249,34 @@ object DedupMaterialize {
     * already shares the explode+distinct exchange across those
     * consumers — r13 measured a persist here at ~2× SLOWER, cache
     * materialization breaking the pipelined reuse.) */
-  def allPairsTable(s: SparkSession, dir: String): DataFrame = {
-    val root = base(dir)
-    lock.synchronized {
-      if (!new File(s"$root/allpairs/_SUCCESS").exists()) {
-        graft.api.Text.allPairsCosine(
-            graft.ops.TextCorpus.docShingles(s, dir))
-          .write.mode("overwrite").parquet(s"$root/allpairs")
-      }
-    }
-    s.read.parquet(s"$root/allpairs")
-  }
+  def allPairsTable(s: SparkSession, dir: String): DataFrame =
+    Tiers.parquet(s, tier(dir, "allpairs"))(
+      graft.api.Text.allPairsCosine(graft.ops.TextCorpus.docShingles(s, dir)))
 
-  /** Build the three pre-batch all-pairs tiers (df order, indexed
-    * prefix, qualifying pairs) in ONE pass over a pinned shingle frame,
-    * in dependency order df → prefix → pairs, each later tier reading
-    * the parked earlier one. Identical contents to building each tier
-    * independently — allPairsCosine(sh) IS
+  /** Park the three pre-batch all-pairs tiers (df order, indexed
+    * prefix, qualifying pairs) over ONE shingle frame, in dependency
+    * order df → prefix → pairs, each later tier reading the parked
+    * earlier one, and return the root of `sub`. Identical contents to
+    * building each tier independently — allPairsCosine(sh) IS
     * allPairsFromPrefix(allPairsPrefix(sh, df(sh)), sh) by definition —
     * but the shingle explode+distinct runs once instead of three times
     * and the rank window once instead of twice (guide §2.4: shared
     * subplans computed once; r13 measured allpairs_base_build
     * 7.9 s → see OPTIMIZATION_r13.md). */
-  private def ensureAllPairsBase(s: SparkSession, dir: String,
-      mod: Int): String = {
-    val root = base(dir)
-    val subDf = s"allpairs_df_base_m$mod"
-    val subPre = s"allpairs_prefix_base_m$mod"
-    val subPairs = s"allpairs_base_m$mod"
-    lock.synchronized {
-      val missing = Seq(subDf, subPre, subPairs)
-        .exists(sub => !new File(s"$root/$sub/_SUCCESS").exists())
-      if (missing) {
-        val sh = graft.ops.TextCorpus.docShingles(s, dir)
-          .filter(col("doc_id") % mod =!= 0)
-        if (!new File(s"$root/$subDf/_SUCCESS").exists())
-          sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-            .write.mode("overwrite").parquet(s"$root/$subDf")
-        if (!new File(s"$root/$subPre/_SUCCESS").exists())
-          graft.api.Text.allPairsPrefix(sh,
-              s.read.parquet(s"$root/$subDf"))
-            .write.mode("overwrite").parquet(s"$root/$subPre")
-        if (!new File(s"$root/$subPairs/_SUCCESS").exists())
-          graft.api.Text.allPairsFromPrefix(
-              s.read.parquet(s"$root/$subPre"), sh, lit(true))
-            .write.mode("overwrite").parquet(s"$root/$subPairs")
-      }
-    }
-    root
+  private def allPairsBase(s: SparkSession, dir: String, mod: Int,
+      sub: String): DataFrame = {
+    lazy val sh = graft.ops.TextCorpus.docShingles(s, dir)
+      .filter(col("doc_id") % mod =!= 0)
+    val df = Tiers.park(tier(dir, s"allpairs_df_base_m$mod"))(
+      sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
+        .write.mode("overwrite").parquet(_))
+    val pre = Tiers.park(tier(dir, s"allpairs_prefix_base_m$mod"))(
+      graft.api.Text.allPairsPrefix(sh, s.read.parquet(df))
+        .write.mode("overwrite").parquet(_))
+    Tiers.park(tier(dir, s"allpairs_base_m$mod"))(
+      graft.api.Text.allPairsFromPrefix(s.read.parquet(pre), sh, lit(true))
+        .write.mode("overwrite").parquet(_))
+    s.read.parquet(tier(dir, s"${sub}_base_m$mod"))
   }
 
   /** Parked pre-batch ALL-PAIRS base for
@@ -414,16 +286,14 @@ object DedupMaterialize {
     * its batch-probe pairs instead of re-running the old×old join. */
   def allPairsBaseTable(s: SparkSession, dir: String,
       mod: Int = IncrementalBatchMod): DataFrame =
-    s.read.parquet(
-      s"${ensureAllPairsBase(s, dir, mod)}/allpairs_base_m$mod")
+    allPairsBase(s, dir, mod, "allpairs")
 
   /** Parked pre-batch shingle document frequencies — the global prefix
     * ORDER the incremental probe ranks the arriving batch by (the
     * lemmas need a shared total order, not a fresh count). */
   def allPairsDfBaseTable(s: SparkSession, dir: String,
       mod: Int = IncrementalBatchMod): DataFrame =
-    s.read.parquet(
-      s"${ensureAllPairsBase(s, dir, mod)}/allpairs_df_base_m$mod")
+    allPairsBase(s, dir, mod, "allpairs_df")
 
   /** Parked pre-batch indexed PREFIX postings (ranked under the parked
     * order above): the incremental probe unions this with the arriving
@@ -431,7 +301,6 @@ object DedupMaterialize {
     * never re-ranks the corpus. */
   def allPairsPrefixBaseTable(s: SparkSession, dir: String,
       mod: Int = IncrementalBatchMod): DataFrame =
-    s.read.parquet(
-      s"${ensureAllPairsBase(s, dir, mod)}/allpairs_prefix_base_m$mod")
+    allPairsBase(s, dir, mod, "allpairs_prefix")
 
 }

@@ -1,34 +1,19 @@
 package graft.ops
 
-import java.io.File
-
 /** Parked file-format fixtures derived from the parquet tables — the
   * CSV/JSONL source seams (`source_csv_roundtrip`,
   * `source_jsonl_roundtrip`, `token_count_jsonl`, and the TagPack CSV's
-  * sibling in GraphMaterialize). Built once per (source-table mtime,
-  * tag) under `target/intermediate` like every tier: per-root lock +
-  * `_SUCCESS` marker, wiped by [[Tiers.wipe]] — so the queries that
-  * ingest them stay READ-ONLY (a query entry with a write side effect
-  * times fixture generation and re-writes it on every invocation). */
+  * sibling in GraphMaterialize). Built once per (source-table stamp,
+  * tag) under `target/intermediate` by [[Tiers.park]] like every tier,
+  * wiped by [[Tiers.wipe]] — so the queries that ingest them stay
+  * READ-ONLY (a query entry with a write side effect times fixture
+  * generation and re-writes it on every invocation). */
 object FileFixtures {
-
-  private val locks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   /** Path of the parked fixture derived from `$dir/$srcTable.parquet`,
     * building it via `build(root)` on first access. */
   def parked(dir: String, srcTable: String, tag: String)(
-      build: String => Unit): String = {
-    val f = new File(s"$dir/$srcTable.parquet")
-    val mtime =
-      if (f.isDirectory)
-        (f.lastModified() +: f.listFiles().map(_.lastModified()).toSeq).max
-      else f.lastModified()
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    val root = s"target/intermediate/src_${tag}_${key}_$mtime"
-    locks.computeIfAbsent(root, _ => new Object).synchronized {
-      if (!new File(s"$root/_SUCCESS").exists()) build(root)
-    }
-    root
-  }
+      build: String => Unit): String =
+    Tiers.park(s"target/intermediate/src_${tag}_" +
+      Tiers.sourceStamp(dir, srcTable))(build)
 }

@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.io.File
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Materialized address flow-edge set — the graph-analytics analog of
@@ -11,47 +9,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * statistics, PageRank, and any future graph consumer. Deriving them
   * re-runs an io explode plus an input⋈output self-join per referencing
   * plan — at 100 TB the edge list is the artifact a pipeline builds once
-  * per chain tip, so it is parked per fixture and every consumer starts
-  * from a pruned two-column parquet scan.
-  *
-  * Cache key = lineitem/orders path + mtime + format version; writes are
-  * idempotent and guarded by a JVM-local lock + _SUCCESS marker, like
-  * the sibling tiers.
+  * per chain tip, so it is parked per fixture ([[Tiers.park]]) and every
+  * consumer starts from a pruned two-column parquet scan. The key is the
+  * lineitem/orders stamp + format version.
   */
 object GraphMaterialize {
-
-  /** Per-tier build locks (keyed by output path): the flow-edge and
-    * value-edge tiers are independent and build concurrently; same-tier
-    * requests serialize and the second finds the _SUCCESS marker. */
-  private val locks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   /** Bump on any change to the edge derivation. */
   private val FormatVersion = 1
 
-  private def base(dir: String): String = {
-    val mtime = Seq("lineitem", "orders").map { t =>
-      val f = new File(s"$dir/$t.parquet")
-      if (f.isDirectory)
-        (f.lastModified() +: f.listFiles().map(_.lastModified()).toSeq).max
-      else f.lastModified()
-    }.max
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    s"target/intermediate/graph_v${FormatVersion}_${key}_$mtime"
-  }
+  private def base(dir: String): String =
+    s"target/intermediate/graph_v${FormatVersion}_" +
+      Tiers.sourceStamp(dir, "lineitem", "orders")
 
   /** (src, dst) distinct flow edges, computing and parking them on
     * first access. `build` derives the edge set (injected so the query
     * module owns the edge semantics). */
   def edgeTable(s: SparkSession, dir: String)(
-      build: => DataFrame): DataFrame = {
-    val root = base(dir)
-    locks.computeIfAbsent(root, _ => new Object).synchronized {
-      if (!new File(s"$root/_SUCCESS").exists())
-        build.write.mode("overwrite").parquet(root)
-    }
-    s.read.parquet(root)
-  }
+      build: => DataFrame): DataFrame =
+    Tiers.parquet(s, base(dir))(build)
 
   /** (src, dst, v) VALUE-weighted flow edges (the haircut taint's
     * per-tx floor(ov/n_inputs) attribution summed per pair) — parked
@@ -59,14 +35,8 @@ object GraphMaterialize {
     * the io explode + input⋈output self-join per referencing plan,
     * while the parked tier is a three-column pruned scan. */
   def valueEdgeTable(s: SparkSession, dir: String)(
-      build: => DataFrame): DataFrame = {
-    val root = s"${base(dir)}_ve"
-    locks.computeIfAbsent(root, _ => new Object).synchronized {
-      if (!new File(s"$root/_SUCCESS").exists())
-        build.write.mode("overwrite").parquet(root)
-    }
-    s.read.parquet(root)
-  }
+      build: => DataFrame): DataFrame =
+    Tiers.parquet(s, s"${base(dir)}_ve")(build)
 
   /** (src, dst, block_id) TIMED flow edges — the distinct flow edge set
     * with the block each flow occurred in, the candidate set for
@@ -75,14 +45,8 @@ object GraphMaterialize {
     * explode + input⋈output self-join per referencing plan, while the
     * parked tier is a three-column pruned scan. */
   def timedEdgeTable(s: SparkSession, dir: String)(
-      build: => DataFrame): DataFrame = {
-    val root = s"${base(dir)}_te"
-    locks.computeIfAbsent(root, _ => new Object).synchronized {
-      if (!new File(s"$root/_SUCCESS").exists())
-        build.write.mode("overwrite").parquet(root)
-    }
-    s.read.parquet(root)
-  }
+      build: => DataFrame): DataFrame =
+    Tiers.parquet(s, s"${base(dir)}_te")(build)
 
   /** (src, dst, b) PEEL-HOP edges (input address → strict-majority
     * output address, at block b) — the peel-chain sweep's candidate
@@ -90,14 +54,16 @@ object GraphMaterialize {
     * output aggregations over the io explode, while the parked tier is
     * a three-column scan the fixed-round DP starts from. */
   def peelHopTable(s: SparkSession, dir: String)(
-      build: => DataFrame): DataFrame = {
-    val root = s"${base(dir)}_ph"
-    locks.computeIfAbsent(root, _ => new Object).synchronized {
-      if (!new File(s"$root/_SUCCESS").exists())
-        build.write.mode("overwrite").parquet(root)
-    }
-    s.read.parquet(root)
-  }
+      build: => DataFrame): DataFrame =
+    Tiers.parquet(s, s"${base(dir)}_ph")(build)
+
+  /** Root of the entity-flow tier over the labels of clustering
+    * `window`. The label tier's own identity (format version and
+    * window, [[EntityMaterialize.labelKey]]) is part of the key, so a
+    * re-keyed label tier re-keys the flows that read it. */
+  private[graft] def entityFlowRoot(dir: String,
+      window: Option[Long]): String =
+    s"${base(dir)}_ef_${EntityMaterialize.labelKey(window)}"
 
   /** (tx_id, src_entity, value, dst_entity) per-(tx, output) ENTITY
     * flows over the pinned clustering window — the shared frame
@@ -106,17 +72,12 @@ object GraphMaterialize {
     * tiers: deriving it re-runs the io explode + the label join (two
     * corpus-sized passes) per referencing plan, while the parked tier
     * is a four-column pruned scan. The label side is itself the parked
-    * clustering tier, so this build is label-tier consumption, not a
-    * recompute. */
+    * clustering tier (window [[graft.queries.RefQueries.EntityWindow]]),
+    * so this build is label-tier consumption, not a recompute. */
   def entityFlowTable(s: SparkSession, dir: String)(
-      build: => DataFrame): DataFrame = {
-    val root = s"${base(dir)}_ef"
-    locks.computeIfAbsent(root, _ => new Object).synchronized {
-      if (!new File(s"$root/_SUCCESS").exists())
-        build.write.mode("overwrite").parquet(root)
-    }
-    s.read.parquet(root)
-  }
+      build: => DataFrame): DataFrame =
+    Tiers.parquet(s,
+      entityFlowRoot(dir, Some(graft.queries.RefQueries.EntityWindow)))(build)
 
   /** TagPack-shaped external attribution CSV — the FILE fixture the
     * entity_tags_src query ingests (GraphSense's TagPack path: curated
@@ -127,13 +88,8 @@ object GraphMaterialize {
     * directory to point a schema-on-read CSV reader at; `build`
     * provides the tag rows (the query module owns their shape). */
   def tagPackFile(s: SparkSession, dir: String)(
-      build: => DataFrame): String = {
-    val root = s"${base(dir)}_tp"
-    locks.computeIfAbsent(root, _ => new Object).synchronized {
-      if (!new File(s"$root/_SUCCESS").exists())
-        build.write.mode("overwrite").format("csv")
-          .option("header", "true").save(root)
-    }
-    root
-  }
+      build: => DataFrame): String =
+    Tiers.park(s"${base(dir)}_tp")(
+      build.write.mode("overwrite").format("csv")
+        .option("header", "true").save(_))
 }

@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.io.File
-
 import org.apache.spark.sql.SparkSession
 
 /** Parked bucketed transaction STORE per fixture — the serving-layout
@@ -12,49 +10,23 @@ import org.apache.spark.sql.SparkSession
   * rebuilds the store on every invocation times fixture generation
   * (the smell GraphMaterialize.tagPackFile documents).
   *
-  * Cache key = lineitem/orders path + mtime + format version; builds
-  * are guarded by a JVM-local lock + the writer's _SUCCESS marker,
-  * like the sibling tiers.
+  * Parked by [[Tiers.park]]; the key is the lineitem/orders stamp +
+  * format version. The store writer runs under dynamic partition
+  * overwrite, which emits no marker of its own — a guard on the
+  * writer's marker silently rebuilt the store on every invocation
+  * (caught when the "pure read" page query scaled with store size);
+  * `park` writes its own.
   */
 object StoreMaterialize {
-
-  private val locks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   /** Bump on any change to the store layout. */
   private val FormatVersion = 1
 
-  private def base(dir: String): String = {
-    val mtime = Seq("lineitem", "orders").map { t =>
-      val f = new File(s"$dir/$t.parquet")
-      if (f.isDirectory)
-        (f.lastModified() +: f.listFiles().map(_.lastModified()).toSeq).max
-      else f.lastModified()
-    }.max
-    val key = dir.replaceAll("[^A-Za-z0-9.]", "_")
-    s"target/intermediate/store_v${FormatVersion}_${key}_$mtime"
-  }
-
   /** Root of the parked transaction store (ChainStore.writeTransactions
     * layout), building it on first access. `write` receives the store
-    * root (the chain module owns the layout).
-    *
-    * The built-marker is OUR OWN file, written after `write` returns:
-    * the store writer runs under dynamic partition overwrite, which
-    * does NOT emit Spark's `_SUCCESS` marker — guarding on that file
-    * silently rebuilt the store on every invocation (caught when the
-    * "pure read" page query scaled with store size). */
+    * root (the chain module owns the layout). */
   def transactionStore(s: SparkSession, dir: String)(
-      write: String => Unit): String = {
-    val root = base(dir)
-    locks.computeIfAbsent(root, _ => new Object).synchronized {
-      if (!new File(s"$root/_BUILT").exists()) {
-        write(root)
-        java.nio.file.Files.writeString(
-          new File(s"$root/_BUILT").toPath, "")
-        ()
-      }
-    }
-    root
-  }
+      write: String => Unit): String =
+    Tiers.park(s"target/intermediate/store_v${FormatVersion}_" +
+      Tiers.sourceStamp(dir, "lineitem", "orders"))(write)
 }

@@ -2,9 +2,61 @@ package graft.ops
 
 import java.io.File
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 /** Shared maintenance for the parked intermediate tiers (the
   * `target/intermediate` trees the *Materialize objects write). */
 object Tiers {
+
+  /** The `<sanitised dir>_<max mtime>` part of a tier key over the
+    * `$dir/<table>.parquet` sources: a regenerated fixture changes the
+    * stamp, so its tiers invalidate naturally. A directory's stamp is
+    * the newest of itself and its files (listFiles is empty for a bare
+    * directory, null on an I/O error). */
+  def sourceStamp(dir: String, tables: String*): String = {
+    val mtime = tables.map { t =>
+      val f = new File(s"$dir/$t.parquet")
+      (f.lastModified() +:
+        Option(f.listFiles()).toSeq.flatten.map(_.lastModified())).max
+    }.max
+    s"${dir.replaceAll("[^A-Za-z0-9.]", "_")}_$mtime"
+  }
+
+  private val locks =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  /** Park a tier at `root` once: the one place the "build once per key"
+    * decision is made for every tier under `target/intermediate`.
+    *
+    * The tier's key is its root path (each caller folds its sources'
+    * [[sourceStamp]], its parameters and a format version into it), so
+    * a changed input lands at a new root instead of being read stale.
+    * Writes are idempotent (deterministic content, overwrite mode).
+    * One lock per root: different tiers build concurrently, while a
+    * second request for the same root waits and then finds the marker.
+    * If `root/_SUCCESS` is missing, `write(root)` runs and this method
+    * writes the marker itself, so it does not matter whether the writer
+    * emits one (a dynamic partition overwrite does not). A `write` that
+    * throws leaves no marker, and the next call rebuilds.
+    *
+    * A `write` may request other tiers, but only upstream ones: the
+    * tiers form a DAG, so nested per-root locks are always taken in
+    * dependency order and cannot deadlock. */
+  def park(root: String)(write: String => Unit): String = {
+    val marker = new File(root, "_SUCCESS")
+    locks.computeIfAbsent(root, _ => new Object).synchronized {
+      if (!marker.exists()) {
+        try write(root)
+        catch { case e: Throwable => marker.delete(); throw e }
+        marker.createNewFile()
+      }
+    }
+    root
+  }
+
+  /** [[park]] `df` as parquet at `root` (overwrite), then scan it. */
+  def parquet(s: SparkSession, root: String)(df: => DataFrame): DataFrame =
+    s.read.parquet(park(root)(df.write.mode("overwrite").parquet(_)))
 
   /** Null-guarded recursive delete: `File.listFiles` returns null on an
     * I/O or permission error — the naive recursion then NPEs and kills
@@ -54,8 +106,7 @@ object Tiers {
     * AGGREGATION — every task runs to completion and every failure is
     * reported (the first as the thrown exception, the rest suppressed
     * on it), so one broken tier never masks its siblings' errors.
-    * Per-root locks inside each *Materialize serialize same-tier
-    * requests. */
+    * [[park]]'s per-root locks serialize same-tier requests. */
   def buildConcurrently(tasks: Seq[() => Unit]): Unit = {
     if (tasks.isEmpty) return
     val pool = java.util.concurrent.Executors.newFixedThreadPool(

@@ -85,12 +85,8 @@ object RefQueries {
           !s.catalog.tableExists("gb_iostats")) {
         def mk(name: String, df: DataFrame): Unit = {
           s.sql(s"DROP TABLE IF EXISTS $name")
-          val loc = new java.io.File(s"target/bucketed/$name")
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) f.listFiles().foreach(rm)
-            f.delete(); ()
-          }
-          if (loc.exists()) rm(loc)
+          graft.ops.Tiers.deleteRecursively(
+            new java.io.File(s"target/bucketed/$name"))
           graft.chain.ChainStore.writeBucketed(df, name, "tx_id", 8,
             Some(s"target/bucketed/$name"))
         }
@@ -114,7 +110,7 @@ object RefQueries {
   /** entity_summary's pinned clustering window (first ~2 weeks of chain
     * history): early-chain co-spend graphs are sparse enough for real
     * entity structure at every verification sf. */
-  private[queries] val EntityWindow = 1110L
+  private[graft] val EntityWindow = 1110L
 
   /** Multi-input-heuristic entity labels: star edges from each input
     * address to its tx's minimum address (same components as the per-tx

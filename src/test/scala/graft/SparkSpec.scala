@@ -26,7 +26,9 @@ trait SparkSpec extends AnyFunSuite {
   * serialize on this lock so they never see each other's dir. */
 object CheckpointDirLock
 
-/** Temp directories under `target/` that the suite deletes in afterAll. */
+/** Temp directories under `target/` that the suite deletes in afterAll,
+  * together with their `<dir>-*` siblings (the `<dir>-ckpt` streaming
+  * checkpoints a test or the library puts beside an output dir). */
 trait TempDirs extends BeforeAndAfterAll { this: Suite =>
   private val created =
     new java.util.concurrent.ConcurrentLinkedQueue[java.io.File]()
@@ -39,6 +41,10 @@ trait TempDirs extends BeforeAndAfterAll { this: Suite =>
   }
 
   override protected def afterAll(): Unit =
-    try created.forEach(graft.ops.Tiers.deleteRecursively(_))
-    finally super.afterAll()
+    try created.forEach { d =>
+      Option(d.getParentFile.listFiles()).toSeq.flatten
+        .filter(_.getName.startsWith(s"${d.getName}-"))
+        .foreach(graft.ops.Tiers.deleteRecursively)
+      graft.ops.Tiers.deleteRecursively(d)
+    } finally super.afterAll()
 }

@@ -7,7 +7,7 @@ import graft.streaming.IncrementalIngest
 
 /** Streaming incremental ingest must agree with the batch path (ST2) and
   * the reorg guard must hold (ST4). */
-class StreamingSpec extends SparkSpec {
+class StreamingSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   test("stream AvailableNow equals batch filter above watermark") {
@@ -37,8 +37,7 @@ class StreamingSpec extends SparkSpec {
     // the merging-interval state must stitch a session whose events
     // arrive in different batches, and the final complete-mode output
     // must equal the one-shot batch sessionization exactly.
-    val src = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "sessrc_").toString
+    val src = tempDir("sessrc_")
     val ev = spark.read.parquet(s"$dir/events.parquet")
     ev.withColumn("__e", graft.functions.TimeColumns.epochSeconds(ev))
       .repartitionByRange(3, col("__e")).drop("__e")
@@ -62,8 +61,7 @@ class StreamingSpec extends SparkSpec {
   test("CDC apply replay converges: absolute-assignment merges are " +
       "idempotent") {
     val dir = sf("sf0.001")
-    val out = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "cdcrep_").toString
+    val out = tempDir("cdcrep_")
     val base = graft.queries.RelQueries.cdcBase(spark, dir)
     IncrementalIngest.cdcStoreInit(
       base.select("k", "price", "status"), s"$out/store")
@@ -75,11 +73,7 @@ class StreamingSpec extends SparkSpec {
     // a fresh checkpoint replays the whole change stream against the
     // ALREADY-MERGED store — U/D/I rows carry absolute values, so the
     // re-application must be a fixpoint, not a second increment
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(); ()
-    }
-    rm(new java.io.File(s"$out/store-ckpt"))
+    graft.ops.Tiers.deleteRecursively(new java.io.File(s"$out/store-ckpt"))
     IncrementalIngest.cdcApply(spark, out, s"$out/store")
     val twice = spark.read.parquet(s"$out/store")
       .agg(sum(col("k")), sum(col("price")), count(lit(1))).collect().toSeq
@@ -88,8 +82,7 @@ class StreamingSpec extends SparkSpec {
 
   test("foreachBatch bucket sink is exactly-once under replay") {
     val dir = sf("sf0.001")
-    val out = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "ing_").toString
+    val out = tempDir("ing_")
     val wm = 2000L
     IncrementalIngest.ingestToStore(spark, dir, out, wm)
     val once = graft.chain.ChainStore.readTransactions(spark, out)
@@ -108,11 +101,7 @@ class StreamingSpec extends SparkSpec {
       expect.count())
     // full rebuild path: wipe the store, redo with a fresh checkpoint —
     // must converge to the identical state
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(); ()
-    }
-    rm(new java.io.File(s"$out/transaction"))
+    graft.ops.Tiers.deleteRecursively(new java.io.File(s"$out/transaction"))
     IncrementalIngest.ingestToStore(spark, dir, out, wm)
     val redo = graft.chain.ChainStore.readTransactions(spark, out)
     assert(redo.count() === expect.count())
@@ -120,13 +109,9 @@ class StreamingSpec extends SparkSpec {
       expect.agg(sum("tx_id")).as[Long].head())
   }
 
-  private def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), prefix).toString
-
   test("multi-batch epochs stay additive in a shared bucket") {
     val dir = sf("sf0.001")
-    val src = tmpDir("mbsrc_")
+    val src = tempDir("mbsrc_")
     val orders = spark.read.parquet(s"$dir/orders.parquet")
     // two source files = two micro-batches under maxFilesPerTrigger=1;
     // every sf0.001 tx lands in tx bucket 0, so a bucket-keyed overwrite
@@ -135,7 +120,7 @@ class StreamingSpec extends SparkSpec {
       .write.parquet(s"$src/orders.parquet")
     orders.filter(col("o_orderkey") % 2 === 1).coalesce(1)
       .write.parquet(s"$src/orders2.parquet")
-    val out = tmpDir("mb_")
+    val out = tempDir("mb_")
     IncrementalIngest.ingestToStore(spark, src, out, -1L, 0L,
       maxFilesPerTrigger = Some(1))
     val raw = spark.read.parquet(s"$out/transaction")
@@ -149,7 +134,7 @@ class StreamingSpec extends SparkSpec {
 
   test("a resumed Graft.ingest lands above the first run's epochs") {
     val dir = sf("sf0.001")
-    val out = tmpDir("resume_")
+    val out = tempDir("resume_")
     val derived = Chain.transactions(spark, dir)
     val tip = derived.agg(max("block_id")).as[Long].head()
     // head: every block up to the middle height; each run gets a fresh
@@ -173,7 +158,7 @@ class StreamingSpec extends SparkSpec {
 
   test("Graft.ingestLive after a catch-up Graft.ingest keeps every row") {
     val dir = sf("sf0.001")
-    val out = tmpDir("live_")
+    val out = tempDir("live_")
     val derived = Chain.transactions(spark, dir)
     val tip = derived.agg(max("block_id")).as[Long].head()
     // the catch-up run lands the head in epoch 0; the live query's own
@@ -191,7 +176,7 @@ class StreamingSpec extends SparkSpec {
 
   test("a resumed checkpoint keeps the epoch base it was started with") {
     val dir = sf("sf0.001")
-    val out = tmpDir("ckbase_")
+    val out = tempDir("ckbase_")
     val ckpt = s"$out-ckpt"
     val tx = Chain.transactions(spark, dir)
     val tip = tx.agg(max("block_id")).as[Long].head()
@@ -214,7 +199,7 @@ class StreamingSpec extends SparkSpec {
 
   test("quantile sample merges across epochs to the exact batch sketch") {
     val dir = sf("sf0.001")
-    val src = tmpDir("qssrc_")
+    val src = tempDir("qssrc_")
     val events = spark.read.parquet(s"$dir/events.parquet")
     // two source files = two micro-batches: the landed per-epoch
     // samples must re-prune to EXACTLY the one-pass batch sample
@@ -222,7 +207,7 @@ class StreamingSpec extends SparkSpec {
       .write.parquet(s"$src/events.parquet")
     events.filter(col("event_id") % 2 === 1).coalesce(1)
       .write.parquet(s"$src/events2.parquet")
-    val out = tmpDir("qs_")
+    val out = tempDir("qs_")
     IncrementalIngest.quantileSampleIngest(spark, src, out,
       maxFilesPerTrigger = Some(1))
     val landed = spark.read.parquet(out)
@@ -240,12 +225,12 @@ class StreamingSpec extends SparkSpec {
 
   test("continuous processing-time trigger catches up with new files") {
     val dir = sf("sf0.001")
-    val src = tmpDir("contsrc_")
+    val src = tempDir("contsrc_")
     val orders = spark.read.parquet(s"$dir/orders.parquet")
     val first = orders.filter(col("o_orderkey") % 2 === 0)
     val second = orders.filter(col("o_orderkey") % 2 === 1)
     first.coalesce(1).write.parquet(s"$src/orders.parquet")
-    val out = tmpDir("cont_")
+    val out = tempDir("cont_")
     val q = IncrementalIngest.ingestContinuously(spark, src, out, -1L)
     try {
       q.processAllAvailable()
@@ -262,7 +247,7 @@ class StreamingSpec extends SparkSpec {
 
   test("bounded dedup drops within-watermark replays, accepts post-eviction ones") {
     val dir = sf("sf0.001")
-    val src = tmpDir("ddbsrc_")
+    val src = tempDir("ddbsrc_")
     val orders = spark.read.parquet(s"$dir/orders.parquet")
     val sample = orders.filter(col("o_orderkey") % 250 === 0)
     val filler = orders.filter(col("o_orderkey") % 250 === 1)
@@ -278,7 +263,7 @@ class StreamingSpec extends SparkSpec {
       .coalesce(1).write.parquet(s"$src/orders2.parquet")
     sample.withColumn("o_orderdate", date_add(col("o_orderdate"), 1700))
       .coalesce(1).write.parquet(s"$src/orders3.parquet")
-    val out = tmpDir("ddb_")
+    val out = tempDir("ddb_")
     IncrementalIngest.dedupedIngestBounded(spark, src, out, -1L,
       delay = "1 hour", maxFilesPerTrigger = Some(1))
     val tx1 = Chain.txProjection(sample)
@@ -302,7 +287,7 @@ class StreamingSpec extends SparkSpec {
 
   test("stream-stream attribution join equals the batch join and replays clean") {
     val dir = sf("sf0.001")
-    val out = tmpDir("attr_")
+    val out = tempDir("attr_")
     graft.streaming.StreamJoin.attributionJoin(spark, dir, out)
     val w = graft.streaming.StreamJoin.AttributionWindowSec
     val raw = Chain.table(spark, dir, "events")
@@ -334,7 +319,7 @@ class StreamingSpec extends SparkSpec {
 
   test("resume guard refuses a batch-layout store") {
     val dir = sf("sf0.001")
-    val out = tmpDir("mix_")
+    val out = tempDir("mix_")
     // batch layout: partition dirs are tx_id_group only — an epoch-keyed
     // streaming resume into this root would mix partition-dir depths and
     // break parquet partition discovery on the next read
@@ -359,7 +344,7 @@ class StreamingSpec extends SparkSpec {
 
   test("rollback retry converges after a crash in the worst window") {
     val dir = sf("sf0.001")
-    val out = tmpDir("reorgcrash_")
+    val out = tempDir("reorgcrash_")
     IncrementalIngest.ingestToStore(spark, dir, out, 0L,
       checkpoint = Some(s"$out-ckpt"))
     val full = graft.chain.ChainStore.readTransactions(spark, out)
@@ -388,7 +373,7 @@ class StreamingSpec extends SparkSpec {
 
   test("rollback retry converges after a crash HALFWAY through the swap") {
     val dir = sf("sf0.001")
-    val out = tmpDir("reorgmidswap_")
+    val out = tempDir("reorgmidswap_")
     IncrementalIngest.ingestToStore(spark, dir, out, 0L,
       checkpoint = Some(s"$out-ckpt"))
     val full = graft.chain.ChainStore.readTransactions(spark, out)
@@ -424,7 +409,7 @@ class StreamingSpec extends SparkSpec {
   test("reorg rollback is bucket-scoped and recovery converges") {
     import org.apache.spark.sql.functions._
     val dir = sf("sf0.001")
-    val out = tmpDir("reorg_")
+    val out = tempDir("reorg_")
     // two-epoch history, the long-lived-store shape: epoch 0 is the old
     // chain body (everything at least 1000 blocks below tip), epoch 1
     // the recent range — a shallow reorg then only touches the recent
@@ -491,7 +476,7 @@ class StreamingSpec extends SparkSpec {
 
   test("deepest reorg (fork below every landed block) recovers from an empty store") {
     val dir = sf("sf0.001")
-    val out = tmpDir("reorgdeep_")
+    val out = tempDir("reorgdeep_")
     IncrementalIngest.ingestToStore(spark, dir, out, 0L,
       checkpoint = Some(s"$out-ckpt"))
     val full = graft.chain.ChainStore.readTransactions(spark, out)
@@ -519,7 +504,7 @@ class StreamingSpec extends SparkSpec {
     // batch's probe against the earlier one's landed prefix is
     // exercised with a real qualifying pair, not vacuously
     val dir = sf("sf0.01")
-    val out = tmpDir("ap_")
+    val out = tempDir("ap_")
     val mod = CorpusIngest.AllPairsBatchMod
     val docs = Chain.table(spark, dir, "documents")
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
