@@ -33,9 +33,9 @@ object Bench {
     (s, dir) => tables.foreach(_(s, dir).count())
 
   /** The cold-build inventory: one entry per parked tier (family), by
-    * entry name, in build order — the one list Bench's cold passes,
-    * BuildBench and BuildStats run. Order matters: components derive
-    * from bands, and entity flows read the entity labels. */
+    * entry name, in build order — the one list Bench's cold passes and
+    * `Probe time` run. Order matters: components derive from bands, and
+    * entity flows read the entity labels. */
   val coldBuilds: Seq[(String, (SparkSession, String) => Unit)] = Seq(
     "dedup_materialize_bands" -> counts(bandTable),
     // the cluster tiers: dedup_components/dedup_keep_one and the
@@ -97,15 +97,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // untimed warmup: session/codegen/parquet-footer costs are one-time
     // and not attributable to the first query in iteration order
     try {

@@ -1,23 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: decompose stream_cdc_apply's cost into its phases —
   * (a) one-time 64-bucket store init + change-file extracts (setup),
   * (b) the streaming per-batch merge apply, (c) the result read-back —
   * so optimization (and the SCALE.md attribution) targets the phase
-  * that actually pays. Usage: runMain graft.CdcPhases [sfDir] [cpus]
+  * that actually pays. Usage: runMain graft.CdcPhases [sfDir]
   */
 object CdcPhases {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
-    val cpus = args.lift(1).getOrElse("32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     spark.read.parquet(s"$sfDir/lineitem.parquet").count()
     def timed(name: String)(body: => Unit): Unit = {
       val t0 = System.nanoTime()

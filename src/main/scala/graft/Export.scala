@@ -300,14 +300,7 @@ object Export {
       catch { case e: IllegalArgumentException =>
         System.err.println(e.getMessage); sys.exit(1)
       }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     try {
       val r = run(spark, args)
       println("-" * 58)

@@ -9,11 +9,10 @@ import graft.chain.{Chain, ChainStore, GraftCatalog}
   * engine, plus the training-data pipeline operators.
   *
   * {{{
-  * val spark = SparkSession.builder()
-  *   .config("spark.sql.extensions", "graft.GraftExtensions")
-  *   // events.parquet carries TIMESTAMP(NANOS); set once at build time
-  *   .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-  *   .getOrCreate()
+  * // launched with --conf spark.sql.extensions=graft.GraftExtensions
+  * // and --conf spark.sql.legacy.parquet.nanosAsLong=true (events.parquet
+  * // carries TIMESTAMP(NANOS)); locally, graft.Session.local()
+  * val spark = SparkSession.active
   *
   * // chain tables (derive → write partitioned → point lookup)
   * val tx = Graft.transactions(spark, dataDir)

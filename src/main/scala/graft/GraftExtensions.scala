@@ -7,8 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import graft.functions.DotProductLong
 
 /** Cluster-wide registration entry point:
-  * `--conf spark.sql.extensions=graft.GraftExtensions` (or
-  * `SparkSession.builder().withExtensions(new GraftExtensions)`) makes the
+  * `--conf spark.sql.extensions=graft.GraftExtensions` (or a session
+  * builder's `.withExtensions(new GraftExtensions)`) makes the
   * engine's custom expressions available to every session's SQL without
   * per-session register() calls.
   */

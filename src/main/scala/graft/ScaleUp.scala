@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev tool: amplify the chain/relational fact tables of an sf dir by
@@ -64,12 +64,7 @@ object ScaleUp {
     require(Seq("full", "chain", "skew", "text").contains(mode),
       s"bad mode $mode")
     checkFactor(factor)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
 
     def amplify(name: String, shift: (DataFrame, Int) => DataFrame): Unit = {
       val base = spark.read.parquet(s"$src/$name.parquet")

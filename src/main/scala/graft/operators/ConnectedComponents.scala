@@ -134,7 +134,6 @@ object ConnectedComponents {
   /** Star fixpoint + label join over an explicit node universe. */
   private def labelsOver(nodes: DataFrame, edges: DataFrame, maxIter: Int)
       : DataFrame = {
-    val debug = sys.props.get("graft.cc.debug").contains("1")
     // checksum doubles as the materializing action for the lazily
     // checkpointed round — one job per round, not two
     var e = Materialize.truncateBeforeAction(canonical(edges))
@@ -142,7 +141,6 @@ object ConnectedComponents {
     var it = 0
     var converged = false
     while (!converged && it < maxIter) {
-      val t0 = if (debug) System.nanoTime() else 0L
       // one large/small-star alternation per materialized round. NOT
       // fused deeper (r13 measured smallStar∘largeStar twice per round:
       // per-round wall went 0.8 s → ~5 s at sf0.1 — driver planning +
@@ -150,8 +148,6 @@ object ConnectedComponents {
       // than the saved checkpoint/checksum job).
       val next = Materialize.truncateBeforeAction(smallStar(largeStar(e)))
       val nextSig = checksum(next)
-      if (debug) println(f"[cc] round $it edges=${nextSig._1} " +
-        f"${(System.nanoTime() - t0) / 1e9}%.2f s")
       converged = nextSig == sig
       sig = nextSig
       // round N-1's checkpoint blocks are dead once round N is

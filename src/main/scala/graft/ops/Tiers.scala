@@ -85,19 +85,15 @@ object Tiers {
     // malformed or non-positive env values fall back to the computed
     // default instead of throwing inside object init (an opaque
     // ExceptionInInitializerError) or flowing 0 into the pool size
-    def envInt(name: String): Option[Int] =
-      sys.env.get(name).flatMap(v => scala.util.Try(v.trim.toInt).toOption)
-        .filter(_ > 0)
-    envInt("SPARK_GRAFT_BUILD_THREADS").getOrElse {
-      // scale with the session's core budget, bounded [4, 8]: measured
-      // r13 at sf0.1/32 cores, ann_build (11 independent tier jobs)
-      // runs ~25 % faster at 8 in-flight jobs than 4 (the jobs are
-      // small, so overlap hides scheduling latency); beyond 8 the
-      // driver threads contend and the curve flattens
-      val cpus = envInt("SPARK_GRAFT_CPUS")
-        .getOrElse(Runtime.getRuntime.availableProcessors)
-      math.min(8, math.max(4, cpus / 4))
-    }
+    graft.Session.positive(sys.env.get("SPARK_GRAFT_BUILD_THREADS"))
+      .getOrElse {
+        // scale with the session's core budget, bounded [4, 8]: measured
+        // r13 at sf0.1/32 cores, ann_build (11 independent tier jobs)
+        // runs ~25 % faster at 8 in-flight jobs than 4 (the jobs are
+        // small, so overlap hides scheduling latency); beyond 8 the
+        // driver threads contend and the curve flattens
+        math.min(8, math.max(4, graft.Session.cpus / 4))
+      }
   }
 
   /** Run independent tier builds as concurrent Spark jobs — ONE switch

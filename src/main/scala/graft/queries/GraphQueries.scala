@@ -1686,9 +1686,10 @@ object GraphQueries {
     * of [[taintPropagate]]'s loop body. */
   /** (src, dst, block_id) timed-edge CTE — the SQL mirror of the
     * timedEdges tier, shared by graph_round_trips and
-    * graph_taint_timed. */
+    * graph_taint_timed. AS MATERIALIZED: every taint round and both
+    * round-trip sides read it. */
   private def teCte: String =
-    """te AS (
+    """te AS MATERIALIZED (
       |  SELECT DISTINCT i.address AS src, o.address AS dst, t.block_id
       |  FROM (SELECT DISTINCT tx_id, address FROM ioa WHERE is_input) i
       |  JOIN (SELECT DISTINCT tx_id, address FROM ioa
@@ -1697,9 +1698,10 @@ object GraphQueries {
       |  WHERE i.address <> o.address)""".stripMargin
 
   /** One time-respecting taint round: candidates flow through timed
-    * edges usable at the source's arrival block, min-arrival per node. */
+    * edges usable at the source's arrival block, min-arrival per node.
+    * AS MATERIALIZED: the round reads its predecessor twice. */
   private def timedTaintIterCte(r: Int): String =
-    s"""tt$r AS (SELECT node, CAST(min(a) AS BIGINT) AS a FROM (
+    s"""tt$r AS MATERIALIZED (SELECT node, CAST(min(a) AS BIGINT) AS a FROM (
        |  SELECT node, a FROM tt${r - 1}
        |  UNION ALL
        |  SELECT e.dst AS node, e.block_id AS a

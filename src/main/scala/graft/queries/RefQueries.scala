@@ -65,17 +65,6 @@ object RefQueries {
     * build passes need a true second cold run, not a memo hit. */
   def invalidateBucketedCache(): Unit = bucketedFor.set("")
 
-  /** Dev hook for [[graft.ProfileEntity]]: build ONE tier by name. */
-  def profileEntityTier(s: SparkSession, dir: String, which: String): Unit = {
-    which match {
-      case "ia"     => inputAddressPairs(s, dir).count()
-      case "full"   => entityLabels(s, dir).count()
-      case "window" => entityLabels(s, dir, Some(EntityWindow)).count()
-      case "base"   => entityBaseLabels(s, dir).count()
-    }
-    ()
-  }
-
   def buildBucketedTables(s: SparkSession, dir: String): Unit =
     bucketedFor.synchronized {
       // the cache is JVM-wide but catalog entries are per-session: a new

@@ -7,7 +7,7 @@ import graft.ops.TextCorpus
 
 /** The frame-based library API works on arbitrary user frames (not just
   * the fixture-derived corpus). */
-class ApiSpec extends SparkSpec {
+class ApiSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   private lazy val docs = Seq(
@@ -220,8 +220,7 @@ class ApiSpec extends SparkSpec {
   }
 
   test("Graft facade: ingest + keyspace DDL entry points") {
-    val out = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "facade_").toString
+    val out = tempDir("facade_")
     Graft.ingest(spark, sf("sf0.001"), out, watermark = 2300L)
     assert(graft.chain.ChainStore.readTransactions(spark, out).count() > 0)
     val ddl = Graft.keyspaceDdl("mychain")

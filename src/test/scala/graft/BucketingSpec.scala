@@ -6,7 +6,7 @@ import graft.chain.{Chain, ChainStore}
 
 /** Bucketed tables must join without a shuffle, and the multi-chain
   * keyspace must prune on the currency partition. */
-class BucketingSpec extends SparkSpec {
+class BucketingSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   private def dropManaged(name: String): Unit = {
@@ -41,8 +41,7 @@ class BucketingSpec extends SparkSpec {
 
   test("multi-chain store prunes on currency partition") {
     val dir = sf("sf0.001")
-    val out = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "mc_").toString
+    val out = tempDir("mc_")
     val tx = Chain.transactions(spark, dir)
     ChainStore.writeMultiChain(Map(
       "btc" -> tx.filter(col("tx_id") % 2 === 1),

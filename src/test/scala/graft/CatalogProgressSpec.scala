@@ -1,12 +1,10 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.chain.{Chain, ChainStore, GraftCatalog}
 import graft.operators.Progress
 
 /** SQL catalog registration (S7) and write-progress accounting (A7). */
-class CatalogProgressSpec extends SparkSpec {
+class CatalogProgressSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   test("registered views answer SQL over the whole data model") {
@@ -25,8 +23,7 @@ class CatalogProgressSpec extends SparkSpec {
   }
 
   test("progress listener counts written rows") {
-    val out = Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "prog_").toString
+    val out = tempDir("prog_")
     val tx = Chain.transactions(spark, sf("sf0.001"))
     val (_, rows) = Progress.countingWrites(spark, reportEvery = 500L) {
       ChainStore.writeTransactions(tx, out)

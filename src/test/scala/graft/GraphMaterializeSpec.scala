@@ -15,6 +15,9 @@ class GraphMaterializeSpec extends SparkSpec {
   test("edge tier parks once, reuses, and matches the declarative edges") {
     val dir = sf("sf0.001")
     graft.queries.GraphQueries.buildGraphTier(spark, dir)
+    // the edge tier is flow_build's, not graph_build's: without it the
+    // test passed only when an earlier suite had parked the tier
+    graft.queries.GraphQueries.buildFlowTier(spark, dir)
     // after the build, access must NOT re-run the derivation
     val edges = GraphMaterialize.edgeTable(spark, dir)(
       sys.error("tier rebuilt on reuse"))

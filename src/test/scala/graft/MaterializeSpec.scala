@@ -8,7 +8,7 @@ import graft.operators.{ConnectedComponents, Materialize}
   * localCheckpoint with no checkpoint dir, and RELIABLE checkpoint files
   * once `setCheckpointDir` is called — the one-line cluster opt-in the
   * iterative operators (CC, PageRank, k-core, LPA, BPE) rely on. */
-class MaterializeSpec extends SparkSpec {
+class MaterializeSpec extends SparkSpec with TempDirs {
 
   test("no checkpoint dir → localCheckpoint; dir set → reliable checkpoint files") {
     CheckpointDirLock.synchronized {
@@ -19,7 +19,7 @@ class MaterializeSpec extends SparkSpec {
     val local = Materialize.truncate(Seq(1, 2, 3).toDF("x"))
     assert(local.count() === 3)
 
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
+    val dir = tempDir("graft_ckpt_")
     try {
       sc.setCheckpointDir(dir)
       val reliable = Materialize.truncate(Seq(4, 5).toDF("x"))
@@ -39,14 +39,7 @@ class MaterializeSpec extends SparkSpec {
       assert(sc.getCheckpointDir.isEmpty || viaReliable.nonEmpty)
       assert(viaReliable.map(r => (r.getLong(0), r.getLong(1))) ===
         Seq((1L, 1L), (2L, 1L), (3L, 1L), (10L, 10L), (11L, 10L)))
-    } finally {
-      sc.setCheckpointDir(null)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }
+    } finally sc.setCheckpointDir(null)
     }
   }
 
@@ -94,8 +87,7 @@ class MaterializeSpec extends SparkSpec {
     CheckpointDirLock.synchronized {
     import spark.implicits._
     val sc = spark.sparkContext
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_rel_")
-      .toString
+    val dir = tempDir("graft_ckpt_rel_")
     try {
       sc.setCheckpointDir(dir)
       def files(): Seq[java.io.File] = {
@@ -114,10 +106,7 @@ class MaterializeSpec extends SparkSpec {
       Materialize.release(frame)
       assert(files().isEmpty,
         s"release left checkpoint files behind: ${files().take(3)}")
-    } finally {
-      sc.setCheckpointDir(null)
-      graft.ops.Tiers.deleteRecursively(new java.io.File(dir))
-    }
+    } finally sc.setCheckpointDir(null)
     }
   }
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * of doc N. The shift is now derived from the data, so this spec feeds
   * documents long enough for chunk_idx ≥ 6 (ts ≥ 4200) and asserts every
   * aligned chunk really belongs to the frame's own document. */
-class MultimodalAlignSpec extends SparkSpec {
+class MultimodalAlignSpec extends SparkSpec with TempDirs {
 
   test("alignment never leaks chunks across documents (chunk_ts past 4096ms)") {
     import spark.implicits._
@@ -19,48 +19,40 @@ class MultimodalAlignSpec extends SparkSpec {
         ('a' + ((id * 31 + i * 7) % 26)).toChar).mkString
       (id, text)
     }.toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_mm_").toString
-    try {
-      docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
-      val out = SparkEntry.queries("multimodal_align")(spark, dir)
-        .collect()
-      assert(out.nonEmpty)
-      // recompute the expected chunk per (doc, frame) from first
-      // principles: latest chunk_idx with idx*700 <= frame_ts within
-      // the SAME document, and the md5 must come from that doc's text
-      val textOf = docs.as[(Long, String)].collect().toMap
-      out.foreach { r =>
-        val docId = r.getLong(r.fieldIndex("doc_id"))
-        val frameTs = r.getLong(r.fieldIndex("frame_ts_ms"))
-        val chunkIdx = r.getLong(r.fieldIndex("chunk_idx"))
-        val chunkMd5 = r.getString(r.fieldIndex("chunk_md5"))
-        val nChunks = (textOf(docId).length + 447) / 448
-        val expectIdx = math.min(frameTs / 700, nChunks - 1L)
-        assert(chunkIdx === expectIdx,
-          s"doc $docId frame_ts $frameTs: got chunk $chunkIdx, " +
-            s"expected $expectIdx")
-        val start = (chunkIdx * 448).toInt
-        val expectMd5 = java.security.MessageDigest.getInstance("MD5")
-          .digest(textOf(docId).substring(start,
-            math.min(start + 512, textOf(docId).length))
-            .getBytes("UTF-8"))
-          .map("%02x".format(_)).mkString
-        assert(chunkMd5 === expectMd5,
-          s"doc $docId frame_ts $frameTs: chunk md5 from another document")
-      }
-      // the scenario really exercises the overflow zone: every doc's
-      // chunk timeline extends past the old 12-bit boundary (a doc N
-      // chunk with ts ≥ 4096 aliased into doc N+1's keyspace under the
-      // fixed shift, outranking N+1's own earlier chunks in the carry)
-      assert(textOf.values.forall(t => ((t.length + 447) / 448 - 1) * 700L >= 4096L),
-        "fixture chunk timelines never cross 4096 ms; overflow zone untested")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(dir))
+    val dir = tempDir("graft_mm_")
+    docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val out = SparkEntry.queries("multimodal_align")(spark, dir)
+      .collect()
+    assert(out.nonEmpty)
+    // recompute the expected chunk per (doc, frame) from first
+    // principles: latest chunk_idx with idx*700 <= frame_ts within
+    // the SAME document, and the md5 must come from that doc's text
+    val textOf = docs.as[(Long, String)].collect().toMap
+    out.foreach { r =>
+      val docId = r.getLong(r.fieldIndex("doc_id"))
+      val frameTs = r.getLong(r.fieldIndex("frame_ts_ms"))
+      val chunkIdx = r.getLong(r.fieldIndex("chunk_idx"))
+      val chunkMd5 = r.getString(r.fieldIndex("chunk_md5"))
+      val nChunks = (textOf(docId).length + 447) / 448
+      val expectIdx = math.min(frameTs / 700, nChunks - 1L)
+      assert(chunkIdx === expectIdx,
+        s"doc $docId frame_ts $frameTs: got chunk $chunkIdx, " +
+          s"expected $expectIdx")
+      val start = (chunkIdx * 448).toInt
+      val expectMd5 = java.security.MessageDigest.getInstance("MD5")
+        .digest(textOf(docId).substring(start,
+          math.min(start + 512, textOf(docId).length))
+          .getBytes("UTF-8"))
+        .map("%02x".format(_)).mkString
+      assert(chunkMd5 === expectMd5,
+        s"doc $docId frame_ts $frameTs: chunk md5 from another document")
     }
+    // the scenario really exercises the overflow zone: every doc's
+    // chunk timeline extends past the old 12-bit boundary (a doc N
+    // chunk with ts ≥ 4096 aliased into doc N+1's keyspace under the
+    // fixed shift, outranking N+1's own earlier chunks in the carry)
+    assert(textOf.values.forall(t => ((t.length + 447) / 448 - 1) * 700L >= 4096L),
+      "fixture chunk timelines never cross 4096 ms; overflow zone untested")
   }
 
   test("phash pairs find every injected duplicate at Hamming 0, via band join") {

@@ -37,7 +37,7 @@ class PlanSpec extends SparkSpec {
              _: TakeOrderedAndProjectExec => true
         case _ => false
       }
-    PlanDump.headlinePlans.foreach { name =>
+    Probe.headlinePlans.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sf("sf0.001"))
       df.collect() // run so AQE finalizes its stages
       val nodes = flatten(df.queryExecution.executedPlan)

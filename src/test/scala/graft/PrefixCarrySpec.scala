@@ -7,7 +7,7 @@ import graft.operators.PrefixCarry
 /** The two-phase distributed carry must equal the serial prefix scan it
   * replaces — across range-partition boundaries, through null runs
   * longer than a partition, and in both directions. */
-class PrefixCarrySpec extends SparkSpec {
+class PrefixCarrySpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
   // sparse payloads: only every 7th ord carries one, so several range
@@ -71,8 +71,7 @@ class PrefixCarrySpec extends SparkSpec {
       val sc = spark.sparkContext
       assert(sc.getCheckpointDir.isEmpty,
         "suite precondition: no checkpoint dir leaks in from another test")
-      val dir = java.nio.file.Files.createTempDirectory("graft_pc_ckpt_")
-        .toString
+      val dir = tempDir("graft_pc_ckpt_")
       try {
         sc.setCheckpointDir(dir)
         val c = PrefixCarry.exclusiveCarryCarried(fixture, "ord", "payload")
@@ -100,10 +99,7 @@ class PrefixCarrySpec extends SparkSpec {
         val p = new org.apache.hadoop.fs.Path(ckptFile.get)
         assert(!p.getFileSystem(sc.hadoopConfiguration).exists(p),
           "seal left the pinned input's checkpoint files behind")
-      } finally {
-        sc.setCheckpointDir(null)
-        graft.ops.Tiers.deleteRecursively(new java.io.File(dir))
-      }
+      } finally sc.setCheckpointDir(null)
     }
   }
 

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 /** Fixture-schema drift insurance: the driver regenerates the parquet
@@ -19,11 +17,10 @@ import org.apache.spark.sql.functions._
   * (Timestamp-precision drift itself is pinned separately by
   * TimeColumnsSpec across nanos-LONG / TIMESTAMP / TIMESTAMP_NTZ.)
   */
-class SchemaDriftSpec extends SparkSpec {
+class SchemaDriftSpec extends SparkSpec with TempDirs {
 
   private lazy val driftDir: String = {
-    val dir = Files.createTempDirectory("graft_drift").toFile
-    dir.deleteOnExit()
+    val dir = tempDir("graft_drift")
     val src = sf("sf0.001")
     val names = new java.io.File(src).listFiles()
       .map(_.getName).filter(_.endsWith(".parquet")).map(_.dropRight(8))
@@ -40,9 +37,9 @@ class SchemaDriftSpec extends SparkSpec {
             .withColumn("user_id", col("user_id").cast("int"))
         case _ => t
       }
-      drifted.write.mode("overwrite").parquet(s"${dir.getPath}/$n.parquet")
+      drifted.write.mode("overwrite").parquet(s"$dir/$n.parquet")
     }
-    dir.getPath
+    dir
   }
 
   private def rows(name: String, dir: String): Set[String] =

@@ -6,17 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session base for all suites (getOrCreate → one JVM-wide session). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    // keep managed-table data out of the repo root and inside target/
-    .config("spark.sql.warehouse.dir", "target/spark-warehouse")
-    .getOrCreate()
-  spark.sparkContext.setLogLevel("WARN")
+  lazy val spark: SparkSession = Session.local(4)
 
   def sf(name: String): String = s"/root/testdata/$name"
 }
