@@ -2,7 +2,7 @@ package graft.chain
 
 import java.io.File
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Per-chain configuration ingestion — the reference deploys one config
@@ -72,18 +72,21 @@ object ChainConfig {
     * file (currency = the file stem), flat oracle-friendly columns.
     * Schema-on-read: `multiLine` JSON (each file is ONE object, the
     * reference's layout), currency recovered from the input file name —
-    * no per-chain code paths, a fifth chain is a fifth file. */
+    * no per-chain code paths, a fifth chain is a fifth file. The
+    * directory is read with a file filter, not a glob path: Spark probes
+    * a read path for a streaming-sink log and warns when a glob names
+    * no such file. */
   def read(s: SparkSession, confDir: String): DataFrame =
-    parse(s, s"$confDir/*.cfg")
+    parse(s.read.option("pathGlobFilter", "*.cfg"), confDir)
 
   /** One chain's params from a single cfg FILE — the export CLI's
     * `--chain-config conf/btc.cfg` shape (one file per deploy, like
     * the reference's `-c`). */
   def readFile(s: SparkSession, cfgPath: String): DataFrame =
-    parse(s, cfgPath)
+    parse(s.read, cfgPath)
 
-  private def parse(s: SparkSession, pathGlob: String): DataFrame =
-    s.read.option("multiLine", "true").json(pathGlob)
+  private def parse(reader: DataFrameReader, path: String): DataFrame =
+    reader.option("multiLine", "true").json(path)
       .select(
         regexp_extract(input_file_name(), "([a-z0-9]+)\\.cfg", 1)
           .as("currency"),

@@ -1,6 +1,6 @@
 package graft.chain
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The sink side of the reference contract: partitioned, ordered,
@@ -22,19 +22,22 @@ import org.apache.spark.sql.functions._
   */
 object ChainStore extends ChainSink {
 
-  private def dynamicOverwrite(s: SparkSession): Unit =
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+  /** The idempotent partitioned overwrite: rewrites exactly the `cols`
+    * partitions `df` holds and keeps every other one. Dynamic mode is an
+    * option of this one write (Spark reads it before the session
+    * default), so no session changes — neither the caller's nor a
+    * stream batch's clone. */
+  private[graft] def overwritePartitions(df: DataFrame,
+      cols: String*): DataFrameWriter[Row] =
+    df.write.option("partitionOverwriteMode", "dynamic")
+      .mode("overwrite").partitionBy(cols: _*)
 
   /** transaction table: partition dirs by tx_id_group, rows ordered by
     * tx_id inside each bucket. */
-  def writeTransactions(tx: DataFrame, out: String): Unit = {
-    dynamicOverwrite(tx.sparkSession)
-    tx.repartition(col("tx_id_group"))
-      .sortWithinPartitions(col("tx_id"))
-      .write.mode("overwrite")
-      .partitionBy("tx_id_group")
+  def writeTransactions(tx: DataFrame, out: String): Unit =
+    overwritePartitions(tx.repartition(col("tx_id_group"))
+      .sortWithinPartitions(col("tx_id")), "tx_id_group")
       .parquet(s"$out/transaction")
-  }
 
   /** Streaming-epoch variant of [[writeTransactions]]: partitions on
     * (tx_id_group, ingest_epoch) so successive micro-batches that touch
@@ -44,15 +47,11 @@ object ChainStore extends ChainSink {
     * survive (a plain bucket-keyed overwrite would wipe them; at 100 TB
     * an epoch almost never covers whole buckets). Read the store back
     * through [[readTransactions]], which hides the epoch column. */
-  def writeTransactionsEpoch(tx: DataFrame, out: String, epoch: Long): Unit = {
-    dynamicOverwrite(tx.sparkSession)
-    tx.withColumn("ingest_epoch", lit(epoch))
+  def writeTransactionsEpoch(tx: DataFrame, out: String, epoch: Long): Unit =
+    overwritePartitions(tx.withColumn("ingest_epoch", lit(epoch))
       .repartition(col("tx_id_group"))
-      .sortWithinPartitions(col("tx_id"))
-      .write.mode("overwrite")
-      .partitionBy("tx_id_group", "ingest_epoch")
+      .sortWithinPartitions(col("tx_id")), "tx_id_group", "ingest_epoch")
       .parquet(s"$out/transaction")
-  }
 
   /** Transaction store reader that works against both layouts: the batch
     * bucket-only layout and the epoch-keyed streaming layout. */
@@ -265,14 +264,10 @@ object ChainStore extends ChainSink {
 
   /** block table: clustering ORDER BY (block_id DESC) of schema.cql:13 →
     * descending sort inside each bucket. */
-  def writeBlocks(blocks: DataFrame, out: String): Unit = {
-    dynamicOverwrite(blocks.sparkSession)
-    blocks.repartition(col("block_id_group"))
-      .sortWithinPartitions(col("block_id").desc)
-      .write.mode("overwrite")
-      .partitionBy("block_id_group")
+  def writeBlocks(blocks: DataFrame, out: String): Unit =
+    overwritePartitions(blocks.repartition(col("block_id_group"))
+      .sortWithinPartitions(col("block_id").desc), "block_id_group")
       .parquet(s"$out/block")
-  }
 
   /** hash→id index (schema.cql:36-41). The reference fans out to 16^5
     * prefix partitions; as directories that would be 1M tiny dirs, and
@@ -301,14 +296,10 @@ object ChainStore extends ChainSink {
 
   /** block_transactions table: same layout as block (bucketed dirs,
     * block_id DESC inside, schema.cql:51-56). */
-  def writeBlockTransactions(bt: DataFrame, out: String): Unit = {
-    dynamicOverwrite(bt.sparkSession)
-    bt.repartition(col("block_id_group"))
-      .sortWithinPartitions(col("block_id").desc)
-      .write.mode("overwrite")
-      .partitionBy("block_id_group")
+  def writeBlockTransactions(bt: DataFrame, out: String): Unit =
+    overwritePartitions(bt.repartition(col("block_id_group"))
+      .sortWithinPartitions(col("block_id").desc), "block_id_group")
       .parquet(s"$out/block_transactions")
-  }
 
   /** exchange_rates: one row per day — a single file regardless of
     * history length (a century is ~37k rows). */
@@ -355,11 +346,9 @@ object ChainStore extends ChainSink {
     val tagged = chains.map { case (cur, df) =>
       df.withColumn("currency", lit(cur))
     }.reduce(_ unionByName _)
-    dynamicOverwrite(tagged.sparkSession)
-    tagged.repartition(col("currency"), col("tx_id_group"))
-      .sortWithinPartitions(col("tx_id"))
-      .write.mode("overwrite")
-      .partitionBy("currency", "tx_id_group")
+    overwritePartitions(
+      tagged.repartition(col("currency"), col("tx_id_group"))
+        .sortWithinPartitions(col("tx_id")), "currency", "tx_id_group")
       .parquet(s"$out/multichain_transaction")
   }
 

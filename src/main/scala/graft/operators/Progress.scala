@@ -2,6 +2,7 @@ package graft.operators
 
 import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.spark.graft.ListenerBridge
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
@@ -35,15 +36,10 @@ object Progress {
     s.sparkContext.addSparkListener(counter)
     try {
       val r = body
-      // the listener bus is async (and its flush API is private) — poll
-      // until the counter stops moving
-      var prev = -1L
-      var n = counter.rows.get()
-      var tries = 0
-      while (n != prev && tries < 50) {
-        prev = n; Thread.sleep(100); n = counter.rows.get(); tries += 1
-      }
-      (r, n)
+      // the listener bus is async: let every task end posted so far
+      // reach the counter
+      ListenerBridge.drain(s.sparkContext)
+      (r, counter.rows.get())
     } finally s.sparkContext.removeSparkListener(counter)
   }
 }

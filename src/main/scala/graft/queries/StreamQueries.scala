@@ -42,7 +42,7 @@ object StreamQueries {
 
   /** Fresh per-invocation sink path under target/tmp. */
   private def tmp(tag: String): String =
-    s"target/tmp/${tag}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    s"target/tmp/${graft.streaming.Streams.freshName(tag)}"
 
   /** Pin an ephemeral run's (small, aggregated) result in memory, then
     * remove the run's sink + checkpoint directories — the sinks here

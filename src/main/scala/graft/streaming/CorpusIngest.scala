@@ -2,8 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
+import graft.chain.ChainStore
 import graft.ops.DedupMaterialize
 
 /** Streaming corpus ingest with LSH dedup at the door: arriving
@@ -35,9 +35,7 @@ object CorpusIngest {
     * ingest epoch. */
   def dedupedCorpusIngest(s: SparkSession, dir: String, out: String,
       checkpoint: Option[String] = None): Unit = {
-    val schema = s.read.parquet(s"$dir/documents.parquet").schema
-    val stream = s.readStream.schema(schema)
-      .parquet(s"$dir/documents*.parquet")
+    val stream = Streams.files(s, dir, "documents")
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
     // the dup-injected corpus view of the stream (same rows the batch
     // queries see), restricted to the arriving batch
@@ -50,9 +48,7 @@ object CorpusIngest {
     // index a deployed pipeline holds from its previous ingests
     val tierBands = DedupMaterialize.bandTable(s, dir)
       .filter(col("doc_id") % BatchMod =!= 0)
-    val name = s"cd_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val ckpt = checkpoint.getOrElse(s"target/tmp/ckpt_$name")
-    val q = corpusStream.writeStream
+    Streams.runOnce(corpusStream.writeStream
       .foreachBatch {
         (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
          epoch: Long) =>
@@ -63,21 +59,11 @@ object CorpusIngest {
                 graft.ops.TextCorpus.words(b))))
           val dupIds = graft.api.Dedup.probePairs(bands, tierBands)
             .select(col("new_id").as("doc_id")).distinct()
-          val kept = b.select(col("doc_id"))
+          ChainStore.overwritePartitions(b.select(col("doc_id"))
             .join(dupIds, Seq("doc_id"), "left_anti")
-            .withColumn("ingest_epoch", lit(epoch))
-          // conf on the BATCH frame's (cloned) session — see
-          // heavyHitterIngest below; the outer session's conf never
-          // reaches a foreachBatch write
-          kept.sparkSession.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic")
-          kept.write.mode("overwrite").partitionBy("ingest_epoch")
+            .withColumn("ingest_epoch", lit(epoch)), "ingest_epoch")
             .parquet(out)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try { q.processAllAvailable() } finally { q.stop() }
+      }, checkpoint)
   }
 
   /** Kept doc ids from the landed store. */
@@ -100,25 +86,16 @@ object CorpusIngest {
     * whole corpus (stream == batch, proven by the shared brute-force
     * oracle). */
   def allPairsIngest(s: SparkSession, dir: String, out: String,
-      checkpoint: Option[String] = None): Unit = {
-    val schema = s.read.parquet(s"$dir/documents.parquet").schema
-    val stream = s.readStream.schema(schema)
-      .parquet(s"$dir/documents*.parquet")
+      checkpoint: Option[String] = None): Unit =
+    Streams.runOnce(Streams.files(s, dir, "documents")
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
       .filter(col("doc_id") % AllPairsBatchMod === 0)
-    val name = s"ap_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val ckpt = checkpoint.getOrElse(s"target/tmp/ckpt_$name")
-    val q = stream.writeStream
+      .writeStream
       .foreachBatch {
         (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
          epoch: Long) =>
           applyAllPairsBatch(s, dir, out, batch.toDF(), epoch)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try { q.processAllAvailable() } finally { q.stop() }
-  }
+      }, checkpoint)
 
   /** One micro-batch of [[allPairsIngest]], factored out so the spec
     * can drive multi-batch scenarios directly (the fixture is one
@@ -155,33 +132,15 @@ object CorpusIngest {
     val sh = oldSh.unionByName(prevSh).unionByName(batchSh)
     val pairs = Text.allPairsFromPrefix(prefix, sh,
       col("a.nw") || col("b.nw"))
-    def land(df: DataFrame, sub: String): Unit = {
-      val keyed = df.withColumn("ingest_epoch", lit(epoch))
-      // conf on the BATCH frame's (cloned) session — see
-      // heavyHitterIngest; the outer session's conf never reaches a
-      // foreachBatch write
-      keyed.sparkSession.conf.set(
-        "spark.sql.sources.partitionOverwriteMode", "dynamic")
-      keyed.write.mode("overwrite").partitionBy("ingest_epoch")
+    def land(df: DataFrame, sub: String): Unit =
+      ChainStore.overwritePartitions(
+        df.withColumn("ingest_epoch", lit(epoch)), "ingest_epoch")
         .parquet(s"$out/$sub")
-    }
     land(pairs, "pairs")
     land(batchPrefix.drop("nw"), "prefix")
     land(batchSh, "postings")
   }
 
-  /** Streaming heavy-hitter candidate ingest: each micro-batch lands
-    * its own bounded Misra-Gries candidate set (≤ k tokens per epoch,
-    * via [[graft.queries.TextQueries.mgCandidates]]) under an
-    * epoch-partitioned dynamic overwrite — idempotent on replay, no
-    * memory sink. The union over epochs is a guaranteed superset of
-    * the GLOBAL heavy hitters: a token with overall frequency above
-    * N/(k+1) must exceed the threshold in at least one batch (the
-    * mediant inequality — Σf_b/ΣN_b > t implies some f_b/N_b > t), so
-    * it survives that batch's summary. A final exact re-count of the
-    * landed candidates (batch side) then yields the same deterministic
-    * answer as the one-pass batch query — which is why
-    * stream_heavy_hitters shares text_heavy_hitters' oracle. */
   /** STREAMING IVF index maintenance — embed_ivf_incremental run
     * continuously: each micro-batch of vectors (with the batch
     * corpus's per-row dup injection, which is batch-local by
@@ -196,14 +155,8 @@ object CorpusIngest {
     * full-rebuild oracle to prove it every run. */
   def ivfIngest(s: SparkSession, dir: String, out: String,
       checkpoint: Option[String] = None): Unit = {
-    val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
-    val stream = s.readStream.schema(schema)
-      .parquet(s"$dir/embeddings*.parquet")
-      .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
     val cents = graft.ops.AnnMaterialize.ivfCentroidTable(s, dir)
-    val name = s"iv_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val ckpt = checkpoint.getOrElse(s"target/tmp/ckpt_$name")
-    val q = stream.writeStream
+    Streams.runOnce(vectorStream(s, dir).writeStream
       .foreachBatch {
         (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
          epoch: Long) =>
@@ -211,20 +164,11 @@ object CorpusIngest {
           val corpus = b.unionByName(b.filter(col("vec_id") % 100 === 0)
             .select((col("vec_id") + 1000000L).as("vec_id"),
               col("embedding")))
-          val lists = graft.api.Similarity.assignLists(
+          ChainStore.overwritePartitions(graft.api.Similarity.assignLists(
             graft.api.Similarity.quantize(corpus), cents)
-            .withColumn("ingest_epoch", lit(epoch))
-          // conf on the BATCH frame's session (cloned per batch — see
-          // heavyHitterIngest)
-          lists.sparkSession.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic")
-          lists.write.mode("overwrite").partitionBy("ingest_epoch")
+            .withColumn("ingest_epoch", lit(epoch)), "ingest_epoch")
             .parquet(out)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try { q.processAllAvailable() } finally { q.stop() }
+      }, checkpoint)
   }
 
   /** STREAMING PQ code-tier maintenance (twin of embed_pq_incremental,
@@ -236,14 +180,8 @@ object CorpusIngest {
     * stream was chopped into batches. */
   def pqIngest(s: SparkSession, dir: String, out: String,
       checkpoint: Option[String] = None): Unit = {
-    val schema = s.read.parquet(s"$dir/embeddings.parquet").schema
-    val stream = s.readStream.schema(schema)
-      .parquet(s"$dir/embeddings*.parquet")
-      .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
     val cents = graft.ops.AnnMaterialize.pqCodebookTable(s, dir)
-    val name = s"pq_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val ckpt = checkpoint.getOrElse(s"target/tmp/ckpt_$name")
-    val q = stream.writeStream
+    Streams.runOnce(vectorStream(s, dir).writeStream
       .foreachBatch {
         (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
          epoch: Long) =>
@@ -251,31 +189,36 @@ object CorpusIngest {
           val corpus = b.unionByName(b.filter(col("vec_id") % 100 === 0)
             .select((col("vec_id") + 1000000L).as("vec_id"),
               col("embedding")))
-          val codes = graft.api.Similarity.pqCodes(
+          ChainStore.overwritePartitions(graft.api.Similarity.pqCodes(
             graft.api.Similarity.quantize(corpus), cents,
             graft.queries.SimilarityQueries.PqRM,
             graft.queries.SimilarityQueries.PqRSubDim)
-            .withColumn("ingest_epoch", lit(epoch))
-          codes.sparkSession.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic")
-          codes.write.mode("overwrite").partitionBy("ingest_epoch")
+            .withColumn("ingest_epoch", lit(epoch)), "ingest_epoch")
             .parquet(out)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try { q.processAllAvailable() } finally { q.stop() }
+      }, checkpoint)
   }
 
+  /** The vector stream [[ivfIngest]] and [[pqIngest]] maintain. */
+  private def vectorStream(s: SparkSession, dir: String): DataFrame =
+    Streams.files(s, dir, "embeddings")
+      .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
+
+  /** Streaming heavy-hitter candidate ingest: each micro-batch lands
+    * its own bounded Misra-Gries candidate set (≤ k tokens per epoch,
+    * via [[graft.queries.TextQueries.mgCandidates]]) under an
+    * epoch-partitioned dynamic overwrite — idempotent on replay, no
+    * memory sink. The union over epochs is a guaranteed superset of
+    * the GLOBAL heavy hitters: a token with overall frequency above
+    * N/(k+1) must exceed the threshold in at least one batch (the
+    * mediant inequality — Σf_b/ΣN_b > t implies some f_b/N_b > t), so
+    * it survives that batch's summary. A final exact re-count of the
+    * landed candidates (batch side) then yields the same deterministic
+    * answer as the one-pass batch query — which is why
+    * stream_heavy_hitters shares text_heavy_hitters' oracle. */
   def heavyHitterIngest(s: SparkSession, dir: String, out: String,
-      checkpoint: Option[String] = None): Unit = {
-    val schema = s.read.parquet(s"$dir/documents.parquet").schema
-    val stream = s.readStream.schema(schema)
-      .parquet(s"$dir/documents*.parquet")
-      .select(col("text"))
-    val name = s"hh_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val ckpt = checkpoint.getOrElse(s"target/tmp/ckpt_$name")
-    val q = stream.writeStream
+      checkpoint: Option[String] = None): Unit =
+    Streams.runOnce(Streams.files(s, dir, "documents").select(col("text"))
+      .writeStream
       .foreachBatch {
         (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
          epoch: Long) =>
@@ -283,21 +226,9 @@ object CorpusIngest {
             explode(expr(
               "filter(split(text, '[^a-z0-9]+'), x -> x != '')"))
               .as("token"))
-          val cand = graft.queries.TextQueries.mgCandidates(s, toks)
-            .withColumn("ingest_epoch", lit(epoch))
-          // conf on the BATCH frame's session — streaming batches run
-          // on a cloned session with a detached SQLConf, so the outer
-          // session's conf would leave this write static-overwrite and
-          // every epoch would wipe its predecessors (latent until a
-          // multi-file source split the stream into several epochs)
-          cand.sparkSession.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic")
-          cand.write.mode("overwrite").partitionBy("ingest_epoch")
+          ChainStore.overwritePartitions(graft.queries.TextQueries
+            .mgCandidates(s, toks)
+            .withColumn("ingest_epoch", lit(epoch)), "ingest_epoch")
             .parquet(out)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try { q.processAllAvailable() } finally { q.stop() }
-  }
+      }, checkpoint)
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.chain.Chain
+import graft.chain.{Chain, ChainStore}
 
 /** Incremental-ingest semantics of the reference (SURVEY.md §2.9) on
   * Structured Streaming:
@@ -93,37 +93,42 @@ object IncrementalIngest {
     * A new checkpoint numbers its batches from 0 again, so the run lands
     * above every epoch already in the store, at `max(epochBase, newest +
     * 1)`; otherwise its batches would dynamic-overwrite an earlier run's
-    * (tx_id_group, ingest_epoch) partitions and lose their rows. The base
-    * is recorded in the checkpoint before the query starts, and a run
+    * (tx_id_group, ingest_epoch) partitions and lose their rows. A named
+    * `checkpoint` records the base before the query starts, and a run
     * that resumes the checkpoint takes it from there, so a replayed
     * batch rewrites exactly its own partitions (idempotent). A
     * checkpoint that already holds an offset log but no record keeps
-    * `epochBase` as given. */
+    * `epochBase` as given. A run without a checkpoint is never resumed,
+    * so nothing is recorded. */
   private def landingBase(s: SparkSession, out: String, watermark: Long,
-      ckpt: String, epochBase: Long): Long = {
-    val newest = resumeGuard(s, out, watermark)
-    val root = new org.apache.hadoop.fs.Path(ckpt)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val record = new org.apache.hadoop.fs.Path(root, EpochBaseFile)
-    if (fs.exists(record)) {
-      val in = fs.open(record)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-      finally in.close()
-    } else if (fs.exists(new org.apache.hadoop.fs.Path(root, "offsets")))
-      epochBase
-    else {
-      val base = math.max(epochBase, newest.fold(0L)(_ + 1L))
-      val o = fs.create(record, false)
-      try o.write(base.toString.getBytes("UTF-8")) finally o.close()
-      base
+      checkpoint: Option[String], epochBase: Long): Long = {
+    val fresh = math.max(epochBase,
+      resumeGuard(s, out, watermark).fold(0L)(_ + 1L))
+    checkpoint.fold(fresh) { ckpt =>
+      val root = new org.apache.hadoop.fs.Path(ckpt)
+      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+      val record = new org.apache.hadoop.fs.Path(root, EpochBaseFile)
+      if (fs.exists(record)) {
+        val in = fs.open(record)
+        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
+        finally in.close()
+      } else if (fs.exists(new org.apache.hadoop.fs.Path(root, "offsets")))
+        epochBase
+      else {
+        val o = fs.create(record, false)
+        try o.write(fresh.toString.getBytes("UTF-8")) finally o.close()
+        fresh
+      }
     }
   }
 
-  /** Run the incremental ingest synchronously: stream the orders source,
-    * derive tx rows with the SAME projection as the batch path, keep only
-    * blocks strictly above `watermark`, land them in a named in-memory
-    * table, and return it as a DataFrame.
-    */
+  /** The transaction-ingest source: the orders stream through the SAME
+    * projection as the batch path, kept strictly above `watermark`. */
+  private def txStream(s: SparkSession, dir: String, watermark: Long,
+      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+    Chain.txProjection(Streams.files(s, dir, "orders", maxFilesPerTrigger))
+      .filter(col("block_id") > watermark)
+
   /** ST5: confirmation-depth margin — only blocks at least this far below
     * the source tip are considered final (conf/btc.cfg:20 `maxBlockNum: -6`). */
   val TipMargin = 6L
@@ -148,22 +153,16 @@ object IncrementalIngest {
       .filter(col("block_id") <= col("src_tip") - tipMargin)
       .drop("one", "src_tip")
 
+  /** Run the incremental ingest synchronously: stream the orders source,
+    * derive tx rows with the SAME projection as the batch path, keep only
+    * blocks strictly above `watermark`, land them in a named in-memory
+    * table, and return it as a DataFrame.
+    */
   def newTxsBeyond(s: SparkSession, dir: String, watermark: Long,
       tipMargin: Long = 0L): DataFrame = {
-    val schema = s.read.parquet(s"$dir/orders.parquet").schema
-    // glob form on purpose: for a non-glob path FileStreamSource pins
-    // basePath to the file itself and then rejects it (not a directory)
-    val stream = s.readStream.schema(schema).parquet(s"$dir/orders*.parquet")
-    val tx = belowTip(
-      Chain.txProjection(stream).filter(col("block_id") > watermark),
-      tipFrame(s, dir), tipMargin)
-    val name = s"inc_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = tx.writeStream
-      .format("memory").queryName(name)
-      .option("checkpointLocation", s"target/tmp/ckpt_$name")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try { q.processAllAvailable() } finally { q.stop() }
+    val name = Streams.freshName("inc")
+    Streams.runOnce(belowTip(txStream(s, dir, watermark), tipFrame(s, dir),
+      tipMargin).writeStream.format("memory").queryName(name), None)
     s.table(name)
   }
 
@@ -185,26 +184,16 @@ object IncrementalIngest {
       maxFilesPerTrigger: Option[Int] = None,
       checkpoint: Option[String] = None,
       epochBase: Long = 0L): Long = {
-    val name = s"ing_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val ckpt = checkpoint.getOrElse(s"target/tmp/ckpt_$name")
-    val base = landingBase(s, out, watermark, ckpt, epochBase)
-    val schema = s.read.parquet(s"$dir/orders.parquet").schema
-    val reader = s.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val stream = reader.parquet(s"$dir/orders*.parquet")
-    val tx = Chain.txProjection(stream).filter(col("block_id") > watermark)
+    val base = landingBase(s, out, watermark, checkpoint, epochBase)
     val tip = tipFrame(s, dir)
-    val q = tx.writeStream
+    Streams.runOnce(txStream(s, dir, watermark, maxFilesPerTrigger)
+      .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epoch: Long) =>
         // ST5 inside the epoch: the margin cut is a broadcast join on the
         // (static) batch frame — the epoch stays fully distributed.
-        graft.chain.ChainStore.writeTransactionsEpoch(
+        ChainStore.writeTransactionsEpoch(
           belowTip(batch.toDF(), tip, tipMargin), out, base + epoch)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try { q.processAllAvailable() } finally { q.stop() }
+      }, checkpoint)
     base
   }
 
@@ -332,23 +321,14 @@ object IncrementalIngest {
     * deployment uses [[dedupedIngestBounded]]. */
   def dedupedIngest(s: SparkSession, dir: String, out: String,
       watermark: Long, checkpoint: Option[String] = None): Unit = {
-    val name = s"dd_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val ckpt = checkpoint.getOrElse(s"target/tmp/ckpt_$name")
-    val base = landingBase(s, out, watermark, ckpt, 0L)
-    val schema = s.read.parquet(s"$dir/orders.parquet").schema
-    val stream = s.readStream.schema(schema).parquet(s"$dir/orders*.parquet")
-    val tx = Chain.txProjection(stream).filter(col("block_id") > watermark)
+    val base = landingBase(s, out, watermark, checkpoint, 0L)
+    val tx = txStream(s, dir, watermark)
     val replayed = tx.unionByName(tx.filter(col("tx_id") % 97 === 0))
-    val q = replayed.dropDuplicates("tx_hash")
+    Streams.runOnce(replayed.dropDuplicates("tx_hash")
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        graft.chain.ChainStore.writeTransactionsEpoch(batch.toDF(), out,
-          base + epoch)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try { q.processAllAvailable() } finally { q.stop() }
+        ChainStore.writeTransactionsEpoch(batch.toDF(), out, base + epoch)
+      }, checkpoint)
   }
 
   /** Bounded-state streaming dedup — the continuous-deployment form:
@@ -365,28 +345,17 @@ object IncrementalIngest {
       watermark: Long, delay: String = "1 hour",
       maxFilesPerTrigger: Option[Int] = None,
       checkpoint: Option[String] = None): Unit = {
-    val name = s"ddb_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val ckpt = checkpoint.getOrElse(s"target/tmp/ckpt_$name")
-    val base = landingBase(s, out, watermark, ckpt, 0L)
-    val schema = s.read.parquet(s"$dir/orders.parquet").schema
-    val reader = s.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val stream = reader.parquet(s"$dir/orders*.parquet")
-    val tx = Chain.txProjection(stream).filter(col("block_id") > watermark)
+    val base = landingBase(s, out, watermark, checkpoint, 0L)
+    val tx = txStream(s, dir, watermark, maxFilesPerTrigger)
     val replayed = tx.unionByName(tx.filter(col("tx_id") % 97 === 0))
-    val q = replayed
+    Streams.runOnce(replayed
       .withColumn("tsc", timestamp_seconds(col("ts")))
       .withWatermark("tsc", delay)
       .dropDuplicatesWithinWatermark("tx_hash")
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        graft.chain.ChainStore.writeTransactionsEpoch(
-          batch.drop("tsc"), out, base + epoch)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try { q.processAllAvailable() } finally { q.stop() }
+        ChainStore.writeTransactionsEpoch(batch.drop("tsc"), out, base + epoch)
+      }, checkpoint)
   }
 
   /** The SAME ingest query left running: a processing-time trigger
@@ -398,18 +367,14 @@ object IncrementalIngest {
   def ingestContinuously(s: SparkSession, dir: String, out: String,
       watermark: Long, intervalMs: Long = 500L, tipMargin: Long = 0L)
       : org.apache.spark.sql.streaming.StreamingQuery = {
-    val name = s"cont_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val ckpt = s"target/tmp/ckpt_$name"
-    val base = landingBase(s, out, watermark, ckpt, 0L)
-    val schema = s.read.parquet(s"$dir/orders.parquet").schema
-    val stream = s.readStream.schema(schema).parquet(s"$dir/orders*.parquet")
-    val tx = Chain.txProjection(stream).filter(col("block_id") > watermark)
+    val ckpt = s"target/tmp/${Streams.freshName("ckpt_cont")}"
+    val base = landingBase(s, out, watermark, Some(ckpt), 0L)
     val tip = tipFrame(s, dir)
-    tx.writeStream
+    txStream(s, dir, watermark).writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epoch: Long) =>
         // same ST5 margin cut as the batch catch-up path — switching
         // trigger modes must not silently widen what lands in the store
-        graft.chain.ChainStore.writeTransactionsEpoch(
+        ChainStore.writeTransactionsEpoch(
           belowTip(batch.toDF(), tip, tipMargin), out, base + epoch)
       }
       .option("checkpointLocation", ckpt)
@@ -425,8 +390,7 @@ object IncrementalIngest {
   private def windowedEventAggFrame(s: SparkSession, dir: String)
       : DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
-    val stream = s.readStream.schema(schema).parquet(s"$dir/events*.parquet")
+    val stream = Streams.files(s, dir, "events")
     stream
       .withColumn("tsc", timestamp_seconds(
         graft.functions.TimeColumns.epochSeconds(stream)))
@@ -447,34 +411,25 @@ object IncrementalIngest {
     * oracle). No memory sink, no driver collect; the summary is
     * |windows|×|types| rows, so the per-commit overwrite stays tiny at
     * any input scale. */
-  def windowedEventAgg(s: SparkSession, dir: String, out: String): Unit = {
-    val q = windowedEventAggFrame(s, dir).writeStream
+  def windowedEventAgg(s: SparkSession, dir: String, out: String): Unit =
+    Streams.runOnce(windowedEventAggFrame(s, dir).writeStream
       .outputMode("complete")
       .foreachBatch {
         (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
          _: Long) =>
           batch.toDF().write.mode("overwrite").parquet(out)
-      }
-      .option("checkpointLocation", s"$out-ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try { q.processAllAvailable() } finally { q.stop() }
-  }
+      }, Some(s"$out-ckpt"))
 
   /** The same aggregation run synchronously into a memory sink for
     * test-side parity checks (complete mode so the still-open tail
     * window is emitted too). The same query with `outputMode("append")`
     * + a real trigger is the continuous deployment. */
   def hourlyEventCounts(s: SparkSession, dir: String): DataFrame = {
-    val name = s"win_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = windowedEventAggFrame(s, dir)
+    val name = Streams.freshName("win")
+    Streams.runOnce(windowedEventAggFrame(s, dir)
       .select("hour_ts", "event_type", "n_events")
       .writeStream.format("memory").queryName(name)
-      .outputMode("complete")
-      .option("checkpointLocation", s"target/tmp/ckpt_$name")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try { q.processAllAvailable() } finally { q.stop() }
+      .outputMode("complete"), None)
     s.table(name)
   }
 
@@ -490,11 +445,7 @@ object IncrementalIngest {
   def sessionizedEvents(s: SparkSession, dir: String, out: String,
       maxFilesPerTrigger: Option[Int] = None,
       watermarkDelay: String = "1 hour"): Unit = {
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
-    val reader = s.readStream.schema(schema)
-    val stream = maxFilesPerTrigger
-      .fold(reader)(n => reader.option("maxFilesPerTrigger", n))
-      .parquet(s"$dir/events*.parquet")
+    val stream = Streams.files(s, dir, "events", maxFilesPerTrigger)
     val frame = stream
       .withColumn("ets", graft.functions.TimeColumns.epochSeconds(stream))
       .withColumn("tsc", timestamp_seconds(col("ets")))
@@ -506,17 +457,13 @@ object IncrementalIngest {
         (max(col("ets")) - min(col("ets"))).as("duration"))
       .select(col("user_id"), col("session_start"), col("n_events"),
         col("duration"))
-    val q = frame.writeStream
+    Streams.runOnce(frame.writeStream
       .outputMode("complete")
       .foreachBatch {
         (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
          _: Long) =>
           batch.toDF().write.mode("overwrite").parquet(out)
-      }
-      .option("checkpointLocation", s"$out-ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try { q.processAllAvailable() } finally { q.stop() }
+      }, Some(s"$out-ckpt"))
   }
 
   /** Hash-bucket count of the CDC store — the co-partitioning unit a
@@ -531,15 +478,10 @@ object IncrementalIngest {
 
   /** Write the initial CDC store: keyed rows under hash-bucket
     * partition dirs, the layout [[cdcApply]] prunes and overwrites. */
-  def cdcStoreInit(df: DataFrame, store: String): Unit = {
-    dynamicOverwriteConf(df.sparkSession)
-    df.withColumn("kb", cdcBucket(col("k")))
-      .repartition(col("kb"))
-      .write.mode("overwrite").partitionBy("kb").parquet(store)
-  }
-
-  private def dynamicOverwriteConf(s: SparkSession): Unit =
-    s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+  def cdcStoreInit(df: DataFrame, store: String): Unit =
+    ChainStore.overwritePartitions(
+      df.withColumn("kb", cdcBucket(col("k"))).repartition(col("kb")), "kb")
+      .parquet(store)
 
   /** Streaming CDC apply — the lakehouse MERGE run continuously, and
     * BUCKET-SCOPED: each micro-batch of change rows (op = U/D/I,
@@ -555,25 +497,19 @@ object IncrementalIngest {
     * the buckets being read can be rewritten; per-key convergence
     * needs no cross-batch ordering because each key carries at most
     * one op, and replays are idempotent because ops carry absolute
-    * values. foreachBatch runs on the cloned session, so both the
-    * store read and the overwrite conf go through the batch frame's
-    * session (the r9 stream-sink lesson). */
-  def cdcApply(s: SparkSession, changesDir: String, store: String): Unit = {
-    val schema = s.read.parquet(s"$changesDir/changes.parquet").schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(s"$changesDir/changes*.parquet")
-    val q = stream.writeStream
+    * values. foreachBatch runs on a cloned session, so the store read
+    * goes through the batch frame's session. */
+  def cdcApply(s: SparkSession, changesDir: String, store: String): Unit =
+    Streams.runOnce(Streams.files(s, changesDir, "changes", Some(1))
+      .writeStream
       .foreachBatch {
         (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
          _: Long) =>
           val b = batch.toDF().withColumn("kb", cdcBucket(col("k")))
-          val ss = b.sparkSession
-          dynamicOverwriteConf(ss)
           val touched = b.select(col("kb")).distinct()
             .collect().map(_.getLong(0))
           if (touched.nonEmpty) {
-            val cur = ss.read.parquet(store)
+            val cur = b.sparkSession.read.parquet(store)
               .filter(col("kb").isin(touched: _*))
             val merged = cur.join(b, Seq("kb", "k"), "full_outer")
               .filter(col("op").isNull || col("op") =!= "D")
@@ -582,16 +518,10 @@ object IncrementalIngest {
                   .otherwise(col("price")).as("price"),
                 when(col("op").isNotNull, col("new_status"))
                   .otherwise(col("status")).as("status"))
-            graft.operators.Materialize.truncate(
-                merged.repartition(col("kb")))
-              .write.mode("overwrite").partitionBy("kb").parquet(store)
+            ChainStore.overwritePartitions(graft.operators.Materialize
+              .truncate(merged.repartition(col("kb"))), "kb").parquet(store)
           }
-      }
-      .option("checkpointLocation", s"$store-ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try { q.processAllAvailable() } finally { q.stop() }
-  }
+      }, Some(s"$store-ckpt"))
 
   /** Per-micro-batch bottom-k (priority, value) quantile samples through
     * the idempotent epoch sink — the streaming face of
@@ -609,36 +539,16 @@ object IncrementalIngest {
     * convention. */
   def quantileSampleIngest(s: SparkSession, dir: String, out: String,
       checkpoint: Option[String] = None,
-      maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
-    val reader = s.readStream.schema(schema)
-    maxFilesPerTrigger.foreach(n =>
-      reader.option("maxFilesPerTrigger", n.toString))
-    val stream = reader.parquet(s"$dir/events*.parquet")
+      maxFilesPerTrigger: Option[Int] = None): Unit =
+    Streams.runOnce(Streams.files(s, dir, "events", maxFilesPerTrigger)
       .select(col("event_id"), col("event_type"), col("value"))
-    val name = s"qs_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val ckpt = checkpoint.getOrElse(s"target/tmp/ckpt_$name")
-    val q = stream.writeStream
+      .writeStream
       .foreachBatch {
         (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
          epoch: Long) =>
-          val sample = graft.queries.EventQueries
+          ChainStore.overwritePartitions(graft.queries.EventQueries
             .samplePairs(s, batch.toDF())
-            .withColumn("ingest_epoch", lit(epoch))
-          // the conf must land on the BATCH frame's session: streaming
-          // runs batches on a CLONED session whose SQLConf is detached
-          // from the outer one, so setting the outer session's conf
-          // leaves the write in static-overwrite mode and each epoch
-          // silently wipes its predecessors (StreamingSpec pins the
-          // multi-epoch merge against exactly this)
-          sample.sparkSession.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic")
-          sample.write.mode("overwrite").partitionBy("ingest_epoch")
+            .withColumn("ingest_epoch", lit(epoch)), "ingest_epoch")
             .parquet(out)
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    try { q.processAllAvailable() } finally { q.stop() }
-  }
+      }, checkpoint)
 }

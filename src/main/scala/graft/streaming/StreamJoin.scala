@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Stream-STREAM joins (the §2.9 family beyond stream-static): two live
   * event streams joined on key + event-time range, with watermarks
@@ -24,12 +23,6 @@ object StreamJoin {
     * purchase by the same user are attributed to it. */
   val AttributionWindowSec = 86400L
 
-  private def eventStream(s: SparkSession, dir: String): DataFrame = {
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
-    // glob form: FileStreamSource rejects a bare file path as basePath
-    s.readStream.schema(schema).parquet(s"$dir/events*.parquet")
-  }
-
   /** One side of the join, filtered to a type, with its own watermark.
     * Column names are side-prefixed so the range predicate can name
     * both sides unambiguously. */
@@ -50,7 +43,7 @@ object StreamJoin {
       windowSec: Long = AttributionWindowSec,
       statePartitions: Int = 8,
       checkpoint: Option[String] = None): Unit = {
-    val stream = eventStream(s, dir)
+    val stream = Streams.files(s, dir, "events")
     val views = side(stream, "view", "v", s"${windowSec + 3600} seconds")
     val purchases = side(stream, "purchase", "p", "1 hour")
     val joined = views.join(purchases,
@@ -61,7 +54,6 @@ object StreamJoin {
         col("v_id").as("view_id"), col("p_id").as("purchase_id"),
         unix_timestamp(col("v_ts")).as("view_ets"),
         unix_timestamp(col("p_ts")).as("purchase_ets"))
-    val name = s"attr_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     // each call is a FULL fresh build with its own checkpoint, so epoch
     // numbering restarts at 0 — stale pairs from a previous run whose
     // batch boundaries differed would survive the dynamic overwrite and
@@ -81,34 +73,23 @@ object StreamJoin {
     // failure in .start() itself.
     val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    try {
-      val q = joined.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-          writePairsEpoch(batch.toDF(), out, epoch)
-        }
-        .option("checkpointLocation",
-          checkpoint.getOrElse(s"target/tmp/ckpt_$name"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try { q.processAllAvailable() } finally { q.stop() }
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    }
+    try Streams.runOnce(joined.writeStream
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epoch: Long) =>
+        writePairsEpoch(batch.toDF(), out, epoch)
+      }, checkpoint)
+    finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
   }
 
   /** (user bucket, epoch)-keyed dynamic overwrite — same additive/
     * idempotent contract as ChainStore.writeTransactionsEpoch. */
-  private def writePairsEpoch(df: DataFrame, out: String, epoch: Long): Unit = {
-    df.sparkSession.conf
-      .set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    df.withColumn("user_group", (col("user_id") / 100L).cast("long"))
-      .withColumn("ingest_epoch", lit(epoch))
-      .repartition(col("user_group"))
-      .sortWithinPartitions(col("user_id"), col("purchase_id"), col("view_id"))
-      .write.mode("overwrite")
-      .partitionBy("user_group", "ingest_epoch")
+  private def writePairsEpoch(df: DataFrame, out: String, epoch: Long): Unit =
+    graft.chain.ChainStore.overwritePartitions(
+      df.withColumn("user_group", (col("user_id") / 100L).cast("long"))
+        .withColumn("ingest_epoch", lit(epoch))
+        .repartition(col("user_group"))
+        .sortWithinPartitions(col("user_id"), col("purchase_id"),
+          col("view_id")), "user_group", "ingest_epoch")
       .parquet(s"$out/pairs")
-  }
 
   /** Store reader (epoch/bucket columns hidden). */
   def readPairs(s: SparkSession, out: String): DataFrame =

@@ -1,0 +1,48 @@
+package graft.streaming
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+
+/** The run-once lifecycle every catch-up stream shares — Structured
+  * Streaming's contract of a run-once trigger, a checkpoint and an
+  * idempotent sink (the reference's single `--continue` resume path,
+  * blocksci_export.py:489-505). Sources come from [[files]], runs go
+  * through [[runOnce]]; the sinks' idempotent partition write is
+  * [[graft.chain.ChainStore.overwritePartitions]].
+  */
+private[graft] object Streams {
+
+  /** A name no other run uses: memory-sink tables, sink and checkpoint
+    * directories. */
+  def freshName(tag: String): String =
+    s"${tag}_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+
+  /** `$dir/<table>*.parquet` as a file stream with the batch table's
+    * schema. Glob form on purpose: for a non-glob path FileStreamSource
+    * pins basePath to the file itself and then rejects it (not a
+    * directory). `maxFilesPerTrigger` caps the files per micro-batch. */
+  def files(s: SparkSession, dir: String, table: String,
+      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
+    val reader =
+      s.readStream.schema(s.read.parquet(s"$dir/$table.parquet").schema)
+    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
+    reader.parquet(s"$dir/$table*.parquet")
+  }
+
+  /** Run `writer` with AvailableNow over everything available, blocking
+    * until the run ends; the query is stopped however the run ends. A
+    * `checkpoint` is kept for a later run to resume. Without one the run
+    * gets a private `target/tmp/ckpt_<uuid>`, deleted afterwards — no
+    * later run can name it, so nothing could ever resume it. */
+  def runOnce[T](writer: DataStreamWriter[T],
+      checkpoint: Option[String]): Unit = {
+    val ckpt = checkpoint.getOrElse(s"target/tmp/${freshName("ckpt")}")
+    try {
+      val q = writer.option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start()
+      try q.processAllAvailable() finally q.stop()
+    } finally
+      if (checkpoint.isEmpty)
+        graft.ops.Tiers.deleteRecursively(new java.io.File(ckpt))
+  }
+}

@@ -197,6 +197,37 @@ class StreamingSpec extends SparkSpec with TempDirs {
       checkpoint = Some(ckpt), epochBase = 3L) === 3L)
   }
 
+  test("ChainStore and Graft.ingest leave the caller's overwrite mode alone") {
+    val dir = sf("sf0.001")
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    // a session of its own, so the check sees only what these calls did
+    val s = spark.newSession()
+    val before = s.conf.get(key)
+    val tx = Chain.transactions(s, dir)
+    val out = tempDir("mode_")
+    graft.chain.ChainStore.writeTransactions(tx, out)
+    assert(s.conf.get(key) === before)
+    // still a dynamic overwrite: a second bucket lands beside the first
+    graft.chain.ChainStore.writeTransactions(
+      tx.withColumn("tx_id_group", lit(7L)), out)
+    assert(graft.chain.ChainStore.readTransactions(s, out).count() ===
+      2 * tx.count())
+    Graft.ingest(s, dir, tempDir("modeingest_"), -1L)
+    assert(s.conf.get(key) === before)
+  }
+
+  test("runs without a checkpoint leave no checkpoint behind") {
+    val dir = sf("sf0.001")
+    def ckpts(): Set[String] =
+      Option(new java.io.File("target/tmp").listFiles()).toSeq.flatten
+        .map(_.getName).filter(_.startsWith("ckpt_")).toSet
+    val before = ckpts()
+    Graft.ingest(spark, dir, tempDir("nockpt_"), -1L)
+    assert(IncrementalIngest.newTxsBeyond(spark, dir, 1500L).count() > 0)
+    assert(IncrementalIngest.hourlyEventCounts(spark, dir).count() > 0)
+    assert(ckpts() -- before === Set.empty[String])
+  }
+
   test("quantile sample merges across epochs to the exact batch sketch") {
     val dir = sf("sf0.001")
     val src = tempDir("qssrc_")

@@ -9,18 +9,26 @@
 #                             outside Session.scala, and no local[<n>]
 #                             literal anywhere in it: every entry point
 #                             takes its session from Session.local
-#   3. sbt compile          — the tree compiles (r12 shipped a tree that
+#   3. stream lifecycle     — no partitionOverwriteMode in src/main/scala
+#                             outside chain/ChainStore.scala, and no
+#                             processAllAvailable() or
+#                             Trigger.AvailableNow() call outside
+#                             streaming/Streams.scala: run-once streams go
+#                             through Streams.runOnce, partitioned
+#                             overwrites through
+#                             ChainStore.overwritePartitions
+#   4. sbt compile          — the tree compiles (r12 shipped a tree that
 #                             didn't; this script exists so that cannot
 #                             recur)
-#   4. sbt test             — full ScalaTest suite green
-#   5. graft.Verify sf0.01  — every SparkEntry query dumps its parquet
-#   6. tools/check.py       — DuckDB oracle compare: rows + schema +
+#   5. sbt test             — full ScalaTest suite green
+#   6. graft.Verify sf0.01  — every SparkEntry query dumps its parquet
+#   7. tools/check.py       — DuckDB oracle compare: rows + schema +
 #                             driver-emulated canonical hash per query,
 #                             plus the oracle cost budget (10 s/query,
 #                             180 s/suite)
 #
 # Usage: tools/preflight.sh [--quick]
-#   --quick skips sbt test (stages 1,2,3,5,6 only) for mid-round iteration;
+#   --quick skips sbt test (stages 1,2,3,4,6,7 only) for mid-round iteration;
 #   the snapshot commit requires the FULL run.
 set -uo pipefail
 cd "$(dirname "$0")/.."
@@ -33,14 +41,14 @@ OUT=target/verify_out
 
 fail() { echo "PREFLIGHT: FAIL at stage $1 — do NOT commit the snapshot"; exit 1; }
 
-echo "PREFLIGHT stage 1/6: tier markers only in ops/Tiers.scala"
+echo "PREFLIGHT stage 1/7: tier markers only in ops/Tiers.scala"
 if grep -rnE '"[^"]*(_SUCCESS|_BUILT)[^"]*"' src/main/scala \
     --include='*.scala' | grep -v '^src/main/scala/graft/ops/Tiers.scala:'
 then
   fail markers
 fi
 
-echo "PREFLIGHT stage 2/6: session setup only in Session.scala"
+echo "PREFLIGHT stage 2/7: session setup only in Session.scala"
 if grep -rn 'SparkSession\.builder' src/main/scala --include='*.scala' \
     | grep -v '^src/main/scala/graft/Session.scala:' ||
    grep -rnE 'local\[[0-9]+\]' src/main/scala --include='*.scala'
@@ -48,21 +56,30 @@ then
   fail session
 fi
 
-echo "PREFLIGHT stage 3/6: sbt compile"
+echo "PREFLIGHT stage 3/7: stream runner and partition overwrite in one place each"
+if grep -rn 'partitionOverwriteMode' src/main/scala --include='*.scala' \
+    | grep -v '^src/main/scala/graft/chain/ChainStore.scala:' ||
+   grep -rnE 'processAllAvailable\(\)|Trigger\.AvailableNow\(\)' src/main/scala \
+    --include='*.scala' | grep -v '^src/main/scala/graft/streaming/Streams.scala:'
+then
+  fail streams
+fi
+
+echo "PREFLIGHT stage 4/7: sbt compile"
 sbt -batch compile || fail compile
 
 if [[ $QUICK -eq 0 ]]; then
-  echo "PREFLIGHT stage 4/6: sbt test"
+  echo "PREFLIGHT stage 5/7: sbt test"
   sbt -batch test || fail test
 else
-  echo "PREFLIGHT stage 4/6: SKIPPED (--quick)"
+  echo "PREFLIGHT stage 5/7: SKIPPED (--quick)"
 fi
 
-echo "PREFLIGHT stage 5/6: graft.Verify @ $SF"
+echo "PREFLIGHT stage 6/7: graft.Verify @ $SF"
 rm -rf "$OUT"
 sbt -batch "runMain graft.Verify $SF $OUT" || fail verify
 
-echo "PREFLIGHT stage 6/6: tools/check.py (rows+schema+hash+budget)"
+echo "PREFLIGHT stage 7/7: tools/check.py (rows+schema+hash+budget)"
 python3 tools/check.py "$SF" "$OUT" || fail check
 
 echo "PREFLIGHT: ALL GREEN — safe to commit the snapshot"
