@@ -112,7 +112,8 @@ object VectorFunctions {
     ColumnBridge.column(BitInterleave(
       ColumnBridge.expression(a), ColumnBridge.expression(b), nBits))
 
-  /** Expose to SQL: `SELECT dot_product_long(a, b)`. */
+  /** Expose to SQL: `SELECT dot_product_long(a, b)`; a no-op when the
+    * session already has it. */
   def register(spark: SparkSession): Unit =
     ColumnBridge.registerFunction(spark, "dot_product_long",
       exprs => DotProductLong(exprs.head, exprs(1)))

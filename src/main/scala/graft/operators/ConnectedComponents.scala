@@ -131,45 +131,30 @@ object ConnectedComponents {
       .unionByName(nn.join(cc2, Seq("node")))
   }
 
-  /** Star fixpoint + label join over an explicit node universe. */
+  /** Star fixpoint + label join over an explicit node universe. The
+    * checksum doubles as the materializing action for each lazily
+    * checkpointed round — one job per round, not two. */
   private def labelsOver(nodes: DataFrame, edges: DataFrame, maxIter: Int)
-      : DataFrame = {
-    // checksum doubles as the materializing action for the lazily
-    // checkpointed round — one job per round, not two
-    var e = Materialize.truncateBeforeAction(canonical(edges))
-    var sig = checksum(e)
-    var it = 0
-    var converged = false
-    while (!converged && it < maxIter) {
+      : DataFrame =
+    Fixpoint.converge(canonical(edges), maxIter,
+      s"connected components did not converge in $maxIter rounds — " +
+        "raise maxIter (rounds needed is O(log n))", Nil)(checksum)(
       // one large/small-star alternation per materialized round. NOT
       // fused deeper (r13 measured smallStar∘largeStar twice per round:
       // per-round wall went 0.8 s → ~5 s at sf0.1 — driver planning +
       // whole-stage-codegen compile of the doubled plan cost far more
       // than the saved checkpoint/checksum job).
-      val next = Materialize.truncateBeforeAction(smallStar(largeStar(e)))
-      val nextSig = checksum(next)
-      converged = nextSig == sig
-      sig = nextSig
-      // round N-1's checkpoint blocks are dead once round N is
-      // materialized — free them now instead of waiting for driver GC
-      // (a session running many fixpoints would otherwise accumulate
-      // every round of every clustering in the block manager)
-      Materialize.release(e)
-      e = next
-      it += 1
+      (_, e) => smallStar(largeStar(e))) { (_, e) =>
+      // fixpoint edges form stars u→root (u > root): every non-root node
+      // appears exactly once on the left, every root only on the right
+      val star = e
+        .select(col("u").as("node"), col("v").as("component"))
+        .union(e.select(col("v").as("node"), col("v").as("component")))
+        .groupBy("node").agg(min("component").as("component"))
+      nodes.join(star, Seq("node"), "left")
+        .select(col("node"),
+          coalesce(col("component"), col("node")).as("component"))
     }
-    require(converged, s"connected components did not converge in " +
-      s"$maxIter rounds — raise maxIter (rounds needed is O(log n))")
-    // fixpoint edges form stars u→root (u > root): every non-root node
-    // appears exactly once on the left, every root only on the right
-    val star = e
-      .select(col("u").as("node"), col("v").as("component"))
-      .union(e.select(col("v").as("node"), col("v").as("component")))
-      .groupBy("node").agg(min("component").as("component"))
-    nodes.join(star, Seq("node"), "left")
-      .select(col("node"),
-        coalesce(col("component"), col("node")).as("component"))
-  }
 
   /** Undirected canonical form: (larger, smaller), no self-loops, no
     * duplicates. */

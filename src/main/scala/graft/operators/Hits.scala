@@ -19,9 +19,10 @@ import org.apache.spark.sql.functions._
   *
   * Scale posture: each half-round is ONE edge ⋈ score equi-join + one
   * hash-agg (the same co-partitionable shape as PageRank, alternating
-  * the key between dst and src), with lineage truncated and the dead
-  * round freed per iteration. Headroom: raw sums are ≤ maxdeg · Scale
-  * and the normalization multiply peaks at maxdeg · Scale², so with
+  * the key between dst and src); the 2·iters half-rounds run through
+  * [[Fixpoint]], which truncates each and frees the dead ones.
+  * Headroom: raw sums are ≤ maxdeg · Scale and the normalization
+  * multiply peaks at maxdeg · Scale², so with
   * Scale = 10^6 the integer math holds to maxdeg ≈ 9·10^6 — beyond that,
   * lower Scale one decade per decade of degree.
   */
@@ -29,22 +30,15 @@ object Hits {
   val Scale: Long = PageRank.Scale
 
   /** @param edges `src`/`dst` distinct directed pairs
-    * @param materialize per-round truncation hook — must be EAGER
-    *        (see [[PageRank.Materializer]]'s contract): the post-loop
-    *        release of the internal edge/node materializations assumes
-    *        the final round is already computed
     * @return (node, hub, authority) after `iters` full rounds from a
     *         uniform h_0 = Scale start */
-  def runFromEdges(edges: DataFrame, iters: Int,
-      materialize: PageRank.Materializer = Materialize.truncate): DataFrame = {
+  def runFromEdges(edges: DataFrame, iters: Int): DataFrame = {
     // unlike PageRank (whose 0-round result is the well-defined uniform
     // start), HITS has no meaningful 0-round hub/authority pair — fail
     // loud instead of NPE-ing in the final join
     require(iters >= 1, s"HITS needs at least one round (got $iters)")
-    val e = materialize(edges.select(col("src"), col("dst")))
-    val nodes = materialize(
-      e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct())
+    val e = Materialize.truncate(edges.select(col("src"), col("dst")))
+    val nodes = Materialize.truncate(PageRank.endpoints(e))
 
     // one sweep: scores flow along `from`→`to`, summed per `to`, zeroed
     // on unreached nodes, then max-normalized to Scale
@@ -58,26 +52,16 @@ object Hits {
         .select(col("node"), expr(s"(raw * ${Scale}L) div mx").as("s"))
     }
 
-    val h0 = materialize(nodes.select(col("node"), lit(Scale).as("s")))
-    var h = h0
-    var a: DataFrame = null
-    for (i <- 1 to iters) {
-      val aPrev = a
-      a = materialize(sweep(h, "src", "dst"))
-      val hPrev = h
-      h = materialize(sweep(a, "dst", "src"))
-      // round i-1's frames are dead once round i is materialized
-      if (i > 1) { Materialize.release(hPrev); Materialize.release(aPrev) }
+    // odd half-rounds are authority sweeps a_i(h_{i-1}), even ones hub
+    // sweeps h_i(a_i): the last two are (a_R, h_R)
+    val h0 = Materialize.truncate(nodes.select(col("node"), lit(Scale).as("s")))
+    Fixpoint.run(h0, 2 * iters, Seq(e, nodes)) { (i, scores) =>
+      if (i % 2 == 1) sweep(scores, "src", "dst")
+      else sweep(scores, "dst", "src")
+    } { (a, h) =>
+      nodes
+        .join(h.select(col("node"), col("s").as("hub")), Seq("node"))
+        .join(a.select(col("node"), col("s").as("authority")), Seq("node"))
     }
-    // e and the uniform start h_0 are operator-internal and dead once
-    // the final round is materialized — freed here, or a
-    // checkpoint-dir session leaks one rdd-N directory per invocation
-    // (ContextCleaner does not delete checkpoint files by default).
-    // `nodes` stays: the returned lazy join reads it.
-    Materialize.release(e)
-    Materialize.release(h0)
-    nodes
-      .join(h.select(col("node"), col("s").as("hub")), Seq("node"))
-      .join(a.select(col("node"), col("s").as("authority")), Seq("node"))
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Per-round lineage truncation for iterative DataFrame loops (connected
   * components, PageRank, k-core, label propagation, BPE training…).
@@ -58,7 +59,7 @@ object Materialize {
     * `spark.cleaner.referenceTracking.cleanCheckpoints=true` (default
     * false) AND the RDD is GC'd, so without the explicit delete below a
     * cluster session leaks one directory per fixpoint round for its
-    * lifetime. Iterative loops call this on round N−1 once round N is
+    * lifetime. [[Fixpoint]] calls this on round N−1 once round N is
     * materialized; the final round (referenced by the returned lazy
     * frame) must NOT be released.
     *
@@ -66,32 +67,37 @@ object Materialize {
     * Spark class both truncation paths produce) — blocking=false, so
     * the unpersist never stalls the loop. A non-checkpointed frame is
     * left untouched. */
-  def release(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        releaseRdd(df, l)
-      case _ => ()
-    }
+  def release(df: DataFrame): Unit = leaf(df).foreach(releaseRdd)
 
-  /** Release EVERY checkpointed leaf inside a consumed plan — the
+  /** Release EVERY checkpointed leaf inside a consumed plan, once per
+    * RDD (a self-joined round appears several times in its plan) — the
     * consumer-side free for operators that pin their inputs under a
     * product-sized lazy result (PrefixCarry's shard manifest / global
-    * shuffle): once the result has been fully materialized (written,
-    * counted into a sink), the pins it reads are dead weight until the
-    * driver GCs them. Only for plans the caller OWNS end to end: a leaf
-    * shared with a still-live frame must not be released. */
+    * shuffle, a [[Fixpoint]] result): once the result has been fully
+    * materialized (written, counted into a sink), the pins it reads are
+    * dead weight until the driver GCs them. Only for plans the caller
+    * OWNS end to end: a leaf shared with a still-live frame must not be
+    * released. */
   def releasePinnedLeaves(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collect {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l
-    }.foreach(releaseRdd(df, _))
+    leaves(df).foreach(releaseRdd)
 
-  private def releaseRdd(df: DataFrame,
-      l: org.apache.spark.sql.execution.LogicalRDD): Unit = {
+  /** The checkpoint `df` is, if it is one. */
+  private[operators] def leaf(df: DataFrame): Option[LogicalRDD] =
+    df.queryExecution.analyzed match {
+      case l: LogicalRDD => Some(l)
+      case _ => None
+    }
+
+  /** The distinct checkpoints `df`'s plan reads, one per RDD. */
+  private[operators] def leaves(df: DataFrame): Seq[LogicalRDD] =
+    df.queryExecution.analyzed.collect { case l: LogicalRDD => l }
+      .distinctBy(_.rdd.id)
+
+  private[operators] def releaseRdd(l: LogicalRDD): Unit = {
     val rdd = l.rdd
     rdd.getCheckpointFile.foreach { p =>
       val path = new org.apache.hadoop.fs.Path(p)
-      path.getFileSystem(
-          df.sparkSession.sparkContext.hadoopConfiguration)
+      path.getFileSystem(rdd.sparkContext.hadoopConfiguration)
         .delete(path, true)
       // the delete is destructive on contract misuse (releasing a
       // round a later frame still reads) — name the path so a

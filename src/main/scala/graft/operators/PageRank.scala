@@ -13,36 +13,25 @@ import org.apache.spark.sql.functions._
   * Scale posture: each round is one edge ⋈ rank equi-join + one hash-agg,
   * both keyed consistently (src / node), so consecutive rounds reuse the
   * shuffle partitioning; the (src, dst, outdeg) frame is materialized once
-  * and lineage is truncated per round through the `materialize` hook —
-  * the default [[Materialize.truncate]] uses `localCheckpoint(true)` on a
-  * single node and switches to reliable `checkpoint()` (replicated,
-  * survives decommissioned executors) when the session has a checkpoint
-  * dir set; special deployments can still pass their own hook.
+  * and the rounds run through [[Fixpoint]]: [[Materialize.truncate]] uses
+  * `localCheckpoint(true)` on a single node and switches to reliable
+  * `checkpoint()` (replicated, survives decommissioned executors) when
+  * the session has a checkpoint dir set.
   */
 object PageRank {
   val Scale = 1000000L
 
-  /** Per-round lineage truncation strategy (see class doc).
-    *
-    * CONTRACT: the hook must return an EAGERLY-materialized frame —
-    * one whose contents are computed before the call returns (eager
-    * localCheckpoint / reliable checkpoint / a parquet round-trip),
-    * like the default [[Materialize.truncate]]. The loops here and in
-    * [[Hits.runFromEdges]] release their internal materializations
-    * after the final round on the strength of it; a LAZY hook (e.g.
-    * [[Materialize.truncateBeforeAction]]'s `localCheckpoint(false)`)
-    * would have those inputs freed before the final frame ever
-    * computes. */
-  type Materializer = DataFrame => DataFrame
-  val DefaultMaterializer: Materializer = Materialize.truncate
+  /** Every endpoint of a (src, dst) edge frame, once, as `node`. */
+  private[graft] def endpoints(edges: DataFrame): DataFrame =
+    edges.select(col("src").as("node"))
+      .union(edges.select(col("dst").as("node"))).distinct()
 
   /** @param nodes one `node` column, distinct
     * @param edges  `src`/`dst` columns, distinct directed pairs
     * @return (node, rank) after `iters` rounds from a uniform start */
-  def run(nodes: DataFrame, edges: DataFrame, iters: Int,
-      materialize: Materializer = DefaultMaterializer): DataFrame =
-    loop(materialize(nodes.select(col("node"), lit(1L).as("s"))),
-      materialize(edges), iters, materialize)
+  def run(nodes: DataFrame, edges: DataFrame, iters: Int): DataFrame =
+    loop(Materialize.truncate(nodes.select(col("node"), lit(1L).as("s"))),
+      Materialize.truncate(edges), iters)
 
   /** PERSONALIZED variant: teleport mass lands only on `seeds` —
     *   r'(v) = [v∈S]·0.15·Scale + (85 · Σ_{u→v} (r(u) div outdeg(u))) div 100
@@ -54,30 +43,26 @@ object PageRank {
     * and cost; the seed indicator rides the node frame, so
     * personalization adds zero extra shuffles. */
   def runPersonalized(nodes: DataFrame, edges: DataFrame,
-      seeds: DataFrame, iters: Int,
-      materialize: Materializer = DefaultMaterializer): DataFrame =
-    loop(materialize(
+      seeds: DataFrame, iters: Int): DataFrame =
+    loop(Materialize.truncate(
       // distinct: a duplicated seed row would fan the node frame out
       // and double-count that node's teleport AND its flowed-out mass
       nodes.join(seeds.select(col("node")).distinct()
           .withColumn("s", lit(1L)),
           Seq("node"), "left")
         .select(col("node"), coalesce(col("s"), lit(0L)).as("s"))),
-      materialize(edges), iters, materialize)
+      Materialize.truncate(edges), iters)
 
   /** PageRank with the node set derived from the edge endpoints — the
     * usual flow-graph entry point. The edge frame is materialized ONCE
     * and nodes/out-degrees derive from the materialization, so the
     * (possibly expensive) upstream edge pipeline runs a single time no
     * matter how many rounds follow. */
-  def runFromEdges(edges: DataFrame, iters: Int,
-      materialize: Materializer = DefaultMaterializer): DataFrame = {
-    val e = materialize(edges)
-    val n = materialize(
-      e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct()
-        .select(col("node"), lit(1L).as("s")))
-    loop(n, e, iters, materialize)
+  def runFromEdges(edges: DataFrame, iters: Int): DataFrame = {
+    val e = Materialize.truncate(edges)
+    val n = Materialize.truncate(
+      endpoints(e).select(col("node"), lit(1L).as("s")))
+    loop(n, e, iters)
   }
 
   /** VALUE-WEIGHTED variant over (src, dst, v) edges: mass flows in
@@ -91,77 +76,45 @@ object PageRank {
     * headroom at fixture volumes peaks well under 2^63 — a deployment
     * at real satoshi volumes promotes the product to DECIMAL(38,0),
     * exactly like the haircut taint's proportional split. */
-  def runWeightedFromEdges(edges: DataFrame, iters: Int,
-      materialize: Materializer = DefaultMaterializer): DataFrame = {
-    val e = materialize(edges.select(col("src"), col("dst"), col("v")))
-    val nodes = materialize(
-      e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct())
+  def runWeightedFromEdges(edges: DataFrame, iters: Int): DataFrame = {
+    val e = Materialize.truncate(edges.select(col("src"), col("dst"), col("v")))
+    val nodes = Materialize.truncate(endpoints(e))
     val vout = e.groupBy(col("src")).agg(sum(col("v")).as("vout"))
-    val esrc = materialize(e.join(vout, Seq("src")))
-    var ranks = nodes.select(col("node"), lit(Scale).as("rank"))
-    for (i <- 1 to iters) {
+    val esrc = Materialize.truncate(e.join(vout, Seq("src")))
+    Fixpoint.run(nodes.select(col("node"), lit(Scale).as("rank")), iters,
+        Seq(e, nodes, esrc)) { (_, ranks) =>
       val contrib = esrc
         .join(ranks, esrc("src") === ranks("node"))
         .select(col("dst"), expr("(rank * v) div vout").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("contrib"))
-      val prev = ranks
-      ranks = materialize(
-        nodes.join(contrib, nodes("node") === contrib("dst"), "left")
-          .select(col("node"),
-            (lit(Scale * 15 / 100) +
-              expr("(85 * coalesce(contrib, 0L)) div 100")).as("rank")))
-      if (i > 1) Materialize.release(prev)
-    }
-    // the final round is materialized and lineage-free, so the
-    // operator-internal materializations (e, nodes, esrc) are dead —
-    // freed here, or a checkpoint-dir session leaks one rdd-N
-    // directory per invocation for its lifetime (ContextCleaner does
-    // not delete checkpoint files by default; release no-ops on
-    // non-checkpoint-backed frames). iters <= 0 returns the
-    // un-materialized uniform frame, which still references nodes —
-    // nothing can be freed on that path.
-    if (iters >= 1) {
-      Materialize.release(esrc); Materialize.release(e)
-      Materialize.release(nodes)
-    }
-    ranks
+      nodes.join(contrib, nodes("node") === contrib("dst"), "left")
+        .select(col("node"),
+          (lit(Scale * 15 / 100) +
+            expr("(85 * coalesce(contrib, 0L)) div 100")).as("rank"))
+    } ((_, ranks) => ranks)
   }
 
   /** Core rounds over MATERIALIZED (node, s) / edges frames (both must
     * already be materialized: every round references both, and an
     * un-materialized node frame would re-run its whole upstream
     * pipeline per round). `s` is the 0/1 teleport indicator — all-ones
-    * for uniform PageRank. */
-  private def loop(nodes: DataFrame, edges: DataFrame, iters: Int,
-      materialize: Materializer): DataFrame = {
+    * for uniform PageRank. The edge/node materializations are
+    * operator-scoped on every caller path, so [[Fixpoint]] frees them
+    * with the dead rounds. */
+  private def loop(nodes: DataFrame, edges: DataFrame, iters: Int)
+      : DataFrame = {
     val outd = edges.groupBy(col("src")).agg(count(lit(1)).as("outdeg"))
-    val esrc = materialize(edges.join(outd, Seq("src")))
-    var ranks = nodes.select(col("node"), (col("s") * Scale).as("rank"))
-    for (i <- 1 to iters) {
+    val esrc = Materialize.truncate(edges.join(outd, Seq("src")))
+    Fixpoint.run(nodes.select(col("node"), (col("s") * Scale).as("rank")),
+        iters, Seq(esrc, edges, nodes)) { (_, ranks) =>
       val contrib = esrc
         .join(ranks, esrc("src") === ranks("node"))
         .select(col("dst"), expr("rank div outdeg").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("contrib"))
-      val prev = ranks
-      ranks = materialize(
-        nodes.join(contrib, nodes("node") === contrib("dst"), "left")
-          .select(col("node"),
-            (col("s") * lit(Scale * 15 / 100) +
-              expr("(85 * coalesce(contrib, 0L)) div 100")).as("rank")))
-      // round i-1's rank blocks are dead once round i is materialized
-      // (round 1's prev is the un-materialized uniform frame — no-op)
-      if (i > 1) Materialize.release(prev)
-    }
-    // see runWeightedFromEdges: the edge/node materializations are
-    // operator-scoped on every caller path (run / runPersonalized /
-    // runFromEdges each materialize fresh copies), so once the final
-    // round is materialized they are dead and freed here. iters <= 0
-    // returns the un-materialized uniform frame — skip.
-    if (iters >= 1) {
-      Materialize.release(esrc); Materialize.release(edges)
-      Materialize.release(nodes)
-    }
-    ranks
+      nodes.join(contrib, nodes("node") === contrib("dst"), "left")
+        .select(col("node"),
+          (col("s") * lit(Scale * 15 / 100) +
+            expr("(85 * coalesce(contrib, 0L)) div 100")).as("rank"))
+    } ((_, ranks) => ranks)
   }
 }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.chain.{Chain, ChainSql}
 import graft.chain.Chain.{io, transactions}
 import graft.chain.ChainSql.withCtes
+import graft.operators.PageRank.endpoints
 import graft.queries.RefQueries.{entityLabels, EntityWindow}
 
 /** Graph analytics over the chain's money-flow graph — the queries the
@@ -285,6 +286,14 @@ object GraphQueries {
     graft.ops.GraphMaterialize.entityFlowTable(s, dir)(
       deriveEntityFlows(s, dir))
 
+  /** The entity flow graph as distinct (src, dst) edges, self-flows
+    * dropped — the entity_pagerank / entity_hits / entity_taint input. */
+  private def entityEdges(s: SparkSession, dir: String): DataFrame =
+    entityFlows(s, dir)
+      .filter(col("src_entity") =!= col("dst_entity"))
+      .select(col("src_entity").as("src"), col("dst_entity").as("dst"))
+      .distinct()
+
   /** The entity-flow derivation itself (unparked — the tier build;
     * package-visible so GraphMaterializeSpec can prove parked ==
     * derived). */
@@ -478,14 +487,9 @@ object GraphQueries {
     // actually ranks with: clustering tier → entity edges → fixed-point
     // centrality, every stage the already-verified operator. Proves the
     // operators COMPOSE (materialized labels feed the iterative rank).
-    "entity_pagerank" -> ((s, dir) => {
-      val edges = entityFlows(s, dir)
-        .filter(col("src_entity") =!= col("dst_entity"))
-        .select(col("src_entity").as("src"), col("dst_entity").as("dst"))
-        .distinct()
-      graft.operators.PageRank.runFromEdges(edges, PrIters)
-        .select(col("node").as("entity"), col("rank").as("pagerank"))
-    }),
+    "entity_pagerank" -> ((s, dir) =>
+      graft.operators.PageRank.runFromEdges(entityEdges(s, dir), PrIters)
+        .select(col("node").as("entity"), col("rank").as("pagerank"))),
 
     // HITS at ENTITY grain — clustering tier → entity edges → the
     // reusable [[graft.operators.Hits]] loop, completing the
@@ -495,14 +499,9 @@ object GraphQueries {
     // split is MORE meaningful here — a multi-address exchange entity
     // is exactly the hot-wallet hub / cold-consolidation authority
     // structure the address-grain query can only see fragmented.
-    "entity_hits" -> ((s, dir) => {
-      val edges = entityFlows(s, dir)
-        .filter(col("src_entity") =!= col("dst_entity"))
-        .select(col("src_entity").as("src"), col("dst_entity").as("dst"))
-        .distinct()
-      graft.operators.Hits.runFromEdges(edges, HitsIters)
-        .select(col("node").as("entity"), col("hub"), col("authority"))
-    }),
+    "entity_hits" -> ((s, dir) =>
+      graft.operators.Hits.runFromEdges(entityEdges(s, dir), HitsIters)
+        .select(col("node").as("entity"), col("hub"), col("authority"))),
 
     // taint BFS at ENTITY grain — the granularity GraphSense actually
     // sweeps at: clustering tier → entity edges → the shared frontier
@@ -511,12 +510,8 @@ object GraphQueries {
     // (materialized labels feed the iterative BFS) with no new moving
     // parts.
     "entity_taint" -> ((s, dir) => {
-      val edges = entityFlows(s, dir)
-        .filter(col("src_entity") =!= col("dst_entity"))
-        .select(col("src_entity").as("src"), col("dst_entity").as("dst"))
-        .distinct()
-      val nodes = edges.select(col("src").as("node"))
-        .unionByName(edges.select(col("dst").as("node"))).distinct()
+      val edges = entityEdges(s, dir)
+      val nodes = endpoints(edges)
       val seeds = nodes.filter(expr(
         "CAST(conv(substr(md5(CAST(node AS STRING)), 1, 10), 16, 10)" +
           s" AS BIGINT) % $EntityTaintSeedMod = 0"))
@@ -624,13 +619,9 @@ object GraphQueries {
     // reaches, bounding output by the seeds' forward closure.
     "graph_ppr_tagged" -> ((s, dir) => {
       val edges = flowEdges(s, dir)
-      val nodes = edges.select(col("src").as("node"))
-        .unionByName(edges.select(col("dst").as("node"))).distinct()
-      val seeds = nodes.filter(expr(
-        s"CAST(conv(substr(md5(node), 1, 10), 16, 10) AS BIGINT)" +
-          s" % $TagMod = 0"))
+      val nodes = endpoints(edges)
       graft.operators.PageRank
-        .runPersonalized(nodes, edges, seeds, PrIters)
+        .runPersonalized(nodes, edges, hashSeeds(nodes, TagMod), PrIters)
         .filter(col("rank") > 0)
         .select(col("node").as("address"), col("rank").as("ppr"))
     }),
@@ -674,11 +665,8 @@ object GraphQueries {
     // already died out inside the bound.
     "graph_taint" -> ((s, dir) => {
       val edges = flowEdges(s, dir)
-      val nodes = edges.select(col("src").as("node"))
-        .unionByName(edges.select(col("dst").as("node"))).distinct()
-      val seeds = nodes.filter(expr(
-        s"CAST(conv(substr(md5(node), 1, 10), 16, 10) AS BIGINT) % $TaintSeedMod = 0"))
-      taintPropagate(edges, seeds, TaintRounds)
+      taintPropagate(edges, hashSeeds(endpoints(edges), TaintSeedMod),
+          TaintRounds)
         .select(col("node").as("address"), col("d").as("taint_hops"),
           col("converged"))
     }),
@@ -700,24 +688,21 @@ object GraphQueries {
       val vesrc = ve.join(ve.groupBy(col("src"))
         .agg(sum(col("v")).as("vout")), Seq("src"))
         .transform(graft.operators.Materialize.truncate)
-      val nodes = ve.select(col("src").as("node"))
-        .unionByName(ve.select(col("dst").as("node"))).distinct()
-      val t0 = nodes.filter(expr(
-        s"CAST(conv(substr(md5(node), 1, 10), 16, 10) AS BIGINT) % $TaintSeedMod = 0"))
+      val t0 = hashSeeds(endpoints(ve), TaintSeedMod)
         .withColumn("t", lit(1L << 20))
-      def round(t: DataFrame): DataFrame = vesrc
-        .join(t.withColumnRenamed("node", "src"), Seq("src"))
-        .select(col("dst").as("node"), expr("(t * v) div vout").as("t"))
-        .groupBy(col("node")).agg(sum(col("t")).as("t"))
-        .filter(col("t") > 0)
-        .transform(graft.operators.Materialize.truncate)
-      val t1 = round(t0)
-      val t2 = round(t1)
-      t1.withColumnRenamed("t", "t1")
-        .join(t2.withColumnRenamed("t", "t2"), Seq("node"), "full_outer")
-        .select(col("node").as("address"),
-          coalesce(col("t1"), lit(0L)).as("taint_r1"),
-          coalesce(col("t2"), lit(0L)).as("taint_r2"))
+      graft.operators.Fixpoint.run(t0, 2, Seq(vesrc)) { (_, t) =>
+        vesrc
+          .join(t.withColumnRenamed("node", "src"), Seq("src"))
+          .select(col("dst").as("node"), expr("(t * v) div vout").as("t"))
+          .groupBy(col("node")).agg(sum(col("t")).as("t"))
+          .filter(col("t") > 0)
+      } { (t1, t2) =>
+        t1.withColumnRenamed("t", "t1")
+          .join(t2.withColumnRenamed("t", "t2"), Seq("node"), "full_outer")
+          .select(col("node").as("address"),
+            coalesce(col("t1"), lit(0L)).as("taint_r1"),
+            coalesce(col("t2"), lit(0L)).as("taint_r2"))
+      }
     }),
 
     // TIME-RESPECTING taint — the forensic semantics the hop-count BFS
@@ -734,30 +719,23 @@ object GraphQueries {
     // arrivals through a newly usable later edge).
     "graph_taint_timed" -> ((s, dir) => {
       val te = timedEdges(s, dir)
-      val nodes = te.select(col("src").as("node"))
-        .unionByName(te.select(col("dst").as("node"))).distinct()
-      var st = nodes.filter(expr(
-        s"CAST(conv(substr(md5(node), 1, 10), 16, 10) AS BIGINT) % $TaintSeedMod = 0"))
+      val seeds = hashSeeds(endpoints(te), TaintSeedMod)
         .withColumn("a", lit(0L))
-      var prev = st
-      for (_ <- 1 to TaintRounds) {
-        val dead = prev
-        prev = st
+      graft.operators.Fixpoint.run(seeds, TaintRounds, Nil) { (_, st) =>
         val step = te.join(st.withColumnRenamed("node", "src"), Seq("src"))
           .filter(col("block_id") >= col("a"))
           .select(col("dst").as("node"), col("block_id").cast("long").as("a"))
-        st = st.unionByName(step)
+        st.unionByName(step)
           .groupBy(col("node")).agg(min(col("a")).as("a"))
-          .transform(graft.operators.Materialize.truncate)
-        if (!(dead eq prev)) graft.operators.Materialize.release(dead)
+      } { (prev, st) =>
+        st.crossJoin(broadcast(prev.agg(count(lit(1)).as("n_prev"),
+            sum(col("a")).as("s_prev"))))
+          .crossJoin(broadcast(st.agg(count(lit(1)).as("n_cur"),
+            sum(col("a")).as("s_cur"))))
+          .select(col("node").as("address"), col("a").as("taint_block"),
+            (col("n_prev") === col("n_cur") &&
+              col("s_prev") === col("s_cur")).as("converged"))
       }
-      st.crossJoin(broadcast(prev.agg(count(lit(1)).as("n_prev"),
-          sum(col("a")).as("s_prev"))))
-        .crossJoin(broadcast(st.agg(count(lit(1)).as("n_cur"),
-          sum(col("a")).as("s_cur"))))
-        .select(col("node").as("address"), col("a").as("taint_block"),
-          (col("n_prev") === col("n_cur") &&
-            col("s_prev") === col("s_cur")).as("converged"))
     }),
 
     // bounded STRONGLY connected components — the directed-cycle
@@ -780,24 +758,14 @@ object GraphQueries {
       val e = flowEdges(s, dir).filter(expr(
         "CAST(conv(substr(md5(concat(src, '|', dst)), 1, 10), 16, 10) " +
           s"AS BIGINT) % $SccEdgeMod = 0"))
-      val nodes = e.select(col("src").as("node"))
-        .unionByName(e.select(col("dst").as("node"))).distinct()
-      // the forward and backward min-label fixpoints are INDEPENDENT
-      // loops over the same (parked-tier-backed) edge frame — overlap
-      // them (guide §2.6, the tier-build-wave pattern; r14): each
-      // round's tail backfills with the other loop's work instead of
-      // serializing 2 × SccRounds round jobs. Results are identical —
-      // the loops share no mutable state (immutable plans, per-loop
-      // round frames) and the join below is the only meeting point.
-      val reach = new Array[DataFrame](2)
-      graft.ops.Tiers.buildConcurrently(Seq(
-        () => { reach(0) = minReach(nodes, e, SccRounds)
-          .withColumnRenamed("l", "f") },
-        () => { reach(1) = minReach(nodes,
-            e.select(col("dst").as("src"), col("src").as("dst")), SccRounds)
-          .withColumnRenamed("l", "b") }))
-      val fwd = reach(0)
-      val bwd = reach(1)
+      val nodes = endpoints(e)
+      // the forward and backward fixpoints run one after the other:
+      // overlapping them on two threads measured slower on 4 cores
+      // (SCALE.md, "graph_scc")
+      val fwd = minReach(nodes, e, SccRounds).withColumnRenamed("l", "f")
+      val bwd = minReach(nodes,
+          e.select(col("dst").as("src"), col("src").as("dst")), SccRounds)
+        .withColumnRenamed("l", "b")
       fwd.join(bwd, Seq("node"))
         .select(col("node").as("address"),
           when(col("f") === col("b"), col("f")).otherwise(col("node"))
@@ -958,6 +926,12 @@ object GraphQueries {
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
 
+  /** The ~1-in-`mod` nodes picked by a 40-bit md5 half of their
+    * (string) id — the DuckDB-mirrorable seed and tag selection. */
+  private def hashSeeds(nodes: DataFrame, mod: Int): DataFrame =
+    nodes.filter(expr(
+      s"CAST(conv(substr(md5(node), 1, 10), 16, 10) AS BIGINT) % $mod = 0"))
+
   /** Degree of each surviving node counted over edges whose BOTH
     * endpoints survive: two equi-joins against the survivor set (the
     * same key each round, so a cluster co-partitions them) + one
@@ -980,24 +954,17 @@ object GraphQueries {
   private[graft] def kCorePeel(edges: DataFrame, k: Int,
       rounds: Int): DataFrame = {
     val sed = symmetrized(edges).transform(graft.operators.Materialize.truncate)
-    var surv = sed.select(col("src").as("node")).distinct()
-    var prev = surv
-    for (_ <- 1 to rounds) {
-      // the survivor set from TWO rounds back is dead once this round
-      // materializes (prev is still the convergence witness below)
-      val dead = prev
-      prev = surv
-      surv = coreDegrees(sed, surv)
-        .filter(col("deg") >= k).select("node")
-        .transform(graft.operators.Materialize.truncate)
-      if (!(dead eq prev)) graft.operators.Materialize.release(dead)
+    graft.operators.Fixpoint.run(sed.select(col("src").as("node")).distinct(),
+        rounds, Seq(sed)) { (_, surv) =>
+      coreDegrees(sed, surv).filter(col("deg") >= k).select("node")
+    } { (prev, surv) =>
+      coreDegrees(sed, surv)
+        .withColumnRenamed("deg", "core_degree")
+        .crossJoin(broadcast(prev.agg(count(lit(1)).as("n_prev"))))
+        .crossJoin(broadcast(surv.agg(count(lit(1)).as("n_cur"))))
+        .withColumn("converged", col("n_prev") === col("n_cur"))
+        .select(col("node"), col("core_degree"), col("converged"))
     }
-    coreDegrees(sed, surv)
-      .withColumnRenamed("deg", "core_degree")
-      .crossJoin(broadcast(prev.agg(count(lit(1)).as("n_prev"))))
-      .crossJoin(broadcast(surv.agg(count(lit(1)).as("n_cur"))))
-      .withColumn("converged", col("n_prev") === col("n_cur"))
-      .select(col("node"), col("core_degree"), col("converged"))
   }
 
   /** Hop horizon / seed-selection modulus for graph_taint (~2% of
@@ -1060,23 +1027,19 @@ object GraphQueries {
   private[graft] def taintPropagate(edges: DataFrame, seeds: DataFrame,
       rounds: Int): DataFrame = {
     val e = edges.transform(graft.operators.Materialize.truncate)
-    var dist = seeds.withColumn("d", lit(0L))
-    var prev = dist
-    for (_ <- 1 to rounds) {
-      val dead = prev
-      prev = dist
+    graft.operators.Fixpoint.run(seeds.withColumn("d", lit(0L)), rounds,
+        Seq(e)) { (_, dist) =>
       val step = e.join(dist.withColumnRenamed("node", "src"), Seq("src"))
         .select(col("dst").as("node"), (col("d") + 1L).as("d"))
-      dist = dist.unionByName(step)
+      dist.unionByName(step)
         .groupBy(col("node")).agg(min(col("d")).as("d"))
-        .transform(graft.operators.Materialize.truncate)
-      if (!(dead eq prev)) graft.operators.Materialize.release(dead)
+    } { (prev, dist) =>
+      dist
+        .crossJoin(broadcast(prev.agg(count(lit(1)).as("n_prev"))))
+        .crossJoin(broadcast(dist.agg(count(lit(1)).as("n_cur"))))
+        .withColumn("converged", col("n_prev") === col("n_cur"))
+        .select(col("node"), col("d"), col("converged"))
     }
-    dist
-      .crossJoin(broadcast(prev.agg(count(lit(1)).as("n_prev"))))
-      .crossJoin(broadcast(dist.agg(count(lit(1)).as("n_cur"))))
-      .withColumn("converged", col("n_prev") === col("n_cur"))
-      .select(col("node"), col("d"), col("converged"))
   }
 
   /** Synchronous LPA over a (src, dst) edge frame (symmetrized here):
@@ -1087,23 +1050,18 @@ object GraphQueries {
   private[graft] def labelPropagate(edges: DataFrame,
       iters: Int): DataFrame = {
     val sed = symmetrized(edges).transform(graft.operators.Materialize.truncate)
-    var lbl = sed.select(col("src").as("node")).distinct()
-      .withColumn("lbl", col("node"))
-    for (_ <- 1 to iters) {
+    graft.operators.Fixpoint.run(sed.select(col("src").as("node")).distinct()
+        .withColumn("lbl", col("node")), iters, Seq(sed)) { (_, lbl) =>
       val nb = sed
         .join(lbl.withColumnRenamed("node", "src"), Seq("src"))
         .select(col("dst").as("node"), col("lbl"))
       val ct = nb.groupBy(col("node"), col("lbl"))
         .agg(count(lit(1)).as("c"))
-      val dead = lbl
-      lbl = ct.groupBy(col("node"))
+      ct.groupBy(col("node"))
         .agg(min(struct((-col("c")).as("nc"), col("lbl").as("lbl")))
           .as("m"))
         .select(col("node"), col("m.lbl").as("lbl"))
-        .transform(graft.operators.Materialize.truncate)
-      graft.operators.Materialize.release(dead)
-    }
-    lbl
+    } ((_, lbl) => lbl)
   }
 
   // ---- DuckDB oracles ---------------------------------------------------
@@ -1740,24 +1698,16 @@ object GraphQueries {
 
   /** K-round min-label reach: l(v) = min node reaching v within
     * `rounds` hops along `edges` (v itself included) — graph_scc's
-    * forward scan; on reversed edges, its backward scan. Same
-    * truncate/release loop discipline as [[taintPropagate]]. */
+    * forward scan; on reversed edges, its backward scan. */
   private[graft] def minReach(nodes: DataFrame, edges: DataFrame,
-      rounds: Int): DataFrame = {
-    var lbl = nodes.withColumn("l", col("node"))
-    var prev = lbl
-    for (_ <- 1 to rounds) {
-      val dead = prev
-      prev = lbl
-      lbl = lbl.unionByName(
+      rounds: Int): DataFrame =
+    graft.operators.Fixpoint.run(nodes.withColumn("l", col("node")), rounds,
+        Nil) { (_, lbl) =>
+      lbl.unionByName(
           edges.join(lbl.select(col("node").as("src"), col("l")), Seq("src"))
             .select(col("dst").as("node"), col("l")))
         .groupBy(col("node")).agg(min(col("l")).as("l"))
-        .transform(graft.operators.Materialize.truncate)
-      if (!(dead eq prev)) graft.operators.Materialize.release(dead)
-    }
-    lbl
-  }
+    } ((_, lbl) => lbl)
 
   /** One min-label round of graph_scc's oracle (reads `$pfx{r-1}`,
     * defines `$pfx$r`, walking `edges`). */

@@ -28,9 +28,6 @@ object TextQueries {
   private def inList(ws: Seq[String]): String =
     ws.map(w => s"'$w'").mkString("(", ", ", ")")
 
-  private def hitsExpr(lang: String): String =
-    s"CAST(size(filter(w, x -> x IN ${inList(Stops(lang))})) AS BIGINT)"
-
   private def hitsSql(lang: String): String =
     s"CAST(len(list_filter(w, x -> x IN ${inList(Stops(lang))})) AS BIGINT)"
 
@@ -104,7 +101,8 @@ object TextQueries {
     * of consecutive matches is the parity trick: within each island of
     * consecutive match positions, exactly the even offsets merge —
     * a window computation, not a sequential scan, so it distributes.
-    * Returns (top-pair single-row frame, next round's sequence frame).
+    * Returns (the materialized top-pair single-row frame, next round's
+    * lazy sequence frame).
     */
   private[graft] def bpeRound(s: SparkSession, seqs: DataFrame)
       : (DataFrame, DataFrame) = {
@@ -145,9 +143,45 @@ object TextQueries {
         row_number().over(wIdx).cast("long").as("pn"), col("sym2"))
       .select(col("word"), col("freq"), col("pn").as("p"),
         col("sym2").as("sym"))
-      .transform(graft.operators.Materialize.truncate)
     (top, next)
   }
+
+  /** The four BPE training rounds ([[bpeRound]]) over the word-frequency
+    * dictionary of `dw` ([[docWords]]): the vocabulary's one-symbol-per-
+    * char frame is round 0 and the rounds run through
+    * [[graft.operators.Fixpoint]]. `result` gets each round's top pair
+    * and the final symbol frame; what it does not read is released. */
+  private def bpeTrain(s: SparkSession, dw: DataFrame)(
+      result: (Seq[DataFrame], DataFrame) => DataFrame): DataFrame = {
+    val vocab = dw.select(explode(col("w")).as("word"))
+      .filter(length(col("word")) >= 1)
+      .groupBy(col("word")).agg(count(lit(1)).as("freq"))
+    val symbols = vocab
+      .select(col("word"), col("freq"),
+        explode(sequence(lit(1), length(col("word")))).as("i"))
+      .select(col("word"), col("freq"), col("i").cast("long").as("p"),
+        expr("substring(word, i, 1)").as("sym"))
+      .transform(graft.operators.Materialize.truncate)
+    val tops = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    graft.operators.Fixpoint.run(symbols, 4, tops.toSeq) { (_, cur) =>
+      val (top, next) = bpeRound(s, cur)
+      tops += top
+      next
+    } ((_, cur) => result(tops.toSeq, cur))
+  }
+
+  /** DuckDB mirror of [[bpeTrain]]'s rounds: the vocabulary, its
+    * symbol frame s0, then s1..s4 with each round's top pair tp0..tp3. */
+  private def bpeTrainCtes: Seq[String] = Seq(docWordsSql,
+    """vocab AS MATERIALIZED (
+      |  SELECT word, CAST(count(*) AS BIGINT) AS freq
+      |  FROM (SELECT unnest(w) AS word FROM words)
+      |  WHERE length(word) >= 1 GROUP BY word)""".stripMargin,
+    """s0 AS MATERIALIZED (
+      |  SELECT word, freq, CAST(i AS BIGINT) AS p, substr(word, i, 1) AS sym
+      |  FROM (SELECT word, freq, unnest(range(1, length(word) + 1)) AS i
+      |        FROM vocab))""".stripMargin) ++
+    (0 until 4).flatMap(bpeRoundCtes)
 
   /** DuckDB mirror of [[bpeRound]] r (reads s{r}, defines s{r+1}).
     *
@@ -382,29 +416,13 @@ object TextQueries {
     // is the ISLAND-PARITY window trick in bpeRound, not a sequential
     // scan, so rounds stay fully distributed; per-round
     // localCheckpoint keeps the plan O(1) deep like k-means.
-    "bpe_merges" -> ((s, dir) => {
-      val vocab = docWords(s, dir)
-        .select(explode(col("w")).as("word"))
-        .filter(length(col("word")) >= 1)
-        .groupBy(col("word")).agg(count(lit(1)).as("freq"))
-      var cur = vocab
-        .select(col("word"), col("freq"),
-          explode(sequence(lit(1), length(col("word")))).as("i"))
-        .select(col("word"), col("freq"), col("i").cast("long").as("p"),
-          expr("substring(word, i, 1)").as("sym"))
-        .transform(graft.operators.Materialize.truncate)
-      val tops = (0 until 4).map { r =>
-        val (top, next) = bpeRound(s, cur)
-        // top and next are both materialized by bpeRound — the previous
-        // round's sequence state is dead
-        graft.operators.Materialize.release(cur)
-        cur = next
-        top.select(lit(r.toLong).as("round"), col("sa").as("sym_a"),
-          col("sb").as("sym_b"), col("n").as("n_count"))
-      }
-      graft.operators.Materialize.release(cur)
-      tops.reduce(_ unionByName _)
-    }),
+    "bpe_merges" -> ((s, dir) =>
+      bpeTrain(s, docWords(s, dir)) { (tops, _) =>
+        tops.zipWithIndex.map { case (top, r) =>
+          top.select(lit(r.toLong).as("round"), col("sa").as("sym_a"),
+            col("sb").as("sym_b"), col("n").as("n_count"))
+        }.reduce(_ unionByName _)
+      }),
 
     // tokenizer APPLICATION (the other half of the BPE story): encode
     // the corpus with the learned merge table. Encoding a corpus never
@@ -416,29 +434,17 @@ object TextQueries {
     // compression a 4-merge vocabulary buys.
     "bpe_encode" -> ((s, dir) => {
       val dw = docWords(s, dir)
-      val vocab = dw.select(explode(col("w")).as("word"))
-        .filter(length(col("word")) >= 1)
-        .groupBy(col("word")).agg(count(lit(1)).as("freq"))
-      var cur = vocab
-        .select(col("word"), col("freq"),
-          explode(sequence(lit(1), length(col("word")))).as("i"))
-        .select(col("word"), col("freq"), col("i").cast("long").as("p"),
-          expr("substring(word, i, 1)").as("sym"))
-        .transform(graft.operators.Materialize.truncate)
-      for (_ <- 0 until 4) {
-        val dead = cur
-        cur = bpeRound(s, cur)._2
-        graft.operators.Materialize.release(dead)
+      bpeTrain(s, dw) { (_, cur) =>
+        val encLen = cur.groupBy(col("word"))
+          .agg(count(lit(1)).as("n_sym"))
+        dw.select(col("doc_id"), explode(col("w")).as("word"))
+          .filter(length(col("word")) >= 1)
+          .join(encLen, Seq("word"))
+          .groupBy(col("doc_id"))
+          .agg(count(lit(1)).as("n_words"),
+            sum(col("n_sym")).as("n_symbols"),
+            sum(length(col("word"))).cast("long").as("n_chars"))
       }
-      val encLen = cur.groupBy(col("word"))
-        .agg(count(lit(1)).as("n_sym"))
-      dw.select(col("doc_id"), explode(col("w")).as("word"))
-        .filter(length(col("word")) >= 1)
-        .join(encLen, Seq("word"))
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_words"),
-          sum(col("n_sym")).as("n_symbols"),
-          sum(length(col("word"))).cast("long").as("n_chars"))
     }),
 
     // cross-corpus overlap via KMV (k-minimum-values) sketches: every
@@ -1500,16 +1506,7 @@ object TextQueries {
     // round-unrolled BPE mirror (the kmeansRoundCtes pattern): each
     // round's pair-count / top-pair / island-parity merge is one CTE
     // block from bpeRoundCtes; the body unions the 4 learned merges
-    "bpe_merges" -> withCtes((Seq(docWordsSql,
-      """vocab AS MATERIALIZED (
-        |  SELECT word, CAST(count(*) AS BIGINT) AS freq
-        |  FROM (SELECT unnest(w) AS word FROM words)
-        |  WHERE length(word) >= 1 GROUP BY word)""".stripMargin,
-      """s0 AS MATERIALIZED (
-        |  SELECT word, freq, CAST(i AS BIGINT) AS p, substr(word, i, 1) AS sym
-        |  FROM (SELECT word, freq, unnest(range(1, length(word) + 1)) AS i
-        |        FROM vocab))""".stripMargin) ++
-      (0 until 4).flatMap(bpeRoundCtes)): _*)(
+    "bpe_merges" -> withCtes(bpeTrainCtes: _*)(
       (0 until 4).map(r =>
         s"SELECT CAST($r AS BIGINT) AS round, sa AS sym_a, sb AS sym_b, n AS n_count FROM tp$r")
         .mkString("\nUNION ALL\n")),
@@ -1520,16 +1517,7 @@ object TextQueries {
     // constant is exact in both engines' doubles
     // encoded-dictionary mirror: the same unrolled merge rounds, then
     // per-word symbol counts joined back to the document words
-    "bpe_encode" -> withCtes((Seq(docWordsSql,
-      """vocab AS MATERIALIZED (
-        |  SELECT word, CAST(count(*) AS BIGINT) AS freq
-        |  FROM (SELECT unnest(w) AS word FROM words)
-        |  WHERE length(word) >= 1 GROUP BY word)""".stripMargin,
-      """s0 AS MATERIALIZED (
-        |  SELECT word, freq, CAST(i AS BIGINT) AS p, substr(word, i, 1) AS sym
-        |  FROM (SELECT word, freq, unnest(range(1, length(word) + 1)) AS i
-        |        FROM vocab))""".stripMargin) ++
-      (0 until 4).flatMap(bpeRoundCtes) ++ Seq(
+    "bpe_encode" -> withCtes((bpeTrainCtes ++ Seq(
       """enclen AS (SELECT word, CAST(count(*) AS BIGINT) AS n_sym
         |           FROM s4 GROUP BY word)""".stripMargin,
       """dwx AS (SELECT doc_id, unnest(w) AS word FROM words)""")): _*)(

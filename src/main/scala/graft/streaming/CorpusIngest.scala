@@ -113,12 +113,13 @@ object CorpusIngest {
     // epochs only — a replayed epoch must not see its own failed
     // attempt's rows as old, or the posting union would double-count
     // this batch's shingles and verify wrong overlaps
-    def landedOr(sub: String, empty: DataFrame): DataFrame =
-      try s.read.parquet(s"$out/$sub")
-        .filter(col("ingest_epoch").cast("long") < epoch)
-      catch {
-        case _: org.apache.spark.sql.AnalysisException => empty
-      }
+    def landedOr(sub: String, empty: DataFrame): DataFrame = {
+      val p = new org.apache.hadoop.fs.Path(s"$out/$sub")
+      if (p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
+        s.read.parquet(s"$out/$sub")
+          .filter(col("ingest_epoch").cast("long") < epoch)
+      else empty
+    }
     val prevPrefix = landedOr("prefix", batchPrefix.limit(0))
       .select(col("shingle"), col("doc_id"), col("n"), col("rk"))
       .withColumn("nw", lit(false))

@@ -363,23 +363,22 @@ object IncrementalIngest {
     * owns the lifecycle — new source files are picked up each interval
     * and land through the identical epoch-keyed sink (SCALE.md's
     * "same query left running = real-time sync", demonstrated as tested
-    * fact in StreamingSpec). */
+    * fact in StreamingSpec). Its private checkpoint is deleted when the
+    * query terminates. */
   def ingestContinuously(s: SparkSession, dir: String, out: String,
       watermark: Long, intervalMs: Long = 500L, tipMargin: Long = 0L)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val ckpt = s"target/tmp/${Streams.freshName("ckpt_cont")}"
     val base = landingBase(s, out, watermark, Some(ckpt), 0L)
     val tip = tipFrame(s, dir)
-    txStream(s, dir, watermark).writeStream
+    Streams.startOwningCheckpoint(s, txStream(s, dir, watermark).writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epoch: Long) =>
         // same ST5 margin cut as the batch catch-up path — switching
         // trigger modes must not silently widen what lands in the store
         ChainStore.writeTransactionsEpoch(
           belowTip(batch.toDF(), tip, tipMargin), out, base + epoch)
       }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.ProcessingTime(intervalMs))
-      .start()
+      .trigger(Trigger.ProcessingTime(intervalMs)), ckpt)
   }
 
   /** ONE definition of the watermarked hourly window aggregation over a

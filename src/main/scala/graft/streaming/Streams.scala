@@ -1,7 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery,
+  StreamingQueryListener, Trigger}
+import org.apache.spark.sql.streaming.StreamingQueryListener._
 
 /** The run-once lifecycle every catch-up stream shares — Structured
   * Streaming's contract of a run-once trigger, a checkpoint and an
@@ -30,19 +32,46 @@ private[graft] object Streams {
   }
 
   /** Run `writer` with AvailableNow over everything available, blocking
-    * until the run ends; the query is stopped however the run ends. A
-    * `checkpoint` is kept for a later run to resume. Without one the run
-    * gets a private `target/tmp/ckpt_<uuid>`, deleted afterwards — no
-    * later run can name it, so nothing could ever resume it. */
+    * until the query has ended on its own (stopping it while its last
+    * trigger winds down logs a spurious "Failed to cancel job group");
+    * the query is stopped however the run ends. A `checkpoint` is kept
+    * for a later run to resume. Without one the run gets a private
+    * `target/tmp/ckpt_<uuid>`, deleted afterwards — no later run can
+    * name it, so nothing could ever resume it. */
   def runOnce[T](writer: DataStreamWriter[T],
       checkpoint: Option[String]): Unit = {
     val ckpt = checkpoint.getOrElse(s"target/tmp/${freshName("ckpt")}")
     try {
       val q = writer.option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
-      try q.processAllAvailable() finally q.stop()
+      try q.awaitTermination() finally q.stop()
     } finally
       if (checkpoint.isEmpty)
         graft.ops.Tiers.deleteRecursively(new java.io.File(ckpt))
+  }
+
+  /** Start `writer` as a long-running query over the private checkpoint
+    * `ckpt`, which is deleted once the query terminates, however it
+    * ends: stopped by its owner, failed, or failed to start. The
+    * listener that deletes it is registered before the start, so a
+    * query that fails at once is still caught, and removes itself. */
+  def startOwningCheckpoint[T](s: SparkSession, writer: DataStreamWriter[T],
+      ckpt: String): StreamingQuery = {
+    val name = freshName("live")
+    def delete(): Unit = graft.ops.Tiers.deleteRecursively(new java.io.File(ckpt))
+    val cleanup = new StreamingQueryListener {
+      @volatile private var id: java.util.UUID = null
+      override def onQueryStarted(e: QueryStartedEvent): Unit =
+        if (e.name == name) id = e.id
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        if (e.id == id) { s.streams.removeListener(this); delete() }
+    }
+    s.streams.addListener(cleanup)
+    try writer.queryName(name).option("checkpointLocation", ckpt).start()
+    catch {
+      case e: Throwable =>
+        s.streams.removeListener(cleanup); delete(); throw e
+    }
   }
 }

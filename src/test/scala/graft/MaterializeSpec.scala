@@ -109,4 +109,32 @@ class MaterializeSpec extends SparkSpec with TempDirs {
     } finally sc.setCheckpointDir(null)
     }
   }
+
+  test("releasePinnedLeaves unpersists a self-joined leaf once") {
+    import spark.implicits._
+    val unpersisted = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onUnpersistRDD(
+          e: org.apache.spark.scheduler.SparkListenerUnpersistRDD): Unit =
+        unpersisted.add(e.rddId)
+    }
+    val a = Materialize.truncate(Seq(1, 2, 3).toDF("x"))
+    val id = a.queryExecution.analyzed match {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
+      case other => fail(s"not a LogicalRDD: $other")
+    }
+    // three reads of one checkpoint, as in kCorePeel's result
+    val joined = a.join(a.select(col("x").as("y")), col("x") === col("y"))
+      .crossJoin(broadcast(a.agg(count(lit(1)).as("n"))))
+    assert(joined.count() === 3)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Materialize.releasePinnedLeaves(joined)
+      org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(unpersisted.toArray.count(_ == id) === 1,
+      "a leaf read three times must be unpersisted once")
+    // `a` stays reachable until here, so no GC-driven cleanup adds a call
+    java.lang.ref.Reference.reachabilityFence(a)
+  }
 }

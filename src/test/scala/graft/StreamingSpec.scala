@@ -10,6 +10,14 @@ import graft.streaming.IncrementalIngest
 class StreamingSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
+  /** The live queries' `target/tmp/ckpt_cont_*` checkpoints, once every
+    * termination event has reached its listeners. */
+  private def liveCkpts(): Set[String] = {
+    org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext)
+    Option(new java.io.File("target/tmp").listFiles()).toSeq.flatten
+      .map(_.getName).filter(_.startsWith("ckpt_cont_")).toSet
+  }
+
   test("stream AvailableNow equals batch filter above watermark") {
     val dir = sf("sf0.001")
     val wm = 1500L
@@ -166,8 +174,11 @@ class StreamingSpec extends SparkSpec with TempDirs {
     Graft.ingest(spark, dir, out, -1L, tipMargin = tip / 2)
     val headMax = graft.chain.ChainStore.readTransactions(spark, out)
       .agg(max("block_id")).as[Long].head()
+    val ckptsBefore = liveCkpts()
     val q = Graft.ingestLive(spark, dir, out, headMax)
     try q.processAllAvailable() finally q.stop()
+    assert(liveCkpts() -- ckptsBefore === Set.empty[String],
+      "the stopped live query's checkpoint must be deleted")
     val got = graft.chain.ChainStore.readTransactions(spark, out)
       .select(derived.columns.toIndexedSeq.map(col): _*)
     assert(got.count() === derived.count())
@@ -262,6 +273,7 @@ class StreamingSpec extends SparkSpec with TempDirs {
     val second = orders.filter(col("o_orderkey") % 2 === 1)
     first.coalesce(1).write.parquet(s"$src/orders.parquet")
     val out = tempDir("cont_")
+    val ckptsBefore = liveCkpts()
     val q = IncrementalIngest.ingestContinuously(spark, src, out, -1L)
     try {
       q.processAllAvailable()
@@ -274,6 +286,8 @@ class StreamingSpec extends SparkSpec with TempDirs {
       assert(graft.chain.ChainStore.readTransactions(spark, out).count() ===
         orders.count())
     } finally q.stop()
+    assert(liveCkpts() -- ckptsBefore === Set.empty[String],
+      "the stopped live query's checkpoint must be deleted")
   }
 
   test("bounded dedup drops within-watermark replays, accepts post-eviction ones") {

@@ -17,18 +17,23 @@
 #                             through Streams.runOnce, partitioned
 #                             overwrites through
 #                             ChainStore.overwritePartitions
-#   4. sbt compile          — the tree compiles (r12 shipped a tree that
+#   4. loop lifecycle       — no Materialize.release( or
+#                             truncateBeforeAction in src/main/scala
+#                             outside operators/{Fixpoint,Materialize,
+#                             PrefixCarry}.scala: iterative loops truncate
+#                             and release through operators.Fixpoint
+#   5. sbt compile          — the tree compiles (r12 shipped a tree that
 #                             didn't; this script exists so that cannot
 #                             recur)
-#   5. sbt test             — full ScalaTest suite green
-#   6. graft.Verify sf0.01  — every SparkEntry query dumps its parquet
-#   7. tools/check.py       — DuckDB oracle compare: rows + schema +
+#   6. sbt test             — full ScalaTest suite green
+#   7. graft.Verify sf0.01  — every SparkEntry query dumps its parquet
+#   8. tools/check.py       — DuckDB oracle compare: rows + schema +
 #                             driver-emulated canonical hash per query,
 #                             plus the oracle cost budget (10 s/query,
 #                             180 s/suite)
 #
 # Usage: tools/preflight.sh [--quick]
-#   --quick skips sbt test (stages 1,2,3,4,6,7 only) for mid-round iteration;
+#   --quick skips sbt test (stages 1-5,7,8 only) for mid-round iteration;
 #   the snapshot commit requires the FULL run.
 set -uo pipefail
 cd "$(dirname "$0")/.."
@@ -41,14 +46,14 @@ OUT=target/verify_out
 
 fail() { echo "PREFLIGHT: FAIL at stage $1 — do NOT commit the snapshot"; exit 1; }
 
-echo "PREFLIGHT stage 1/7: tier markers only in ops/Tiers.scala"
+echo "PREFLIGHT stage 1/8: tier markers only in ops/Tiers.scala"
 if grep -rnE '"[^"]*(_SUCCESS|_BUILT)[^"]*"' src/main/scala \
     --include='*.scala' | grep -v '^src/main/scala/graft/ops/Tiers.scala:'
 then
   fail markers
 fi
 
-echo "PREFLIGHT stage 2/7: session setup only in Session.scala"
+echo "PREFLIGHT stage 2/8: session setup only in Session.scala"
 if grep -rn 'SparkSession\.builder' src/main/scala --include='*.scala' \
     | grep -v '^src/main/scala/graft/Session.scala:' ||
    grep -rnE 'local\[[0-9]+\]' src/main/scala --include='*.scala'
@@ -56,7 +61,7 @@ then
   fail session
 fi
 
-echo "PREFLIGHT stage 3/7: stream runner and partition overwrite in one place each"
+echo "PREFLIGHT stage 3/8: stream runner and partition overwrite in one place each"
 if grep -rn 'partitionOverwriteMode' src/main/scala --include='*.scala' \
     | grep -v '^src/main/scala/graft/chain/ChainStore.scala:' ||
    grep -rnE 'processAllAvailable\(\)|Trigger\.AvailableNow\(\)' src/main/scala \
@@ -65,21 +70,29 @@ then
   fail streams
 fi
 
-echo "PREFLIGHT stage 4/7: sbt compile"
+echo "PREFLIGHT stage 4/8: loop lifecycle in one place (operators/Fixpoint.scala)"
+if grep -rnE 'Materialize\.release\(|truncateBeforeAction' src/main/scala \
+    --include='*.scala' \
+    | grep -vE '^src/main/scala/graft/operators/(Fixpoint|Materialize|PrefixCarry)\.scala:'
+then
+  fail loops
+fi
+
+echo "PREFLIGHT stage 5/8: sbt compile"
 sbt -batch compile || fail compile
 
 if [[ $QUICK -eq 0 ]]; then
-  echo "PREFLIGHT stage 5/7: sbt test"
+  echo "PREFLIGHT stage 6/8: sbt test"
   sbt -batch test || fail test
 else
-  echo "PREFLIGHT stage 5/7: SKIPPED (--quick)"
+  echo "PREFLIGHT stage 6/8: SKIPPED (--quick)"
 fi
 
-echo "PREFLIGHT stage 6/7: graft.Verify @ $SF"
+echo "PREFLIGHT stage 7/8: graft.Verify @ $SF"
 rm -rf "$OUT"
 sbt -batch "runMain graft.Verify $SF $OUT" || fail verify
 
-echo "PREFLIGHT stage 7/7: tools/check.py (rows+schema+hash+budget)"
+echo "PREFLIGHT stage 8/8: tools/check.py (rows+schema+hash+budget)"
 python3 tools/check.py "$SF" "$OUT" || fail check
 
 echo "PREFLIGHT: ALL GREEN — safe to commit the snapshot"
