@@ -2,7 +2,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 import graft.ops.DedupMaterialize._
-import graft.queries.{GraphQueries, RefQueries}
+import graft.queries.{GraphQueries, RefQueries, SimilarityQueries}
 
 object Bench {
   /** Headline queries: the flagship of each operator family, timed first
@@ -86,7 +86,7 @@ object Bench {
     // sets + brute-force ground truth (each variant's query entry
     // still measures its own pipeline; this measures the one-time
     // sweep materialization)
-    "ann_build" -> graft.ops.AnnMaterialize.buildAll _,
+    "ann_build" -> SimilarityQueries.buildAnnTiers _,
     // the serving-layout transaction store consumed by
     // store_keyset_page's pure-read pagination
     "store_build" -> { (s: SparkSession, dir: String) =>
@@ -119,8 +119,8 @@ object Bench {
       }
       name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
     }
-    // Deterministic cache policy: the materialized tiers under
-    // target/intermediate are keyed by fixture mtime, so whether a build
+    // Deterministic cache policy: the parked tiers (graft.ops.Tier)
+    // are keyed by fixture mtime, so whether a build
     // ran warm or cold depended on what ran before it — r06 vs r07
     // "regressions" were cache illusions. Build entries are ALWAYS cold
     // (tier root wiped first) and query entries always warm (builds

@@ -16,13 +16,15 @@ import org.apache.spark.sql.functions.{col, max}
   *  - `time [--repeat=N] <name...>`: per timed pass, wall time, rows, the
   *    block-manager pin count after `Materialize.releasePinnedLeaves`,
   *    and the stage-metric work totals (task time, input, shuffle read
-  *    and write, stages; all but task time are run-to-run
-  *    deterministic). Bench's policy: a [[Bench.coldBuilds]] name runs
-  *    cold — each round wipes the tier root, then runs the named builds
-  *    in `coldBuilds` order (name a build's upstream too to keep its
-  *    cost out of the build's own pass); a [[SparkEntry]] query runs
-  *    warm after one untimed pass. `--repeat` is the flatness probe: a
-  *    leaking session drifts upward round over round.
+  *    and write, stages). Input and shuffle bytes/records are the
+  *    run-to-run deterministic work numbers; task time and the stage
+  *    count vary between identical passes, so compare stages as the
+  *    min over `--repeat` passes. Bench's policy: a [[Bench.coldBuilds]]
+  *    name runs cold — each round wipes the tier root, then runs the
+  *    named builds in `coldBuilds` order (name a build's upstream too
+  *    to keep its cost out of the build's own pass); a [[SparkEntry]]
+  *    query runs warm after one untimed pass. `--repeat` is the
+  *    flatness probe: a leaking session drifts upward round over round.
   *  - `explain <tag> <suffix> <query...>`: writes `.explain("formatted")`
   *    to `plans/<tag>/<q>_<suffix>.txt`, then runs the query and prints
   *    its executed plan's operator counts.

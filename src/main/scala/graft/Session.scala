@@ -4,14 +4,11 @@ import org.apache.spark.sql.SparkSession
 
 /** The one local SparkSession setup every entry point shares. */
 object Session {
-  /** A positive integer setting, or None when it is missing or malformed. */
-  private[graft] def positive(v: Option[String]): Option[Int] =
-    v.flatMap(s => scala.util.Try(s.trim.toInt).toOption).filter(_ > 0)
-
   /** `SPARK_GRAFT_CPUS` when it is a positive integer, else every
     * available processor. */
   private[graft] def cpusFrom(v: Option[String]): Int =
-    positive(v).getOrElse(Runtime.getRuntime.availableProcessors)
+    v.flatMap(s => scala.util.Try(s.trim.toInt).toOption).filter(_ > 0)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
 
   /** Cores of a local session. */
   val cpus: Int = cpusFrom(sys.env.get("SPARK_GRAFT_CPUS"))

@@ -14,20 +14,24 @@ import org.apache.spark.sql.functions._
   * ingest derives its per-chain tip margin (negative maxBlockNum = stay
   * N blocks behind the tip; non-negative = an absolute cap, margin 0).
   *
-  * The FIXTURE config dir is generated once at a stable path (content
-  * is public per-coin constants, so no fixture-mtime key): four files
-  * in the reference's JSON shape, with per-chain margins deliberately
-  * varied so the parameterization is observable in query results.
+  * The FIXTURE config dir is parked once (content is public per-coin
+  * constants, so its declaration has no sources and no fixture-mtime
+  * key): four files in the reference's JSON shape, with per-chain
+  * margins deliberately varied so the parameterization is observable in
+  * query results.
   */
 object ChainConfig {
 
-  /** Stable fixture location — also referenced (as an absolute path) by
-    * the DuckDB oracle, which re-parses the same files independently.
-    * Resolved at runtime relative to the working directory, like every
-    * sibling tier under target/intermediate — a hard-coded /root/repo
-    * would write outside (or fail in) any other checkout. */
+  /** Bump on any change to [[fixtures]]. */
+  private[graft] val ConfigTier = graft.ops.Tier("chaincfg", 1, Nil)
+
+  /** Absolute fixture location — also referenced by the DuckDB oracle,
+    * which re-parses the same files independently. Resolved at runtime
+    * relative to the working directory, like every sibling tier — a
+    * hard-coded absolute checkout path would write outside (or fail in)
+    * any other checkout. */
   val FixturePath: String =
-    new File("target/intermediate/chaincfg_v1").getAbsolutePath
+    new File(ConfigTier.root("", "conf")).getAbsolutePath
 
   /** Public per-coin constants in the reference's config shape. The
     * margins (parser.maxBlockNum) are fixture-varied per chain — the
@@ -58,14 +62,17 @@ object ChainConfig {
        |}
        |""".stripMargin
 
-  /** The parked four-file config fixture dir, written on first access
-    * ([[graft.ops.Tiers.park]]). */
-  def fixtureDir(): String = graft.ops.Tiers.park(FixturePath) { root =>
-    new File(root).mkdirs()
-    fixtures.foreach { case (cur, json) =>
-      java.nio.file.Files.writeString(
-        new File(root, s"$cur.cfg").toPath, json)
+  /** The parked four-file config fixture dir ([[FixturePath]]),
+    * written on first access. */
+  def fixtureDir(): String = {
+    ConfigTier.park("", "conf") { root =>
+      new File(root).mkdirs()
+      fixtures.foreach { case (cur, json) =>
+        java.nio.file.Files.writeString(
+          new File(root, s"$cur.cfg").toPath, json)
+      }
     }
+    FixturePath
   }
 
   /** Chain-params table from a config directory: one row per `*.cfg`

@@ -14,31 +14,26 @@ import graft.ops.TextCorpus._
   * dominant at 100 TB where shingles are ~10× the corpus. This tier
   * computes shingles and bands ONCE per corpus and parks them as
   * parquet; every consumer then starts from a column-pruned scan.
-  * Every tier here is parked by [[Tiers.park]].
+  * Every tier here is parked as [[DedupTier]].
   */
 object DedupMaterialize {
 
-  /** Minhash parameters the parked tier was built with — part of the
-    * cache key, so changing them invalidates instead of silently reusing
-    * a tier built under the old family. */
+  /** Minhash parameters the parked tier was built with. */
   private val Seeds = 8
   private val Bands = 2
 
-  /** Bump on any change to the shingle/signature/band derivation that
-    * is not visible in the parameters (hash family, shingle width…). */
-  private val FormatVersion = 3
-
-  /** Root of one tier under target/ (so `sbt clean` clears it). The
-    * key folds in the corpus stamp, the minhash parameters, and the
-    * code format version. */
-  private def tier(dir: String, sub: String): String =
-    s"target/intermediate/dedup_v${FormatVersion}_s${Seeds}b${Bands}_" +
-      s"${Tiers.sourceStamp(dir, "documents")}/$sub"
+  /** The dedup tiers; the minhash parameters are part of the name, so
+    * changing them invalidates instead of silently reusing a tier built
+    * under the old family. Bump on any change to the derivations below
+    * that is not visible in the parameters (hash family, shingle
+    * width…). */
+  private[graft] val DedupTier =
+    Tier(s"dedup_s${Seeds}b$Bands", 3, Seq("documents"))
 
   /** (doc_id, shingle, sh_hash) — may contain duplicate shingles per
     * doc; sh_hash = xxhash64(shingle) for bigint-keyed overlap joins. */
   def shingleTable(s: SparkSession, dir: String): DataFrame =
-    Tiers.parquet(s, tier(dir, "shingles")) {
+    DedupTier.parquet(s, dir, "shingles") {
       // sh_hash rides along so the verify-stage overlap joins shuffle
       // 8-byte bigints instead of trigram text; a 64-bit hash makes a
       // within-doc collision (the only thing that could skew an
@@ -62,7 +57,7 @@ object DedupMaterialize {
     * once per corpus; every consumer starts from a two-bigint-column
     * pruned scan. */
   def windowFpTable(s: SparkSession, dir: String): DataFrame =
-    Tiers.parquet(s, tier(dir, "winfp"))(
+    DedupTier.parquet(s, dir, "winfp")(
       graft.api.Text.windowFingerprints(words(corpus(s, dir))))
 
   /** Segment width (words) of the parked segment tier. */
@@ -74,15 +69,15 @@ object DedupMaterialize {
     * consumers read pruned columns of one parquet tier instead of each
     * re-exploding the corpus. */
   def segmentTable(s: SparkSession, dir: String): DataFrame =
-    Tiers.parquet(s, tier(dir, s"segments_w$SegmentWidth"))(
+    DedupTier.parquet(s, dir, s"segments_w$SegmentWidth")(
       graft.api.Text.wordSegments(words(corpus(s, dir)), SegmentWidth))
 
   /** (seg_h, gdf) segment frequency over the corpus EXCLUDING the
     * arriving batch — pre-batch state for incremental segment-dedup
     * maintenance. */
   def segFreqBaseTable(s: SparkSession, dir: String): DataFrame =
-    Tiers.parquet(s,
-        tier(dir, s"seg_freq_base_w${SegmentWidth}_m$IncrementalBatchMod"))(
+    DedupTier.parquet(s, dir,
+        s"seg_freq_base_w${SegmentWidth}_m$IncrementalBatchMod")(
       graft.api.Text.keyFrequency(
         segmentTable(s, dir)
           .filter(col("doc_id") % IncrementalBatchMod =!= 0), "seg_h"))
@@ -95,8 +90,8 @@ object DedupMaterialize {
     * batch-sized while the manifest itself was built with the two-phase
     * PrefixCarry scan (no single-partition sort). */
   def packManifestBaseTable(s: SparkSession, dir: String): DataFrame = {
-    val root = Tiers.park(
-        tier(dir, s"pack_manifest_base_m$IncrementalBatchMod")) { root =>
+    val root = DedupTier.park(dir,
+        s"pack_manifest_base_m$IncrementalBatchMod") { root =>
       // the PLAIN document stream (no injected dedup twins — packing
       // runs downstream of dedup, so the manifest never sees them)
       val plain = graft.chain.Chain.table(s, dir, "documents")
@@ -123,8 +118,8 @@ object DedupMaterialize {
     * batch — the pre-batch result tier incremental maintenance keeps
     * verbatim for untouched docs. */
   def segScoreBaseTable(s: SparkSession, dir: String): DataFrame =
-    Tiers.parquet(s,
-        tier(dir, s"seg_score_base_w${SegmentWidth}_m$IncrementalBatchMod")) {
+    DedupTier.parquet(s, dir,
+        s"seg_score_base_w${SegmentWidth}_m$IncrementalBatchMod") {
       val old = segmentTable(s, dir)
         .filter(col("doc_id") % IncrementalBatchMod =!= 0)
       // frequency side = the PARKED pre-batch tier (identical by
@@ -137,7 +132,7 @@ object DedupMaterialize {
     * the arriving batch — the pre-batch global state incremental
     * dup-window maintenance updates with the batch's delta counts. */
   def winfpGdfBaseTable(s: SparkSession, dir: String): DataFrame =
-    Tiers.parquet(s, tier(dir, s"winfp_gdf_base_m$IncrementalBatchMod"))(
+    DedupTier.parquet(s, dir, s"winfp_gdf_base_m$IncrementalBatchMod")(
       graft.api.Text.windowFpFrequency(
         windowFpTable(s, dir)
           .filter(col("doc_id") % IncrementalBatchMod =!= 0)))
@@ -147,7 +142,7 @@ object DedupMaterialize {
     * these rows verbatim for every doc no crossing fingerprint touches,
     * and re-scores only the rest. */
   def winfpScoreBaseTable(s: SparkSession, dir: String): DataFrame =
-    Tiers.parquet(s, tier(dir, s"winfp_score_base_m$IncrementalBatchMod")) {
+    DedupTier.parquet(s, dir, s"winfp_score_base_m$IncrementalBatchMod") {
       val old = windowFpTable(s, dir)
         .filter(col("doc_id") % IncrementalBatchMod =!= 0)
       // frequency side = the PARKED pre-batch gdf tier (identical by
@@ -158,7 +153,7 @@ object DedupMaterialize {
   /** (doc_id, band0, band1) LSH band keys. Signatures and bands derive
     * from the parked shingles — the explosion is never recomputed. */
   def bandTable(s: SparkSession, dir: String): DataFrame =
-    Tiers.parquet(s, tier(dir, "bands"))(
+    DedupTier.parquet(s, dir, "bands")(
       graft.api.Dedup.lshBands(
         graft.api.Dedup.minhashSignatures(shingleTable(s, dir), Seeds),
         Seeds, Bands))
@@ -171,7 +166,7 @@ object DedupMaterialize {
     * dominate at scale. Derives from the parked band tier, so the
     * shingle explosion still happens exactly once. */
   def componentTable(s: SparkSession, dir: String): DataFrame =
-    Tiers.parquet(s, tier(dir, "components"))(
+    DedupTier.parquet(s, dir, "components")(
       graft.operators.ConnectedComponents.labels(
         corpus(s, dir).select("doc_id"),
         graft.api.Dedup.candidatePairs(bandTable(s, dir), Bands)))
@@ -187,7 +182,7 @@ object DedupMaterialize {
     * incremental query measuring ingest-sized work, not a from-scratch
     * rebuild of state it would already hold. */
   def componentBaseTable(s: SparkSession, dir: String): DataFrame =
-    Tiers.parquet(s, tier(dir, s"components_base_m$IncrementalBatchMod")) {
+    DedupTier.parquet(s, dir, s"components_base_m$IncrementalBatchMod") {
       val batch = col("doc_id") % IncrementalBatchMod === 0
       graft.operators.ConnectedComponents.labels(
         corpus(s, dir).filter(!batch).select("doc_id"),
@@ -201,7 +196,7 @@ object DedupMaterialize {
     * [[componentTable]]; the measured fingerprint→verify pipeline stays
     * multimodal_phash_pairs). */
   def phashClusterTable(s: SparkSession, dir: String): DataFrame =
-    Tiers.parquet(s, tier(dir, "phash_clusters")) {
+    DedupTier.parquet(s, dir, "phash_clusters") {
       // the self-join's two identical band subplans share one
       // ReusedExchange within the query — no persist (measured
       // slower; see allPairsTable)
@@ -220,7 +215,7 @@ object DedupMaterialize {
     * rows instead of re-fingerprinting the corpus. */
   def phashBandBaseTable(s: SparkSession, dir: String,
       mod: Int = IncrementalBatchMod): DataFrame =
-    Tiers.parquet(s, tier(dir, s"phash_bands_base_m$mod"))(
+    DedupTier.parquet(s, dir, s"phash_bands_base_m$mod")(
       graft.queries.MultimodalQueries.phashBands(s, dir,
         col("doc_id") % mod =!= 0))
 
@@ -230,7 +225,7 @@ object DedupMaterialize {
     * any old endpoint through its label. */
   def phashClusterBaseTable(s: SparkSession, dir: String,
       mod: Int = IncrementalBatchMod): DataFrame =
-    Tiers.parquet(s, tier(dir, s"phash_clusters_base_m$mod")) {
+    DedupTier.parquet(s, dir, s"phash_clusters_base_m$mod") {
       val bands = phashBandBaseTable(s, dir, mod)
       graft.operators.ConnectedComponents.labels(
         corpus(s, dir).filter(col("doc_id") % mod =!= 0).select("doc_id"),
@@ -250,7 +245,7 @@ object DedupMaterialize {
     * consumers — r13 measured a persist here at ~2× SLOWER, cache
     * materialization breaking the pipelined reuse.) */
   def allPairsTable(s: SparkSession, dir: String): DataFrame =
-    Tiers.parquet(s, tier(dir, "allpairs"))(
+    DedupTier.parquet(s, dir, "allpairs")(
       graft.api.Text.allPairsCosine(graft.ops.TextCorpus.docShingles(s, dir)))
 
   /** Park the three pre-batch all-pairs tiers (df order, indexed
@@ -267,16 +262,16 @@ object DedupMaterialize {
       sub: String): DataFrame = {
     lazy val sh = graft.ops.TextCorpus.docShingles(s, dir)
       .filter(col("doc_id") % mod =!= 0)
-    val df = Tiers.park(tier(dir, s"allpairs_df_base_m$mod"))(
+    val df = DedupTier.park(dir, s"allpairs_df_base_m$mod")(
       sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
         .write.mode("overwrite").parquet(_))
-    val pre = Tiers.park(tier(dir, s"allpairs_prefix_base_m$mod"))(
+    val pre = DedupTier.park(dir, s"allpairs_prefix_base_m$mod")(
       graft.api.Text.allPairsPrefix(sh, s.read.parquet(df))
         .write.mode("overwrite").parquet(_))
-    Tiers.park(tier(dir, s"allpairs_base_m$mod"))(
+    DedupTier.park(dir, s"allpairs_base_m$mod")(
       graft.api.Text.allPairsFromPrefix(s.read.parquet(pre), sh, lit(true))
         .write.mode("overwrite").parquet(_))
-    s.read.parquet(tier(dir, s"${sub}_base_m$mod"))
+    s.read.parquet(DedupTier.root(dir, s"${sub}_base_m$mod"))
   }
 
   /** Parked pre-batch ALL-PAIRS base for

@@ -15,18 +15,20 @@ import graft.chain.Chain.table
 object TextCorpus {
   val DupOffset = 1000000L
 
-  /** The documents table parked as JSONL — the standard LLM-corpus
-    * interchange format (one JSON object per line). Parked once per
-    * fixture ([[FileFixtures.parked]]), so the query path is read-only;
-    * consumers read it back schema-on-read and must produce results
-    * bit-identical to the parquet path (the shared-oracle proof of the
-    * JSONL ingestion seam). Returns the directory to point a JSON
-    * reader at. */
+  /** The file-format copies of the documents table below, parked once
+    * per fixture so the queries that ingest them stay READ-ONLY (a query
+    * entry with a write side effect times fixture generation and
+    * re-writes it on every invocation). Bump on any change to them. */
+  private[graft] val DocsFileTier = Tier("docs_src", 1, Seq("documents"))
+
+  /** The documents table as JSONL — the standard LLM-corpus interchange
+    * format (one JSON object per line). Consumers read it back
+    * schema-on-read and must produce results bit-identical to the
+    * parquet path (the shared-oracle proof of the JSONL ingestion
+    * seam). Returns the directory to point a JSON reader at. */
   def jsonlFile(s: SparkSession, dir: String): String =
-    FileFixtures.parked(dir, "documents", "docs_jsonl_v1") { root =>
-      s.read.parquet(s"$dir/documents.parquet")
-        .write.mode("overwrite").json(root)
-    }
+    DocsFileTier.park(dir, "jsonl")(
+      table(s, dir, "documents").write.mode("overwrite").json(_))
 
   /** The same corpus as GZIP-compressed JSONL — how LLM corpora
     * actually ship. Gzip is NOT splittable: one .gz file = one task at
@@ -34,11 +36,9 @@ object TextCorpus {
     * here; a 100 TB corpus keeps shards at a few hundred MB compressed
     * so the read parallelism is the shard count, not 1). */
   def jsonlGzFile(s: SparkSession, dir: String): String =
-    FileFixtures.parked(dir, "documents", "docs_jsonl_gz_v1") { root =>
-      s.read.parquet(s"$dir/documents.parquet")
-        .repartition(8)
-        .write.mode("overwrite").option("compression", "gzip").json(root)
-    }
+    DocsFileTier.park(dir, "jsonl_gz")(
+      table(s, dir, "documents").repartition(8)
+        .write.mode("overwrite").option("compression", "gzip").json(_))
 
   /** documents + injected exact duplicates. */
   def corpus(s: SparkSession, dir: String): DataFrame = {

@@ -7,7 +7,8 @@ import graft.chain.{Chain, ChainSql}
 import graft.chain.Chain.{io, transactions}
 import graft.chain.ChainSql.withCtes
 import graft.operators.PageRank.endpoints
-import graft.queries.RefQueries.{entityLabels, EntityWindow}
+import graft.ops.Tier
+import graft.queries.RefQueries.{entityLabels, EntityTier, EntityWindow}
 
 /** Graph analytics over the chain's money-flow graph — the queries the
   * reference keyspace exists to FEED (GraphSense's downstream address /
@@ -34,6 +35,23 @@ import graft.queries.RefQueries.{entityLabels, EntityWindow}
   */
 object GraphQueries {
   type Q = (SparkSession, String) => DataFrame
+
+  /** The address flow-edge tiers — the distinct flow edges (`edges`),
+    * value-weighted (`ve`), timed (`te`) and peel-hop (`ph`) edges and
+    * the TagPack CSV (`tp`). GraphSense's address_relations derivation
+    * (blocksci_export.py:300-345) feeds degree
+    * statistics, PageRank and every other graph consumer; deriving it
+    * re-runs an io explode plus an input⋈output self-join per
+    * referencing plan, so at 100 TB the edge sets are what a pipeline
+    * builds once per chain tip, and every consumer starts from a pruned
+    * scan. Bump on any change to the derivations below. */
+  private[graft] val GraphTier = Tier("graph", 1, Seq("lineitem", "orders"))
+
+  /** The entity-flow tier, one per label window `w<window>`: it reads
+    * the parked entity labels, so it names their declaration upstream
+    * and re-keys with it. */
+  private[graft] val EntityFlowTier =
+    Tier("entityflow", 1, Seq("lineitem", "orders"), EntityTier)
 
   /** Force the flow-edge tier build (Bench reports it as its own entry
     * so the graph queries measure consumption, not construction).
@@ -153,7 +171,7 @@ object GraphQueries {
   /** Distinct directed flow edges src→dst: input address to output
     * address of the same tx (GraphSense's address_relations edge set).
     * Self-flows (change back to the same address) are excluded. Parked
-    * once per fixture by [[graft.ops.GraphMaterialize]] — degree stats,
+    * once per fixture as [[GraphTier]] `edges` — degree stats,
     * PageRank, and any other graph consumer start from a pruned
     * two-column scan instead of re-running the io explode + self-join. */
   private def flowEdges(s: SparkSession, dir: String): DataFrame =
@@ -165,13 +183,13 @@ object GraphQueries {
     * instead of a second io self-join. */
   private def flowEdgesOf(s: SparkSession, dir: String,
       te: DataFrame): DataFrame =
-    graft.ops.GraphMaterialize.edgeTable(s, dir) {
+    GraphTier.parquet(s, dir, "edges") {
       te.select(col("src"), col("dst")).distinct()
     }
 
   /** (src, dst, block_id) timed flow edges — the distinct flow edges
-    * with the block of each occurrence, parked once per fixture by
-    * [[graft.ops.GraphMaterialize.timedEdgeTable]] so temporal-motif
+    * with the block of each occurrence, parked once per fixture as
+    * [[GraphTier]] `te` so temporal-motif
     * consumers (graph_round_trips) start from a three-column pruned
     * scan instead of re-running the io explode + self-join. */
   private def timedEdges(s: SparkSession, dir: String): DataFrame = {
@@ -200,7 +218,7 @@ object GraphQueries {
     * shuffles ONCE across all edge-tier builds. */
   private def timedEdgesFrom(s: SparkSession, dir: String,
       ia: DataFrame, ov: DataFrame): DataFrame =
-    graft.ops.GraphMaterialize.timedEdgeTable(s, dir) {
+    GraphTier.parquet(s, dir, "te") {
       val t = transactions(s, dir).select(col("tx_id"), col("block_id"))
       val oa = ov.select(col("tx_id"), col("address").as("dst"))
       ia.join(oa, Seq("tx_id"))
@@ -212,8 +230,8 @@ object GraphQueries {
   /** (src, dst, b) peel-hop edges: input address → strict-majority
     * output address at block b (2·ov > tv makes the dominant output
     * unique per tx, so the set is tx-bounded). Parked once per fixture
-    * by [[graft.ops.GraphMaterialize.peelHopTable]] — the DP consumes
-    * a three-column scan, like every graph tier. */
+    * as [[GraphTier]] `ph` — the DP consumes a three-column scan, like
+    * every graph tier. */
   private def peelHops(s: SparkSession, dir: String): DataFrame = {
     val ioa = ioAddresses(s, dir)
     peelHopsFrom(s, dir, inputPairsOf(ioa), outputSumsOf(ioa))
@@ -223,7 +241,7 @@ object GraphQueries {
     * [[timedEdgesFrom]]). */
   private def peelHopsFrom(s: SparkSession, dir: String,
       ia: DataFrame, ov: DataFrame): DataFrame =
-    graft.ops.GraphMaterialize.peelHopTable(s, dir) {
+    GraphTier.parquet(s, dir, "ph") {
       val t = transactions(s, dir).select(col("tx_id"), col("block_id"))
       val dom = ov
         .join(ov.groupBy(col("tx_id")).agg(sum(col("ov")).as("tv")),
@@ -237,9 +255,9 @@ object GraphQueries {
 
   /** (src, dst, v) value-weighted flow edges — per-tx output values
     * attribute floor(ov / n_inputs) to each input-output pair, summed
-    * per edge, zero-value edges dropped. Parked once per fixture by
-    * [[graft.ops.GraphMaterialize.valueEdgeTable]] so taint consumers
-    * start from a three-column pruned scan. */
+    * per edge, zero-value edges dropped. Parked once per fixture as
+    * [[GraphTier]] `ve` so taint consumers start from a three-column
+    * pruned scan. */
   private def valueEdges(s: SparkSession, dir: String): DataFrame = {
     val ioa = ioAddresses(s, dir)
     valueEdgesFrom(s, dir, inputPairsOf(ioa), outputSumsOf(ioa))
@@ -249,7 +267,7 @@ object GraphQueries {
     * [[timedEdgesFrom]]). */
   private def valueEdgesFrom(s: SparkSession, dir: String,
       ia: DataFrame, ovShared: DataFrame): DataFrame =
-    graft.ops.GraphMaterialize.valueEdgeTable(s, dir) {
+    GraphTier.parquet(s, dir, "ve") {
       val nIn = ia.groupBy(col("tx_id")).agg(count(lit(1)).as("n_in"))
       val ov = ovShared.select(col("tx_id"), col("address").as("dst"),
         col("ov"))
@@ -276,14 +294,14 @@ object GraphQueries {
   /** Per-(tx, output) entity flows over the pinned clustering window:
     * (tx_id, src_entity, dst_entity, value) — shared by entity_graph /
     * entity_pagerank / entity_hits / entity_taint (ONE definition, like
-    * the oracle's shared CTEs). Parked once per fixture by
-    * [[graft.ops.GraphMaterialize.entityFlowTable]] (r14, guide §2.4):
+    * the oracle's shared CTEs). Parked once per fixture as
+    * [[EntityFlowTier]] over the label window (r14, guide §2.4):
     * each of the four consumers previously re-ran the io explode + the
     * window semi-join + the label join — at 100 TB that is four
     * corpus-sized derivations of one logical frame; now each consumer
     * starts from a four-column pruned scan. */
   private def entityFlows(s: SparkSession, dir: String): DataFrame =
-    graft.ops.GraphMaterialize.entityFlowTable(s, dir)(
+    EntityFlowTier.parquet(s, dir, RefQueries.windowSub(Some(EntityWindow)))(
       deriveEntityFlows(s, dir))
 
   /** The entity flow graph as distinct (src, dst) edges, self-flows
@@ -866,7 +884,7 @@ object GraphQueries {
     // GraphSense's real TagPack ingestion path) and the rollup joins
     // that file table. Shares entity_tags' oracle, so the driver
     // compare proves the external-dim join path end to end. The CSV is
-    // a parked per-fixture tier (GraphMaterialize.tagPackFile, built by
+    // a parked per-fixture tier (GraphTier `tp`, built by
     // graph_build) — the query path only READS it.
     "entity_tags_src" -> ((s, dir) => {
       val tags = s.read
@@ -878,14 +896,22 @@ object GraphQueries {
       tagRollup(s, dir, tags)
     }))
 
-  /** Parked TagPack CSV fixture dir (see GraphMaterialize.tagPackFile). */
+  /** TagPack-shaped external attribution CSV — the FILE fixture
+    * entity_tags_src ingests (GraphSense's TagPack path: curated
+    * address tags arrive as files, not tables). Parked once per fixture
+    * as [[GraphTier]] `tp`, so the QUERY path is read-only: a query
+    * entry with a write side effect times fixture generation and
+    * re-writes it on every invocation. Returns the directory to point a
+    * schema-on-read CSV reader at. */
   private def tagPackSource(s: SparkSession, dir: String): String =
-    graft.ops.GraphMaterialize.tagPackFile(s, dir)(
+    GraphTier.park(dir, "tp")(
       hashTagList(s, dir)
         .select(col("address"), col("category"),
           concat(lit("actor-"), col("category")).as("label"),
           lit("tagpack-fixture").as("source"),
-          lit("BTC").as("currency")))
+          lit("BTC").as("currency"))
+        .write.mode("overwrite").format("csv")
+        .option("header", "true").save(_))
 
   /** Deterministic hash-selected address tag list — plays the
     * externally-curated attribution source (TagPack) in a form both

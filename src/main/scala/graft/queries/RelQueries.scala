@@ -777,23 +777,26 @@ object RelQueries {
     updates.unionByName(deletes).unionByName(inserts)
   }
 
+  /** The orders extract in each alternate source format (one tier per
+    * format: `csv`, `json`, `orc`), parked once per fixture so the
+    * source-roundtrip queries only READ it (same convention as the
+    * TagPack CSV / JSONL corpus fixtures). Bump on any change to the
+    * extract. */
+  private[graft] val OrdersFileTier =
+    graft.ops.Tier("orders_src", 1, Seq("orders"))
+
   /** Write orders through an alternate source format (CSV / JSONL /
     * ORC), read back with explicit schema, aggregate — the shared body
     * of the source-roundtrip queries. */
   private def sourceRoundtrip(s: SparkSession, dir: String,
       fmt: String): DataFrame = {
-    // the text-format extract is a parked per-fixture tier — the query
-    // path only READS it (same convention as the TagPack CSV / JSONL
-    // corpus fixtures)
-    val out = graft.ops.FileFixtures.parked(dir, "orders",
-      s"orders_$fmt") { root =>
+    val out = OrdersFileTier.park(dir, fmt)(
       table(s, dir, "orders").select(
           col("o_orderkey").cast("long").as("o_orderkey"),
           col("o_custkey").cast("long").as("o_custkey"),
           col("o_totalprice"), col("o_orderstatus"))
         .write.mode("overwrite").format(fmt)
-        .option("header", "true").save(root)
-    }
+        .option("header", "true").save(_))
     s.read.schema("o_orderkey LONG, o_custkey LONG, " +
         "o_totalprice DOUBLE, o_orderstatus STRING")
       .format(fmt).option("header", "true").load(out)

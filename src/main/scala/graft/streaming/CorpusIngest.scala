@@ -156,7 +156,7 @@ object CorpusIngest {
     * full-rebuild oracle to prove it every run. */
   def ivfIngest(s: SparkSession, dir: String, out: String,
       checkpoint: Option[String] = None): Unit = {
-    val cents = graft.ops.AnnMaterialize.ivfCentroidTable(s, dir)
+    val cents = graft.queries.SimilarityQueries.ivfCentroidTable(s, dir)
     Streams.runOnce(vectorStream(s, dir).writeStream
       .foreachBatch {
         (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
@@ -181,7 +181,7 @@ object CorpusIngest {
     * stream was chopped into batches. */
   def pqIngest(s: SparkSession, dir: String, out: String,
       checkpoint: Option[String] = None): Unit = {
-    val cents = graft.ops.AnnMaterialize.pqCodebookTable(s, dir)
+    val cents = graft.queries.SimilarityQueries.pqCodebookTable(s, dir)
     Streams.runOnce(vectorStream(s, dir).writeStream
       .foreachBatch {
         (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],

@@ -46,8 +46,14 @@ object IncrementalIngest {
     * Returns the store's newest `ingest_epoch` (None for an absent or
     * empty store), taken in the same aggregate as the sink max. */
   def resumeGuard(s: SparkSession, out: String,
-      watermark: Long): Option[Long] =
-    if (!new java.io.File(s"$out/transaction").exists()) None
+      watermark: Long): Option[Long] = {
+    // existence via the path's OWN FileSystem, as Export.sinkMaxBlock:
+    // a java.io.File probe sees every hdfs://, s3a:// or file: store as
+    // absent, so a resume would restart at epoch 0 and overwrite the
+    // first run's partitions, unguarded
+    val root = new org.apache.hadoop.fs.Path(s"$out/transaction")
+    if (!root.getFileSystem(s.sparkContext.hadoopConfiguration).exists(root))
+      None
     else {
       val existing =
         try Some(s.read.parquet(s"$out/transaction"))
@@ -82,6 +88,7 @@ object IncrementalIngest {
       }
       maxOf(1)
     }
+  }
 
   /** Where a checkpoint records the epoch base it was started with. */
   private val EpochBaseFile = "_graft_epoch_base"

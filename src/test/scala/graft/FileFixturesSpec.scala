@@ -2,7 +2,8 @@ package graft
 
 import java.io.File
 
-import graft.ops.FileFixtures
+import graft.ops.TextCorpus.DocsFileTier
+import graft.queries.RelQueries.OrdersFileTier
 
 /** The file-format source queries (CSV/JSONL ingestion seams) must be
   * READ-ONLY over their parked fixtures: first access may build the
@@ -10,18 +11,18 @@ import graft.ops.FileFixtures
 class FileFixturesSpec extends SparkSpec {
 
   private val cases = Seq(
-    ("source_csv_roundtrip", "orders", "orders_csv"),
-    ("source_jsonl_roundtrip", "orders", "orders_json"),
-    ("token_count_jsonl", "documents", "docs_jsonl_v1"),
-    ("token_count_jsonl_gz", "documents", "docs_jsonl_gz_v1"))
+    ("source_csv_roundtrip", OrdersFileTier, "csv"),
+    ("source_jsonl_roundtrip", OrdersFileTier, "json"),
+    ("token_count_jsonl", DocsFileTier, "jsonl"),
+    ("token_count_jsonl_gz", DocsFileTier, "jsonl_gz"))
 
   test("file-source queries are read-only over parked fixtures") {
     val dir = sf("sf0.001")
-    cases.foreach { case (name, srcTable, tag) =>
+    cases.foreach { case (name, tier, tag) =>
       val q = SparkEntry.queries(name)
       val first = q(spark, dir).count()
       assert(first > 0, s"$name returned no rows")
-      val root = FileFixtures.parked(dir, srcTable, tag)(
+      val root = tier.park(dir, tag)(
         _ => sys.error(s"$tag fixture rebuilt on reuse"))
       val marker = new File(s"$root/_SUCCESS")
       assert(marker.exists(), s"$tag fixture missing _SUCCESS")

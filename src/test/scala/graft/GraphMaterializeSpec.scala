@@ -5,7 +5,8 @@ import java.io.File
 import org.apache.spark.sql.functions._
 
 import graft.chain.Chain
-import graft.ops.GraphMaterialize
+import graft.queries.GraphQueries.{EntityFlowTier, GraphTier}
+import graft.queries.RefQueries.{EntityWindow, windowSub}
 
 /** The materialized flow-edge tier must be idempotent and agree with the
   * declarative io-derivation it replaces (same contract as the dedup and
@@ -19,13 +20,13 @@ class GraphMaterializeSpec extends SparkSpec {
     // test passed only when an earlier suite had parked the tier
     graft.queries.GraphQueries.buildFlowTier(spark, dir)
     // after the build, access must NOT re-run the derivation
-    val edges = GraphMaterialize.edgeTable(spark, dir)(
+    val edges = GraphTier.parquet(spark, dir, "edges")(
       sys.error("tier rebuilt on reuse"))
     val marker = new File(
       edges.inputFiles.head.stripPrefix("file:").replaceAll("/[^/]+$", "")
         + "/_SUCCESS")
     val mtime = marker.lastModified()
-    GraphMaterialize.edgeTable(spark, dir)(
+    GraphTier.parquet(spark, dir, "edges")(
       sys.error("tier rebuilt on reuse")).count()
     assert(marker.lastModified() === mtime, "tier was rewritten on reuse")
 
@@ -47,13 +48,14 @@ class GraphMaterializeSpec extends SparkSpec {
     val dir = sf("sf0.001")
     graft.queries.GraphQueries.buildEntityFlowTier(spark, dir)
     // after the build, access must NOT re-run the derivation
-    val flows = GraphMaterialize.entityFlowTable(spark, dir)(
+    val window = windowSub(Some(EntityWindow))
+    val flows = EntityFlowTier.parquet(spark, dir, window)(
       sys.error("entity-flow tier rebuilt on reuse"))
     val marker = new File(
       flows.inputFiles.head.stripPrefix("file:").replaceAll("/[^/]+$", "")
         + "/_SUCCESS")
     val mtime = marker.lastModified()
-    GraphMaterialize.entityFlowTable(spark, dir)(
+    EntityFlowTier.parquet(spark, dir, window)(
       sys.error("entity-flow tier rebuilt on reuse")).count()
     assert(marker.lastModified() === mtime, "tier was rewritten on reuse")
 
@@ -69,8 +71,8 @@ class GraphMaterializeSpec extends SparkSpec {
     val q = graft.queries.GraphQueries.queries("entity_tags_src")
     // first invocation may build the tier (parked-tier convention)
     val first = q(spark, dir).count()
-    val tp = GraphMaterialize.tagPackFile(spark, dir)(
-      sys.error("tagpack tier rebuilt on reuse"))
+    val tp = GraphTier.park(dir, "tp")(
+      _ => sys.error("tagpack tier rebuilt on reuse"))
     val marker = new File(s"$tp/_SUCCESS")
     assert(marker.exists(), "parked TagPack fixture missing _SUCCESS")
     val mtime = marker.lastModified()

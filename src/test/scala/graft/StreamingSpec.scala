@@ -370,10 +370,14 @@ class StreamingSpec extends SparkSpec with TempDirs {
     // break parquet partition discovery on the next read
     graft.chain.ChainStore.writeTransactions(
       Chain.transactions(spark, dir), out)
-    val ex = intercept[IllegalArgumentException] {
-      IncrementalIngest.resumeGuard(spark, out, Long.MaxValue)
+    // the same store as a file: URI must be probed through its own
+    // FileSystem, not seen as absent
+    Seq(out, s"file:${new java.io.File(out).getAbsolutePath}").foreach { o =>
+      val ex = intercept[IllegalArgumentException] {
+        IncrementalIngest.resumeGuard(spark, o, Long.MaxValue)
+      }
+      assert(ex.getMessage.contains("batch layout"), o)
     }
-    assert(ex.getMessage.contains("batch layout"))
     // and the ingest entry points are guarded the same way
     intercept[IllegalArgumentException] {
       IncrementalIngest.ingestToStore(spark, dir, out, Long.MaxValue)

@@ -2,9 +2,12 @@
 # End-of-round preflight gate — run BEFORE the snapshot commit.
 #
 # Refuses (non-zero exit) unless ALL of:
-#   1. tier markers         — no "_SUCCESS" or "_BUILT" string literal in
+#   1. tiers in one place   — no "_SUCCESS" or "_BUILT" string literal,
+#                             and no target/intermediate, FormatVersion,
+#                             Tiers.park( or Tiers.parquet(, in
 #                             src/main/scala outside ops/Tiers.scala: the
-#                             park-once decision lives in Tiers.park only
+#                             park-once decision and every tier key come
+#                             from one Tier declaration per family
 #   2. session setup        — no SparkSession.builder in src/main/scala
 #                             outside Session.scala, and no local[<n>]
 #                             literal anywhere in it: every entry point
@@ -46,11 +49,12 @@ OUT=target/verify_out
 
 fail() { echo "PREFLIGHT: FAIL at stage $1 — do NOT commit the snapshot"; exit 1; }
 
-echo "PREFLIGHT stage 1/8: tier markers only in ops/Tiers.scala"
-if grep -rnE '"[^"]*(_SUCCESS|_BUILT)[^"]*"' src/main/scala \
-    --include='*.scala' | grep -v '^src/main/scala/graft/ops/Tiers.scala:'
+echo "PREFLIGHT stage 1/8: tiers in one place (ops/Tiers.scala)"
+if grep -rnE '"[^"]*(_SUCCESS|_BUILT)[^"]*"|target/intermediate|FormatVersion|Tiers\.(park|parquet)\(' \
+    src/main/scala --include='*.scala' \
+    | grep -v '^src/main/scala/graft/ops/Tiers.scala:'
 then
-  fail markers
+  fail tiers
 fi
 
 echo "PREFLIGHT stage 2/8: session setup only in Session.scala"
