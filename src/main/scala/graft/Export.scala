@@ -90,18 +90,10 @@ object Export {
     * query_most_recent_block) — transaction table first, block table
     * as fallback, None for an absent/empty store. */
   def sinkMaxBlock(s: SparkSession, out: String): Option[Long] =
-    Seq("transaction", "block").view.flatMap { t =>
-      // existence via the path's OWN FileSystem (hdfs://, s3a://,
-      // file:// URIs all resolve) — a java.io.File probe sees every
-      // non-local sink as empty, so --continue would silently restart
-      // at block 0 and the reorg guard would never fire
-      val p = new org.apache.hadoop.fs.Path(s"$out/$t")
-      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) None
-      else
-        try scalarLong(s.read.parquet(s"$out/$t").agg(max(col("block_id"))))
-        catch { case _: org.apache.spark.sql.AnalysisException => None }
-    }.headOption
+    Seq("transaction", "block").view
+      .flatMap(ChainStore.table(s, out, _))
+      .flatMap(t => scalarLong(t.agg(max(col("block_id")))))
+      .headOption
 
   /** One lifecycle run. Throws IllegalArgumentException on the
     * validation failures the reference exits 1 on. */
@@ -231,17 +223,10 @@ object Export {
     if (tables.contains("stats")) {
       // keyspace metadata over everything ingested so far (≤ end):
       // summary row, configuration row, and the day-keyed rates table
-      sink.writeSummaryStatistics(upToEnd.agg(
-        (max(col("block_id")) + 1L).as("no_blocks"),
-        (max(col("tx_id")) + 1L).as("no_txs"),
-        max(col("ts")).as("ts")), args.out)
+      sink.writeSummaryStatistics(Chain.summaryStatistics(upToEnd), args.out)
       sink.writeConfiguration(Chain.configuration(s), args.out)
-      sink.writeExchangeRates(
-        Chain.rates(s, args.config).filter(col("block_id") <= end)
-          .select(col("d").as("date"),
-            map(lit("USD"), col("usd").cast("float"),
-              lit("EUR"), col("eur").cast("float")).as("fiat_values")),
-        args.out)
+      sink.writeExchangeRates(Chain.exchangeRatesTable(
+        Chain.rates(s, args.config).filter(col("block_id") <= end)), args.out)
     }
 
     done(end, end - start + 1L, ranged.count(), tables)

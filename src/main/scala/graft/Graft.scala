@@ -60,13 +60,17 @@ object Graft {
     Chain.io(s, dir).as[model.IoEntry]
   }
 
-  /** Write the full bucket-partitioned keyspace (transaction + block +
-    * prefix index) idempotently through any [[graft.chain.ChainSink]]
-    * (parquet store by default; pass a
-    * [[graft.chain.CassandraShapedSink]] for the connector contract). */
+  /** Write the full seven-table keyspace idempotently through any
+    * [[graft.chain.ChainSink]] (parquet store by default; pass a
+    * [[graft.chain.CassandraShapedSink]] for the connector contract): the
+    * reference's main export loop (blocksci_export.py:519-539) as one
+    * full [[Export.run]] lifecycle. `out` is the sink-specific locator,
+    * a directory for parquet, ignored by the connector sink. A source
+    * with no orders fails with Export's "no parsed blocks" message. */
   def writeChain(s: SparkSession, dir: String, out: String,
-      sink: graft.chain.ChainSink = ChainStore): Unit =
-    graft.chain.ChainSink.writeChain(s, dir, out, sink)
+      sink: graft.chain.ChainSink = ChainStore): Unit = {
+    Export.run(s, Export.Args(config = dir, out = out), sink); ()
+  }
 
   /** Register the SQL surface (temp views + custom functions). */
   def registerSql(s: SparkSession, dir: String): Unit =

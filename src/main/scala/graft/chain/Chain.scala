@@ -142,9 +142,9 @@ object Chain {
   }
 
   /** exchange_rates contract frame (schema.cql:58-61, F11): one row per
-    * rate date with the fiat map. */
-  def exchangeRatesTable(spark: SparkSession, dir: String): DataFrame =
-    rates(spark, dir).select(col("d").as("date"),
+    * rate date of `rates` (a [[rates]] frame) with the fiat map. */
+  def exchangeRatesTable(rates: DataFrame): DataFrame =
+    rates.select(col("d").as("date"),
       map(lit("USD"), col("usd").cast("float"),
         lit("EUR"), col("eur").cast("float")).as("fiat_values"))
 
@@ -170,9 +170,10 @@ object Chain {
       .withColumn("block_id_group", floor(col("block_id") / BlockBucketSize))
       .select("block_id_group", "block_id", "txs")
 
-  /** summary_statistics contract frame (schema.cql:63-68, A6). */
-  def summaryStatistics(spark: SparkSession, dir: String): DataFrame =
-    transactions(spark, dir).agg(
+  /** summary_statistics contract frame (schema.cql:63-68, A6) over the
+    * [[transactions]] frame `tx`. */
+  def summaryStatistics(tx: DataFrame): DataFrame =
+    tx.agg(
       (max(col("block_id")) + 1L).as("no_blocks"),
       (max(col("tx_id")) + 1L).as("no_txs"),
       max(col("ts")).as("ts"))

@@ -1,6 +1,6 @@
 package graft.chain
 
-import org.apache.spark.sql.{DataFrame, SparkSession, functions}
+import org.apache.spark.sql.{DataFrame, functions}
 
 /** The sink contract of the reference export (S5/ST3): every chain table
   * lands through one of these, so the storage backend is a deployment
@@ -25,25 +25,6 @@ trait ChainSink {
   def writeSummaryStatistics(stats: DataFrame, out: String): Unit
   /** 1-row bucket/prefix configuration (schema.cql:70-75). */
   def writeConfiguration(conf: DataFrame, out: String): Unit
-}
-
-object ChainSink {
-  /** Full-keyspace export through any sink — the reference's main export
-    * loop (blocksci_export.py:519-539: txs + blocks + rates, then the
-    * summary/config rows) as the complete seven-table write. `out` is
-    * the sink-specific locator: a directory for parquet, ignored by the
-    * connector sink (the keyspace addresses the target). */
-  def writeChain(s: SparkSession, dir: String, out: String,
-      sink: ChainSink = ChainStore): Unit = {
-    val tx = Chain.transactions(s, dir)
-    sink.writeTransactions(tx, out)
-    sink.writeBlocks(Chain.blocks(s, dir), out)
-    sink.writePrefixIndex(tx, out)
-    sink.writeBlockTransactions(Chain.blockTransactions(s, dir), out)
-    sink.writeExchangeRates(Chain.exchangeRatesTable(s, dir), out)
-    sink.writeSummaryStatistics(Chain.summaryStatistics(s, dir), out)
-    sink.writeConfiguration(Chain.configuration(s), out)
-  }
 }
 
 /** Cassandra-cluster coordinates mirroring the reference CLI

@@ -1,6 +1,10 @@
 package graft.chain
 
-import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
+import java.nio.charset.StandardCharsets.UTF_8
+
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{AnalysisException, DataFrame, DataFrameWriter,
+  Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The sink side of the reference contract: partitioned, ordered,
@@ -19,8 +23,64 @@ import org.apache.spark.sql.functions._
   * at full history (~1e9 txs) that is ~40k directories, fine for a real
   * metastore; the nested-io transaction table at ~1 KB/tx makes a bucket
   * ~25 MB ≈ one comfortable parquet row group per bucket.
+  *
+  * This object is also the one place that touches a store's files: the
+  * probes, one-number markers and absent-or-empty reads below, and both
+  * crash-safe rewrites ([[stagedRewrite]], [[rollbackAbove]]).
   */
 object ChainStore extends ChainSink {
+
+  /** `path` on its OWN Hadoop FileSystem: hdfs://, s3a:// and file: URIs
+    * all resolve, where a java.io.File probe sees every non-local store
+    * as absent (a resume would then restart at block or epoch 0). */
+  private def fileSystem(s: SparkSession, path: String): (FileSystem, Path) = {
+    val p = new Path(path)
+    (p.getFileSystem(s.sparkContext.hadoopConfiguration), p)
+  }
+
+  private[graft] def exists(s: SparkSession, path: String): Boolean = {
+    val (fs, p) = fileSystem(s, path)
+    fs.exists(p)
+  }
+
+  /** Recursive delete; an absent path is a no-op. */
+  private[graft] def delete(s: SparkSession, path: String): Unit = {
+    val (fs, p) = fileSystem(s, path)
+    fs.delete(p, true); ()
+  }
+
+  /** A one-number marker file (decimal UTF-8); None when absent. */
+  private[graft] def readLong(s: SparkSession, path: String): Option[Long] = {
+    val (fs, p) = fileSystem(s, path)
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(new String(in.readAllBytes(), UTF_8).trim.toLong)
+      finally in.close()
+    }
+  }
+
+  /** Write a marker in [[readLong]]'s format; without `overwrite` an
+    * existing marker makes the create fail. */
+  private[graft] def writeLong(s: SparkSession, path: String, v: Long,
+      overwrite: Boolean): Unit = {
+    val (fs, p) = fileSystem(s, path)
+    val o = fs.create(p, overwrite)
+    try o.write(v.toString.getBytes(UTF_8)) finally o.close()
+  }
+
+  /** The parquet table `out/name`, or None when the directory is absent
+    * or holds no parquet file — the state a rollback below every landed
+    * block, or an epoch that landed no rows, leaves behind. */
+  private[graft] def table(s: SparkSession, out: String,
+      name: String): Option[DataFrame] =
+    if (!exists(s, s"$out/$name")) None
+    else
+      try Some(s.read.parquet(s"$out/$name"))
+      catch {
+        case e: AnalysisException
+            if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => None
+      }
 
   /** The idempotent partitioned overwrite: rewrites exactly the `cols`
     * partitions `df` holds and keeps every other one. Dynamic mode is an
@@ -99,8 +159,7 @@ object ChainStore extends ChainSink {
       .drop("ingest_epoch")
   }
 
-  private def vacuumFloorPath(out: String) =
-    new org.apache.hadoop.fs.Path(s"$out/transaction_vacuum_floor")
+  private def vacuumFloorPath(out: String) = s"$out/transaction_vacuum_floor"
 
   /** The recorded vacuum floor: the oldest epoch whose snapshot is
     * still serveable, None when the store has never been vacuumed.
@@ -115,27 +174,8 @@ object ChainStore extends ChainSink {
     * below-min as-of reads are valid empty snapshots, not errors. An
     * operator who KNOWS the store was vacuumed pre-upgrade runs
     * [[backfillVacuumFloor]] once as the migration step. */
-  def vacuumFloor(s: SparkSession, out: String): Option[Long] = {
-    val p = vacuumFloorPath(out)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toLong)
-      finally in.close()
-    }
-  }
-
-  private def writeVacuumFloor(s: SparkSession, out: String,
-      floor: Long): Unit = {
-    val p = vacuumFloorPath(out)
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val o = fs.create(p, true)
-    try o.write(floor.toString.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally o.close()
-  }
+  def vacuumFloor(s: SparkSession, out: String): Option[Long] =
+    readLong(s, vacuumFloorPath(out))
 
   /** Migration step for stores vacuumed BEFORE the floor marker
     * existed (see [[vacuumFloor]]'s scaladoc): records the observed
@@ -145,23 +185,17 @@ object ChainStore extends ChainSink {
     * a numbering that starts high (never vacuumed, below-min as-of
     * reads valid and empty) — and monotone: a marker already present
     * and higher is kept. No-op on an empty or batch-layout store. */
-  def backfillVacuumFloor(s: SparkSession, out: String): Option[Long] = {
-    val txPath = new org.apache.hadoop.fs.Path(s"$out/transaction")
-    val fs = txPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(txPath)) return None
-    val df = s.read.parquet(s"$out/transaction")
-    if (!df.schema.fieldNames.contains("ingest_epoch")) None
-    else {
-      val r = df.agg(min(col("ingest_epoch").cast("long"))).head()
-      if (r.isNullAt(0)) None
-      else {
+  def backfillVacuumFloor(s: SparkSession, out: String): Option[Long] =
+    table(s, out, "transaction")
+      .filter(_.schema.fieldNames.contains("ingest_epoch"))
+      .map(_.agg(min(col("ingest_epoch").cast("long"))).head())
+      .filterNot(_.isNullAt(0))
+      .map { r =>
         val floor = math.max(r.getLong(0),
           vacuumFloor(s, out).getOrElse(Long.MinValue))
-        writeVacuumFloor(s, out, floor)
-        Some(floor)
+        writeLong(s, vacuumFloorPath(out), floor, overwrite = true)
+        floor
       }
-    }
-  }
 
   /** Maintenance: compact a transaction store into the sealed batch
     * layout — epoch sub-partitions (and any small-file accumulation from
@@ -211,7 +245,7 @@ object ChainStore extends ChainSink {
       s"store at $out/transaction is not epoch-keyed: nothing to vacuum")
     val recorded = math.max(vacuumFloor(s, out).getOrElse(Long.MinValue),
       floor)
-    writeVacuumFloor(s, out, recorded)
+    writeLong(s, vacuumFloorPath(out), recorded, overwrite = true)
     stagedRewrite(s, out) { (df, staged) =>
       require(df.schema.fieldNames.contains("ingest_epoch"),
         s"store at $out/transaction is not epoch-keyed: nothing to vacuum")
@@ -236,11 +270,10 @@ object ChainStore extends ChainSink {
     * be dropped silently). */
   private def stagedRewrite(s: SparkSession, out: String)(
       rewrite: (DataFrame, String) => Unit): Unit = {
-    val root = new org.apache.hadoop.fs.Path(out)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val live = new org.apache.hadoop.fs.Path(root, "transaction")
-    val staged = new org.apache.hadoop.fs.Path(root, "transaction__compacting")
-    val old = new org.apache.hadoop.fs.Path(root, "transaction__old")
+    val (fs, root) = fileSystem(s, out)
+    val live = new Path(root, "transaction")
+    val staged = new Path(root, "transaction__compacting")
+    val old = new Path(root, "transaction__old")
     if (!fs.exists(live)) {
       require(fs.exists(old),
         s"store rewrite: no store at $live and no $old to recover from")
@@ -248,7 +281,7 @@ object ChainStore extends ChainSink {
     }
     fs.delete(staged, true); fs.delete(old, true)
     def snapshot(): Set[String] =
-      fs.globStatus(new org.apache.hadoop.fs.Path(live, "*/*"))
+      fs.globStatus(new Path(live, "*/*"))
         .map(_.getPath.toString).toSet
     val seen = snapshot()
     rewrite(s.read.parquet(live.toString), staged.toString)
@@ -260,6 +293,95 @@ object ChainStore extends ChainSink {
     require(fs.rename(staged, live), s"store rewrite: cannot swap in $staged")
     fs.delete(old, true)
     ()
+  }
+
+  /** Staging-complete marker for [[rollbackAbove]]'s swap protocol. */
+  private val StagedMarker = "_GRAFT_STAGED"
+
+  /** ST4 recovery, step 1 — bucket-scoped rollback of an orphaned block
+    * range: remove every landed row with `block_id > tip`, rewriting ONLY
+    * the (tx_id_group, ingest_epoch) partitions that contain such rows.
+    * The affected-partition list is partition-level metadata (buckets ×
+    * epochs, never row-scale), so collecting it is a catalog operation;
+    * the surviving rows of each affected partition are staged to a side
+    * directory first and swapped in afterwards, so a crash at any point
+    * leaves either the pre-rollback store (staging incomplete, discarded
+    * on retry) or a resumable swap (staging complete — the next call
+    * finishes moving it before recomputing). Untouched partitions are
+    * never read, rewritten, or listed beyond partition pruning —
+    * at 100 TB a 6-block reorg touches a handful of directories.
+    *
+    * `crashAfterStaging` is a test failpoint: return once staging is
+    * complete but before any live partition is touched — the worst
+    * crash window; StreamingSpec proves a retry converges from it. */
+  def rollbackAbove(s: SparkSession, out: String, tip: Long,
+      crashAfterStaging: Boolean = false): Unit = {
+    val live = s"$out/transaction"
+    val staging = s"$out/transaction__rollback"
+    val (fs, stPath) = fileSystem(s, staging)
+
+    // resume a swap that a previous crash left half-done: the explicit
+    // marker is written only after the staging write returned (Spark's
+    // own _SUCCESS is committer-config-dependent under dynamic
+    // partition overwrite, so it is not the contract here) — every
+    // kept row is safely off the live tree, finishing the swap first
+    // is always correct
+    if (fs.exists(new Path(s"$staging/$StagedMarker")))
+      finishRollbackSwap(fs, staging, live)
+    else fs.delete(stPath, true) // incomplete staging from a dead run
+
+    val df = s.read.parquet(live)
+    require(df.schema.fieldNames.contains("ingest_epoch"),
+      s"store at $live is not epoch-keyed; bucket-scoped rollback " +
+        "needs the streaming layout (a batch store is rebuilt, not " +
+        "rolled back)")
+    // partition columns come back integer-inferred from the directory
+    // names — normalize to long before collecting the partition list
+    val affected = df.filter(col("block_id") > tip)
+      .select(col("tx_id_group").cast("long").as("tx_id_group"),
+        col("ingest_epoch").cast("long").as("ingest_epoch")).distinct()
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    if (affected.isEmpty) return
+
+    // stage the survivors of the affected partitions (rows ≤ tip) —
+    // the live tree is untouched until staging is complete
+    import s.implicits._
+    val affDf = affected.toSeq.toDF("tx_id_group", "ingest_epoch")
+    df.join(broadcast(affDf), Seq("tx_id_group", "ingest_epoch"))
+      .filter(col("block_id") <= tip)
+      .repartition(col("tx_id_group"))
+      .sortWithinPartitions(col("tx_id"))
+      .write.mode("overwrite")
+      .partitionBy("tx_id_group", "ingest_epoch")
+      .parquet(staging)
+    fs.create(new Path(s"$staging/$StagedMarker"), true).close()
+
+    if (crashAfterStaging) return // failpoint: die before touching live
+
+    // drop the orphan-bearing partitions, then swap the staged
+    // survivors into place
+    affected.foreach { case (g, e) =>
+      fs.delete(new Path(s"$live/tx_id_group=$g/ingest_epoch=$e"), true)
+    }
+    finishRollbackSwap(fs, staging, live)
+  }
+
+  /** Move every staged survivor partition into the live tree (a swap
+    * target left by a crashed previous attempt is replaced — staged
+    * content is authoritative), then discard staging. */
+  private def finishRollbackSwap(fs: FileSystem,
+      staging: String, live: String): Unit = {
+    val stRoot = new Path(staging)
+    fs.listStatus(stRoot).filter(_.isDirectory).foreach { gDir =>
+      fs.listStatus(gDir.getPath).filter(_.isDirectory).foreach { eDir =>
+        val target = new Path(
+          s"$live/${gDir.getPath.getName}/${eDir.getPath.getName}")
+        fs.delete(target, true)
+        fs.mkdirs(target.getParent)
+        fs.rename(eDir.getPath, target)
+      }
+    }
+    fs.delete(stRoot, true)
   }
 
   /** block table: clustering ORDER BY (block_id DESC) of schema.cql:13 →

@@ -287,7 +287,7 @@ object RefQueries {
   /** exchange_rates in its schema.cql:58-61 shape: date text key +
     * map<text,float> fiat values (F11). */
   private def exchangeRatesTable(s: SparkSession, dir: String): DataFrame =
-    graft.chain.Chain.exchangeRatesTable(s, dir)
+    graft.chain.Chain.exchangeRatesTable(graft.chain.Chain.rates(s, dir))
 
   // ---- queries ----------------------------------------------------------
 
@@ -378,7 +378,8 @@ object RefQueries {
 
     // summary_statistics (schema.cql:63-68; A6)
     "summary_statistics" -> ((s, dir) =>
-      graft.chain.Chain.summaryStatistics(s, dir)),
+      graft.chain.Chain.summaryStatistics(
+        graft.chain.Chain.transactions(s, dir))),
 
     // configuration row (schema.cql:70-75; S8)
     "configuration" -> ((s, dir) => graft.chain.Chain.configuration(s)),

@@ -57,20 +57,15 @@ object StreamQueries {
   private def consumeEphemeral(s: SparkSession, dirs: Seq[String])(
       read: => DataFrame): DataFrame = {
     val res = read.localCheckpoint(true)
-    val conf = s.sparkContext.hadoopConfiguration
-    dirs.foreach { d =>
-      val p = new org.apache.hadoop.fs.Path(d)
-      p.getFileSystem(conf).delete(p, true)
-    }
+    dirs.foreach(graft.chain.ChainStore.delete(s, _))
     res
   }
 
   private def ingestAndReadBack(s: SparkSession, dir: String,
       tipMargin: Long): DataFrame = {
     val out = tmp("store")
-    IncrementalIngest.ingestToStore(s, dir, out, Watermark, tipMargin,
-      checkpoint = Some(s"$out-ckpt"))
-    consumeEphemeral(s, Seq(out, s"$out-ckpt"))(readBack(s, out))
+    IncrementalIngest.ingestToStore(s, dir, out, Watermark, tipMargin)
+    consumeEphemeral(s, Seq(out))(readBack(s, out))
   }
 
   val queries: Map[String, Q] = Map(
@@ -120,9 +115,8 @@ object StreamQueries {
     // stream_incremental's oracle — the driver compare proves it).
     "stream_dedup" -> ((s, dir) => {
       val out = tmp("store")
-      IncrementalIngest.dedupedIngest(s, dir, out, Watermark,
-        checkpoint = Some(s"$out-ckpt"))
-      consumeEphemeral(s, Seq(out, s"$out-ckpt"))(readBack(s, out))
+      IncrementalIngest.dedupedIngest(s, dir, out, Watermark)
+      consumeEphemeral(s, Seq(out))(readBack(s, out))
     }),
 
     // the BOUNDED-state form of the same dedup (event-time watermark +
@@ -132,9 +126,8 @@ object StreamQueries {
     // state evictable (the continuous-deployment requirement).
     "stream_dedup_bounded" -> ((s, dir) => {
       val out = tmp("store")
-      IncrementalIngest.dedupedIngestBounded(s, dir, out, Watermark,
-        checkpoint = Some(s"$out-ckpt"))
-      consumeEphemeral(s, Seq(out, s"$out-ckpt"))(readBack(s, out))
+      IncrementalIngest.dedupedIngestBounded(s, dir, out, Watermark)
+      consumeEphemeral(s, Seq(out))(readBack(s, out))
     }),
 
     // ST4 end-to-end: ingest, then a simulated reorg moves the chain
@@ -152,8 +145,7 @@ object StreamQueries {
     // epoch (generation 0).
     "stream_reorg_recover" -> ((s, dir) => {
       val out = tmp("store")
-      IncrementalIngest.ingestToStore(s, dir, out, Watermark,
-        checkpoint = Some(s"$out-ckpt"))
+      IncrementalIngest.ingestToStore(s, dir, out, Watermark)
       // watermark read (A5-style, 1 row) + the simulated fork point
       val sinkMax = graft.chain.ChainStore.readTransactions(s, out)
         .agg(max(col("block_id"))).head().getLong(0)
@@ -162,9 +154,8 @@ object StreamQueries {
         try { IncrementalIngest.reorgGuard(newTip, sinkMax); false }
         catch { case _: IllegalArgumentException => true }
       require(tripped, "reorg guard failed to trip with sink ahead of tip")
-      val recoveryBase = IncrementalIngest.recoverFromReorg(s, dir, out,
-        newTip, checkpoint = Some(s"$out-ckpt2"))
-      consumeEphemeral(s, Seq(out, s"$out-ckpt", s"$out-ckpt2"))(
+      val recoveryBase = IncrementalIngest.recoverFromReorg(s, dir, out, newTip)
+      consumeEphemeral(s, Seq(out))(
         s.read.parquet(s"$out/transaction")
           .groupBy(col("block_id"))
           .agg(count(lit(1)).as("n_txs"), max(col("tx_id")).as("max_tx_id"),
@@ -186,22 +177,19 @@ object StreamQueries {
       val out = tmp("store")
       // run 1: everything except the top SecondRunDepth blocks
       IncrementalIngest.ingestToStore(s, dir, out, Watermark,
-        tipMargin = SecondRunDepth, checkpoint = Some(s"$out-ckpt"))
+        tipMargin = SecondRunDepth)
       val run1Max = s.read.parquet(s"$out/transaction")
         .agg(max(col("block_id"))).head().getLong(0)
-      // run 2: resume at the sink max; its new checkpoint lands the top
-      // blocks in an epoch namespace above run 1's
-      IncrementalIngest.ingestToStore(s, dir, out,
-        watermark = run1Max, checkpoint = Some(s"$out-ckpt2"))
+      // run 2: resume at the sink max; a new run lands the top blocks
+      // in an epoch namespace above run 1's
+      IncrementalIngest.ingestToStore(s, dir, out, watermark = run1Max)
       val sinkMax = graft.chain.ChainStore.readTransactions(s, out)
         .agg(max(col("block_id"))).head().getLong(0)
       // ReorgDepth > SecondRunDepth: the orphaned range crosses the
       // epoch boundary between the two runs
       val newTip = sinkMax - ReorgDepth
-      val recoveryBase = IncrementalIngest.recoverFromReorg(s, dir, out,
-        newTip, checkpoint = Some(s"$out-ckpt3"))
-      consumeEphemeral(s, Seq(out, s"$out-ckpt", s"$out-ckpt2",
-        s"$out-ckpt3"))(
+      val recoveryBase = IncrementalIngest.recoverFromReorg(s, dir, out, newTip)
+      consumeEphemeral(s, Seq(out))(
         s.read.parquet(s"$out/transaction")
           .groupBy(col("block_id"))
           .agg(count(lit(1)).as("n_txs"), max(col("tx_id")).as("max_tx_id"),
@@ -215,9 +203,8 @@ object StreamQueries {
     // batch attribution join (the oracle).
     "stream_attribution" -> ((s, dir) => {
       val out = tmp("store")
-      graft.streaming.StreamJoin.attributionJoin(s, dir, out,
-        checkpoint = Some(s"$out-ckpt"))
-      consumeEphemeral(s, Seq(out, s"$out-ckpt"))(
+      graft.streaming.StreamJoin.attributionJoin(s, dir, out)
+      consumeEphemeral(s, Seq(out))(
         graft.streaming.StreamJoin.readPairs(s, out)
           .groupBy(col("user_id"))
           .agg(count(lit(1)).as("n_pairs"),
@@ -290,9 +277,8 @@ object StreamQueries {
     // pre-batch doc.
     "stream_corpus_dedup" -> ((s, dir) => {
       val out = tmp("store")
-      graft.streaming.CorpusIngest.dedupedCorpusIngest(s, dir, out,
-        checkpoint = Some(s"$out-ckpt"))
-      consumeEphemeral(s, Seq(out, s"$out-ckpt"))(
+      graft.streaming.CorpusIngest.dedupedCorpusIngest(s, dir, out)
+      consumeEphemeral(s, Seq(out))(
         graft.streaming.CorpusIngest.readKept(s, out))
     }),
 
@@ -390,13 +376,8 @@ object StreamQueries {
       val store = graft.ops.StoreMaterialize.transactionStore(s, dir)(
         out => graft.chain.ChainStore.writeTransactions(
           graft.chain.Chain.transactions(s, dir), out))
-      // existence probes through the path's OWN FileSystem (a
-      // java.io.File probe sees every non-local store as absent)
-      val root = new org.apache.hadoop.fs.Path(s"$store/transaction")
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
       def dirOf(g: Long) = s"$store/transaction/tx_id_group=$g"
-      def present(g: Long) =
-        fs.exists(new org.apache.hadoop.fs.Path(dirOf(g)))
+      def present(g: Long) = graft.chain.ChainStore.exists(s, dirOf(g))
       def window(hi: Long): Seq[String] =
         (b to hi).filter(present).map(dirOf)
       var hi = b + 1L
@@ -448,20 +429,15 @@ object StreamQueries {
     // one-shot join over the whole corpus, proven by the compare.
     "stream_allpairs" -> ((s, dir) => {
       val out = tmp("ap")
-      graft.streaming.CorpusIngest.allPairsIngest(s, dir, out,
-        checkpoint = Some(s"$out-ckpt"))
+      graft.streaming.CorpusIngest.allPairsIngest(s, dir, out)
       val base = graft.ops.DedupMaterialize.allPairsBaseTable(s, dir,
         graft.streaming.CorpusIngest.AllPairsBatchMod)
       // a batch with no qualifying pairs lands an empty partitioned dir
       // (schema-less) — the read must treat that as zero pairs
-      val landed =
-        try s.read.parquet(s"$out/pairs")
-          .select(col("doc_a"), col("doc_b"), col("overlap"),
-            col("na"), col("nb"), col("cos_sq_bps"))
-        catch {
-          case _: org.apache.spark.sql.AnalysisException => base.limit(0)
-        }
-      consumeEphemeral(s, Seq(out, s"$out-ckpt"))(
+      val landed = graft.chain.ChainStore.table(s, out, "pairs")
+        .fold(base.limit(0))(_.select(col("doc_a"), col("doc_b"),
+          col("overlap"), col("na"), col("nb"), col("cos_sq_bps")))
+      consumeEphemeral(s, Seq(out))(
         base.unionByName(landed))
     }),
 
@@ -533,9 +509,8 @@ object StreamQueries {
     // assignment — stream == batch for the ANN index, proven per run.
     "stream_ivf_ingest" -> ((s, dir) => {
       val out = tmp("ivf")
-      graft.streaming.CorpusIngest.ivfIngest(s, dir, out,
-        checkpoint = Some(s"$out-ckpt"))
-      consumeEphemeral(s, Seq(out, s"$out-ckpt"))(
+      graft.streaming.CorpusIngest.ivfIngest(s, dir, out)
+      consumeEphemeral(s, Seq(out))(
         s.read.parquet(out)
           .groupBy(col("cent_id"))
           .agg(count(lit(1)).as("n_vectors"),
@@ -550,9 +525,8 @@ object StreamQueries {
     // batch for the compressed serving tier, proven per run.
     "stream_pq_ingest" -> ((s, dir) => {
       val out = tmp("pqc")
-      graft.streaming.CorpusIngest.pqIngest(s, dir, out,
-        checkpoint = Some(s"$out-ckpt"))
-      consumeEphemeral(s, Seq(out, s"$out-ckpt"))(
+      graft.streaming.CorpusIngest.pqIngest(s, dir, out)
+      consumeEphemeral(s, Seq(out))(
         s.read.parquet(out)
           .groupBy(col("m").cast("long").as("m"), col("code"))
           .agg(count(lit(1)).as("n_vectors"),
@@ -562,9 +536,8 @@ object StreamQueries {
 
     "stream_heavy_hitters" -> ((s, dir) => {
       val out = tmp("hh")
-      graft.streaming.CorpusIngest.heavyHitterIngest(s, dir, out,
-        checkpoint = Some(s"$out-ckpt"))
-      consumeEphemeral(s, Seq(out, s"$out-ckpt"))(
+      graft.streaming.CorpusIngest.heavyHitterIngest(s, dir, out)
+      consumeEphemeral(s, Seq(out))(
         graft.queries.TextQueries.exactHeavyHitters(
           graft.queries.TextQueries.docTokens(s, dir),
           s.read.parquet(out)))
@@ -605,9 +578,8 @@ object StreamQueries {
     // analog of stream_heavy_hitters' candidate-union argument.
     "stream_quantile" -> ((s, dir) => {
       val out = tmp("qs")
-      IncrementalIngest.quantileSampleIngest(s, dir, out,
-        checkpoint = Some(s"$out-ckpt"))
-      consumeEphemeral(s, Seq(out, s"$out-ckpt"))(
+      IncrementalIngest.quantileSampleIngest(s, dir, out)
+      consumeEphemeral(s, Seq(out))(
         EventQueries.quantileFromSamples(s, s.read.parquet(out)))
     }))
 

@@ -33,8 +33,7 @@ object CorpusIngest {
   /** Run the deduped ingest over `dir`'s documents with AvailableNow
     * (catch-up semantics); kept doc ids land under `out` partitioned by
     * ingest epoch. */
-  def dedupedCorpusIngest(s: SparkSession, dir: String, out: String,
-      checkpoint: Option[String] = None): Unit = {
+  def dedupedCorpusIngest(s: SparkSession, dir: String, out: String): Unit = {
     val stream = Streams.files(s, dir, "documents")
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
     // the dup-injected corpus view of the stream (same rows the batch
@@ -63,7 +62,7 @@ object CorpusIngest {
             .join(dupIds, Seq("doc_id"), "left_anti")
             .withColumn("ingest_epoch", lit(epoch)), "ingest_epoch")
             .parquet(out)
-      }, checkpoint)
+      }, None)
   }
 
   /** Kept doc ids from the landed store. */
@@ -85,8 +84,7 @@ object CorpusIngest {
     * run, parked base ∪ landed pairs equals the one-shot join over the
     * whole corpus (stream == batch, proven by the shared brute-force
     * oracle). */
-  def allPairsIngest(s: SparkSession, dir: String, out: String,
-      checkpoint: Option[String] = None): Unit =
+  def allPairsIngest(s: SparkSession, dir: String, out: String): Unit =
     Streams.runOnce(Streams.files(s, dir, "documents")
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
       .filter(col("doc_id") % AllPairsBatchMod === 0)
@@ -95,7 +93,7 @@ object CorpusIngest {
         (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
          epoch: Long) =>
           applyAllPairsBatch(s, dir, out, batch.toDF(), epoch)
-      }, checkpoint)
+      }, None)
 
   /** One micro-batch of [[allPairsIngest]], factored out so the spec
     * can drive multi-batch scenarios directly (the fixture is one
@@ -113,13 +111,9 @@ object CorpusIngest {
     // epochs only — a replayed epoch must not see its own failed
     // attempt's rows as old, or the posting union would double-count
     // this batch's shingles and verify wrong overlaps
-    def landedOr(sub: String, empty: DataFrame): DataFrame = {
-      val p = new org.apache.hadoop.fs.Path(s"$out/$sub")
-      if (p.getFileSystem(s.sparkContext.hadoopConfiguration).exists(p))
-        s.read.parquet(s"$out/$sub")
-          .filter(col("ingest_epoch").cast("long") < epoch)
-      else empty
-    }
+    def landedOr(sub: String, empty: DataFrame): DataFrame =
+      ChainStore.table(s, out, sub)
+        .fold(empty)(_.filter(col("ingest_epoch").cast("long") < epoch))
     val prevPrefix = landedOr("prefix", batchPrefix.limit(0))
       .select(col("shingle"), col("doc_id"), col("n"), col("rk"))
       .withColumn("nw", lit(false))
@@ -154,8 +148,7 @@ object CorpusIngest {
     * the maintained inverted-list table and equals the from-scratch
     * assignment — stream_ivf_ingest shares embed_ivf_incremental's
     * full-rebuild oracle to prove it every run. */
-  def ivfIngest(s: SparkSession, dir: String, out: String,
-      checkpoint: Option[String] = None): Unit = {
+  def ivfIngest(s: SparkSession, dir: String, out: String): Unit = {
     val cents = graft.queries.SimilarityQueries.ivfCentroidTable(s, dir)
     Streams.runOnce(vectorStream(s, dir).writeStream
       .foreachBatch {
@@ -169,7 +162,7 @@ object CorpusIngest {
             graft.api.Similarity.quantize(corpus), cents)
             .withColumn("ingest_epoch", lit(epoch)), "ingest_epoch")
             .parquet(out)
-      }, checkpoint)
+      }, None)
   }
 
   /** STREAMING PQ code-tier maintenance (twin of embed_pq_incremental,
@@ -179,8 +172,7 @@ object CorpusIngest {
     * per-vector deterministic given frozen codebooks, so the landed
     * union equals the from-scratch full-corpus encode however the
     * stream was chopped into batches. */
-  def pqIngest(s: SparkSession, dir: String, out: String,
-      checkpoint: Option[String] = None): Unit = {
+  def pqIngest(s: SparkSession, dir: String, out: String): Unit = {
     val cents = graft.queries.SimilarityQueries.pqCodebookTable(s, dir)
     Streams.runOnce(vectorStream(s, dir).writeStream
       .foreachBatch {
@@ -196,7 +188,7 @@ object CorpusIngest {
             graft.queries.SimilarityQueries.PqRSubDim)
             .withColumn("ingest_epoch", lit(epoch)), "ingest_epoch")
             .parquet(out)
-      }, checkpoint)
+      }, None)
   }
 
   /** The vector stream [[ivfIngest]] and [[pqIngest]] maintain. */
@@ -216,8 +208,7 @@ object CorpusIngest {
     * landed candidates (batch side) then yields the same deterministic
     * answer as the one-pass batch query — which is why
     * stream_heavy_hitters shares text_heavy_hitters' oracle. */
-  def heavyHitterIngest(s: SparkSession, dir: String, out: String,
-      checkpoint: Option[String] = None): Unit =
+  def heavyHitterIngest(s: SparkSession, dir: String, out: String): Unit =
     Streams.runOnce(Streams.files(s, dir, "documents").select(col("text"))
       .writeStream
       .foreachBatch {
@@ -231,5 +222,5 @@ object CorpusIngest {
             .mgCandidates(s, toks)
             .withColumn("ingest_epoch", lit(epoch)), "ingest_epoch")
             .parquet(out)
-      }, checkpoint)
+      }, None)
 }

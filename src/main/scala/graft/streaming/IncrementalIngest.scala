@@ -47,47 +47,33 @@ object IncrementalIngest {
     * empty store), taken in the same aggregate as the sink max. */
   def resumeGuard(s: SparkSession, out: String,
       watermark: Long): Option[Long] = {
-    // existence via the path's OWN FileSystem, as Export.sinkMaxBlock:
-    // a java.io.File probe sees every hdfs://, s3a:// or file: store as
-    // absent, so a resume would restart at epoch 0 and overwrite the
-    // first run's partitions, unguarded
-    val root = new org.apache.hadoop.fs.Path(s"$out/transaction")
-    if (!root.getFileSystem(s.sparkContext.hadoopConfiguration).exists(root))
-      None
-    else {
-      val existing =
-        try Some(s.read.parquet(s"$out/transaction"))
-        catch {
-          // dir exists but holds no readable parquet = empty store
-          case _: org.apache.spark.sql.AnalysisException => None
-        }
-      // layout check first: every caller of this guard writes the
-      // epoch-keyed layout (partition dirs tx_id_group/ingest_epoch), so
-      // a store laid out by the batch writeTransactions (tx_id_group
-      // only) must be refused outright — mixing the two depths under one
-      // transaction/ root makes parquet partition discovery fail with
-      // "conflicting directory structures" on the NEXT read, i.e. the
-      // corruption would surface long after this run succeeded
-      existing.foreach { df =>
-        require(df.schema.fieldNames.contains("ingest_epoch"),
-          s"store at $out was written by the batch layout (no " +
-            "ingest_epoch partition key); resuming a streaming ingest " +
-            "into it would mix partition-directory depths and break " +
-            "partition discovery — use a separate store directory, or " +
-            "delete this one for a full streaming rebuild")
-      }
-      val maxes = existing.map(_.agg(max(col("block_id")),
-        max(col("ingest_epoch").cast("long"))).head())
-      def maxOf(i: Int) = maxes.filterNot(_.isNullAt(i)).map(_.getLong(i))
-      maxOf(0).foreach { mx =>
-        require(watermark >= mx,
-          s"store at $out holds blocks up to $mx but the resume " +
-            s"watermark is $watermark; resuming below the sink max " +
-            "would duplicate rows across runs — resume at/above it, " +
-            "or delete the store for a full rebuild")
-      }
-      maxOf(1)
+    val existing = ChainStore.table(s, out, "transaction")
+    // layout check first: every caller of this guard writes the
+    // epoch-keyed layout (partition dirs tx_id_group/ingest_epoch), so
+    // a store laid out by the batch writeTransactions (tx_id_group
+    // only) must be refused outright — mixing the two depths under one
+    // transaction/ root makes parquet partition discovery fail with
+    // "conflicting directory structures" on the NEXT read, i.e. the
+    // corruption would surface long after this run succeeded
+    existing.foreach { df =>
+      require(df.schema.fieldNames.contains("ingest_epoch"),
+        s"store at $out was written by the batch layout (no " +
+          "ingest_epoch partition key); resuming a streaming ingest " +
+          "into it would mix partition-directory depths and break " +
+          "partition discovery — use a separate store directory, or " +
+          "delete this one for a full streaming rebuild")
     }
+    val maxes = existing.map(_.agg(max(col("block_id")),
+      max(col("ingest_epoch").cast("long"))).head())
+    def maxOf(i: Int) = maxes.filterNot(_.isNullAt(i)).map(_.getLong(i))
+    maxOf(0).foreach { mx =>
+      require(watermark >= mx,
+        s"store at $out holds blocks up to $mx but the resume " +
+          s"watermark is $watermark; resuming below the sink max " +
+          "would duplicate rows across runs — resume at/above it, " +
+          "or delete the store for a full rebuild")
+    }
+    maxOf(1)
   }
 
   /** Where a checkpoint records the epoch base it was started with. */
@@ -112,19 +98,10 @@ object IncrementalIngest {
     val fresh = math.max(epochBase,
       resumeGuard(s, out, watermark).fold(0L)(_ + 1L))
     checkpoint.fold(fresh) { ckpt =>
-      val root = new org.apache.hadoop.fs.Path(ckpt)
-      val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-      val record = new org.apache.hadoop.fs.Path(root, EpochBaseFile)
-      if (fs.exists(record)) {
-        val in = fs.open(record)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-        finally in.close()
-      } else if (fs.exists(new org.apache.hadoop.fs.Path(root, "offsets")))
-        epochBase
-      else {
-        val o = fs.create(record, false)
-        try o.write(fresh.toString.getBytes("UTF-8")) finally o.close()
-        fresh
+      val record = s"$ckpt/$EpochBaseFile"
+      ChainStore.readLong(s, record).getOrElse {
+        if (ChainStore.exists(s, s"$ckpt/offsets")) epochBase
+        else { ChainStore.writeLong(s, record, fresh, overwrite = false); fresh }
       }
     }
   }
@@ -204,99 +181,6 @@ object IncrementalIngest {
     base
   }
 
-  /** Staging-complete marker for [[rollbackAbove]]'s swap protocol. */
-  private val StagedMarker = "_GRAFT_STAGED"
-
-  /** ST4 recovery, step 1 — bucket-scoped rollback of an orphaned block
-    * range: remove every landed row with `block_id > tip`, rewriting ONLY
-    * the (tx_id_group, ingest_epoch) partitions that contain such rows.
-    * The affected-partition list is partition-level metadata (buckets ×
-    * epochs, never row-scale), so collecting it is a catalog operation;
-    * the surviving rows of each affected partition are staged to a side
-    * directory first and swapped in afterwards, so a crash at any point
-    * leaves either the pre-rollback store (staging incomplete, discarded
-    * on retry) or a resumable swap (staging complete — the next call
-    * finishes moving it before recomputing). Untouched partitions are
-    * never read, rewritten, or listed beyond partition pruning —
-    * at 100 TB a 6-block reorg touches a handful of directories.
-    *
-    * `crashAfterStaging` is a test failpoint: return once staging is
-    * complete but before any live partition is touched — the worst
-    * crash window; StreamingSpec proves a retry converges from it. */
-  def rollbackAbove(s: SparkSession, out: String, tip: Long,
-      crashAfterStaging: Boolean = false): Unit = {
-    val live = s"$out/transaction"
-    val staging = s"$out/transaction__rollback"
-    val conf = s.sparkContext.hadoopConfiguration
-    val stPath = new org.apache.hadoop.fs.Path(staging)
-    val fs = stPath.getFileSystem(conf)
-
-    // resume a swap that a previous crash left half-done: the explicit
-    // marker is written only after the staging write returned (Spark's
-    // own _SUCCESS is committer-config-dependent under dynamic
-    // partition overwrite, so it is not the contract here) — every
-    // kept row is safely off the live tree, finishing the swap first
-    // is always correct
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$staging/$StagedMarker")))
-      finishRollbackSwap(fs, staging, live)
-    else fs.delete(stPath, true) // incomplete staging from a dead run
-
-    val df = s.read.parquet(live)
-    require(df.schema.fieldNames.contains("ingest_epoch"),
-      s"store at $live is not epoch-keyed; bucket-scoped rollback " +
-        "needs the streaming layout (a batch store is rebuilt, not " +
-        "rolled back)")
-    // partition columns come back integer-inferred from the directory
-    // names — normalize to long before collecting the partition list
-    val affected = df.filter(col("block_id") > tip)
-      .select(col("tx_id_group").cast("long").as("tx_id_group"),
-        col("ingest_epoch").cast("long").as("ingest_epoch")).distinct()
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    if (affected.isEmpty) return
-
-    // stage the survivors of the affected partitions (rows ≤ tip) —
-    // the live tree is untouched until staging is complete
-    import s.implicits._
-    val affDf = affected.toSeq.toDF("tx_id_group", "ingest_epoch")
-    df.join(broadcast(affDf), Seq("tx_id_group", "ingest_epoch"))
-      .filter(col("block_id") <= tip)
-      .repartition(col("tx_id_group"))
-      .sortWithinPartitions(col("tx_id"))
-      .write.mode("overwrite")
-      .partitionBy("tx_id_group", "ingest_epoch")
-      .parquet(staging)
-    fs.create(new org.apache.hadoop.fs.Path(s"$staging/$StagedMarker"),
-      true).close()
-
-    if (crashAfterStaging) return // failpoint: die before touching live
-
-    // drop the orphan-bearing partitions, then swap the staged
-    // survivors into place
-    affected.foreach { case (g, e) =>
-      fs.delete(new org.apache.hadoop.fs.Path(
-        s"$live/tx_id_group=$g/ingest_epoch=$e"), true)
-    }
-    finishRollbackSwap(fs, staging, live)
-  }
-
-  /** Move every staged survivor partition into the live tree (a swap
-    * target left by a crashed previous attempt is replaced — staged
-    * content is authoritative), then discard staging. */
-  private def finishRollbackSwap(fs: org.apache.hadoop.fs.FileSystem,
-      staging: String, live: String): Unit = {
-    val stRoot = new org.apache.hadoop.fs.Path(staging)
-    fs.listStatus(stRoot).filter(_.isDirectory).foreach { gDir =>
-      fs.listStatus(gDir.getPath).filter(_.isDirectory).foreach { eDir =>
-        val target = new org.apache.hadoop.fs.Path(
-          s"$live/${gDir.getPath.getName}/${eDir.getPath.getName}")
-        fs.delete(target, true)
-        fs.mkdirs(target.getParent)
-        fs.rename(eDir.getPath, target)
-      }
-    }
-    fs.delete(stRoot, true)
-  }
-
   /** ST4 recovery, step 2 — the full reorg-recovery path the reference
     * operator runs after the guard trips (blocksci_export.py:492-495
     * refuses; the documented manual remedy is "roll the keyspace back
@@ -313,7 +197,7 @@ object IncrementalIngest {
     * constants: a multi-batch or multi-run history shifts them). */
   def recoverFromReorg(s: SparkSession, dir: String, out: String,
       newTip: Long, checkpoint: Option[String] = None): Long = {
-    rollbackAbove(s, out, newTip)
+    ChainStore.rollbackAbove(s, out, newTip)
     // the deepest reorg (fork below every landed block) leaves an EMPTY
     // store, which resumeGuard reports as no epoch: base 0
     ingestToStore(s, dir, out, watermark = newTip, checkpoint = checkpoint)
@@ -327,15 +211,15 @@ object IncrementalIngest {
     * fine for an AvailableNow catch-up run; a continuously-running
     * deployment uses [[dedupedIngestBounded]]. */
   def dedupedIngest(s: SparkSession, dir: String, out: String,
-      watermark: Long, checkpoint: Option[String] = None): Unit = {
-    val base = landingBase(s, out, watermark, checkpoint, 0L)
+      watermark: Long): Unit = {
+    val base = landingBase(s, out, watermark, None, 0L)
     val tx = txStream(s, dir, watermark)
     val replayed = tx.unionByName(tx.filter(col("tx_id") % 97 === 0))
     Streams.runOnce(replayed.dropDuplicates("tx_hash")
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epoch: Long) =>
         ChainStore.writeTransactionsEpoch(batch.toDF(), out, base + epoch)
-      }, checkpoint)
+      }, None)
   }
 
   /** Bounded-state streaming dedup — the continuous-deployment form:
@@ -350,9 +234,8 @@ object IncrementalIngest {
     * StreamingSpec exercises both sides of that boundary. */
   def dedupedIngestBounded(s: SparkSession, dir: String, out: String,
       watermark: Long, delay: String = "1 hour",
-      maxFilesPerTrigger: Option[Int] = None,
-      checkpoint: Option[String] = None): Unit = {
-    val base = landingBase(s, out, watermark, checkpoint, 0L)
+      maxFilesPerTrigger: Option[Int] = None): Unit = {
+    val base = landingBase(s, out, watermark, None, 0L)
     val tx = txStream(s, dir, watermark, maxFilesPerTrigger)
     val replayed = tx.unionByName(tx.filter(col("tx_id") % 97 === 0))
     Streams.runOnce(replayed
@@ -362,7 +245,7 @@ object IncrementalIngest {
       .writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epoch: Long) =>
         ChainStore.writeTransactionsEpoch(batch.drop("tsc"), out, base + epoch)
-      }, checkpoint)
+      }, None)
   }
 
   /** The SAME ingest query left running: a processing-time trigger
@@ -544,7 +427,6 @@ object IncrementalIngest {
     * expressions as the batch query, the repo's shared-projection
     * convention. */
   def quantileSampleIngest(s: SparkSession, dir: String, out: String,
-      checkpoint: Option[String] = None,
       maxFilesPerTrigger: Option[Int] = None): Unit =
     Streams.runOnce(Streams.files(s, dir, "events", maxFilesPerTrigger)
       .select(col("event_id"), col("event_type"), col("value"))
@@ -556,5 +438,5 @@ object IncrementalIngest {
             .samplePairs(s, batch.toDF())
             .withColumn("ingest_epoch", lit(epoch)), "ingest_epoch")
             .parquet(out)
-      }, checkpoint)
+      }, None)
 }

@@ -41,8 +41,7 @@ object StreamJoin {
     * the lateness bound. */
   def attributionJoin(s: SparkSession, dir: String, out: String,
       windowSec: Long = AttributionWindowSec,
-      statePartitions: Int = 8,
-      checkpoint: Option[String] = None): Unit = {
+      statePartitions: Int = 8): Unit = {
     val stream = Streams.files(s, dir, "events")
     val views = side(stream, "view", "v", s"${windowSec + 3600} seconds")
     val purchases = side(stream, "purchase", "p", "1 hour")
@@ -54,15 +53,12 @@ object StreamJoin {
         col("v_id").as("view_id"), col("p_id").as("purchase_id"),
         unix_timestamp(col("v_ts")).as("view_ets"),
         unix_timestamp(col("p_ts")).as("purchase_ets"))
-    // each call is a FULL fresh build with its own checkpoint, so epoch
+    // each call is a FULL fresh build on a private checkpoint, so epoch
     // numbering restarts at 0 — stale pairs from a previous run whose
     // batch boundaries differed would survive the dynamic overwrite and
     // duplicate. Drop the previous pair store first (the same hazard
-    // IncrementalIngest.resumeGuard blocks for the transaction store; a
-    // resumable deployment keeps ONE long-lived checkpoint instead).
-    val pairsPath = new org.apache.hadoop.fs.Path(s"$out/pairs")
-    pairsPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-      .delete(pairsPath, true)
+    // IncrementalIngest.resumeGuard blocks for the transaction store).
+    graft.chain.ChainStore.delete(s, s"$out/pairs")
     // stream-stream join state fans out as shuffle.partitions × 4 state
     // stores, each committing per micro-batch — size the state
     // partitioning to the keyspace (state partitioning is fixed at first
@@ -76,7 +72,7 @@ object StreamJoin {
     try Streams.runOnce(joined.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epoch: Long) =>
         writePairsEpoch(batch.toDF(), out, epoch)
-      }, checkpoint)
+      }, None)
     finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
   }
 

@@ -40,7 +40,8 @@ class SchemaSpec extends SparkSpec {
 
   test("exchange_rates map table matches declared schema") {
     assert(Schemas.conforms(
-      graft.chain.Chain.exchangeRatesTable(spark, sf("sf0.001")).schema,
+      graft.chain.Chain.exchangeRatesTable(
+        graft.chain.Chain.rates(spark, sf("sf0.001"))).schema,
       Schemas.exchangeRates))
     assert(schemaOf("exchange_rates_table")("fiat_values").dataType ==
       org.apache.spark.sql.types.StringType)

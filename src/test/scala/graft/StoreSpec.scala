@@ -4,7 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.functions._
 
-import graft.chain.{CassandraShapedSink, Chain, ChainSink, ChainStore, SinkConfig}
+import graft.chain.{CassandraShapedSink, Chain, ChainStore, SinkConfig}
 
 /** Sink-layer contract: roundtrip, idempotent re-write (ST3), pruned
   * point lookups. */
@@ -62,6 +62,31 @@ class StoreSpec extends SparkSpec with TempDirs {
     }
     assert(e.getMessage.contains("not epoch-keyed"),
       s"unexpected failure shape: ${e.getMessage}")
+  }
+
+  test("an emptied epoch store reads as absent: no vacuum floor, no sink " +
+      "max, no newest epoch") {
+    val dir = sf("sf0.001")
+    val eout = tempDir("emptied_")
+    val tx = Chain.transactions(spark, dir)
+    ChainStore.writeTransactionsEpoch(tx, eout, 0L)
+    // a rollback below every landed block (the deepest reorg) leaves
+    // the bucket directories behind with no parquet file under them
+    ChainStore.rollbackAbove(spark, eout,
+      tx.agg(min("block_id")).as[Long].head() - 1L)
+    def parquetFiles(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(parquetFiles)
+      else Seq(f).filter(_.getName.endsWith(".parquet"))
+    val txDir = new java.io.File(s"$eout/transaction")
+    assert(txDir.listFiles().exists(_.getName.startsWith("tx_id_group=")))
+    assert(parquetFiles(txDir).isEmpty)
+    Seq(eout, s"file:${new java.io.File(eout).getAbsolutePath}").foreach { o =>
+      assert(ChainStore.backfillVacuumFloor(spark, o) === None, o)
+      assert(Export.sinkMaxBlock(spark, o) === None, o)
+      assert(graft.streaming.IncrementalIngest.resumeGuard(spark, o,
+        Long.MaxValue) === None, o)
+    }
+    assert(!new java.io.File(s"$eout/transaction_vacuum_floor").exists())
   }
 
   test("compaction recovers the store after a crash between swap renames") {
@@ -291,7 +316,7 @@ class StoreSpec extends SparkSpec with TempDirs {
   test("writeChain exports all tables through the sink trait") {
     val dir = sf("sf0.001")
     val chainOut = tempDir("chain_")
-    ChainSink.writeChain(spark, dir, chainOut)
+    Graft.writeChain(spark, dir, chainOut)
     val n = Chain.transactions(spark, dir).count()
     val nBlocks = Chain.blocks(spark, dir).count()
     assert(spark.read.parquet(s"$chainOut/transaction").count() === n)
@@ -307,7 +332,7 @@ class StoreSpec extends SparkSpec with TempDirs {
       aggregate(col("txs"), lit(0L), (a, _) => a + 1L).as("k"))
       .agg(sum("k")).as[Long].head() === n)
     assert(spark.read.parquet(s"$chainOut/exchange_rates").count() ===
-      Chain.exchangeRatesTable(spark, dir).count())
+      Chain.exchangeRatesTable(Chain.rates(spark, dir)).count())
     assert(spark.read.parquet(s"$chainOut/summary_statistics").count() === 1)
     assert(spark.read.parquet(s"$chainOut/configuration").count() === 1)
   }
@@ -336,7 +361,7 @@ class StoreSpec extends SparkSpec with TempDirs {
           ids(table) = df.select("id").head().getString(0)
       }
     }
-    ChainSink.writeChain(spark, sf("sf0.001"), out = "", sink)
+    Graft.writeChain(spark, sf("sf0.001"), out = "", sink)
     // single-row tables are keyed by the keyspace name, as the reference
     // inserts them (blocksci_export.py:383, 625-629)
     assert(ids("summary_statistics") === "btc")
@@ -373,7 +398,7 @@ class StoreSpec extends SparkSpec with TempDirs {
           ids(table) = df.select("id").head().getString(0)
       }
     }
-    ChainSink.writeChain(spark, sf("sf0.001"), out = "", sink)
+    Graft.writeChain(spark, sf("sf0.001"), out = "", sink)
     val declared = graft.chain.CqlSchema.tables.map(t => t.name -> t).toMap
     assert(shipped.keySet === declared.keySet)
     // the full option map per table — the connector contract a live

@@ -402,7 +402,7 @@ class StreamingSpec extends SparkSpec with TempDirs {
     val newTip = full.map(_._2).max - 3
     // die after staging completed but before any live partition moved:
     // the live store must be byte-identical to pre-rollback state
-    IncrementalIngest.rollbackAbove(spark, out, newTip,
+    graft.chain.ChainStore.rollbackAbove(spark, out, newTip,
       crashAfterStaging = true)
     assert(new java.io.File(
       s"$out/transaction__rollback/_GRAFT_STAGED").exists())
@@ -411,7 +411,7 @@ class StreamingSpec extends SparkSpec with TempDirs {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(mid === full, "crash before the swap must leave live intact")
     // the retry resumes the swap first, then completes the rollback
-    IncrementalIngest.rollbackAbove(spark, out, newTip)
+    graft.chain.ChainStore.rollbackAbove(spark, out, newTip)
     val after = graft.chain.ChainStore.readTransactions(spark, out)
       .select("tx_id", "block_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -429,7 +429,7 @@ class StreamingSpec extends SparkSpec with TempDirs {
       .select("tx_id", "block_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val newTip = full.map(_._2).max - 3
-    IncrementalIngest.rollbackAbove(spark, out, newTip,
+    graft.chain.ChainStore.rollbackAbove(spark, out, newTip,
       crashAfterStaging = true)
     // simulate dying mid-swap: move exactly ONE staged partition into
     // the live tree (delete target + rename, what finishRollbackSwap
@@ -446,7 +446,7 @@ class StreamingSpec extends SparkSpec with TempDirs {
     assert(new java.io.File(s"$staging/$g0/$e0")
       .renameTo(target), "manual partial swap failed")
     // the retry must finish the remaining swaps and converge
-    IncrementalIngest.rollbackAbove(spark, out, newTip)
+    graft.chain.ChainStore.rollbackAbove(spark, out, newTip)
     val after = graft.chain.ChainStore.readTransactions(spark, out)
       .select("tx_id", "block_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -487,7 +487,7 @@ class StreamingSpec extends SparkSpec with TempDirs {
       IncrementalIngest.reorgGuard(newTip, sinkMax = tip)
     }
     // rollback removes exactly the orphaned range...
-    IncrementalIngest.rollbackAbove(spark, out, newTip)
+    graft.chain.ChainStore.rollbackAbove(spark, out, newTip)
     val after = graft.chain.ChainStore.readTransactions(spark, out)
       .select("tx_id", "block_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -503,7 +503,7 @@ class StreamingSpec extends SparkSpec with TempDirs {
       assert(files().get(p).contains(m), s"unaffected file rewritten: $p")
     }
     // rollback is idempotent
-    IncrementalIngest.rollbackAbove(spark, out, newTip)
+    graft.chain.ChainStore.rollbackAbove(spark, out, newTip)
     // recovery re-ingests the replacement range in a fresh epoch
     // namespace and converges to the full chain
     IncrementalIngest.recoverFromReorg(spark, dir, out, newTip,

@@ -25,18 +25,26 @@
 #                             outside operators/{Fixpoint,Materialize,
 #                             PrefixCarry}.scala: iterative loops truncate
 #                             and release through operators.Fixpoint
-#   5. sbt compile          — the tree compiles (r12 shipped a tree that
+#   5. store I/O in one place — no org.apache.hadoop.fs or
+#                             getFileSystem( in src/main/scala outside
+#                             chain/ChainStore.scala: store probes, marker
+#                             files and absent-or-empty reads go through
+#                             ChainStore's file-system surface. One
+#                             exception: operators/Materialize.scala
+#                             deletes an RDD's checkpoint files, where it
+#                             holds the RDD but no SparkSession
+#   6. sbt compile          — the tree compiles (r12 shipped a tree that
 #                             didn't; this script exists so that cannot
 #                             recur)
-#   6. sbt test             — full ScalaTest suite green
-#   7. graft.Verify sf0.01  — every SparkEntry query dumps its parquet
-#   8. tools/check.py       — DuckDB oracle compare: rows + schema +
+#   7. sbt test             — full ScalaTest suite green
+#   8. graft.Verify sf0.01  — every SparkEntry query dumps its parquet
+#   9. tools/check.py       — DuckDB oracle compare: rows + schema +
 #                             driver-emulated canonical hash per query,
 #                             plus the oracle cost budget (10 s/query,
 #                             180 s/suite)
 #
 # Usage: tools/preflight.sh [--quick]
-#   --quick skips sbt test (stages 1-5,7,8 only) for mid-round iteration;
+#   --quick skips sbt test (stages 1-6,8,9 only) for mid-round iteration;
 #   the snapshot commit requires the FULL run.
 set -uo pipefail
 cd "$(dirname "$0")/.."
@@ -49,7 +57,7 @@ OUT=target/verify_out
 
 fail() { echo "PREFLIGHT: FAIL at stage $1 — do NOT commit the snapshot"; exit 1; }
 
-echo "PREFLIGHT stage 1/8: tiers in one place (ops/Tiers.scala)"
+echo "PREFLIGHT stage 1/9: tiers in one place (ops/Tiers.scala)"
 if grep -rnE '"[^"]*(_SUCCESS|_BUILT)[^"]*"|target/intermediate|FormatVersion|Tiers\.(park|parquet)\(' \
     src/main/scala --include='*.scala' \
     | grep -v '^src/main/scala/graft/ops/Tiers.scala:'
@@ -57,7 +65,7 @@ then
   fail tiers
 fi
 
-echo "PREFLIGHT stage 2/8: session setup only in Session.scala"
+echo "PREFLIGHT stage 2/9: session setup only in Session.scala"
 if grep -rn 'SparkSession\.builder' src/main/scala --include='*.scala' \
     | grep -v '^src/main/scala/graft/Session.scala:' ||
    grep -rnE 'local\[[0-9]+\]' src/main/scala --include='*.scala'
@@ -65,7 +73,7 @@ then
   fail session
 fi
 
-echo "PREFLIGHT stage 3/8: stream runner and partition overwrite in one place each"
+echo "PREFLIGHT stage 3/9: stream runner and partition overwrite in one place each"
 if grep -rn 'partitionOverwriteMode' src/main/scala --include='*.scala' \
     | grep -v '^src/main/scala/graft/chain/ChainStore.scala:' ||
    grep -rnE 'processAllAvailable\(\)|Trigger\.AvailableNow\(\)' src/main/scala \
@@ -74,7 +82,7 @@ then
   fail streams
 fi
 
-echo "PREFLIGHT stage 4/8: loop lifecycle in one place (operators/Fixpoint.scala)"
+echo "PREFLIGHT stage 4/9: loop lifecycle in one place (operators/Fixpoint.scala)"
 if grep -rnE 'Materialize\.release\(|truncateBeforeAction' src/main/scala \
     --include='*.scala' \
     | grep -vE '^src/main/scala/graft/operators/(Fixpoint|Materialize|PrefixCarry)\.scala:'
@@ -82,21 +90,31 @@ then
   fail loops
 fi
 
-echo "PREFLIGHT stage 5/8: sbt compile"
+echo "PREFLIGHT stage 5/9: store I/O in one place (chain/ChainStore.scala)"
+# operators/Materialize.scala is allowed: releasing a checkpoint deletes
+# the RDD's checkpoint files, and it holds the RDD but no SparkSession
+if grep -rnE 'org\.apache\.hadoop\.fs|getFileSystem\(' src/main/scala \
+    --include='*.scala' \
+    | grep -vE '^src/main/scala/graft/(chain/ChainStore|operators/Materialize)\.scala:'
+then
+  fail store-io
+fi
+
+echo "PREFLIGHT stage 6/9: sbt compile"
 sbt -batch compile || fail compile
 
 if [[ $QUICK -eq 0 ]]; then
-  echo "PREFLIGHT stage 6/8: sbt test"
+  echo "PREFLIGHT stage 7/9: sbt test"
   sbt -batch test || fail test
 else
-  echo "PREFLIGHT stage 6/8: SKIPPED (--quick)"
+  echo "PREFLIGHT stage 7/9: SKIPPED (--quick)"
 fi
 
-echo "PREFLIGHT stage 7/8: graft.Verify @ $SF"
+echo "PREFLIGHT stage 8/9: graft.Verify @ $SF"
 rm -rf "$OUT"
 sbt -batch "runMain graft.Verify $SF $OUT" || fail verify
 
-echo "PREFLIGHT stage 8/8: tools/check.py (rows+schema+hash+budget)"
+echo "PREFLIGHT stage 9/9: tools/check.py (rows+schema+hash+budget)"
 python3 tools/check.py "$SF" "$OUT" || fail check
 
 echo "PREFLIGHT: ALL GREEN — safe to commit the snapshot"
