@@ -101,7 +101,7 @@ object Bench {
     // untimed warmup: session/codegen/parquet-footer costs are one-time
     // and not attributable to the first query in iteration order
     try {
-      spark.read.parquet(s"$sfDir/lineitem.parquet")
+      graft.chain.Chain.table(spark, sfDir, "lineitem")
         .groupBy("l_returnflag").count().count()
     } catch { case _: Throwable => () }
     // a failed build/query must never masquerade as a fast time: record

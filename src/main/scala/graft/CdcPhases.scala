@@ -11,7 +11,7 @@ object CdcPhases {
   def main(args: Array[String]): Unit = {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.1")
     val spark = Session.local()
-    spark.read.parquet(s"$sfDir/lineitem.parquet").count()
+    graft.chain.Chain.table(spark, sfDir, "lineitem").count()
     def timed(name: String)(body: => Unit): Unit = {
       val t0 = System.nanoTime()
       body

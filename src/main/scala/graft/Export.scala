@@ -154,7 +154,25 @@ object Export {
     }
     if (end < start) return done(end, 0L, 0L, Nil)
 
-    val ranged = tx.filter(col("block_id").between(start, end))
+    // block-local refills: the touched block_id_group range is pure
+    // arithmetic (group = block_id div bucket) — no scan needed to find
+    // it, and the bucket-complete predicate is a plain block_id range
+    // that Catalyst pushes BELOW the per-block aggregates (it references
+    // only the grouping column), so the derivation aggregates
+    // O(tail + one boundary bucket) of rows, never the whole store —
+    // where the former join-against-touched-groups aggregated
+    // everything first and filtered after
+    val blkLo = (start / Chain.BlockBucketSize) * Chain.BlockBucketSize
+    // one scan of the tail answers every scalar the refills need:
+    // [blkLo, end] contains [start, end] (blkLo <= start), so the tx
+    // bucket range and tx count of [start, end] are conditionals over
+    // it, and its own tx_id range bounds the block_tx rollup
+    val inRange = col("block_id") >= start
+    val tail = tx.filter(col("block_id").between(blkLo, end))
+      .agg(min(when(inRange, col("tx_id_group"))),
+        max(when(inRange, col("tx_id_group"))),
+        count(when(inRange, lit(1))),
+        min(col("tx_id")), max(col("tx_id"))).head()
     val upToEnd = tx.filter(col("block_id") <= end)
 
     if (tables.contains("tx")) {
@@ -167,16 +185,14 @@ object Export {
       // row groups and a resumed ingest reads O(tail), not O(store) —
       // where a join against the touched-bucket set would scan
       // everything (a join filter can't prune a scan)
-      val b = ranged.agg(min(col("tx_id_group")), max(col("tx_id_group")))
-        .head()
-      if (!b.isNullAt(0)) { // a block range with no txs touches no bucket
+      if (!tail.isNullAt(0)) { // a block range with no txs touches no bucket
         // the [lo, hi] group range expressed as a tx_id range: the
         // predicate lands on the source key column (unwrap-cast makes
         // it a parquet PushedFilter), where floor(tx_id/bucket) would
         // not — on a block-range-clustered source, row groups outside
         // the tail never leave disk
-        val (txLo, txHi) = (b.getLong(0) * Chain.TxBucketSize,
-          (b.getLong(1) + 1L) * Chain.TxBucketSize - 1L)
+        val (txLo, txHi) = (tail.getLong(0) * Chain.TxBucketSize,
+          (tail.getLong(1) + 1L) * Chain.TxBucketSize - 1L)
         sink.writeTransactions(
           tx.filter(col("tx_id").between(txLo, txHi) &&
             col("block_id") <= end), args.out)
@@ -193,15 +209,6 @@ object Export {
         else upToEnd
       sink.writePrefixIndex(idxTx, args.out)
     }
-    // block-local refills: the touched block_id_group range is pure
-    // arithmetic (group = block_id div bucket) — no scan needed to find
-    // it, and the bucket-complete predicate is a plain block_id range
-    // that Catalyst pushes BELOW the per-block aggregates (it references
-    // only the grouping column), so the derivation aggregates
-    // O(tail + one boundary bucket) of rows, never the whole store —
-    // where the former join-against-touched-groups aggregated
-    // everything first and filtered after
-    val blkLo = (start / Chain.BlockBucketSize) * Chain.BlockBucketSize
     if (tables.contains("block")) {
       sink.writeBlocks(
         Chain.blocks(s, args.config)
@@ -212,12 +219,10 @@ object Export {
       // tx_id range (dense ids: blocks ≥ blkLo own exactly the tx ids
       // ≥ the range min), a source-key predicate the lineitem scan
       // prunes on
-      val tb = tx.filter(col("block_id").between(blkLo, end))
-        .agg(min(col("tx_id")), max(col("tx_id"))).head()
-      if (!tb.isNullAt(0))
+      if (!tail.isNullAt(3))
         sink.writeBlockTransactions(
           Chain.blockTransactions(s, args.config,
-              txIdBounds = Some((tb.getLong(0), tb.getLong(1))))
+              txIdBounds = Some((tail.getLong(3), tail.getLong(4))))
             .filter(col("block_id").between(blkLo, end)), args.out)
     }
     if (tables.contains("stats")) {
@@ -229,7 +234,7 @@ object Export {
         Chain.rates(s, args.config).filter(col("block_id") <= end)), args.out)
     }
 
-    done(end, end - start + 1L, ranged.count(), tables)
+    done(end, end - start + 1L, tail.getLong(2), tables)
   }
 
   /** argv → Args; throws IllegalArgumentException on malformed input. */

@@ -146,7 +146,7 @@ object Probe {
     warm.filterNot(SparkEntry.queries.contains)
       .foreach(n => sys.error(s"unknown build or query $n"))
     ListenerBridge.addOnce(s.sparkContext, StageTotals)
-    s.read.parquet(s"$sfDir/lineitem.parquet").count()
+    graft.chain.Chain.table(s, sfDir, "lineitem").count()
     def query(name: String): (DataFrame, Long) = {
       val frame = SparkEntry.queries(name)(s, sfDir)
       (frame, frame.count())

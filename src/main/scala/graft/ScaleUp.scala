@@ -67,7 +67,7 @@ object ScaleUp {
     val spark = Session.local()
 
     def amplify(name: String, shift: (DataFrame, Int) => DataFrame): Unit = {
-      val base = spark.read.parquet(s"$src/$name.parquet")
+      val base = graft.chain.Chain.table(spark, src, name)
       (0 until factor).map(i => shift(base, i)).reduce(_ unionByName _)
         .write.mode("overwrite").parquet(s"$out/$name.parquet")
     }
@@ -111,7 +111,7 @@ object ScaleUp {
       case _ => dims ++ Seq("events", "documents")
     }
     for (t <- copied)
-      spark.read.parquet(s"$src/$t.parquet")
+      graft.chain.Chain.table(spark, src, t)
         .write.mode("overwrite").parquet(s"$out/$t.parquet")
     println(s"[scaleup] wrote $out at ${factor}x of $src (mode=$mode)")
     spark.stop()

@@ -38,8 +38,10 @@ object Chain {
     * Reference nulls nonstandard/nulldata/witness_unknown = codes 1,7,10. */
   val NullAddressTypes = Seq(1, 7, 10)
 
+  /** Fixture table `name` under `dir`, read with its remembered schema
+    * ([[ChainStore.parquet]]). */
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    ChainStore.parquet(spark, s"$dir/$name.parquet")
 
   /** tx projection over an orders-shaped frame — shared by the batch
     * reader and the Structured-Streaming incremental ingest (same Catalyst

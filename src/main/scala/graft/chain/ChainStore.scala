@@ -1,11 +1,13 @@
 package graft.chain
 
+import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{AnalysisException, DataFrame, DataFrameWriter,
   Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The sink side of the reference contract: partitioned, ordered,
   * idempotently-overwritable table storage (S5/ST3, schema.cql PK design).
@@ -25,8 +27,9 @@ import org.apache.spark.sql.functions._
   * ~25 MB ≈ one comfortable parquet row group per bucket.
   *
   * This object is also the one place that touches a store's files: the
-  * probes, one-number markers and absent-or-empty reads below, and both
-  * crash-safe rewrites ([[stagedRewrite]], [[rollbackAbove]]).
+  * probes, one-number markers and absent-or-empty reads below, both
+  * crash-safe rewrites ([[stagedRewrite]], [[rollbackAbove]]), and the
+  * reader of immutable inputs ([[parquet]]).
   */
 object ChainStore extends ChainSink {
 
@@ -81,6 +84,47 @@ object ChainStore extends ChainSink {
         case e: AnalysisException
             if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => None
       }
+
+  /** What a remembered schema was inferred under: the top-level listing
+    * (name, length, mtime) and the session's explicitly set parquet
+    * confs. */
+  private final case class Stamp(listing: Seq[(String, Long, Long)],
+      confs: Map[String, String])
+
+  /** One remembered schema per qualified path, replaced when its stamp
+    * changes, so the memo never outgrows the set of paths read. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (Stamp, StructType)]()
+
+  /** A parquet input whose content does not change under a given
+    * listing — a fixture table or a parked tier — read with the schema
+    * Spark inferred the first time it saw this path with this listing
+    * and these parquet confs: a repeat read starts no schema-inference
+    * job, while a rewritten table, a re-parked tier or a session that
+    * reads parquet under other settings infers again. Mutable stores
+    * (sink tables, stream outputs) change their listing with every
+    * write and read through [[table]] / [[readTransactions]] instead.
+    * Two threads racing on one miss may both infer, which is harmless. A
+    * missing path raises Spark's own `PATH_NOT_FOUND`. */
+  private[graft] def parquet(s: SparkSession, path: String): DataFrame = {
+    val (fs, p) = fileSystem(s, path)
+    val listing =
+      try Some(fs.listStatus(p).toSeq
+        .map(f => (f.getPath.getName, f.getLen, f.getModificationTime))
+        .sorted)
+      catch { case _: FileNotFoundException => None }
+    listing.fold(s.read.parquet(path)) { files =>
+      val stamp = Stamp(files, s.conf.getAll.filter(_._1.contains("parquet")))
+      val key = fs.makeQualified(p).toString
+      Option(schemas.get(key)).filter(_._1 == stamp) match {
+        case Some((_, known)) => s.read.schema(known).parquet(path)
+        case None =>
+          val df = s.read.parquet(path)
+          schemas.put(key, (stamp, df.schema))
+          df
+      }
+    }
+  }
 
   /** The idempotent partitioned overwrite: rewrites exactly the `cols`
     * partitions `df` holds and keeps every other one. Dynamic mode is an
@@ -330,7 +374,11 @@ object ChainStore extends ChainSink {
       finishRollbackSwap(fs, staging, live)
     else fs.delete(stPath, true) // incomplete staging from a dead run
 
-    val df = s.read.parquet(live)
+    // a store an earlier rollback emptied has nothing to roll back
+    val df = table(s, out, "transaction") match {
+      case Some(df) => df
+      case None => return
+    }
     require(df.schema.fieldNames.contains("ingest_epoch"),
       s"store at $live is not epoch-keyed; bucket-scoped rollback " +
         "needs the streaming layout (a batch store is rebuilt, not " +

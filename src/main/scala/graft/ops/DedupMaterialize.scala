@@ -111,7 +111,7 @@ object DedupMaterialize {
         .write.mode("overwrite").parquet(root)
       c.releasePinned()
     }
-    s.read.parquet(root)
+    Tier.read(s, root)
   }
 
   /** Segment-dedup output over the corpus EXCLUDING the arriving
@@ -266,12 +266,12 @@ object DedupMaterialize {
       sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
         .write.mode("overwrite").parquet(_))
     val pre = DedupTier.park(dir, s"allpairs_prefix_base_m$mod")(
-      graft.api.Text.allPairsPrefix(sh, s.read.parquet(df))
+      graft.api.Text.allPairsPrefix(sh, Tier.read(s, df))
         .write.mode("overwrite").parquet(_))
     DedupTier.park(dir, s"allpairs_base_m$mod")(
-      graft.api.Text.allPairsFromPrefix(s.read.parquet(pre), sh, lit(true))
+      graft.api.Text.allPairsFromPrefix(Tier.read(s, pre), sh, lit(true))
         .write.mode("overwrite").parquet(_))
-    s.read.parquet(DedupTier.root(dir, s"${sub}_base_m$mod"))
+    Tier.read(s, DedupTier.root(dir, s"${sub}_base_m$mod"))
   }
 
   /** Parked pre-batch ALL-PAIRS base for

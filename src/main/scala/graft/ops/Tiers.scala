@@ -40,10 +40,15 @@ final case class Tier(name: String, version: Int, sources: Seq[String],
   /** [[park]] `df` as parquet (overwrite), then scan it. */
   def parquet(s: SparkSession, dir: String, sub: String)(
       df: => DataFrame): DataFrame =
-    s.read.parquet(park(dir, sub)(df.write.mode("overwrite").parquet(_)))
+    Tier.read(s, park(dir, sub)(df.write.mode("overwrite").parquet(_)))
 }
 
 object Tier {
+
+  /** Scan the parquet tier parked at `root`: its content never changes
+    * under its listing, so it reads with its remembered schema. */
+  private[ops] def read(s: SparkSession, root: String): DataFrame =
+    graft.chain.ChainStore.parquet(s, root)
 
   /** The `<sanitised dir>_<max mtime>` part of a tier key over the
     * `$dir/<table>.parquet` sources: a regenerated fixture changes the

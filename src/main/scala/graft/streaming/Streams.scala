@@ -26,7 +26,7 @@ private[graft] object Streams {
   def files(s: SparkSession, dir: String, table: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val reader =
-      s.readStream.schema(s.read.parquet(s"$dir/$table.parquet").schema)
+      s.readStream.schema(graft.chain.Chain.table(s, dir, table).schema)
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     reader.parquet(s"$dir/$table*.parquet")
   }

@@ -89,6 +89,20 @@ class StoreSpec extends SparkSpec with TempDirs {
     assert(!new java.io.File(s"$eout/transaction_vacuum_floor").exists())
   }
 
+  test("a repeated rollback below the first block is a no-op on the " +
+      "emptied store") {
+    val dir = sf("sf0.001")
+    val rout = tempDir("rollback_twice_")
+    val tx = Chain.transactions(spark, dir)
+    ChainStore.writeTransactionsEpoch(tx, rout, 0L)
+    val below = tx.agg(min("block_id")).as[Long].head() - 1L
+    ChainStore.rollbackAbove(spark, rout, below)
+    // the second rollback finds bucket dirs and no parquet file
+    ChainStore.rollbackAbove(spark, rout, below)
+    assert(ChainStore.table(spark, rout, "transaction") === None)
+    assert(!new java.io.File(s"$rout/transaction__rollback").exists())
+  }
+
   test("compaction recovers the store after a crash between swap renames") {
     val dir = sf("sf0.001")
     val cout = tempDir("crash_")

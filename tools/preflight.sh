@@ -33,18 +33,26 @@
 #                             exception: operators/Materialize.scala
 #                             deletes an RDD's checkpoint files, where it
 #                             holds the RDD but no SparkSession
-#   6. sbt compile          — the tree compiles (r12 shipped a tree that
+#   6. immutable inputs read in one place — no read.parquet( of a
+#                             fixture-shaped path (…/<table>.parquet") in
+#                             src/main/scala outside chain/, and no
+#                             read.parquet( in ops/ outside
+#                             ops/Tiers.scala: fixture tables read through
+#                             Chain.table and parked tiers through
+#                             Tier.read, both with ChainStore.parquet's
+#                             remembered schema
+#   7. sbt compile          — the tree compiles (r12 shipped a tree that
 #                             didn't; this script exists so that cannot
 #                             recur)
-#   7. sbt test             — full ScalaTest suite green
-#   8. graft.Verify sf0.01  — every SparkEntry query dumps its parquet
-#   9. tools/check.py       — DuckDB oracle compare: rows + schema +
+#   8. sbt test             — full ScalaTest suite green
+#   9. graft.Verify sf0.01  — every SparkEntry query dumps its parquet
+#  10. tools/check.py       — DuckDB oracle compare: rows + schema +
 #                             driver-emulated canonical hash per query,
 #                             plus the oracle cost budget (10 s/query,
 #                             180 s/suite)
 #
 # Usage: tools/preflight.sh [--quick]
-#   --quick skips sbt test (stages 1-6,8,9 only) for mid-round iteration;
+#   --quick skips sbt test (stages 1-7,9,10 only) for mid-round iteration;
 #   the snapshot commit requires the FULL run.
 set -uo pipefail
 cd "$(dirname "$0")/.."
@@ -57,7 +65,7 @@ OUT=target/verify_out
 
 fail() { echo "PREFLIGHT: FAIL at stage $1 — do NOT commit the snapshot"; exit 1; }
 
-echo "PREFLIGHT stage 1/9: tiers in one place (ops/Tiers.scala)"
+echo "PREFLIGHT stage 1/10: tiers in one place (ops/Tiers.scala)"
 if grep -rnE '"[^"]*(_SUCCESS|_BUILT)[^"]*"|target/intermediate|FormatVersion|Tiers\.(park|parquet)\(' \
     src/main/scala --include='*.scala' \
     | grep -v '^src/main/scala/graft/ops/Tiers.scala:'
@@ -65,7 +73,7 @@ then
   fail tiers
 fi
 
-echo "PREFLIGHT stage 2/9: session setup only in Session.scala"
+echo "PREFLIGHT stage 2/10: session setup only in Session.scala"
 if grep -rn 'SparkSession\.builder' src/main/scala --include='*.scala' \
     | grep -v '^src/main/scala/graft/Session.scala:' ||
    grep -rnE 'local\[[0-9]+\]' src/main/scala --include='*.scala'
@@ -73,7 +81,7 @@ then
   fail session
 fi
 
-echo "PREFLIGHT stage 3/9: stream runner and partition overwrite in one place each"
+echo "PREFLIGHT stage 3/10: stream runner and partition overwrite in one place each"
 if grep -rn 'partitionOverwriteMode' src/main/scala --include='*.scala' \
     | grep -v '^src/main/scala/graft/chain/ChainStore.scala:' ||
    grep -rnE 'processAllAvailable\(\)|Trigger\.AvailableNow\(\)' src/main/scala \
@@ -82,7 +90,7 @@ then
   fail streams
 fi
 
-echo "PREFLIGHT stage 4/9: loop lifecycle in one place (operators/Fixpoint.scala)"
+echo "PREFLIGHT stage 4/10: loop lifecycle in one place (operators/Fixpoint.scala)"
 if grep -rnE 'Materialize\.release\(|truncateBeforeAction' src/main/scala \
     --include='*.scala' \
     | grep -vE '^src/main/scala/graft/operators/(Fixpoint|Materialize|PrefixCarry)\.scala:'
@@ -90,7 +98,7 @@ then
   fail loops
 fi
 
-echo "PREFLIGHT stage 5/9: store I/O in one place (chain/ChainStore.scala)"
+echo "PREFLIGHT stage 5/10: store I/O in one place (chain/ChainStore.scala)"
 # operators/Materialize.scala is allowed: releasing a checkpoint deletes
 # the RDD's checkpoint files, and it holds the RDD but no SparkSession
 if grep -rnE 'org\.apache\.hadoop\.fs|getFileSystem\(' src/main/scala \
@@ -100,21 +108,31 @@ then
   fail store-io
 fi
 
-echo "PREFLIGHT stage 6/9: sbt compile"
+echo "PREFLIGHT stage 6/10: immutable inputs read in one place (chain/ChainStore.scala)"
+# fixture tables read through Chain.table, parked tiers through Tier.read
+if grep -rnE 'read\.parquet\([^)]*\.parquet"' src/main/scala --include='*.scala' \
+    | grep -v '^src/main/scala/graft/chain/' ||
+   grep -rn 'read\.parquet(' src/main/scala/graft/ops --include='*.scala' \
+    | grep -v '^src/main/scala/graft/ops/Tiers.scala:'
+then
+  fail immutable-reads
+fi
+
+echo "PREFLIGHT stage 7/10: sbt compile"
 sbt -batch compile || fail compile
 
 if [[ $QUICK -eq 0 ]]; then
-  echo "PREFLIGHT stage 7/9: sbt test"
+  echo "PREFLIGHT stage 8/10: sbt test"
   sbt -batch test || fail test
 else
-  echo "PREFLIGHT stage 7/9: SKIPPED (--quick)"
+  echo "PREFLIGHT stage 8/10: SKIPPED (--quick)"
 fi
 
-echo "PREFLIGHT stage 8/9: graft.Verify @ $SF"
+echo "PREFLIGHT stage 9/10: graft.Verify @ $SF"
 rm -rf "$OUT"
 sbt -batch "runMain graft.Verify $SF $OUT" || fail verify
 
-echo "PREFLIGHT stage 9/9: tools/check.py (rows+schema+hash+budget)"
+echo "PREFLIGHT stage 10/10: tools/check.py (rows+schema+hash+budget)"
 python3 tools/check.py "$SF" "$OUT" || fail check
 
 echo "PREFLIGHT: ALL GREEN — safe to commit the snapshot"
