@@ -12,7 +12,7 @@ object SparkEntry {
                             Map[String, String])] = Seq(
     (RefQueries.queries, RefQueries.oracles),
     (RelQueries.queries, RelQueries.oracles),
-    (EventQueries.queries, EventQueries.oraclesAll),
+    (EventQueries.queries, EventQueries.oracles),
     (DedupQueries.queries, DedupQueries.oracles),
     (TextQueries.queries, TextQueries.oracles),
     (SimilarityQueries.queries, SimilarityQueries.oracles),

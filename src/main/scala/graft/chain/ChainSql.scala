@@ -34,16 +34,21 @@ object ChainSql {
       |         'a' || CAST(l_partkey AS VARCHAR) AS alt_addr
       |  FROM lineitem)""".stripMargin
 
-  /** ioa CTE — io with the address array exploded (mirrors Chain.io's
-    * `addresses` dispatch + an explode): multisig fans out to both
-    * constituents, null-typed rows drop. Composes after [[io]]. */
+  /** The `address` column of an [[io]] row, one row per address
+    * (mirrors Chain.io's `addresses` dispatch + an explode): multisig
+    * fans out to both constituents, null-typed rows drop. */
+  val ioAddress: String =
+    """unnest(CASE WHEN address_type = 6 THEN [base_addr, alt_addr]
+      |            WHEN address_type IN (1, 7, 10) THEN NULL
+      |            ELSE [base_addr] END) AS address""".stripMargin
+
+  /** ioa CTE — io with the address array exploded ([[ioAddress]]).
+    * Composes after [[io]]. */
   val ioAddr: String =
-    """ioa AS (
-      |  SELECT tx_id, idx, is_input, value, address_type,
-      |         unnest(CASE WHEN address_type = 6 THEN [base_addr, alt_addr]
-      |                     WHEN address_type IN (1, 7, 10) THEN NULL
-      |                     ELSE [base_addr] END) AS address
-      |  FROM io)""".stripMargin
+    s"""ioa AS (
+       |  SELECT tx_id, idx, is_input, value, address_type,
+       |         $ioAddress
+       |  FROM io)""".stripMargin
 
   /** blk CTE — mirrors Chain.blocks. */
   val blk: String =

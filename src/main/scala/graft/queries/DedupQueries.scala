@@ -537,23 +537,26 @@ object DedupQueries {
             .as("n_kept"))
     }))
 
-  /** Full-corpus clustering oracle — shared by `dedup_components` and
-    * the incremental-maintenance form (which must equal it exactly). */
-  private val componentsOracle: String = withRecursiveCtes(sigSqlCtes ++ Seq(
+  /** The near-duplicate pairs walked over the corpus: `walk` reaches
+    * each doc with every component label. */
+  private val pairWalkCtes: Seq[String] = sigSqlCtes ++ Seq(
     pairsSqlCte,
     "nodes AS (SELECT doc_id AS node FROM corpus)",
     "edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs)",
-    ccWalkCte("nodes", "edges")): _*)(
+    ccWalkCte("nodes", "edges"))
+
+  /** [[pairWalkCtes]] plus `cc`, each doc's component minimum. */
+  private val pairComponentCtes: Seq[String] = pairWalkCtes :+
+    """cc AS (SELECT node, min(comp) AS component
+      |       FROM walk GROUP BY node)""".stripMargin
+
+  /** Full-corpus clustering oracle — shared by `dedup_components` and
+    * the incremental-maintenance form (which must equal it exactly). */
+  private val componentsOracle: String = withRecursiveCtes(pairWalkCtes: _*)(
     """SELECT node AS doc_id, CAST(min(comp) AS BIGINT) AS component
       |FROM walk GROUP BY node""".stripMargin)
 
-  private val keepOneOracle: String = withRecursiveCtes(sigSqlCtes ++ Seq(
-    pairsSqlCte,
-    "nodes AS (SELECT doc_id AS node FROM corpus)",
-    "edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs)",
-    ccWalkCte("nodes", "edges"),
-    """cc AS (SELECT node, min(comp) AS component
-      |       FROM walk GROUP BY node)""".stripMargin): _*)(
+  private val keepOneOracle: String = withRecursiveCtes(pairComponentCtes: _*)(
     """SELECT CAST(component AS BIGINT) AS doc_id,
       |  CAST(count(*) AS BIGINT) AS n_members
       |FROM cc GROUP BY component""".stripMargin)
@@ -561,13 +564,7 @@ object DedupQueries {
   /** cc labels + a split column bucketed on md5 of `keyExpr` — shared
     * scaffold of the leak-free split and its doc-keyed audit. */
   private def splitLabelCtes(keyExpr: String): Seq[String] =
-    sigSqlCtes ++ Seq(
-      pairsSqlCte,
-      "nodes AS (SELECT doc_id AS node FROM corpus)",
-      "edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs)",
-      ccWalkCte("nodes", "edges"),
-      """cc AS (SELECT node, min(comp) AS component
-        |       FROM walk GROUP BY node)""".stripMargin,
+    pairComponentCtes :+
       s"""labsplit AS (
          |  SELECT node, component,
          |    CASE WHEN b < 204 THEN 'train' WHEN b < 230 THEN 'val'
@@ -578,7 +575,7 @@ object DedupQueries {
          |             substr(md5(CAST($keyExpr AS VARCHAR)), 1, 1)) - 1) * 16
          |      + instr('0123456789abcdef',
          |              substr(md5(CAST($keyExpr AS VARCHAR)), 2, 1)) - 1 AS b
-         |    FROM cc))""".stripMargin)
+         |    FROM cc))""".stripMargin
 
   val oracles: Map[String, String] = Map(
     "dedup_exact" -> withCtes(corpusSql)(
@@ -669,13 +666,7 @@ object DedupQueries {
 
     "dedup_components" -> componentsOracle,
 
-    "source_dedup_rate" -> withRecursiveCtes(sigSqlCtes ++ Seq(
-      pairsSqlCte,
-      "nodes AS (SELECT doc_id AS node FROM corpus)",
-      "edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs)",
-      ccWalkCte("nodes", "edges"),
-      """cc AS (SELECT node, min(comp) AS component
-        |       FROM walk GROUP BY node)""".stripMargin,
+    "source_dedup_rate" -> withRecursiveCtes(pairComponentCtes ++ Seq(
       """csz AS (SELECT component, count(*) AS n_members
         |        FROM cc GROUP BY component)""".stripMargin,
       """srcmap AS (

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
 
 import graft.chain.Chain.table
+import graft.chain.ChainSql.withCtes
 
 /** Event-stream analytics over the `events` fixture: JSON extraction,
   * tumbling time-window aggregation, and gap-based sessionization — the
@@ -460,73 +461,115 @@ object EventQueries {
           .as("q99"))
   }
 
+  /** Events CTE `e`: user_id, the `extra` columns and ets, the event
+    * time in epoch seconds. */
+  private def eventsCte(extra: String*): String =
+    s"""e AS (
+       |  SELECT CAST(user_id AS BIGINT) AS user_id,${extra.map(" " + _ + ",").mkString}
+       |    CAST(date_diff('second', TIMESTAMP '1970-01-01',
+       |         CAST(ts AS TIMESTAMP)) AS BIGINT) AS ets
+       |  FROM events)""".stripMargin
+
+  private val eventIdCol = "CAST(event_id AS BIGINT) AS event_id"
+
+  /** Distinct (user_id, day) activity `e`, for the cohort and DAU
+    * oracles. */
+  private val eventDaysCte: String =
+    """e AS (
+      |  SELECT DISTINCT CAST(user_id AS BIGINT) AS user_id,
+      |    CAST(floor(CAST(date_diff('second', TIMESTAMP '1970-01-01',
+      |         CAST(ts AS TIMESTAMP)) AS BIGINT) / 86400) AS BIGINT) AS day
+      |  FROM events)""".stripMargin
+
   /** Shared by the inequality-join and binned-equi-join range queries. */
-  private val rangeJoinOracleSql: String =
-    """WITH e AS (
-      |  SELECT CAST(user_id AS BIGINT) AS user_id,
-      |    CAST(date_diff('second', TIMESTAMP '1970-01-01',
-      |         CAST(ts AS TIMESTAMP)) AS BIGINT) AS ets
-      |  FROM events),
-      |iv AS (
+  private val rangeJoinOracleSql: String = withCtes(eventsCte(),
+    """iv AS (
       |  SELECT w_start, w_start + 7200 AS w_end FROM (
       |    SELECT DISTINCT CAST(floor(ets / 3600) AS BIGINT) * 3600 AS w_start
       |    FROM e)
-      |  WHERE CAST(floor(w_start / 3600) AS BIGINT) % 24 = 0)
-      |SELECT w_start, CAST(count(*) AS BIGINT) AS n_events,
+      |  WHERE CAST(floor(w_start / 3600) AS BIGINT) % 24 = 0)""".stripMargin)(
+    """SELECT w_start, CAST(count(*) AS BIGINT) AS n_events,
       |  CAST(count(DISTINCT user_id) AS BIGINT) AS n_users
       |FROM e JOIN iv ON e.ets >= iv.w_start AND e.ets < iv.w_end
-      |GROUP BY w_start""".stripMargin
+      |GROUP BY w_start""".stripMargin)
+
+  /** view → click → purchase funnel stage per user; each stage's first
+    * hit at or after the previous one, and within `window` seconds of it
+    * when set. */
+  private def funnelOracle(window: Option[Long]): String = {
+    def within(t: String): String =
+      window.fold("")(w => s"\n         AND e.ets < $t.$t + $w")
+    withCtes(eventsCte("event_type"),
+      """t1 AS (SELECT user_id, min(ets) AS t1 FROM e
+        |       WHERE event_type = 'view' GROUP BY user_id)""".stripMargin,
+      s"""t2 AS (SELECT e.user_id, min(e.ets) AS t2
+         |       FROM e JOIN t1 ON t1.user_id = e.user_id AND e.ets >= t1.t1${within("t1")}
+         |       WHERE e.event_type = 'click' GROUP BY e.user_id)""".stripMargin,
+      s"""t3 AS (SELECT e.user_id, min(e.ets) AS t3
+         |       FROM e JOIN t2 ON t2.user_id = e.user_id AND e.ets >= t2.t2${within("t2")}
+         |       WHERE e.event_type = 'purchase' GROUP BY e.user_id)""".stripMargin)(
+      """SELECT u.user_id, t1.t1, t2.t2, t3.t3,
+        |  CAST(CASE WHEN t3.t3 IS NOT NULL THEN 3
+        |            WHEN t2.t2 IS NOT NULL THEN 2
+        |            WHEN t1.t1 IS NOT NULL THEN 1 ELSE 0 END AS BIGINT)
+        |    AS funnel_stage
+        |FROM (SELECT DISTINCT user_id FROM e) u
+        |LEFT JOIN t1 USING (user_id)
+        |LEFT JOIN t2 USING (user_id)
+        |LEFT JOIN t3 USING (user_id)""".stripMargin)
+  }
+
+  /** The 30-minute gap rule: `s` flags each session start, `s2` numbers
+    * a user's sessions. */
+  private val sessionCtes: Seq[String] = Seq(eventsCte(eventIdCol),
+    """s AS (
+      |  SELECT user_id, event_id, ets,
+      |    CASE WHEN lag(ets) OVER w IS NULL
+      |              OR ets - lag(ets) OVER w > 1800
+      |         THEN 1 ELSE 0 END AS new_s
+      |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ets, event_id))""".stripMargin,
+    """s2 AS (
+      |  SELECT user_id, ets,
+      |    CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ets, event_id
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+      |      AS session_no
+      |  FROM s)""".stripMargin)
+
+  /** The stateful variant shares the window-based oracle verbatim. */
+  private val sessionizeOracle: String = withCtes(sessionCtes: _*)(
+    """SELECT user_id, session_no, CAST(count(*) AS BIGINT) AS n_events,
+      |  min(ets) AS session_start, max(ets) - min(ets) AS duration
+      |FROM s2 GROUP BY user_id, session_no""".stripMargin)
+
+  // the exact same deterministic bottom-256 (priority, value) sample
+  // — row_number over (p, value) is DuckDB's way of stating "the k
+  // smallest pairs"; quantiles selected from the sorted sample list.
+  private val quantileOracleSql: String =
+    """WITH pri AS (
+      |  SELECT DISTINCT event_type,
+      |    ('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 15))::BIGINT
+      |      AS p,
+      |    value
+      |  FROM events WHERE value IS NOT NULL),
+      |samp AS (
+      |  SELECT event_type, p, value FROM (
+      |    SELECT event_type, p, value,
+      |      row_number() OVER (PARTITION BY event_type
+      |                         ORDER BY p, value) AS rn
+      |    FROM pri) t WHERE rn <= 256),
+      |lst AS (
+      |  SELECT event_type, CAST(count(*) AS BIGINT) AS n_sample,
+      |    list(value ORDER BY value) AS vals
+      |  FROM samp GROUP BY 1)
+      |SELECT event_type, n_sample,
+      |  vals[CAST((n_sample - 1) * 50 // 100 AS BIGINT) + 1] AS q50,
+      |  vals[CAST((n_sample - 1) * 90 // 100 AS BIGINT) + 1] AS q90,
+      |  vals[CAST((n_sample - 1) * 99 // 100 AS BIGINT) + 1] AS q99
+      |FROM lst""".stripMargin
 
   val oracles: Map[String, String] = Map(
-    "events_funnel_window" ->
-      s"""WITH e AS (
-        |  SELECT CAST(user_id AS BIGINT) AS user_id, event_type,
-        |    CAST(date_diff('second', TIMESTAMP '1970-01-01',
-        |         CAST(ts AS TIMESTAMP)) AS BIGINT) AS ets
-        |  FROM events),
-        |t1 AS (SELECT user_id, min(ets) AS t1 FROM e
-        |       WHERE event_type = 'view' GROUP BY user_id),
-        |t2 AS (SELECT e.user_id, min(e.ets) AS t2
-        |       FROM e JOIN t1 ON t1.user_id = e.user_id
-        |         AND e.ets >= t1.t1 AND e.ets < t1.t1 + $FunnelWindow
-        |       WHERE e.event_type = 'click' GROUP BY e.user_id),
-        |t3 AS (SELECT e.user_id, min(e.ets) AS t3
-        |       FROM e JOIN t2 ON t2.user_id = e.user_id
-        |         AND e.ets >= t2.t2 AND e.ets < t2.t2 + $FunnelWindow
-        |       WHERE e.event_type = 'purchase' GROUP BY e.user_id)
-        |SELECT u.user_id, t1.t1, t2.t2, t3.t3,
-        |  CAST(CASE WHEN t3.t3 IS NOT NULL THEN 3
-        |            WHEN t2.t2 IS NOT NULL THEN 2
-        |            WHEN t1.t1 IS NOT NULL THEN 1 ELSE 0 END AS BIGINT)
-        |    AS funnel_stage
-        |FROM (SELECT DISTINCT user_id FROM e) u
-        |LEFT JOIN t1 USING (user_id)
-        |LEFT JOIN t2 USING (user_id)
-        |LEFT JOIN t3 USING (user_id)""".stripMargin,
-
-    "events_funnel" ->
-      """WITH e AS (
-        |  SELECT CAST(user_id AS BIGINT) AS user_id, event_type,
-        |    CAST(date_diff('second', TIMESTAMP '1970-01-01',
-        |         CAST(ts AS TIMESTAMP)) AS BIGINT) AS ets
-        |  FROM events),
-        |t1 AS (SELECT user_id, min(ets) AS t1 FROM e
-        |       WHERE event_type = 'view' GROUP BY user_id),
-        |t2 AS (SELECT e.user_id, min(e.ets) AS t2
-        |       FROM e JOIN t1 ON t1.user_id = e.user_id AND e.ets >= t1.t1
-        |       WHERE e.event_type = 'click' GROUP BY e.user_id),
-        |t3 AS (SELECT e.user_id, min(e.ets) AS t3
-        |       FROM e JOIN t2 ON t2.user_id = e.user_id AND e.ets >= t2.t2
-        |       WHERE e.event_type = 'purchase' GROUP BY e.user_id)
-        |SELECT u.user_id, t1.t1, t2.t2, t3.t3,
-        |  CAST(CASE WHEN t3.t3 IS NOT NULL THEN 3
-        |            WHEN t2.t2 IS NOT NULL THEN 2
-        |            WHEN t1.t1 IS NOT NULL THEN 1 ELSE 0 END AS BIGINT)
-        |    AS funnel_stage
-        |FROM (SELECT DISTINCT user_id FROM e) u
-        |LEFT JOIN t1 USING (user_id)
-        |LEFT JOIN t2 USING (user_id)
-        |LEFT JOIN t3 USING (user_id)""".stripMargin,
+    "events_funnel_window" -> funnelOracle(Some(FunnelWindow)),
+    "events_funnel" -> funnelOracle(None),
 
     "events_json" ->
       """SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
@@ -558,20 +601,15 @@ object EventQueries {
         |      SELECT hstart - 3600, event_type, value FROM h)
         |GROUP BY win_start, event_type""".stripMargin,
 
-    "events_decay_score" ->
-      """WITH e AS (
-        |  SELECT CAST(user_id AS BIGINT) AS user_id,
-        |    CAST(date_diff('second', TIMESTAMP '1970-01-01',
-        |         CAST(ts AS TIMESTAMP)) AS BIGINT) AS ets
-        |  FROM events),
-        |r AS (SELECT max(ets) AS ref_ets FROM e),
-        |a AS (SELECT user_id, (ref_ets - ets) // 86400 AS age_days
-        |      FROM e, r)
-        |SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
+    "events_decay_score" -> withCtes(eventsCte(),
+      "r AS (SELECT max(ets) AS ref_ets FROM e)",
+      """a AS (SELECT user_id, (ref_ets - ets) // 86400 AS age_days
+        |      FROM e, r)""".stripMargin)(
+      """SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
         |  CAST(sum(1048576 >> CAST(least(age_days, 40) AS INT)) AS BIGINT)
         |    AS decay_score,
         |  min(age_days) AS last_seen_days
-        |FROM a GROUP BY user_id""".stripMargin,
+        |FROM a GROUP BY user_id""".stripMargin),
 
     "range_join_intervals" -> rangeJoinOracleSql,
 
@@ -579,104 +617,49 @@ object EventQueries {
     // one oracle proves the equivalence
     "range_join_binned" -> rangeJoinOracleSql,
 
-    "events_sessionize" ->
-      """WITH e AS (
-        |  SELECT CAST(user_id AS BIGINT) AS user_id,
-        |    CAST(event_id AS BIGINT) AS event_id,
-        |    CAST(date_diff('second', TIMESTAMP '1970-01-01',
-        |         CAST(ts AS TIMESTAMP)) AS BIGINT) AS ets
-        |  FROM events),
-        |s AS (
-        |  SELECT user_id, event_id, ets,
-        |    CASE WHEN lag(ets) OVER w IS NULL
-        |              OR ets - lag(ets) OVER w > 1800
-        |         THEN 1 ELSE 0 END AS new_s
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ets, event_id)),
-        |s2 AS (
-        |  SELECT user_id, ets,
-        |    CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ets, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |      AS session_no
-        |  FROM s)
-        |SELECT user_id, session_no, CAST(count(*) AS BIGINT) AS n_events,
-        |  min(ets) AS session_start, max(ets) - min(ets) AS duration
-        |FROM s2 GROUP BY user_id, session_no""".stripMargin,
+    "events_sessionize" -> sessionizeOracle,
+    "events_sessionize_stateful" -> sessionizeOracle,
 
     // identical lag-rule replay, session keyed by start instead of
     // ordinal — equality proves session_window's merged intervals
     // reproduce the gap rule
-    "events_sessionize_native" ->
-      """WITH e AS (
-        |  SELECT CAST(user_id AS BIGINT) AS user_id,
-        |    CAST(event_id AS BIGINT) AS event_id,
-        |    CAST(date_diff('second', TIMESTAMP '1970-01-01',
-        |         CAST(ts AS TIMESTAMP)) AS BIGINT) AS ets
-        |  FROM events),
-        |s AS (
-        |  SELECT user_id, event_id, ets,
-        |    CASE WHEN lag(ets) OVER w IS NULL
-        |              OR ets - lag(ets) OVER w > 1800
-        |         THEN 1 ELSE 0 END AS new_s
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ets, event_id)),
-        |s2 AS (
-        |  SELECT user_id, ets,
-        |    CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ets, event_id
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
-        |      AS session_no
-        |  FROM s)
-        |SELECT user_id, min(ets) AS session_start,
+    "events_sessionize_native" -> withCtes(sessionCtes: _*)(
+      """SELECT user_id, min(ets) AS session_start,
         |  CAST(count(*) AS BIGINT) AS n_events,
         |  max(ets) - min(ets) AS duration
-        |FROM s2 GROUP BY user_id, session_no""".stripMargin,
+        |FROM s2 GROUP BY user_id, session_no""".stripMargin),
 
     // same lag chain; the probability division is exact-integer / exact
-    "events_markov" ->
-      """WITH e AS (
-        |  SELECT CAST(user_id AS BIGINT) AS user_id,
-        |    CAST(event_id AS BIGINT) AS event_id, event_type,
-        |    CAST(date_diff('second', TIMESTAMP '1970-01-01',
-        |         CAST(ts AS TIMESTAMP)) AS BIGINT) AS ets
-        |  FROM events),
-        |tr AS (
+    "events_markov" -> withCtes(eventsCte(eventIdCol, "event_type"),
+      """tr AS (
         |  SELECT prev_type, event_type, CAST(count(*) AS BIGINT) AS n
         |  FROM (SELECT event_type,
         |          lag(event_type) OVER (PARTITION BY user_id
         |            ORDER BY ets, event_id) AS prev_type
         |        FROM e)
         |  WHERE prev_type IS NOT NULL
-        |  GROUP BY prev_type, event_type),
-        |tot AS (
+        |  GROUP BY prev_type, event_type)""".stripMargin,
+      """tot AS (
         |  SELECT prev_type, CAST(sum(n) AS BIGINT) AS n_from
-        |  FROM tr GROUP BY prev_type)
-        |SELECT tr.prev_type, tr.event_type, tr.n,
+        |  FROM tr GROUP BY prev_type)""".stripMargin)(
+      """SELECT tr.prev_type, tr.event_type, tr.n,
         |  CAST(tr.n AS DOUBLE) / tot.n_from AS p
-        |FROM tr JOIN tot USING (prev_type)""".stripMargin,
+        |FROM tr JOIN tot USING (prev_type)""".stripMargin),
 
-    "events_cohort" ->
-      """WITH e AS (
-        |  SELECT DISTINCT CAST(user_id AS BIGINT) AS user_id,
-        |    CAST(floor(CAST(date_diff('second', TIMESTAMP '1970-01-01',
-        |         CAST(ts AS TIMESTAMP)) AS BIGINT) / 86400) AS BIGINT) AS day
-        |  FROM events),
-        |cohort AS (
-        |  SELECT user_id, min(day) AS cohort_day FROM e GROUP BY user_id)
-        |SELECT c.cohort_day, e.day - c.cohort_day AS age_days,
+    "events_cohort" -> withCtes(eventDaysCte,
+      """cohort AS (
+        |  SELECT user_id, min(day) AS cohort_day FROM e GROUP BY user_id)""".stripMargin)(
+      """SELECT c.cohort_day, e.day - c.cohort_day AS age_days,
         |  CAST(count(DISTINCT e.user_id) AS BIGINT) AS n_active
         |FROM e JOIN cohort c USING (user_id)
-        |GROUP BY 1, 2""".stripMargin,
+        |GROUP BY 1, 2""".stripMargin),
 
-    "events_rolling_dau" ->
-      """WITH e AS (
-        |  SELECT DISTINCT CAST(user_id AS BIGINT) AS user_id,
-        |    CAST(floor(CAST(date_diff('second', TIMESTAMP '1970-01-01',
-        |         CAST(ts AS TIMESTAMP)) AS BIGINT) / 86400) AS BIGINT) AS day
-        |  FROM events)
-        |SELECT w_day, CAST(count(DISTINCT user_id) AS BIGINT) AS active_7d
+    "events_rolling_dau" -> withCtes(eventDaysCte)(
+      """SELECT w_day, CAST(count(DISTINCT user_id) AS BIGINT) AS active_7d
         |FROM (SELECT user_id, unnest(generate_series(day, day + 6)) AS w_day
         |      FROM e)
         |WHERE w_day <= (SELECT max(day) FROM e)
-        |GROUP BY w_day""".stripMargin,
-
+        |GROUP BY w_day""".stripMargin),
     "ts_gapfill" ->
       """WITH e AS (
         |  SELECT CAST(user_id AS BIGINT) AS user_id,
@@ -700,23 +683,15 @@ object EventQueries {
         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
         |    AS locf_value
         |FROM grid g
-        |LEFT JOIN hourly h ON h.user_id = g.user_id AND h.hr = g.hr""".stripMargin)
+        |LEFT JOIN hourly h ON h.user_id = g.user_id AND h.hr = g.hr""".stripMargin,
 
-  /** The stateful variant shares the window-based oracle verbatim. */
-  val oraclesAll: Map[String, String] = oracles +
-    ("events_sessionize_stateful" -> oracles("events_sessionize")) +
-    ("scd2_intervals" ->
-      """WITH e AS (
-        |  SELECT CAST(user_id AS BIGINT) AS user_id,
-        |    CAST(event_id AS BIGINT) AS event_id, value,
-        |    CAST(date_diff('second', TIMESTAMP '1970-01-01',
-        |         CAST(ts AS TIMESTAMP)) AS BIGINT) AS ets
-        |  FROM events)
-        |SELECT user_id, event_id, value, ets AS valid_from,
+    "scd2_intervals" -> withCtes(eventsCte(eventIdCol, "value"))(
+      """SELECT user_id, event_id, value, ets AS valid_from,
         |  lead(ets) OVER (PARTITION BY user_id
         |                  ORDER BY ets, event_id) AS valid_to
-        |FROM e""".stripMargin) +
-    ("events_anomaly" ->
+        |FROM e""".stripMargin),
+
+    "events_anomaly" ->
       """WITH hourly AS (
         |  SELECT event_type,
         |    (CAST(date_diff('second', TIMESTAMP '1970-01-01',
@@ -731,35 +706,9 @@ object EventQueries {
         |SELECT h.event_type, h.hour_ts, h.x AS n_events,
         |  (st.n * h.x - st.sx) * (st.n * h.x - st.sx)
         |    > 4 * (st.n * st.qx - st.sx * st.sx) AS is_anomaly
-        |FROM hourly h JOIN st USING (event_type)""".stripMargin) +
-    // the exact same deterministic bottom-256 (priority, value) sample
-    // — row_number over (p, value) is DuckDB's way of stating "the k
-    // smallest pairs"; quantiles selected from the sorted sample list.
-    ("events_quantile_sketch" -> quantileOracleSql) +
-    // maintained == recomputed is the incremental contract
-    ("events_quantile_sketch_incremental" -> quantileOracleSql)
+        |FROM hourly h JOIN st USING (event_type)""".stripMargin,
 
-  // lazy: referenced by oraclesAll's initializer above
-  private lazy val quantileOracleSql: String =
-      """WITH pri AS (
-        |  SELECT DISTINCT event_type,
-        |    ('0x' || substr(md5(CAST(event_id AS VARCHAR)), 1, 15))::BIGINT
-        |      AS p,
-        |    value
-        |  FROM events WHERE value IS NOT NULL),
-        |samp AS (
-        |  SELECT event_type, p, value FROM (
-        |    SELECT event_type, p, value,
-        |      row_number() OVER (PARTITION BY event_type
-        |                         ORDER BY p, value) AS rn
-        |    FROM pri) t WHERE rn <= 256),
-        |lst AS (
-        |  SELECT event_type, CAST(count(*) AS BIGINT) AS n_sample,
-        |    list(value ORDER BY value) AS vals
-        |  FROM samp GROUP BY 1)
-        |SELECT event_type, n_sample,
-        |  vals[CAST((n_sample - 1) * 50 // 100 AS BIGINT) + 1] AS q50,
-        |  vals[CAST((n_sample - 1) * 90 // 100 AS BIGINT) + 1] AS q90,
-        |  vals[CAST((n_sample - 1) * 99 // 100 AS BIGINT) + 1] AS q99
-        |FROM lst""".stripMargin
+    "events_quantile_sketch" -> quantileOracleSql,
+    // maintained == recomputed is the incremental contract
+    "events_quantile_sketch_incremental" -> quantileOracleSql)
 }

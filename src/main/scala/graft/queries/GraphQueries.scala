@@ -1174,6 +1174,24 @@ object GraphQueries {
     """wia AS (SELECT DISTINCT tx_id, address
       |        FROM ioa JOIN wtx USING (tx_id) WHERE is_input)""".stripMargin)
 
+  /** Windowed co-spend pairs `cpairs` (txs of at most
+    * [[TriangleMaxFanout]] input addresses; the exact mirror of
+    * cospendPairs(TriangleMaxFanout)) and their triangles `tri` —
+    * shared by graph_triangles and graph_clustering_coeff. */
+  private val triangleCtes: Seq[String] = Seq(
+    ChainSql.tx, ChainSql.io, ChainSql.ioAddr) ++ wiaCtes ++ Seq(
+    s"""wiac AS (SELECT w.tx_id, w.address FROM wia w
+       |         JOIN (SELECT tx_id FROM wia GROUP BY tx_id
+       |               HAVING count(DISTINCT address) <= $TriangleMaxFanout) f
+       |           USING (tx_id))""".stripMargin,
+    """cpairs AS (SELECT DISTINCT x.address AS a, y.address AS b
+      |           FROM wiac x JOIN wiac y USING (tx_id)
+      |           WHERE x.address < y.address)""".stripMargin,
+    """tri AS (SELECT e1.a AS ta, e1.b AS tb, e2.b AS tc
+      |        FROM cpairs e1
+      |        JOIN cpairs e2 ON e2.a = e1.b
+      |        JOIN cpairs e3 ON e3.a = e1.a AND e3.b = e2.b)""".stripMargin)
+
   /** The entity-flow CTE chain (windowed clustering + per-tx src entity +
     * per-output dst entity) — shared by entity_graph / entity_pagerank. */
   private val entityFlowCtes: Seq[String] = Seq(
@@ -1369,20 +1387,7 @@ object GraphQueries {
         |      FROM fedges GROUP BY dst)
         |GROUP BY direction, degree""".stripMargin),
 
-    "graph_triangles" -> withCtes(
-      Seq(ChainSql.tx, ChainSql.io, ChainSql.ioAddr) ++ wiaCtes ++ Seq(
-      // per-tx fanout cap — exact mirror of cospendPairs(TriangleMaxFanout)
-      s"""wiac AS (SELECT w.tx_id, w.address FROM wia w
-         |         JOIN (SELECT tx_id FROM wia GROUP BY tx_id
-         |               HAVING count(DISTINCT address) <= $TriangleMaxFanout) f
-         |           USING (tx_id))""".stripMargin,
-      """cpairs AS (SELECT DISTINCT x.address AS a, y.address AS b
-        |           FROM wiac x JOIN wiac y USING (tx_id)
-        |           WHERE x.address < y.address)""".stripMargin,
-      """tri AS (SELECT e1.a AS ta, e1.b AS tb, e2.b AS tc
-        |        FROM cpairs e1
-        |        JOIN cpairs e2 ON e2.a = e1.b
-        |        JOIN cpairs e3 ON e3.a = e1.a AND e3.b = e2.b)""".stripMargin): _*)(
+    "graph_triangles" -> withCtes(triangleCtes: _*)(
       """SELECT address, CAST(count(*) AS BIGINT) AS n_triangles
         |FROM (SELECT ta AS address FROM tri
         |      UNION ALL SELECT tb FROM tri
@@ -1391,19 +1396,7 @@ object GraphQueries {
 
     // same capped co-spend CTEs; degree from both pair sides, triangle
     // corners left-joined, floor-bps coefficient
-    "graph_clustering_coeff" -> withCtes(
-      Seq(ChainSql.tx, ChainSql.io, ChainSql.ioAddr) ++ wiaCtes ++ Seq(
-      s"""wiac AS (SELECT w.tx_id, w.address FROM wia w
-         |         JOIN (SELECT tx_id FROM wia GROUP BY tx_id
-         |               HAVING count(DISTINCT address) <= $TriangleMaxFanout) f
-         |           USING (tx_id))""".stripMargin,
-      """cpairs AS (SELECT DISTINCT x.address AS a, y.address AS b
-        |           FROM wiac x JOIN wiac y USING (tx_id)
-        |           WHERE x.address < y.address)""".stripMargin,
-      """tri AS (SELECT e1.a AS ta, e1.b AS tb, e2.b AS tc
-        |        FROM cpairs e1
-        |        JOIN cpairs e2 ON e2.a = e1.b
-        |        JOIN cpairs e3 ON e3.a = e1.a AND e3.b = e2.b)""".stripMargin,
+    "graph_clustering_coeff" -> withCtes(triangleCtes ++ Seq(
       """deg AS (SELECT address, CAST(count(*) AS BIGINT) AS degree
         |        FROM (SELECT a AS address FROM cpairs
         |              UNION ALL SELECT b FROM cpairs)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.chain.Chain.table
-import graft.chain.ChainSql.withCtes
+import graft.chain.ChainSql.{ccWalkCte, withCtes, withRecursiveCtes}
 
 /** Multimodal-column plumbing: media payloads as opaque binary columns
   * with typed metadata extracted by a partition-wise decoder.
@@ -374,6 +374,25 @@ object MultimodalQueries {
         |  FROM bands a JOIN bands d
         |    ON a.b = d.b AND a.bv = d.bv AND a.doc_id < d.doc_id)""".stripMargin)
 
+  // the phash pair set walked to components by the recursive min-label
+  // mirror; DISTINCT-over-UNION-ALL for the node set (a plain UNION
+  // CTE under a WITH RECURSIVE header loses dedup semantics)
+  private val phashClustersOracle: String = withRecursiveCtes(
+    phashCtes ++ Seq(
+      """ppairs AS (SELECT doc_a, doc_b FROM cand
+        |           WHERE bit_count(xor(pa, pb)) <= 3)""".stripMargin,
+      """pnodes AS (SELECT DISTINCT node FROM (
+        |  SELECT doc_a AS node FROM ppairs
+        |  UNION ALL SELECT doc_b FROM ppairs))""".stripMargin,
+      "pedges AS (SELECT doc_a AS a, doc_b AS b FROM ppairs)",
+      ccWalkCte("pnodes", "pedges"),
+      """pcc AS (SELECT node, min(comp) AS component
+        |        FROM walk GROUP BY node)""".stripMargin): _*)(
+    """SELECT component AS cluster, CAST(count(*) AS BIGINT) AS n_members,
+      |  min(node) AS keep_doc,
+      |  CAST(count(*) - 1 AS BIGINT) AS n_dropped
+      |FROM pcc GROUP BY component""".stripMargin)
+
   val oracles: Map[String, String] = Map(
     "multimodal_decode" -> withCtes(decodedSql)(
       "SELECT doc_id, width, height, format FROM decoded"),
@@ -472,43 +491,11 @@ object MultimodalQueries {
       """SELECT doc_a, doc_b, CAST(bit_count(xor(pa, pb)) AS BIGINT) AS hamming
         |FROM cand WHERE bit_count(xor(pa, pb)) <= 3""".stripMargin),
 
-    // the same pair set walked to components by the recursive min-label
-    // mirror; DISTINCT-over-UNION-ALL for the node set (a plain UNION
-    // CTE under a WITH RECURSIVE header loses dedup semantics)
-    "multimodal_phash_clusters" -> graft.chain.ChainSql.withRecursiveCtes(
-      phashCtes ++ Seq(
-        """ppairs AS (SELECT doc_a, doc_b FROM cand
-          |           WHERE bit_count(xor(pa, pb)) <= 3)""".stripMargin,
-        """pnodes AS (SELECT DISTINCT node FROM (
-          |  SELECT doc_a AS node FROM ppairs
-          |  UNION ALL SELECT doc_b FROM ppairs))""".stripMargin,
-        """pedges AS (SELECT doc_a AS a, doc_b AS b FROM ppairs)""",
-        graft.chain.ChainSql.ccWalkCte("pnodes", "pedges"),
-        """pcc AS (SELECT node, min(comp) AS component
-          |        FROM walk GROUP BY node)""".stripMargin): _*)(
-      """SELECT component AS cluster, CAST(count(*) AS BIGINT) AS n_members,
-        |  min(node) AS keep_doc,
-        |  CAST(count(*) - 1 AS BIGINT) AS n_dropped
-        |FROM pcc GROUP BY component""".stripMargin),
+    "multimodal_phash_clusters" -> phashClustersOracle,
 
     // maintained clusters must equal the from-scratch clustering — ONE
     // oracle for the batch and incremental forms
-    "multimodal_phash_incremental" -> graft.chain.ChainSql.withRecursiveCtes(
-      phashCtes ++ Seq(
-        """ppairs AS (SELECT doc_a, doc_b FROM cand
-          |           WHERE bit_count(xor(pa, pb)) <= 3)""".stripMargin,
-        """pnodes AS (SELECT DISTINCT node FROM (
-          |  SELECT doc_a AS node FROM ppairs
-          |  UNION ALL SELECT doc_b FROM ppairs))""".stripMargin,
-        """pedges AS (SELECT doc_a AS a, doc_b AS b FROM ppairs)""",
-        graft.chain.ChainSql.ccWalkCte("pnodes", "pedges"),
-        """pcc AS (SELECT node, min(comp) AS component
-          |        FROM walk GROUP BY node)""".stripMargin): _*)(
-      """SELECT component AS cluster, CAST(count(*) AS BIGINT) AS n_members,
-        |  min(node) AS keep_doc,
-        |  CAST(count(*) - 1 AS BIGINT) AS n_dropped
-        |FROM pcc GROUP BY component""".stripMargin),
-
+    "multimodal_phash_incremental" -> phashClustersOracle,
 
     "multimodal_embed_ann" -> withCtes(decodedSql,
       SimilarityQueries.embSql, SimilarityQueries.eeSql,

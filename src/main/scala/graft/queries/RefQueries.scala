@@ -222,17 +222,22 @@ object RefQueries {
       |  SELECT tx_id, tx_id = min(tx_id) OVER (PARTITION BY block_id) AS coinbase
       |  FROM tx)""".stripMargin)
 
-  private val txFlatSqlBody: String =
-    """SELECT t.tx_id_group, t.tx_id, t.tx_hash, t.block_id, t.ts, cb.coinbase,
-      |  CAST(coalesce(s.no_inputs, 0) AS BIGINT) AS no_inputs,
-      |  CAST(coalesce(s.no_outputs, 0) AS BIGINT) AS no_outputs,
-      |  CAST(coalesce(s.total_input, 0) AS BIGINT) AS total_input,
-      |  CAST(coalesce(s.total_output, 0) AS BIGINT) AS total_output,
-      |  (coalesce(s.no_inputs, 0) >= 2 AND coalesce(cj.max_eq, 0) >= 2) AS coinjoin
-      |FROM tx t
+  /** Each tx `t` with its coinbase flag `cb`, io totals `s` and
+    * CoinJoin evidence `cj` ([[txFlatSqlCtes]]). */
+  private val txFlatJoinsSql: String =
+    """FROM tx t
       |JOIN cb USING (tx_id)
       |LEFT JOIN iostats s USING (tx_id)
       |LEFT JOIN cj USING (tx_id)""".stripMargin
+
+  private val txFlatSqlBody: String =
+    s"""SELECT t.tx_id_group, t.tx_id, t.tx_hash, t.block_id, t.ts, cb.coinbase,
+       |  CAST(coalesce(s.no_inputs, 0) AS BIGINT) AS no_inputs,
+       |  CAST(coalesce(s.no_outputs, 0) AS BIGINT) AS no_outputs,
+       |  CAST(coalesce(s.total_input, 0) AS BIGINT) AS total_input,
+       |  CAST(coalesce(s.total_output, 0) AS BIGINT) AS total_output,
+       |  (coalesce(s.no_inputs, 0) >= 2 AND coalesce(cj.max_eq, 0) >= 2) AS coinjoin
+       |$txFlatJoinsSql""".stripMargin
 
   /** The full nested transaction table (schema.cql:21-34): inputs/outputs
     * as ordered arrays of (address, value, address_type) structs, built in
@@ -810,23 +815,66 @@ object RefQueries {
         serializeSide(col("outputs")).as("outputs_s"),
         col("coinjoin"))))
 
+  /** Each input's (tx_id, address) rows, for the entity oracles. */
+  private val inputAddrsSql: String =
+    s"SELECT tx_id, ${ChainSql.ioAddress} FROM io WHERE is_input"
+
+  /** Each received output's `cols` plus its address. */
+  private def outputAddrsSql(cols: String): String =
+    s"SELECT $cols, ${ChainSql.ioAddress} FROM io WHERE NOT is_input"
+
+  /** Multi-input clustering over an `ia` (tx_id, address) input CTE:
+    * every input address links to its tx's least address, and the
+    * recursive walk labels each address with its entity minimum. */
+  private def entityWalkCtes(ia: String): Seq[String] = Seq(ia,
+    "tr AS (SELECT tx_id, min(address) AS root FROM ia GROUP BY tx_id)",
+    """edges AS (SELECT DISTINCT address AS a, root AS b
+      |          FROM ia JOIN tr USING (tx_id) WHERE address <> root)""".stripMargin,
+    "nodes AS (SELECT DISTINCT address AS node FROM ia)",
+    ChainSql.ccWalkCte("nodes", "edges"))
+
   /** Full-chain entity clustering oracle — shared by entity_components
     * and its incremental-maintenance form. */
   private val entityComponentsOracle: String =
-    ChainSql.withRecursiveCtes(ChainSql.io,
-      """ia AS (SELECT DISTINCT tx_id, address FROM (
-        |  SELECT tx_id,
-        |    unnest(CASE WHEN address_type = 6 THEN [base_addr, alt_addr]
-        |                WHEN address_type IN (1, 7, 10) THEN NULL
-        |                ELSE [base_addr] END) AS address
-        |  FROM io WHERE is_input))""".stripMargin,
-      "tr AS (SELECT tx_id, min(address) AS root FROM ia GROUP BY tx_id)",
-      """edges AS (SELECT DISTINCT address AS a, root AS b
-        |          FROM ia JOIN tr USING (tx_id) WHERE address <> root)""".stripMargin,
-      "nodes AS (SELECT DISTINCT address AS node FROM ia)",
-      ChainSql.ccWalkCte("nodes", "edges"))(
+    ChainSql.withRecursiveCtes(ChainSql.io +: entityWalkCtes(
+      s"ia AS (SELECT DISTINCT tx_id, address FROM (\n  $inputAddrsSql))"): _*)(
       """SELECT node AS address, min(comp) AS entity
         |FROM walk GROUP BY node""".stripMargin)
+
+  /** Output value per supplier address, for the nation joins. */
+  private val supplierOutputsSql: String =
+    s"""(${outputAddrsSql("value")}) a
+       |JOIN (SELECT 'a' || CAST(s_suppkey AS VARCHAR) AS address, s_nationkey
+       |      FROM supplier) s USING (address)""".stripMargin
+
+  private val blockTransactionsOracle: String = withCtes(ChainSql.tx)(
+    """SELECT CAST(floor(block_id / 100) AS BIGINT) AS block_id_group, block_id,
+      |  CAST(count(*) AS BIGINT) AS no_txs,
+      |  string_agg(CAST(tx_id AS VARCHAR), ',' ORDER BY tx_id) AS txs
+      |FROM tx GROUP BY block_id""".stripMargin)
+
+  private val prefixLookupOracle: String = withCtes(ChainSql.tx)(
+    "SELECT tx_id, block_id, ts FROM tx WHERE tx_hash = sha256('1')")
+
+  /** Every 97th tx replayed under a shifted id; the highest id per
+    * tx_hash wins. */
+  private val bip30Oracle: String = withCtes(ChainSql.tx)(
+    """SELECT tx_hash, tx_id, tx_id >= 10000000 AS was_duplicated FROM (
+      |  SELECT tx_hash, tx_id,
+      |    row_number() OVER (PARTITION BY tx_hash ORDER BY tx_id DESC) AS rn
+      |  FROM (SELECT tx_hash, tx_id FROM tx
+      |        UNION ALL
+      |        SELECT tx_hash, tx_id + 10000000 FROM tx WHERE tx_id % 97 = 0))
+      |WHERE rn = 1""".stripMargin)
+
+  /** The last rate at or before each block (every third rate kept). */
+  private val rateAsofOracle: String =
+    withCtes(ChainSql.tx, ChainSql.blk, ChainSql.rates)(
+      """SELECT b.block_id, p.usdx16 AS asof_usdx16,
+        |  CAST(p.usdx16 AS DOUBLE) / 16.0 AS asof_usd
+        |FROM blk b
+        |ASOF LEFT JOIN (SELECT block_id, usdx16 FROM rates WHERE usdx16 % 3 = 0) p
+        |  ON p.block_id <= b.block_id""".stripMargin)
 
   val oracles: Map[String, String] = Map(
     "block_table" -> withCtes(ChainSql.tx, ChainSql.blk)(
@@ -841,20 +889,10 @@ object RefQueries {
       s"""SELECT substr(tx_hash, 1, $PrefixLen) AS tx_prefix,
          |  lower(hex(unhex(tx_hash))) AS tx_hash, tx_id FROM tx""".stripMargin),
 
-    "prefix_lookup_bin" -> withCtes(ChainSql.tx)(
-      "SELECT tx_id, block_id, ts FROM tx WHERE tx_hash = sha256('1')"),
+    "prefix_lookup_bin" -> prefixLookupOracle,
 
-    "block_transactions" -> withCtes(ChainSql.tx)(
-      """SELECT CAST(floor(block_id / 100) AS BIGINT) AS block_id_group, block_id,
-        |  CAST(count(*) AS BIGINT) AS no_txs,
-        |  string_agg(CAST(tx_id AS VARCHAR), ',' ORDER BY tx_id) AS txs
-        |FROM tx GROUP BY block_id""".stripMargin),
-
-    "block_transactions_agg" -> withCtes(ChainSql.tx)(
-      """SELECT CAST(floor(block_id / 100) AS BIGINT) AS block_id_group, block_id,
-        |  CAST(count(*) AS BIGINT) AS no_txs,
-        |  string_agg(CAST(tx_id AS VARCHAR), ',' ORDER BY tx_id) AS txs
-        |FROM tx GROUP BY block_id""".stripMargin),
+    "block_transactions" -> blockTransactionsOracle,
+    "block_transactions_agg" -> blockTransactionsOracle,
 
     "block_transactions_table_check" -> withCtes(
       ChainSql.tx, ChainSql.io, ChainSql.ioStats)(
@@ -907,26 +945,10 @@ object RefQueries {
         |  FROM blk) WHERE rn = 1
         |ORDER BY block_id DESC LIMIT 1""".stripMargin),
 
-    "bip30_dedup" -> withCtes(ChainSql.tx)(
-      """SELECT tx_hash, tx_id, tx_id >= 10000000 AS was_duplicated FROM (
-        |  SELECT tx_hash, tx_id,
-        |    row_number() OVER (PARTITION BY tx_hash ORDER BY tx_id DESC) AS rn
-        |  FROM (SELECT tx_hash, tx_id FROM tx
-        |        UNION ALL
-        |        SELECT tx_hash, tx_id + 10000000 FROM tx WHERE tx_id % 97 = 0))
-        |WHERE rn = 1""".stripMargin),
+    "bip30_dedup" -> bip30Oracle,
+    "bip30_dedup_agg" -> bip30Oracle,
 
-    "bip30_dedup_agg" -> withCtes(ChainSql.tx)(
-      """SELECT tx_hash, tx_id, tx_id >= 10000000 AS was_duplicated FROM (
-        |  SELECT tx_hash, tx_id,
-        |    row_number() OVER (PARTITION BY tx_hash ORDER BY tx_id DESC) AS rn
-        |  FROM (SELECT tx_hash, tx_id FROM tx
-        |        UNION ALL
-        |        SELECT tx_hash, tx_id + 10000000 FROM tx WHERE tx_id % 97 = 0))
-        |WHERE rn = 1""".stripMargin),
-
-    "prefix_lookup" -> withCtes(ChainSql.tx)(
-      "SELECT tx_id, block_id, ts FROM tx WHERE tx_hash = sha256('1')"),
+    "prefix_lookup" -> prefixLookupOracle,
 
     "rate_join" -> withCtes(ChainSql.tx, ChainSql.io, ChainSql.ioStats,
       ChainSql.rates)(
@@ -938,12 +960,7 @@ object RefQueries {
         |JOIN rates r USING (block_id)
         |GROUP BY r.d""".stripMargin),
 
-    "rate_asof" -> withCtes(ChainSql.tx, ChainSql.blk, ChainSql.rates)(
-      """SELECT b.block_id, p.usdx16 AS asof_usdx16,
-        |  CAST(p.usdx16 AS DOUBLE) / 16.0 AS asof_usd
-        |FROM blk b
-        |ASOF LEFT JOIN (SELECT block_id, usdx16 FROM rates WHERE usdx16 % 3 = 0) p
-        |  ON p.block_id <= b.block_id""".stripMargin),
+    "rate_asof" -> rateAsofOracle,
 
     "rate_asof_forward" -> withCtes(ChainSql.tx, ChainSql.blk, ChainSql.rates)(
       """SELECT b.block_id, p.usdx16 AS next_usdx16,
@@ -952,12 +969,7 @@ object RefQueries {
         |ASOF LEFT JOIN (SELECT block_id, usdx16 FROM rates WHERE usdx16 % 3 = 0) p
         |  ON b.block_id <= p.block_id""".stripMargin),
 
-    "rate_asof_custom" -> withCtes(ChainSql.tx, ChainSql.blk, ChainSql.rates)(
-      """SELECT b.block_id, p.usdx16 AS asof_usdx16,
-        |  CAST(p.usdx16 AS DOUBLE) / 16.0 AS asof_usd
-        |FROM blk b
-        |ASOF LEFT JOIN (SELECT block_id, usdx16 FROM rates WHERE usdx16 % 3 = 0) p
-        |  ON p.block_id <= b.block_id""".stripMargin),
+    "rate_asof_custom" -> rateAsofOracle,
 
     "rate_asof_fact" -> withCtes(ChainSql.tx, ChainSql.rates)(
       """SELECT t.tx_id, t.block_id, p.usdx16 AS asof_usdx16
@@ -975,60 +987,38 @@ object RefQueries {
         |GROUP BY currency""".stripMargin),
 
     "io_address" -> withCtes(ChainSql.io)(
-      """SELECT address, CAST(count(*) AS BIGINT) AS n_utxos,
-        |  CAST(sum(value) AS BIGINT) AS total_value,
-        |  CAST(count(DISTINCT tx_id) AS BIGINT) AS n_txs
-        |FROM (SELECT tx_id, value,
-        |        unnest(CASE WHEN address_type = 6 THEN [base_addr, alt_addr]
-        |                    WHEN address_type IN (1, 7, 10) THEN NULL
-        |                    ELSE [base_addr] END) AS address
-        |      FROM io WHERE NOT is_input)
-        |GROUP BY address""".stripMargin),
+      s"""SELECT address, CAST(count(*) AS BIGINT) AS n_utxos,
+         |  CAST(sum(value) AS BIGINT) AS total_value,
+         |  CAST(count(DISTINCT tx_id) AS BIGINT) AS n_txs
+         |FROM (${outputAddrsSql("tx_id, value")})
+         |GROUP BY address""".stripMargin),
 
     "entity_components" -> entityComponentsOracle,
 
     // maintained labels must equal the from-scratch clustering
     "entity_components_incremental" -> entityComponentsOracle,
 
-    "entity_summary" -> ChainSql.withRecursiveCtes(ChainSql.tx, ChainSql.io,
-      s"""ia AS (SELECT DISTINCT i.tx_id, address FROM (
-         |  SELECT tx_id,
-         |    unnest(CASE WHEN address_type = 6 THEN [base_addr, alt_addr]
-         |                WHEN address_type IN (1, 7, 10) THEN NULL
-         |                ELSE [base_addr] END) AS address
-         |  FROM io WHERE is_input) i
-         |  JOIN tx ON tx.tx_id = i.tx_id AND tx.block_id < $EntityWindow)""".stripMargin,
-      "tr AS (SELECT tx_id, min(address) AS root FROM ia GROUP BY tx_id)",
-      """edges AS (SELECT DISTINCT address AS a, root AS b
-        |          FROM ia JOIN tr USING (tx_id) WHERE address <> root)""".stripMargin,
-      "nodes AS (SELECT DISTINCT address AS node FROM ia)",
-      ChainSql.ccWalkCte("nodes", "edges"),
+    "entity_summary" -> ChainSql.withRecursiveCtes(Seq(ChainSql.tx, ChainSql.io) ++
+      entityWalkCtes(
+        s"""ia AS (SELECT DISTINCT i.tx_id, address FROM (
+           |  $inputAddrsSql) i
+           |  JOIN tx ON tx.tx_id = i.tx_id AND tx.block_id < $EntityWindow)""".stripMargin) ++ Seq(
       """cc AS (SELECT node AS address, min(comp) AS entity
         |       FROM walk GROUP BY node)""".stripMargin,
-      """recv AS (SELECT address, CAST(sum(value) AS BIGINT) AS recv FROM (
-        |  SELECT value,
-        |    unnest(CASE WHEN address_type = 6 THEN [base_addr, alt_addr]
-        |                WHEN address_type IN (1, 7, 10) THEN NULL
-        |                ELSE [base_addr] END) AS address
-        |  FROM io WHERE NOT is_input)
-        |  GROUP BY address)""".stripMargin)(
+      s"""recv AS (SELECT address, CAST(sum(value) AS BIGINT) AS recv FROM (
+         |  ${outputAddrsSql("value")})
+         |  GROUP BY address)""".stripMargin): _*)(
       """SELECT entity, CAST(count(*) AS BIGINT) AS n_addresses,
         |  CAST(sum(coalesce(recv, 0)) AS BIGINT) AS total_received
         |FROM cc LEFT JOIN recv USING (address)
         |GROUP BY entity""".stripMargin),
 
     "address_entity_join" -> withCtes(ChainSql.io)(
-      """SELECT n_name, CAST(count(*) AS BIGINT) AS n_utxos,
-        |  CAST(sum(value) AS BIGINT) AS total_value
-        |FROM (SELECT value,
-        |        unnest(CASE WHEN address_type = 6 THEN [base_addr, alt_addr]
-        |                    WHEN address_type IN (1, 7, 10) THEN NULL
-        |                    ELSE [base_addr] END) AS address
-        |      FROM io WHERE NOT is_input) a
-        |JOIN (SELECT 'a' || CAST(s_suppkey AS VARCHAR) AS address, s_nationkey
-        |      FROM supplier) s USING (address)
-        |JOIN nation ON s_nationkey = n_nationkey
-        |GROUP BY n_name""".stripMargin),
+      s"""SELECT n_name, CAST(count(*) AS BIGINT) AS n_utxos,
+         |  CAST(sum(value) AS BIGINT) AS total_value
+         |FROM $supplierOutputsSql
+         |JOIN nation ON s_nationkey = n_nationkey
+         |GROUP BY n_name""".stripMargin),
 
     "sql_surface" -> withCtes(ChainSql.tx, ChainSql.blk)(
       """SELECT b.block_id, b.no_transactions,
@@ -1072,16 +1062,10 @@ object RefQueries {
         |FROM io GROUP BY address_type""".stripMargin),
 
     "skew_salted_join" -> withCtes(ChainSql.io)(
-      """SELECT s_nationkey, CAST(count(*) AS BIGINT) AS n,
-        |  CAST(sum(value) AS BIGINT) AS total_value
-        |FROM (SELECT value,
-        |        unnest(CASE WHEN address_type = 6 THEN [base_addr, alt_addr]
-        |                    WHEN address_type IN (1, 7, 10) THEN NULL
-        |                    ELSE [base_addr] END) AS address
-        |      FROM io WHERE NOT is_input) a
-        |JOIN (SELECT 'a' || CAST(s_suppkey AS VARCHAR) AS address, s_nationkey
-        |      FROM supplier) s USING (address)
-        |GROUP BY s_nationkey""".stripMargin),
+      s"""SELECT s_nationkey, CAST(count(*) AS BIGINT) AS n,
+         |  CAST(sum(value) AS BIGINT) AS total_value
+         |FROM $supplierOutputsSql
+         |GROUP BY s_nationkey""".stripMargin),
 
     "continue_watermark" -> withCtes(ChainSql.tx, ChainSql.blk)(
       """SELECT CAST(count(*) AS BIGINT) AS n_new_blocks,
@@ -1129,9 +1113,6 @@ object RefQueries {
          |  coalesce(sd.ins, '') AS $inAlias,
          |  coalesce(sd.outs, '') AS $outAlias,
          |  (coalesce(s.no_inputs, 0) >= 2 AND coalesce(cj.max_eq, 0) >= 2) AS coinjoin
-         |FROM tx t
-         |JOIN cb USING (tx_id)
-         |LEFT JOIN iostats s USING (tx_id)
-         |LEFT JOIN cj USING (tx_id)
+         |$txFlatJoinsSql
          |LEFT JOIN sides sd USING (tx_id)""".stripMargin)
 }

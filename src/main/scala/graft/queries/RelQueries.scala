@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.expressions.Window
 
 import graft.chain.Chain.table
+import graft.chain.ChainSql.withCtes
 
 /** General relational coverage the engine inherits from Spark (SURVEY.md
   * §2.4 note: grouping sets / rollup / distinct-agg are free) exercised on
@@ -813,77 +814,123 @@ object RelQueries {
     s"((bx // ${1L << i}) % 2) * ${1L << (2 * i + 1)} + " +
       s"((bv // ${1L << i}) % 2) * ${1L << (2 * i)}").mkString(" + ")
 
-  val oracles: Map[String, String] = Map(
-    "layout_zorder" ->
-      s"""WITH st AS (
-         |  SELECT CAST(min(l_partkey) AS BIGINT) AS xmin,
-         |         CAST(max(l_partkey) AS BIGINT) AS xmax,
-         |         CAST(min(l_suppkey) AS BIGINT) AS ymin,
-         |         CAST(max(l_suppkey) AS BIGINT) AS ymax
-         |  FROM lineitem),
-         |b AS (
-         |  SELECT CAST(l_partkey AS BIGINT) AS x,
-         |         CAST(l_suppkey AS BIGINT) AS y,
-         |         ((CAST(l_partkey AS BIGINT) - xmin) * 32)
-         |           // (xmax - xmin + 1) AS bx,
-         |         ((CAST(l_suppkey AS BIGINT) - ymin) * 32)
-         |           // (ymax - ymin + 1) AS bv
-         |  FROM lineitem, st),
-         |z AS (SELECT x, y, bx, ($zTermsSql) AS zv FROM b)
-         |SELECT 'zorder' AS layout, CAST(zv // 32 AS BIGINT) AS shard,
-         |  CAST(count(*) AS BIGINT) AS n_rows,
-         |  min(x) AS min_x, max(x) AS max_x,
-         |  min(y) AS min_y, max(y) AS max_y
-         |FROM z GROUP BY zv // 32
-         |UNION ALL
-         |SELECT 'linear', CAST(bx AS BIGINT), CAST(count(*) AS BIGINT),
-         |  min(x), max(x), min(y), max(y)
-         |FROM b GROUP BY bx""".stripMargin,
+  /** The (l_partkey, l_suppkey) bounds of lineitem, for the z-order
+    * oracles. */
+  private val zBoundsSql: String =
+    """st AS (
+      |  SELECT CAST(min(l_partkey) AS BIGINT) AS xmin,
+      |         CAST(max(l_partkey) AS BIGINT) AS xmax,
+      |         CAST(min(l_suppkey) AS BIGINT) AS ymin,
+      |         CAST(max(l_suppkey) AS BIGINT) AS ymax
+      |  FROM lineitem)""".stripMargin
 
-    "layout_zorder_probe" ->
-      s"""WITH st AS (
-         |  SELECT CAST(min(l_partkey) AS BIGINT) AS xmin,
-         |         CAST(max(l_partkey) AS BIGINT) AS xmax,
-         |         CAST(min(l_suppkey) AS BIGINT) AS ymin,
-         |         CAST(max(l_suppkey) AS BIGINT) AS ymax
-         |  FROM lineitem),
-         |box AS (
-         |  SELECT *, xmin + (xmax - xmin + 1) // 4 AS xlo,
-         |         xmin + (xmax - xmin + 1) // 2 AS xhi,
-         |         ymin + (ymax - ymin + 1) // 4 AS ylo,
-         |         ymin + (ymax - ymin + 1) // 2 AS yhi
-         |  FROM st),
-         |b AS (
-         |  SELECT CAST(l_partkey AS BIGINT) AS x,
-         |         CAST(l_suppkey AS BIGINT) AS y,
-         |         ((CAST(l_partkey AS BIGINT) - xmin) * 32)
-         |           // (xmax - xmin + 1) AS bx,
-         |         ((CAST(l_suppkey AS BIGINT) - ymin) * 32)
-         |           // (ymax - ymin + 1) AS bv
-         |  FROM lineitem, box),
-         |z AS (SELECT x, y, bx, ($zTermsSql) AS zv FROM b),
-         |shards AS (
-         |  SELECT 'zorder' AS layout, zv // 32 AS shard,
-         |         count(*) AS n_rows, min(x) AS min_x, max(x) AS max_x,
-         |         min(y) AS min_y, max(y) AS max_y
-         |  FROM z GROUP BY zv // 32
-         |  UNION ALL
-         |  SELECT 'linear', bx, count(*), min(x), max(x), min(y), max(y)
-         |  FROM b GROUP BY bx),
-         |m AS (
-         |  SELECT CAST(count(*) AS BIGINT) AS rows_matched
-         |  FROM b, box
-         |  WHERE x BETWEEN xlo AND xhi AND y BETWEEN ylo AND yhi)
-         |SELECT layout, CAST(count(*) AS BIGINT) AS shards_total,
-         |  CAST(sum(CASE WHEN NOT (max_x < xlo OR min_x > xhi
-         |                       OR max_y < ylo OR min_y > yhi)
-         |           THEN 1 ELSE 0 END) AS BIGINT) AS shards_read,
-         |  CAST(sum(CASE WHEN NOT (max_x < xlo OR min_x > xhi
-         |                       OR max_y < ylo OR min_y > yhi)
-         |           THEN n_rows ELSE 0 END) AS BIGINT) AS rows_scanned,
-         |  rows_matched
-         |FROM shards, box, m
-         |GROUP BY layout, rows_matched""".stripMargin,
+  /** Each lineitem's 32×32 grid cell (bx, bv) over a CTE holding the
+    * bounds, and its z-value zv. */
+  private def zCellsSql(bounds: String): Seq[String] = Seq(
+    s"""b AS (
+       |  SELECT CAST(l_partkey AS BIGINT) AS x,
+       |         CAST(l_suppkey AS BIGINT) AS y,
+       |         ((CAST(l_partkey AS BIGINT) - xmin) * 32)
+       |           // (xmax - xmin + 1) AS bx,
+       |         ((CAST(l_suppkey AS BIGINT) - ymin) * 32)
+       |           // (ymax - ymin + 1) AS bv
+       |  FROM lineitem, $bounds)""".stripMargin,
+    s"z AS (SELECT x, y, bx, ($zTermsSql) AS zv FROM b)")
+
+  /** Order count and total price per (status, priority) grouping set
+    * of a ROLLUP or CUBE. */
+  private def groupingSetsSql(kind: String): String =
+    s"""SELECT o_orderstatus, o_orderpriority,
+       |  CAST(count(*) AS BIGINT) AS n_orders,
+       |  CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS total_price
+       |FROM orders
+       |GROUP BY $kind (o_orderstatus, o_orderpriority)""".stripMargin
+
+  /** CDC base `b`: each order's key, price and status, and the md5
+    * bucket hb (0-9) that picks its change. */
+  private val cdcBaseSql: String =
+    """b AS (
+      |  SELECT CAST(o_orderkey AS BIGINT) AS k,
+      |         CAST(o_totalprice AS DECIMAL(12,2)) AS price,
+      |         o_orderstatus AS status,
+      |         ('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 10))::BIGINT
+      |           % 10 AS hb
+      |  FROM orders)""".stripMargin
+
+  /** [[cdcBaseSql]], its change set `ch` (hb 0 updated, 1 deleted, 2
+    * inserted under a shifted key) and the merged table `m`, whose value
+    * columns are `<pre>price` and `<pre>status`. */
+  private def cdcMergeSql(pre: String): Seq[String] = Seq(cdcBaseSql,
+    """ch AS (
+      |  SELECT k, 'U' AS op, CAST(price + 100 AS DECIMAL(12,2)) AS new_price,
+      |         status AS new_status
+      |  FROM b WHERE hb = 0
+      |  UNION ALL
+      |  SELECT k, 'D', CAST(NULL AS DECIMAL(12,2)), CAST(NULL AS VARCHAR)
+      |  FROM b WHERE hb = 1
+      |  UNION ALL
+      |  SELECT k + 20000000, 'I', price, 'N' FROM b WHERE hb = 2)""".stripMargin,
+    s"""m AS (
+       |  SELECT coalesce(c.k, b.k) AS k,
+       |    CASE WHEN c.op IS NOT NULL THEN c.new_price ELSE b.price END
+       |      AS ${pre}price,
+       |    CASE WHEN c.op IS NOT NULL THEN c.new_status ELSE b.status END
+       |      AS ${pre}status
+       |  FROM b FULL OUTER JOIN ch c ON b.k = c.k
+       |  WHERE c.op IS NULL OR c.op != 'D')""".stripMargin)
+
+  /** Per hb group of (k, price, status) rows: row count, key sum and an
+    * order-independent md5 fingerprint. */
+  private def cdcChecksumSql(hb: String, table: String): String =
+    s"""SELECT $hb,
+       |  CAST(count(*) AS BIGINT) AS n_rows,
+       |  CAST(sum(k) AS BIGINT) AS sum_key,
+       |  CAST(bit_xor(('0x' || substr(md5(
+       |      CAST(k AS VARCHAR) || '|' || CAST(price AS VARCHAR) || '|' ||
+       |      status), 1, 15))::BIGINT) AS BIGINT) AS fingerprint
+       |FROM $table GROUP BY 1""".stripMargin
+
+  val oracles: Map[String, String] = Map(
+    "layout_zorder" -> withCtes(zBoundsSql +: zCellsSql("st"): _*)(
+      """SELECT 'zorder' AS layout, CAST(zv // 32 AS BIGINT) AS shard,
+        |  CAST(count(*) AS BIGINT) AS n_rows,
+        |  min(x) AS min_x, max(x) AS max_x,
+        |  min(y) AS min_y, max(y) AS max_y
+        |FROM z GROUP BY zv // 32
+        |UNION ALL
+        |SELECT 'linear', CAST(bx AS BIGINT), CAST(count(*) AS BIGINT),
+        |  min(x), max(x), min(y), max(y)
+        |FROM b GROUP BY bx""".stripMargin),
+
+    "layout_zorder_probe" -> withCtes(Seq(zBoundsSql,
+      """box AS (
+        |  SELECT *, xmin + (xmax - xmin + 1) // 4 AS xlo,
+        |         xmin + (xmax - xmin + 1) // 2 AS xhi,
+        |         ymin + (ymax - ymin + 1) // 4 AS ylo,
+        |         ymin + (ymax - ymin + 1) // 2 AS yhi
+        |  FROM st)""".stripMargin) ++ zCellsSql("box") ++ Seq(
+      """shards AS (
+        |  SELECT 'zorder' AS layout, zv // 32 AS shard,
+        |         count(*) AS n_rows, min(x) AS min_x, max(x) AS max_x,
+        |         min(y) AS min_y, max(y) AS max_y
+        |  FROM z GROUP BY zv // 32
+        |  UNION ALL
+        |  SELECT 'linear', bx, count(*), min(x), max(x), min(y), max(y)
+        |  FROM b GROUP BY bx)""".stripMargin,
+      """m AS (
+        |  SELECT CAST(count(*) AS BIGINT) AS rows_matched
+        |  FROM b, box
+        |  WHERE x BETWEEN xlo AND xhi AND y BETWEEN ylo AND yhi)""".stripMargin): _*)(
+      """SELECT layout, CAST(count(*) AS BIGINT) AS shards_total,
+        |  CAST(sum(CASE WHEN NOT (max_x < xlo OR min_x > xhi
+        |                       OR max_y < ylo OR min_y > yhi)
+        |           THEN 1 ELSE 0 END) AS BIGINT) AS shards_read,
+        |  CAST(sum(CASE WHEN NOT (max_x < xlo OR min_x > xhi
+        |                       OR max_y < ylo OR min_y > yhi)
+        |           THEN n_rows ELSE 0 END) AS BIGINT) AS rows_scanned,
+        |  rows_matched
+        |FROM shards, box, m
+        |GROUP BY layout, rows_matched""".stripMargin),
 
     "record_linkage" ->
       """WITH cd AS (SELECT CAST(c_custkey AS BIGINT) AS cust_id,
@@ -974,19 +1021,8 @@ object RelQueries {
         |    ON o.o_orderkey = n.o_orderkey)
         |GROUP BY status""".stripMargin,
 
-    "rollup_orders" ->
-      """SELECT o_orderstatus, o_orderpriority,
-        |  CAST(count(*) AS BIGINT) AS n_orders,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS total_price
-        |FROM orders
-        |GROUP BY ROLLUP (o_orderstatus, o_orderpriority)""".stripMargin,
-
-    "cube_orders" ->
-      """SELECT o_orderstatus, o_orderpriority,
-        |  CAST(count(*) AS BIGINT) AS n_orders,
-        |  CAST(sum(CAST(o_totalprice AS DECIMAL(12,2))) AS DOUBLE) AS total_price
-        |FROM orders
-        |GROUP BY CUBE (o_orderstatus, o_orderpriority)""".stripMargin,
+    "rollup_orders" -> groupingSetsSql("ROLLUP"),
+    "cube_orders" -> groupingSetsSql("CUBE"),
 
     "distinct_aggs" ->
       """SELECT l_returnflag,
@@ -1221,75 +1257,14 @@ object RelQueries {
       |SELECT 'orders_pk_unique', dups, dups = 0 FROM du
       |UNION ALL
       |SELECT 'lineitem_fk_orders', orphans, orphans = 0 FROM orp""".stripMargin
-  ) + ("cdc_merge" ->
-    """WITH b AS (
-      |  SELECT CAST(o_orderkey AS BIGINT) AS k,
-      |         CAST(o_totalprice AS DECIMAL(12,2)) AS price,
-      |         o_orderstatus AS status,
-      |         ('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 10))::BIGINT
-      |           % 10 AS hb
-      |  FROM orders),
-      |ch AS (
-      |  SELECT k, 'U' AS op, CAST(price + 100 AS DECIMAL(12,2)) AS new_price,
-      |         status AS new_status
-      |  FROM b WHERE hb = 0
-      |  UNION ALL
-      |  SELECT k, 'D', CAST(NULL AS DECIMAL(12,2)), CAST(NULL AS VARCHAR)
-      |  FROM b WHERE hb = 1
-      |  UNION ALL
-      |  SELECT k + 20000000, 'I', price, 'N' FROM b WHERE hb = 2),
-      |m AS (
-      |  SELECT coalesce(c.k, b.k) AS k,
-      |    CASE WHEN c.op IS NOT NULL THEN c.new_price ELSE b.price END
-      |      AS m_price,
-      |    CASE WHEN c.op IS NOT NULL THEN c.new_status ELSE b.status END
-      |      AS m_status
-      |  FROM b FULL OUTER JOIN ch c ON b.k = c.k
-      |  WHERE c.op IS NULL OR c.op != 'D')
-      |SELECT m_status, CAST(count(*) AS BIGINT) AS n_rows,
+  ) + ("cdc_merge" -> withCtes(cdcMergeSql("m_"): _*)(
+    """SELECT m_status, CAST(count(*) AS BIGINT) AS n_rows,
       |  CAST(sum(k) AS BIGINT) AS sum_key,
       |  CAST(sum(m_price) AS DOUBLE) AS sum_price
-      |FROM m GROUP BY 1""".stripMargin
-  ) + ("store_checksum" ->
-    """WITH b AS (
-      |  SELECT CAST(o_orderkey AS BIGINT) AS k,
-      |         CAST(o_totalprice AS DECIMAL(12,2)) AS price,
-      |         o_orderstatus AS status,
-      |         ('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 10))::BIGINT
-      |           % 10 AS hb
-      |  FROM orders)
-      |SELECT hb, CAST(count(*) AS BIGINT) AS n_rows,
-      |  CAST(sum(k) AS BIGINT) AS sum_key,
-      |  CAST(bit_xor(('0x' || substr(md5(
-      |      CAST(k AS VARCHAR) || '|' || CAST(price AS VARCHAR) || '|' ||
-      |      status), 1, 15))::BIGINT) AS BIGINT) AS fingerprint
-      |FROM b GROUP BY 1""".stripMargin
-  ) + ("store_snapshot_diff" ->
-    """WITH b AS (
-      |  SELECT CAST(o_orderkey AS BIGINT) AS k,
-      |         CAST(o_totalprice AS DECIMAL(12,2)) AS price,
-      |         o_orderstatus AS status,
-      |         ('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 10))::BIGINT
-      |           % 10 AS hb
-      |  FROM orders),
-      |ch AS (
-      |  SELECT k, 'U' AS op, CAST(price + 100 AS DECIMAL(12,2)) AS new_price,
-      |         status AS new_status
-      |  FROM b WHERE hb = 0
-      |  UNION ALL
-      |  SELECT k, 'D', CAST(NULL AS DECIMAL(12,2)), CAST(NULL AS VARCHAR)
-      |  FROM b WHERE hb = 1
-      |  UNION ALL
-      |  SELECT k + 20000000, 'I', price, 'N' FROM b WHERE hb = 2),
-      |m AS (
-      |  SELECT coalesce(c.k, b.k) AS k,
-      |    CASE WHEN c.op IS NOT NULL THEN c.new_price ELSE b.price END
-      |      AS price,
-      |    CASE WHEN c.op IS NOT NULL THEN c.new_status ELSE b.status END
-      |      AS status
-      |  FROM b FULL OUTER JOIN ch c ON b.k = c.k
-      |  WHERE c.op IS NULL OR c.op != 'D')
-      |SELECT coalesce(o.k, n.k) AS k,
+      |FROM m GROUP BY 1""".stripMargin)
+  ) + ("store_checksum" -> withCtes(cdcBaseSql)(cdcChecksumSql("hb", "b"))
+  ) + ("store_snapshot_diff" -> withCtes(cdcMergeSql(""): _*)(
+    """SELECT coalesce(o.k, n.k) AS k,
       |  CASE WHEN o.k IS NULL THEN 'I' WHEN n.k IS NULL THEN 'D'
       |    ELSE 'U' END AS op,
       |  CAST(o.price AS DOUBLE) AS old_price,
@@ -1298,38 +1273,9 @@ object RelQueries {
       |FROM b o FULL OUTER JOIN m n ON o.k = n.k
       |WHERE o.k IS NULL OR n.k IS NULL
       |   OR o.price IS DISTINCT FROM n.price
-      |   OR o.status IS DISTINCT FROM n.status""".stripMargin
-  ) + ("store_checksum_incremental" ->
-    """WITH b AS (
-      |  SELECT CAST(o_orderkey AS BIGINT) AS k,
-      |         CAST(o_totalprice AS DECIMAL(12,2)) AS price,
-      |         o_orderstatus AS status,
-      |         ('0x' || substr(md5(CAST(o_orderkey AS VARCHAR)), 1, 10))::BIGINT
-      |           % 10 AS hb
-      |  FROM orders),
-      |ch AS (
-      |  SELECT k, 'U' AS op, CAST(price + 100 AS DECIMAL(12,2)) AS new_price,
-      |         status AS new_status
-      |  FROM b WHERE hb = 0
-      |  UNION ALL
-      |  SELECT k, 'D', CAST(NULL AS DECIMAL(12,2)), CAST(NULL AS VARCHAR)
-      |  FROM b WHERE hb = 1
-      |  UNION ALL
-      |  SELECT k + 20000000, 'I', price, 'N' FROM b WHERE hb = 2),
-      |m AS (
-      |  SELECT coalesce(c.k, b.k) AS k,
-      |    CASE WHEN c.op IS NOT NULL THEN c.new_price ELSE b.price END
-      |      AS price,
-      |    CASE WHEN c.op IS NOT NULL THEN c.new_status ELSE b.status END
-      |      AS status
-      |  FROM b FULL OUTER JOIN ch c ON b.k = c.k
-      |  WHERE c.op IS NULL OR c.op != 'D')
-      |SELECT ('0x' || substr(md5(CAST(k AS VARCHAR)), 1, 10))::BIGINT % 10
-      |    AS hb,
-      |  CAST(count(*) AS BIGINT) AS n_rows,
-      |  CAST(sum(k) AS BIGINT) AS sum_key,
-      |  CAST(bit_xor(('0x' || substr(md5(
-      |      CAST(k AS VARCHAR) || '|' || CAST(price AS VARCHAR) || '|' ||
-      |      status), 1, 15))::BIGINT) AS BIGINT) AS fingerprint
-      |FROM m GROUP BY 1""".stripMargin)
+      |   OR o.status IS DISTINCT FROM n.status""".stripMargin)
+  ) + ("store_checksum_incremental" -> withCtes(cdcMergeSql(""): _*)(
+    cdcChecksumSql(
+      """('0x' || substr(md5(CAST(k AS VARCHAR)), 1, 10))::BIGINT % 10
+        |    AS hb""".stripMargin, "m")))
 }

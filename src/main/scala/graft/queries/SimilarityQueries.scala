@@ -677,10 +677,25 @@ object SimilarityQueries {
       |         list_transform(embedding, x -> CAST(floor(x * 1000) AS BIGINT)) AS q
       |  FROM embeddings)""".stripMargin
 
-  private[queries] val eeSql: String =
-    """ee AS (
-      |  SELECT vec_id, unnest(q) AS v, generate_subscripts(q, 1) AS i
-      |  FROM emb)""".stripMargin
+  /** Quantized vectors `name` (vec_id, q) over an embedding CTE `src`
+    * that already holds a BIGINT vec_id. */
+  private def embOf(name: String, src: String): String =
+    s"""$name AS (
+       |  SELECT vec_id,
+       |         list_transform(embedding, x -> CAST(floor(x * 1000) AS BIGINT)) AS q
+       |  FROM $src)""".stripMargin
+
+  /** One (vec_id, i, v) row per component of a quantized-vector CTE. */
+  private def eeOf(name: String, emb: String): String =
+    s"""$name AS (
+       |  SELECT vec_id, unnest(q) AS v, generate_subscripts(q, 1) AS i
+       |  FROM $emb)""".stripMargin
+
+  /** Squared norm n2 per vec_id of an exploded-vector CTE. */
+  private def normOf(name: String, ee: String): String =
+    s"$name AS (SELECT vec_id, CAST(sum(v * v) AS BIGINT) AS n2 FROM $ee GROUP BY vec_id)"
+
+  private[queries] val eeSql: String = eeOf("ee", "emb")
 
   /** DuckDB mirror of [[embCorpus]] (dup-injected embeddings). */
   private val embcSql: String =
@@ -692,14 +707,9 @@ object SimilarityQueries {
 
   /** `emb` rebound over the dup-injected corpus, so the shared ee/norm
     * CTEs (and the k-means chain) run over embc. */
-  private val embOverCorpusSql: String =
-    """emb AS (
-      |  SELECT vec_id,
-      |         list_transform(embedding, x -> CAST(floor(x * 1000) AS BIGINT)) AS q
-      |  FROM embc)""".stripMargin
+  private val embOverCorpusSql: String = embOf("emb", "embc")
 
-  private[queries] val normSql: String =
-    "norm AS (SELECT vec_id, CAST(sum(v * v) AS BIGINT) AS n2 FROM ee GROUP BY vec_id)"
+  private[queries] val normSql: String = normOf("norm", "ee")
 
   /** Parameterized hyperplane CTE: `bits` md5-derived planes under the
     * given CTE name (the oracle mirror of Similarity.hyperplanes). */
@@ -711,26 +721,72 @@ object SimilarityQueries {
        |  FROM (SELECT unnest(range(0, $bits)) AS j),
        |       (SELECT unnest(range(1, 65)) AS i))""".stripMargin
 
-  /** Sign-bucket CTE over `ee` against a named hyperplane CTE. */
-  private[queries] def bucketsSqlFor(hyper: String, buckets: String): String =
+  /** Sign-bucket CTE over an exploded-vector CTE `ee` against a named
+    * hyperplane CTE. */
+  private def bucketsSqlFor(hyper: String, buckets: String,
+      ee: String): String =
     s"""$buckets AS (
        |  SELECT vec_id,
        |    CAST(sum(CASE WHEN sdot > 0 THEN 1 << CAST(j AS INT) ELSE 0 END)
        |         AS BIGINT) AS bucket
        |  FROM (SELECT e.vec_id, h.j, sum(e.v * h.h) AS sdot
-       |        FROM ee e JOIN $hyper h ON e.i = h.i
+       |        FROM $ee e JOIN $hyper h ON e.i = h.i
        |        GROUP BY e.vec_id, h.j)
        |  GROUP BY vec_id)""".stripMargin
 
   /** The default 8-bit instances, shared with the cross-modal query in
     * MultimodalQueries. */
   private[queries] val hyperSql: String = hyperSqlFor(8, "hyper")
-  private[queries] val bucketsSql: String = bucketsSqlFor("hyper", "buckets")
+  private[queries] val bucketsSql: String = bucketsSqlFor("hyper", "buckets", "ee")
 
-  /** Exact-cosine re-rank CTE chain over a (query_id, neighbor_id)
-    * candidate CTE: `<p>dots` → `<p>cosv` → `<p>topk` (top-3). The same
-    * chain the individual ANN oracles inline, parameterized so the
-    * recall oracle can run it once per method without name clashes. */
+  /** `bits`-wide hyperplanes `<p>hyper` and their sign buckets
+    * `<p>buckets` over `ee`. */
+  private def lshCtes(p: String, bits: Int): Seq[String] = Seq(
+    hyperSqlFor(bits, s"${p}hyper"),
+    bucketsSqlFor(s"${p}hyper", s"${p}buckets", "ee"))
+
+  /** Single-bucket LSH candidates: every other vector in a query's
+    * bucket. */
+  private def lshCandCte(cand: String, buckets: String): String =
+    s"""$cand AS (
+       |  SELECT qb.vec_id AS query_id, db.vec_id AS neighbor_id
+       |  FROM $buckets qb
+       |  JOIN $buckets db ON qb.bucket = db.bucket AND db.vec_id != qb.vec_id
+       |  WHERE qb.vec_id % $QueryStride = 0)""".stripMargin
+
+  /** Exact dot product `dots` of every (query_id, neighbor_id) pair of a
+    * candidate CTE. */
+  private def dotsCte(dots: String, cand: String): String =
+    s"""$dots AS (
+       |  SELECT c.query_id, c.neighbor_id, CAST(sum(qe.v * de.v) AS BIGINT) AS dot
+       |  FROM $cand c
+       |  JOIN ee qe ON qe.vec_id = c.query_id
+       |  JOIN ee de ON de.vec_id = c.neighbor_id AND de.i = qe.i
+       |  GROUP BY 1, 2)""".stripMargin
+
+  /** Exact cosine `cos` of every pair of a [[dotsCte]]-shaped CTE. */
+  private def cosCte(cos: String, dots: String): String =
+    s"""$cos AS (
+       |  SELECT query_id, neighbor_id,
+       |         CAST(dot AS DOUBLE) / sqrt(CAST(nq.n2 * nd.n2 AS DOUBLE)) AS cos
+       |  FROM $dots
+       |  JOIN norm nq ON nq.vec_id = $dots.query_id
+       |  JOIN norm nd ON nd.vec_id = $dots.neighbor_id)""".stripMargin
+
+  /** The exact-cosine re-rank of a candidate CTE as `cdots` → `ccos`,
+    * the chain every single-method ANN oracle ranks with. */
+  private def ccosCtes(cand: String): Seq[String] =
+    Seq(dotsCte("cdots", cand), cosCte("ccos", "cdots"))
+
+  /** Oracle body: the top-`k` neighbors per query of a cosine CTE, ties
+    * broken by neighbor_id. */
+  private def cosTopK(cos: String, k: Int): String =
+    s"""SELECT query_id, neighbor_id, rank, cos FROM (
+       |  SELECT *, CAST(row_number() OVER (PARTITION BY query_id
+       |    ORDER BY cos DESC, neighbor_id) AS BIGINT) AS rank
+       |  FROM $cos)
+       |WHERE rank <= $k""".stripMargin
+
   /** Pin one oracle CTE to a single evaluation: DuckDB re-inlines plain
     * CTEs per REFERENCE, so a chain tail referenced twice (e.g. ranked3
     * by both klists and kprobes) re-evaluates its entire upstream chain
@@ -740,19 +796,12 @@ object SimilarityQueries {
   private def materializeCte(cte: String): String =
     cte.replaceFirst(" AS \\(", " AS MATERIALIZED (")
 
+  /** Exact-cosine re-rank CTE chain over a (query_id, neighbor_id)
+    * candidate CTE: `<p>dots` → `<p>cosv` → `<p>topk` (top-3), named
+    * per method so the recall oracle can run it once per method. */
   private def rerankCtes(p: String, cand: String): Seq[String] = Seq(
-    s"""${p}dots AS (
-       |  SELECT c.query_id, c.neighbor_id, CAST(sum(qe.v * de.v) AS BIGINT) AS dot
-       |  FROM $cand c
-       |  JOIN ee qe ON qe.vec_id = c.query_id
-       |  JOIN ee de ON de.vec_id = c.neighbor_id AND de.i = qe.i
-       |  GROUP BY 1, 2)""".stripMargin,
-    s"""${p}cosv AS (
-       |  SELECT query_id, neighbor_id,
-       |         CAST(dot AS DOUBLE) / sqrt(CAST(nq.n2 * nd.n2 AS DOUBLE)) AS cos
-       |  FROM ${p}dots
-       |  JOIN norm nq ON nq.vec_id = ${p}dots.query_id
-       |  JOIN norm nd ON nd.vec_id = ${p}dots.neighbor_id)""".stripMargin,
+    dotsCte(s"${p}dots", cand),
+    cosCte(s"${p}cosv", s"${p}dots"),
     s"""${p}topk AS (
        |  SELECT query_id, neighbor_id FROM (
        |    SELECT *, row_number() OVER (PARTITION BY query_id
@@ -767,16 +816,10 @@ object SimilarityQueries {
     * drives the IVF lists/probes. Mirrors Similarity.kmeansCentroids
     * exactly — the round count is the only parameter. */
   private def kmeansRoundCtes(iters: Int, k: Int = 16): Seq[String] = {
-    def ranked(r: Int): String =
-      s"""ranked$r AS (
-         |  SELECT d.vec_id, d.cent_id,
-         |    row_number() OVER (PARTITION BY d.vec_id
-         |      ORDER BY n.n2 + c.cn2 - 2 * d.dot, d.cent_id) AS crank
-         |  FROM (SELECT e.vec_id, c.cent_id, CAST(sum(e.v * c.cv) AS BIGINT) AS dot
-         |        FROM ee e JOIN cent$r c ON e.i = c.i
-         |        GROUP BY e.vec_id, c.cent_id) d
-         |  JOIN norm n ON n.vec_id = d.vec_id
-         |  JOIN cnorm$r c ON c.cent_id = d.cent_id)""".stripMargin
+    def ranked(r: Int): String = centroidCte(s"ranked$r",
+      """row_number() OVER (PARTITION BY d.vec_id
+        |      ORDER BY n.n2 + c.cn2 - 2 * d.dot, d.cent_id) AS crank""".stripMargin,
+      "ee", "norm", r)
     val seed = Seq(
       s"""cent0 AS (
          |  SELECT vec_id AS cent_id, i, v AS cv FROM ee WHERE vec_id < $k)""".stripMargin,
@@ -798,18 +841,74 @@ object SimilarityQueries {
     seed ++ rounds :+ ranked(iters)
   }
 
+  /** Per (vector, round-`r` centroid) pair of an exploded-vector CTE `ee`
+    * with norms `norm`: `d.dot`, `n.n2` and `c.cn2` in scope of the
+    * `score` select expression. */
+  private def centroidCte(name: String, score: String, ee: String,
+      norm: String, r: Int): String =
+    s"""$name AS (
+       |  SELECT d.vec_id, d.cent_id, $score
+       |  FROM (SELECT e.vec_id, c.cent_id, CAST(sum(e.v * c.cv) AS BIGINT) AS dot
+       |        FROM $ee e JOIN cent$r c ON e.i = c.i
+       |        GROUP BY e.vec_id, c.cent_id) d
+       |  JOIN $norm n ON n.vec_id = d.vec_id
+       |  JOIN cnorm$r c ON c.cent_id = d.cent_id)""".stripMargin
+
+  /** IVF probing over a ranked-centroid CTE (crank per vec_id):
+    * `<p>lists` (each vector's nearest centroid), `<p>probes` (each
+    * query's `nprobe` nearest) and their join `<p>cand`. */
+  private def ivfProbeCtes(p: String, ranked: String, nprobe: Int): Seq[String] = Seq(
+    s"${p}lists AS (SELECT vec_id AS neighbor_id, cent_id FROM $ranked WHERE crank = 1)",
+    s"""${p}probes AS (
+       |  SELECT vec_id AS query_id, cent_id FROM $ranked
+       |  WHERE crank <= $nprobe AND vec_id % $QueryStride = 0)""".stripMargin,
+    s"""${p}cand AS (
+       |  SELECT DISTINCT p.query_id, l.neighbor_id
+       |  FROM ${p}probes p JOIN ${p}lists l ON p.cent_id = l.cent_id
+       |  WHERE l.neighbor_id != p.query_id)""".stripMargin)
+
+  /** IVF over the first 16 vectors as fixed centroids (the SQL twin of
+    * [[ivfAnn]]): `<p>cdist` → `<p>ranked`, probed by [[ivfProbeCtes]]. */
+  private def seedIvfCtes(p: String): Seq[String] = Seq(
+    s"""${p}cdist AS (
+       |  SELECT e.vec_id, c.vec_id AS cent_id,
+       |         ne.n2 + nc.n2 - 2 * CAST(sum(e.v * c.v) AS BIGINT) AS dist2
+       |  FROM ee e
+       |  JOIN ee c ON c.vec_id < 16 AND c.i = e.i
+       |  JOIN norm ne ON ne.vec_id = e.vec_id
+       |  JOIN norm nc ON nc.vec_id = c.vec_id
+       |  GROUP BY e.vec_id, c.vec_id, ne.n2, nc.n2)""".stripMargin,
+    s"""${p}ranked AS (
+       |  SELECT vec_id, cent_id,
+       |         row_number() OVER (PARTITION BY vec_id
+       |           ORDER BY dist2, cent_id) AS crank
+       |  FROM ${p}cdist)""".stripMargin) ++
+    ivfProbeCtes(p, s"${p}ranked", IvfProbes)
+
+  /** The learned-centroid IVF candidates `<p>cand`: the k-means round
+    * chain probed at its last round. */
+  private def kmeansIvfCtes(p: String): Seq[String] =
+    kmeansRoundCtes(KmeansIters, KmeansK) ++
+      ivfProbeCtes(p, s"ranked$KmeansIters", KmeansProbes)
+
+  /** Multi-probe LSH candidates `<p>cand`: width-[[MultiProbeBits]]
+    * buckets probed over the Hamming ≤ [[MultiProbeHamming]] masks. */
+  private def multiprobeCandCtes(p: String): Seq[String] =
+    lshCtes(p, MultiProbeBits) ++ Seq(
+      multiprobeSqlFor(s"${p}buckets", s"${p}probes", MultiProbeBits,
+        MultiProbeHamming),
+      s"""${p}cand AS (
+         |  SELECT DISTINCT p.query_id, db.vec_id AS neighbor_id
+         |  FROM ${p}probes p
+         |  JOIN ${p}buckets db ON p.bucket = db.bucket
+         |  WHERE db.vec_id != p.query_id)""".stripMargin)
+
   /** PQ CTE chain under a name prefix: subvectors (subspace = (i−1) div
     * subDim) → per-subspace seed codebooks → exact subspace distances →
     * codes (argmin) + query LUT → ADC sums. Final CTE `<p>adc` holds
     * (query_id, neighbor_id, adist2) — the SQL twin of
     * Similarity.pqCodes/pqAdcTopK. */
-  private def pqCtes(p: String): Seq[String] = Seq(
-    s"""${p}sub AS (
-       |  SELECT vec_id, CAST((i - 1) // $PqSubDim AS BIGINT) AS m, i, v
-       |  FROM ee)""".stripMargin,
-    s"""${p}subn AS (
-       |  SELECT vec_id, m, CAST(sum(v * v) AS BIGINT) AS sn2
-       |  FROM ${p}sub GROUP BY vec_id, m)""".stripMargin,
+  private def pqCtes(p: String): Seq[String] = subspaceCtes(p, "ee", PqSubDim) ++ Seq(
     s"${p}cent AS (SELECT vec_id AS cent_id, m, i, v FROM ${p}sub WHERE vec_id < $PqK)",
     s"""${p}centn AS (
        |  SELECT cent_id, m, CAST(sum(v * v) AS BIGINT) AS cn2
@@ -831,13 +930,7 @@ object SimilarityQueries {
     s"""${p}lut AS (
        |  SELECT vec_id AS query_id, m, cent_id, dist2 FROM ${p}dist
        |  WHERE vec_id % $QueryStride = 0)""".stripMargin,
-    s"""${p}adc AS (
-       |  SELECT l.query_id, c.vec_id AS neighbor_id,
-       |         CAST(sum(l.dist2) AS BIGINT) AS adist2
-       |  FROM ${p}codes c
-       |  JOIN ${p}lut l ON l.m = c.m AND l.cent_id = c.code
-       |  WHERE c.vec_id != l.query_id
-       |  GROUP BY l.query_id, c.vec_id)""".stripMargin)
+    adcCte(p, p, None))
 
   /** TRAINED-PQ CTE chain under a name prefix — the SQL twin of
     * Similarity.pqTrainedCentroids + pqAdcShortlist: subvectors, seed
@@ -859,22 +952,8 @@ object SimilarityQueries {
     * the Spark side shares pqTrainedCentroids). */
   private def pqTrainCtes(p: String, k: Int, subDim: Int,
       iters: Int): Seq[String] = {
-    def dist(r: Int): String =
-      s"""${p}dist$r AS (
-         |  SELECT s.vec_id, s.m, c.cent_id,
-         |         n.sn2 + cn.cn2 - 2 * CAST(sum(s.v * c.cv) AS BIGINT) AS dist2
-         |  FROM ${p}sub s
-         |  JOIN ${p}cent$r c ON c.m = s.m AND c.i = s.i
-         |  JOIN ${p}subn n ON n.vec_id = s.vec_id AND n.m = s.m
-         |  JOIN ${p}cn$r cn ON cn.cent_id = c.cent_id AND cn.m = c.m
-         |  GROUP BY s.vec_id, s.m, c.cent_id, n.sn2, cn.cn2)""".stripMargin
-    val seed = Seq(
-      s"""${p}sub AS (
-         |  SELECT vec_id, CAST((i - 1) // $subDim AS BIGINT) AS m, i, v
-         |  FROM ee)""".stripMargin,
-      s"""${p}subn AS (
-         |  SELECT vec_id, m, CAST(sum(v * v) AS BIGINT) AS sn2
-         |  FROM ${p}sub GROUP BY vec_id, m)""".stripMargin,
+    def dist(r: Int): String = subspaceDistCte(s"${p}dist$r", p, p, r)
+    val seed = subspaceCtes(p, "ee", subDim) ++ Seq(
       s"${p}cent0 AS (SELECT vec_id AS cent_id, m, i, v AS cv " +
         s"FROM ${p}sub WHERE vec_id < $k)",
       s"""${p}cn0 AS (
@@ -901,17 +980,44 @@ object SimilarityQueries {
     }
     val encode = Seq(
       dist(iters),
-      s"""${p}codes AS (
-         |  SELECT vec_id, m, cent_id AS code FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY vec_id, m
-         |      ORDER BY dist2, cent_id) AS rr
-         |    FROM ${p}dist$iters)
-         |  WHERE rr = 1)""".stripMargin,
+      subspaceCodesCte(s"${p}codes", s"${p}dist$iters"),
       s"""${p}lut AS (
          |  SELECT vec_id AS query_id, m, cent_id, dist2 FROM ${p}dist$iters
          |  WHERE vec_id % $QueryStride = 0)""".stripMargin)
     seed ++ rounds ++ encode
   }
+
+  /** Subvectors `<p>sub` (subspace m = (i−1) div subDim) of an
+    * exploded-vector CTE `ee`, and their squared norms `<p>subn`. */
+  private def subspaceCtes(p: String, ee: String, subDim: Int): Seq[String] = Seq(
+    s"""${p}sub AS (
+       |  SELECT vec_id, CAST((i - 1) // $subDim AS BIGINT) AS m, i, v
+       |  FROM $ee)""".stripMargin,
+    s"""${p}subn AS (
+       |  SELECT vec_id, m, CAST(sum(v * v) AS BIGINT) AS sn2
+       |  FROM ${p}sub GROUP BY vec_id, m)""".stripMargin)
+
+  /** Squared distance of every `<sp>sub` subvector to each round-`r`
+    * codeword of a [[pqTrainCtes]] prefix `cp`. */
+  private def subspaceDistCte(name: String, sp: String, cp: String, r: Int): String =
+    s"""$name AS (
+       |  SELECT s.vec_id, s.m, c.cent_id,
+       |         n.sn2 + cn.cn2 - 2 * CAST(sum(s.v * c.cv) AS BIGINT) AS dist2
+       |  FROM ${sp}sub s
+       |  JOIN ${cp}cent$r c ON c.m = s.m AND c.i = s.i
+       |  JOIN ${sp}subn n ON n.vec_id = s.vec_id AND n.m = s.m
+       |  JOIN ${cp}cn$r cn ON cn.cent_id = c.cent_id AND cn.m = c.m
+       |  GROUP BY s.vec_id, s.m, c.cent_id, n.sn2, cn.cn2)""".stripMargin
+
+  /** Each subvector's code: its nearest codeword in a
+    * [[subspaceDistCte]], ties broken by cent_id. */
+  private def subspaceCodesCte(name: String, dist: String): String =
+    s"""$name AS (
+       |  SELECT vec_id, m, cent_id AS code FROM (
+       |    SELECT *, row_number() OVER (PARTITION BY vec_id, m
+       |      ORDER BY dist2, cent_id) AS rr
+       |    FROM $dist)
+       |  WHERE rr = 1)""".stripMargin
 
   /** ADC + shortlist serve chain over a [[pqTrainCtes]] prefix `p`,
     * emitting `<sp>adc` / `<sp>short`. `candCte`, when set, bounds the
@@ -919,23 +1025,28 @@ object SimilarityQueries {
     * composition (the SQL twin of Similarity.ivfPqShortlist); None is
     * the full-corpus ADC of embed_pq_rerank. */
   private def pqServeCtes(p: String, sp: String, shortlist: Int,
-      candCte: Option[String]): Seq[String] = {
+      candCte: Option[String]): Seq[String] = Seq(
+    adcCte(p, sp, candCte),
+    s"""${sp}short AS (
+       |  SELECT query_id, neighbor_id FROM (
+       |    SELECT *, row_number() OVER (PARTITION BY query_id
+       |      ORDER BY adist2, neighbor_id) AS rr
+       |    FROM ${sp}adc)
+       |  WHERE rr <= $shortlist)""".stripMargin)
+
+  /** `<sp>adc`: the asymmetric distance adist2 of each query in the
+    * `<p>lut` to every other vector's `<p>codes`, over the pairs of
+    * `candCte` when set. */
+  private def adcCte(p: String, sp: String, candCte: Option[String]): String = {
     val candJoin = candCte.fold("")(cc =>
       s"\n  JOIN $cc cd ON cd.query_id = l.query_id AND cd.neighbor_id = c.vec_id")
-    Seq(
-      s"""${sp}adc AS (
-         |  SELECT l.query_id, c.vec_id AS neighbor_id,
-         |         CAST(sum(l.dist2) AS BIGINT) AS adist2
-         |  FROM ${p}codes c
-         |  JOIN ${p}lut l ON l.m = c.m AND l.cent_id = c.code$candJoin
-         |  WHERE c.vec_id != l.query_id
-         |  GROUP BY l.query_id, c.vec_id)""".stripMargin,
-      s"""${sp}short AS (
-         |  SELECT query_id, neighbor_id FROM (
-         |    SELECT *, row_number() OVER (PARTITION BY query_id
-         |      ORDER BY adist2, neighbor_id) AS rr
-         |    FROM ${sp}adc)
-         |  WHERE rr <= $shortlist)""".stripMargin)
+    s"""${sp}adc AS (
+       |  SELECT l.query_id, c.vec_id AS neighbor_id,
+       |         CAST(sum(l.dist2) AS BIGINT) AS adist2
+       |  FROM ${p}codes c
+       |  JOIN ${p}lut l ON l.m = c.m AND l.cent_id = c.code$candJoin
+       |  WHERE c.vec_id != l.query_id
+       |  GROUP BY l.query_id, c.vec_id)""".stripMargin
   }
 
   /** Multi-probe probe CTE: the query buckets exploded over the SAME
@@ -955,69 +1066,60 @@ object SimilarityQueries {
   /** Single-probe LSH ANN oracle at a given hyperplane width — the SQL
     * twin of [[lshAnn]]. */
   private def lshAnnOracle(bits: Int): String =
+    withCtes(Seq(embSql, eeSql, normSql) ++ lshCtes("", bits) ++
+      Seq(lshCandCte("cand", "buckets")) ++ ccosCtes("cand"): _*)(
+      cosTopK("ccos", 3))
+
+  /** Brute-force exact-cosine top-5: one text for embed_cosine_topk and
+    * its aggregate form. */
+  private val cosineTopKOracle: String =
     withCtes(embSql, eeSql, normSql,
-      hyperSqlFor(bits, "hyper"), bucketsSqlFor("hyper", "buckets"),
+      s"""dots AS (
+         |  SELECT qe.vec_id AS query_id, de.vec_id AS neighbor_id,
+         |         CAST(sum(qe.v * de.v) AS BIGINT) AS dot
+         |  FROM (SELECT * FROM ee WHERE vec_id % $QueryStride = 0) qe
+         |  JOIN ee de ON qe.i = de.i AND de.vec_id != qe.vec_id
+         |  GROUP BY 1, 2)""".stripMargin,
+      cosCte("cosv", "dots"))(cosTopK("cosv", 5))
+
+  /** Embedding near-duplicate pairs (cos ≥ 0.99) among the same-bucket
+    * pairs of the dup-injected corpus; `candFilter` narrows the pairs
+    * (the incremental form keeps those touching the batch). */
+  private def dedupEmbeddingOracle(candFilter: String): String =
+    withCtes(embcSql, embOverCorpusSql, eeSql, normSql, hyperSql, bucketsSql,
       s"""cand AS (
-         |  SELECT qb.vec_id AS query_id, db.vec_id AS neighbor_id
-         |  FROM buckets qb
-         |  JOIN buckets db ON qb.bucket = db.bucket AND db.vec_id != qb.vec_id
-         |  WHERE qb.vec_id % $QueryStride = 0)""".stripMargin,
+         |  SELECT a.vec_id AS doc_a, b.vec_id AS doc_b
+         |  FROM buckets a
+         |  JOIN buckets b ON a.bucket = b.bucket AND a.vec_id < b.vec_id$candFilter)""".stripMargin,
       """cdots AS (
-        |  SELECT c.query_id, c.neighbor_id, CAST(sum(qe.v * de.v) AS BIGINT) AS dot
+        |  SELECT c.doc_a, c.doc_b, CAST(sum(qe.v * de.v) AS BIGINT) AS dot
         |  FROM cand c
-        |  JOIN ee qe ON qe.vec_id = c.query_id
-        |  JOIN ee de ON de.vec_id = c.neighbor_id AND de.i = qe.i
-        |  GROUP BY 1, 2)""".stripMargin,
-      """ccos AS (
-        |  SELECT query_id, neighbor_id,
+        |  JOIN ee qe ON qe.vec_id = c.doc_a
+        |  JOIN ee de ON de.vec_id = c.doc_b AND de.i = qe.i
+        |  GROUP BY 1, 2)""".stripMargin)(
+      """SELECT doc_a, doc_b, cos FROM (
+        |  SELECT doc_a, doc_b,
         |         CAST(dot AS DOUBLE) / sqrt(CAST(nq.n2 * nd.n2 AS DOUBLE)) AS cos
         |  FROM cdots
-        |  JOIN norm nq ON nq.vec_id = cdots.query_id
-        |  JOIN norm nd ON nd.vec_id = cdots.neighbor_id)""".stripMargin)(
-      """SELECT query_id, neighbor_id, rank, cos FROM (
-        |  SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-        |    ORDER BY cos DESC, neighbor_id) AS BIGINT) AS rank
-        |  FROM ccos)
-        |WHERE rank <= 3""".stripMargin)
+        |  JOIN norm nq ON nq.vec_id = cdots.doc_a
+        |  JOIN norm nd ON nd.vec_id = cdots.doc_b)
+        |WHERE cos >= 0.99""".stripMargin)
+
+  /** The recap oracles' rows, one `UNION ALL` branch per (method, CTE
+    * prefix): the method, its role and `cols(prefix)`; the first branch
+    * names the columns `method`, `role` and `names`. */
+  private def methodRows(methods: Seq[(String, String)], names: Seq[String])(
+      cols: String => Seq[String]): String =
+    methods.zipWithIndex.map { case ((m, p), i) =>
+      val vals = Seq(s"'$m'", s"'${AnnRoles(m)}'") ++ cols(p)
+      val named = if (i > 0) vals
+        else vals.zip("method" +: "role" +: names).map { case (v, n) => s"$v AS $n" }
+      named.mkString("  SELECT ", ",\n    ", "")
+    }.mkString("\n  UNION ALL\n")
 
   val oracles: Map[String, String] = Map(
-    "embed_cosine_topk" -> withCtes(embSql, eeSql, normSql,
-      s"""dots AS (
-         |  SELECT qe.vec_id AS query_id, de.vec_id AS neighbor_id,
-         |         CAST(sum(qe.v * de.v) AS BIGINT) AS dot
-         |  FROM (SELECT * FROM ee WHERE vec_id % $QueryStride = 0) qe
-         |  JOIN ee de ON qe.i = de.i AND de.vec_id != qe.vec_id
-         |  GROUP BY 1, 2)""".stripMargin,
-      """cosv AS (
-        |  SELECT query_id, neighbor_id,
-        |         CAST(dot AS DOUBLE) / sqrt(CAST(nq.n2 * nd.n2 AS DOUBLE)) AS cos
-        |  FROM dots
-        |  JOIN norm nq ON nq.vec_id = dots.query_id
-        |  JOIN norm nd ON nd.vec_id = dots.neighbor_id)""".stripMargin)(
-      """SELECT query_id, neighbor_id, rank, cos FROM (
-        |  SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-        |    ORDER BY cos DESC, neighbor_id) AS BIGINT) AS rank
-        |  FROM cosv)
-        |WHERE rank <= 5""".stripMargin),
-
-    "embed_cosine_topk_agg" -> withCtes(embSql, eeSql, normSql,
-      s"""dots AS (
-         |  SELECT qe.vec_id AS query_id, de.vec_id AS neighbor_id,
-         |         CAST(sum(qe.v * de.v) AS BIGINT) AS dot
-         |  FROM (SELECT * FROM ee WHERE vec_id % $QueryStride = 0) qe
-         |  JOIN ee de ON qe.i = de.i AND de.vec_id != qe.vec_id
-         |  GROUP BY 1, 2)""".stripMargin,
-      """cosv AS (
-        |  SELECT query_id, neighbor_id,
-        |         CAST(dot AS DOUBLE) / sqrt(CAST(nq.n2 * nd.n2 AS DOUBLE)) AS cos
-        |  FROM dots
-        |  JOIN norm nq ON nq.vec_id = dots.query_id
-        |  JOIN norm nd ON nd.vec_id = dots.neighbor_id)""".stripMargin)(
-      """SELECT query_id, neighbor_id, rank, cos FROM (
-        |  SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-        |    ORDER BY cos DESC, neighbor_id) AS BIGINT) AS rank
-        |  FROM cosv)
-        |WHERE rank <= 5""".stripMargin),
+    "embed_cosine_topk" -> cosineTopKOracle,
+    "embed_cosine_topk_agg" -> cosineTopKOracle,
 
     "embed_lsh_ann" -> lshAnnOracle(8),
     "embed_lsh_ann_tuned" -> lshAnnOracle(TunedBits),
@@ -1038,11 +1140,7 @@ object SimilarityQueries {
       ((Seq(embSql, eeSql, normSql) ++
         pqTrainedCtes("pr", PqRK, PqRSubDim, PqTrainIters, PqShortlist) ++
         rerankCtes("prr", "prshort")).map(materializeCte)): _*)(
-      """SELECT query_id, neighbor_id, rank, cos FROM (
-        |  SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-        |    ORDER BY cos DESC, neighbor_id) AS BIGINT) AS rank
-        |  FROM prrcosv)
-        |WHERE rank <= 3""".stripMargin),
+      cosTopK("prrcosv", 3)),
 
     // IVF-PQ composed serving oracle: the kmeans-round chain yields the
     // probed candidate set (kcand, as in embed_ivf_kmeans), the trained
@@ -1051,119 +1149,20 @@ object SimilarityQueries {
     // twin of Similarity.ivfPqShortlist, CTEs materialized (two heavy
     // chains stack in one WITH)
     "embed_ivfpq_rerank" -> withCtes(
-      ((Seq(embSql, eeSql, normSql) ++
-        kmeansRoundCtes(KmeansIters, KmeansK) ++ Seq(
-        s"klists AS (SELECT vec_id AS neighbor_id, cent_id FROM ranked$KmeansIters WHERE crank = 1)",
-        s"""kprobes AS (
-           |  SELECT vec_id AS query_id, cent_id FROM ranked$KmeansIters
-           |  WHERE crank <= $KmeansProbes AND vec_id % $QueryStride = 0)""".stripMargin,
-        """kcand AS (
-          |  SELECT DISTINCT p.query_id, l.neighbor_id
-          |  FROM kprobes p JOIN klists l ON p.cent_id = l.cent_id
-          |  WHERE l.neighbor_id != p.query_id)""".stripMargin) ++
+      ((Seq(embSql, eeSql, normSql) ++ kmeansIvfCtes("k") ++
         pqTrainCtes("pr", PqRK, PqRSubDim, PqTrainIters) ++
         pqServeCtes("pr", "ip", PqShortlist, Some("kcand")) ++
         rerankCtes("ipr", "ipshort")).map(materializeCte)): _*)(
-      """SELECT query_id, neighbor_id, rank, cos FROM (
-        |  SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-        |    ORDER BY cos DESC, neighbor_id) AS BIGINT) AS rank
-        |  FROM iprcosv)
-        |WHERE rank <= 3""".stripMargin),
+      cosTopK("iprcosv", 3)),
 
     "embed_ivf_kmeans" -> withCtes(Seq(embSql, eeSql, normSql) ++
-      kmeansRoundCtes(KmeansIters, KmeansK) ++ Seq(
-      s"lists AS (SELECT vec_id AS neighbor_id, cent_id FROM ranked$KmeansIters WHERE crank = 1)",
-      s"""probes AS (
-         |  SELECT vec_id AS query_id, cent_id FROM ranked$KmeansIters
-         |  WHERE crank <= $KmeansProbes AND vec_id % $QueryStride = 0)""".stripMargin,
-      """cand AS (
-        |  SELECT DISTINCT p.query_id, l.neighbor_id
-        |  FROM probes p JOIN lists l ON p.cent_id = l.cent_id
-        |  WHERE l.neighbor_id != p.query_id)""".stripMargin,
-      """cdots AS (
-        |  SELECT c.query_id, c.neighbor_id, CAST(sum(qe.v * de.v) AS BIGINT) AS dot
-        |  FROM cand c
-        |  JOIN ee qe ON qe.vec_id = c.query_id
-        |  JOIN ee de ON de.vec_id = c.neighbor_id AND de.i = qe.i
-        |  GROUP BY 1, 2)""".stripMargin,
-      """ccos AS (
-        |  SELECT query_id, neighbor_id,
-        |         CAST(dot AS DOUBLE) / sqrt(CAST(nq.n2 * nd.n2 AS DOUBLE)) AS cos
-        |  FROM cdots
-        |  JOIN norm nq ON nq.vec_id = cdots.query_id
-        |  JOIN norm nd ON nd.vec_id = cdots.neighbor_id)""".stripMargin): _*)(
-      """SELECT query_id, neighbor_id, rank, cos FROM (
-        |  SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-        |    ORDER BY cos DESC, neighbor_id) AS BIGINT) AS rank
-        |  FROM ccos)
-        |WHERE rank <= 3""".stripMargin),
+      kmeansIvfCtes("") ++ ccosCtes("cand"): _*)(cosTopK("ccos", 3)),
 
-    "embed_lsh_multiprobe" -> withCtes(embSql, eeSql, normSql,
-      hyperSqlFor(MultiProbeBits, "hyper"), bucketsSqlFor("hyper", "buckets"),
-      multiprobeSqlFor("buckets", "probes", MultiProbeBits,
-        MultiProbeHamming),
-      """cand AS (
-        |  SELECT DISTINCT p.query_id, db.vec_id AS neighbor_id
-        |  FROM probes p
-        |  JOIN buckets db ON p.bucket = db.bucket
-        |  WHERE db.vec_id != p.query_id)""".stripMargin,
-      """cdots AS (
-        |  SELECT c.query_id, c.neighbor_id, CAST(sum(qe.v * de.v) AS BIGINT) AS dot
-        |  FROM cand c
-        |  JOIN ee qe ON qe.vec_id = c.query_id
-        |  JOIN ee de ON de.vec_id = c.neighbor_id AND de.i = qe.i
-        |  GROUP BY 1, 2)""".stripMargin,
-      """ccos AS (
-        |  SELECT query_id, neighbor_id,
-        |         CAST(dot AS DOUBLE) / sqrt(CAST(nq.n2 * nd.n2 AS DOUBLE)) AS cos
-        |  FROM cdots
-        |  JOIN norm nq ON nq.vec_id = cdots.query_id
-        |  JOIN norm nd ON nd.vec_id = cdots.neighbor_id)""".stripMargin)(
-      """SELECT query_id, neighbor_id, rank, cos FROM (
-        |  SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-        |    ORDER BY cos DESC, neighbor_id) AS BIGINT) AS rank
-        |  FROM ccos)
-        |WHERE rank <= 3""".stripMargin),
+    "embed_lsh_multiprobe" -> withCtes(Seq(embSql, eeSql, normSql) ++
+      multiprobeCandCtes("") ++ ccosCtes("cand"): _*)(cosTopK("ccos", 3)),
 
-    "embed_ivf_ann" -> withCtes(embSql, eeSql, normSql,
-      """cdist AS (
-        |  SELECT e.vec_id, c.vec_id AS cent_id,
-        |         ne.n2 + nc.n2 - 2 * CAST(sum(e.v * c.v) AS BIGINT) AS dist2
-        |  FROM ee e
-        |  JOIN ee c ON c.vec_id < 16 AND c.i = e.i
-        |  JOIN norm ne ON ne.vec_id = e.vec_id
-        |  JOIN norm nc ON nc.vec_id = c.vec_id
-        |  GROUP BY e.vec_id, c.vec_id, ne.n2, nc.n2)""".stripMargin,
-      """ranked AS (
-        |  SELECT vec_id, cent_id,
-        |         row_number() OVER (PARTITION BY vec_id
-        |           ORDER BY dist2, cent_id) AS crank
-        |  FROM cdist)""".stripMargin,
-      "lists AS (SELECT vec_id AS neighbor_id, cent_id FROM ranked WHERE crank = 1)",
-      s"""probes AS (
-         |  SELECT vec_id AS query_id, cent_id FROM ranked
-         |  WHERE crank <= $IvfProbes AND vec_id % $QueryStride = 0)""".stripMargin,
-      """cand AS (
-        |  SELECT DISTINCT p.query_id, l.neighbor_id
-        |  FROM probes p JOIN lists l ON p.cent_id = l.cent_id
-        |  WHERE l.neighbor_id != p.query_id)""".stripMargin,
-      """cdots AS (
-        |  SELECT c.query_id, c.neighbor_id, CAST(sum(qe.v * de.v) AS BIGINT) AS dot
-        |  FROM cand c
-        |  JOIN ee qe ON qe.vec_id = c.query_id
-        |  JOIN ee de ON de.vec_id = c.neighbor_id AND de.i = qe.i
-        |  GROUP BY 1, 2)""".stripMargin,
-      """ccos AS (
-        |  SELECT query_id, neighbor_id,
-        |         CAST(dot AS DOUBLE) / sqrt(CAST(nq.n2 * nd.n2 AS DOUBLE)) AS cos
-        |  FROM cdots
-        |  JOIN norm nq ON nq.vec_id = cdots.query_id
-        |  JOIN norm nd ON nd.vec_id = cdots.neighbor_id)""".stripMargin)(
-      """SELECT query_id, neighbor_id, rank, cos FROM (
-        |  SELECT *, CAST(row_number() OVER (PARTITION BY query_id
-        |    ORDER BY cos DESC, neighbor_id) AS BIGINT) AS rank
-        |  FROM ccos)
-        |WHERE rank <= 3""".stripMargin),
+    "embed_ivf_ann" -> withCtes(Seq(embSql, eeSql, normSql) ++
+      seedIvfCtes("") ++ ccosCtes("cand"): _*)(cosTopK("ccos", 3)),
 
     "ann_recall" -> withCtes((Seq(embSql, eeSql, normSql, hyperSql, bucketsSql,
       // ground truth: brute-force pairs, same re-rank as the methods
@@ -1171,69 +1170,18 @@ object SimilarityQueries {
          |  SELECT q.vec_id AS query_id, d.vec_id AS neighbor_id
          |  FROM emb q JOIN emb d ON d.vec_id != q.vec_id
          |  WHERE q.vec_id % $QueryStride = 0)""".stripMargin) ++
-      rerankCtes("gt", "gtcand") ++ Seq(
+      rerankCtes("gt", "gtcand") ++
       // LSH single-bucket candidates (mirror of embed_lsh_ann)
-      s"""lcand AS (
-         |  SELECT qb.vec_id AS query_id, db.vec_id AS neighbor_id
-         |  FROM buckets qb
-         |  JOIN buckets db ON qb.bucket = db.bucket AND db.vec_id != qb.vec_id
-         |  WHERE qb.vec_id % $QueryStride = 0)""".stripMargin) ++
-      rerankCtes("l", "lcand") ++ Seq(
+      Seq(lshCandCte("lcand", "buckets")) ++ rerankCtes("l", "lcand") ++
       // recall-tuned width (mirror of embed_lsh_ann_tuned)
-      hyperSqlFor(TunedBits, "thyper"), bucketsSqlFor("thyper", "tbuckets"),
-      s"""tcand AS (
-         |  SELECT qb.vec_id AS query_id, db.vec_id AS neighbor_id
-         |  FROM tbuckets qb
-         |  JOIN tbuckets db ON qb.bucket = db.bucket AND db.vec_id != qb.vec_id
-         |  WHERE qb.vec_id % $QueryStride = 0)""".stripMargin) ++
-      rerankCtes("t", "tcand") ++ Seq(
-      // multi-probe candidates (mirror of embed_lsh_multiprobe:
-      // width-6 buckets probed over the Hamming ≤ 2 mask list)
-      hyperSqlFor(MultiProbeBits, "mphyper"),
-      bucketsSqlFor("mphyper", "mpbuckets"),
-      multiprobeSqlFor("mpbuckets", "mpprobes", MultiProbeBits,
-        MultiProbeHamming),
-      """mpcand AS (
-        |  SELECT DISTINCT p.query_id, db.vec_id AS neighbor_id
-        |  FROM mpprobes p
-        |  JOIN mpbuckets db ON p.bucket = db.bucket
-        |  WHERE db.vec_id != p.query_id)""".stripMargin) ++
-      rerankCtes("mp", "mpcand") ++ Seq(
+      lshCtes("t", TunedBits) ++
+      Seq(lshCandCte("tcand", "tbuckets")) ++ rerankCtes("t", "tcand") ++
+      // multi-probe candidates (mirror of embed_lsh_multiprobe)
+      multiprobeCandCtes("mp") ++ rerankCtes("mp", "mpcand") ++
       // IVF candidates over the 16 seed centroids (mirror of embed_ivf_ann)
-      """icdist AS (
-        |  SELECT e.vec_id, c.vec_id AS cent_id,
-        |         ne.n2 + nc.n2 - 2 * CAST(sum(e.v * c.v) AS BIGINT) AS dist2
-        |  FROM ee e
-        |  JOIN ee c ON c.vec_id < 16 AND c.i = e.i
-        |  JOIN norm ne ON ne.vec_id = e.vec_id
-        |  JOIN norm nc ON nc.vec_id = c.vec_id
-        |  GROUP BY e.vec_id, c.vec_id, ne.n2, nc.n2)""".stripMargin,
-      """iranked AS (
-        |  SELECT vec_id, cent_id,
-        |         row_number() OVER (PARTITION BY vec_id
-        |           ORDER BY dist2, cent_id) AS crank
-        |  FROM icdist)""".stripMargin,
-      "ilists AS (SELECT vec_id AS neighbor_id, cent_id FROM iranked WHERE crank = 1)",
-      s"""iprobes AS (
-         |  SELECT vec_id AS query_id, cent_id FROM iranked
-         |  WHERE crank <= $IvfProbes AND vec_id % $QueryStride = 0)""".stripMargin,
-      """icand AS (
-        |  SELECT DISTINCT p.query_id, l.neighbor_id
-        |  FROM iprobes p JOIN ilists l ON p.cent_id = l.cent_id
-        |  WHERE l.neighbor_id != p.query_id)""".stripMargin) ++
-      rerankCtes("i", "icand") ++
-      // learned-centroid IVF (mirror of embed_ivf_kmeans: the same
-      // generated Lloyd-round chain, probing ranked{KmeansIters})
-      kmeansRoundCtes(KmeansIters, KmeansK) ++ Seq(
-      s"klists AS (SELECT vec_id AS neighbor_id, cent_id FROM ranked$KmeansIters WHERE crank = 1)",
-      s"""kprobes AS (
-         |  SELECT vec_id AS query_id, cent_id FROM ranked$KmeansIters
-         |  WHERE crank <= $KmeansProbes AND vec_id % $QueryStride = 0)""".stripMargin,
-      """kcand AS (
-        |  SELECT DISTINCT p.query_id, l.neighbor_id
-        |  FROM kprobes p JOIN klists l ON p.cent_id = l.cent_id
-        |  WHERE l.neighbor_id != p.query_id)""".stripMargin) ++
-      rerankCtes("k", "kcand") ++
+      seedIvfCtes("i") ++ rerankCtes("i", "icand") ++
+      // learned-centroid IVF (mirror of embed_ivf_kmeans)
+      kmeansIvfCtes("k") ++ rerankCtes("k", "kcand") ++
       // PQ ADC ranking (mirror of embed_pq_ann) — recall vs the COSINE
       // ground truth measures what the 16× code compression loses
       (pqCtes("pq") :+
@@ -1254,45 +1202,13 @@ object SimilarityQueries {
          |       CAST(n_truth AS BIGINT) AS n_truth,
          |       CAST(n_hits AS DOUBLE) / CAST(n_truth AS DOUBLE) AS recall
          |FROM (
-         |  SELECT 'ivf' AS method, '${AnnRoles("ivf")}' AS role,
-         |    (SELECT count(*) FROM gttopk g JOIN itopk a
-         |       ON a.query_id = g.query_id AND a.neighbor_id = g.neighbor_id) AS n_hits,
-         |    (SELECT count(*) FROM gttopk) AS n_truth
-         |  UNION ALL
-         |  SELECT 'ivf_kmeans', '${AnnRoles("ivf_kmeans")}',
-         |    (SELECT count(*) FROM gttopk g JOIN ktopk a
-         |       ON a.query_id = g.query_id AND a.neighbor_id = g.neighbor_id),
-         |    (SELECT count(*) FROM gttopk)
-         |  UNION ALL
-         |  SELECT 'lsh', '${AnnRoles("lsh")}',
-         |    (SELECT count(*) FROM gttopk g JOIN ltopk a
-         |       ON a.query_id = g.query_id AND a.neighbor_id = g.neighbor_id),
-         |    (SELECT count(*) FROM gttopk)
-         |  UNION ALL
-         |  SELECT 'lsh_tuned', '${AnnRoles("lsh_tuned")}',
-         |    (SELECT count(*) FROM gttopk g JOIN ttopk a
-         |       ON a.query_id = g.query_id AND a.neighbor_id = g.neighbor_id),
-         |    (SELECT count(*) FROM gttopk)
-         |  UNION ALL
-         |  SELECT 'multiprobe', '${AnnRoles("multiprobe")}',
-         |    (SELECT count(*) FROM gttopk g JOIN mptopk a
-         |       ON a.query_id = g.query_id AND a.neighbor_id = g.neighbor_id),
-         |    (SELECT count(*) FROM gttopk)
-         |  UNION ALL
-         |  SELECT 'pq', '${AnnRoles("pq")}',
-         |    (SELECT count(*) FROM gttopk g JOIN pqtopk a
-         |       ON a.query_id = g.query_id AND a.neighbor_id = g.neighbor_id),
-         |    (SELECT count(*) FROM gttopk)
-         |  UNION ALL
-         |  SELECT 'pq_rerank', '${AnnRoles("pq_rerank")}',
-         |    (SELECT count(*) FROM gttopk g JOIN prrtopk a
-         |       ON a.query_id = g.query_id AND a.neighbor_id = g.neighbor_id),
-         |    (SELECT count(*) FROM gttopk)
-         |  UNION ALL
-         |  SELECT 'ivfpq_rerank', '${AnnRoles("ivfpq_rerank")}',
-         |    (SELECT count(*) FROM gttopk g JOIN iprtopk a
-         |       ON a.query_id = g.query_id AND a.neighbor_id = g.neighbor_id),
-         |    (SELECT count(*) FROM gttopk))""".stripMargin),
+         |${methodRows(Seq("ivf" -> "i", "ivf_kmeans" -> "k", "lsh" -> "l",
+             "lsh_tuned" -> "t", "multiprobe" -> "mp", "pq" -> "pq",
+             "pq_rerank" -> "prr", "ivfpq_rerank" -> "ipr"),
+           Seq("n_hits", "n_truth"))(p => Seq(
+           s"""(SELECT count(*) FROM gttopk g JOIN ${p}topk a
+              |       ON a.query_id = g.query_id AND a.neighbor_id = g.neighbor_id)""".stripMargin,
+           "(SELECT count(*) FROM gttopk)"))})""".stripMargin),
 
     // from-scratch IVF rebuild: centroids trained on the pre-batch
     // corpus (the shared kmeans chain over emb), then EVERY vector of
@@ -1300,23 +1216,10 @@ object SimilarityQueries {
     // — the rollup the maintained index must hash-match
     "embed_ivf_incremental" -> withCtes((Seq(embSql, eeSql, normSql) ++
       kmeansRoundCtes(KmeansIters, KmeansK) ++ Seq(
-      embcSql,
-      """cemb AS (
-        |  SELECT vec_id,
-        |         list_transform(embedding, x -> CAST(floor(x * 1000) AS BIGINT)) AS q
-        |  FROM embc)""".stripMargin,
-      """cee AS (
-        |  SELECT vec_id, unnest(q) AS v, generate_subscripts(q, 1) AS i
-        |  FROM cemb)""".stripMargin,
-      """cnormf AS (SELECT vec_id, CAST(sum(v * v) AS BIGINT) AS n2
-        |           FROM cee GROUP BY vec_id)""".stripMargin,
-      s"""fdist AS (
-         |  SELECT d.vec_id, d.cent_id, n.n2 + c.cn2 - 2 * d.dot AS dist2
-         |  FROM (SELECT e.vec_id, c.cent_id, CAST(sum(e.v * c.cv) AS BIGINT) AS dot
-         |        FROM cee e JOIN cent$KmeansIters c ON e.i = c.i
-         |        GROUP BY e.vec_id, c.cent_id) d
-         |  JOIN cnormf n ON n.vec_id = d.vec_id
-         |  JOIN cnorm$KmeansIters c ON c.cent_id = d.cent_id)""".stripMargin,
+      embcSql, embOf("cemb", "embc"), eeOf("cee", "cemb"),
+      normOf("cnormf", "cee"),
+      centroidCte("fdist", "n.n2 + c.cn2 - 2 * d.dot AS dist2", "cee", "cnormf",
+        KmeansIters),
       """fass AS (
         |  SELECT vec_id, cent_id FROM (
         |    SELECT *, row_number() OVER (PARTITION BY vec_id
@@ -1334,35 +1237,11 @@ object SimilarityQueries {
     // tables — the per-(subspace, codeword) rollup the maintained code
     // tier must hash-match
     "embed_pq_incremental" -> withCtes(((Seq(embSql, eeSql) ++
-      pqTrainCtes("pr", PqRK, PqRSubDim, PqTrainIters) ++ Seq(
-      embcSql,
-      """cemb AS (
-        |  SELECT vec_id,
-        |         list_transform(embedding, x -> CAST(floor(x * 1000) AS BIGINT)) AS q
-        |  FROM embc)""".stripMargin,
-      """cee AS (
-        |  SELECT vec_id, unnest(q) AS v, generate_subscripts(q, 1) AS i
-        |  FROM cemb)""".stripMargin,
-      s"""csub AS (
-         |  SELECT vec_id, CAST((i - 1) // $PqRSubDim AS BIGINT) AS m, i, v
-         |  FROM cee)""".stripMargin,
-      """csubn AS (
-        |  SELECT vec_id, m, CAST(sum(v * v) AS BIGINT) AS sn2
-        |  FROM csub GROUP BY vec_id, m)""".stripMargin,
-      s"""cdist AS (
-         |  SELECT s.vec_id, s.m, c.cent_id,
-         |         n.sn2 + cn.cn2 - 2 * CAST(sum(s.v * c.cv) AS BIGINT) AS dist2
-         |  FROM csub s
-         |  JOIN prcent$PqTrainIters c ON c.m = s.m AND c.i = s.i
-         |  JOIN csubn n ON n.vec_id = s.vec_id AND n.m = s.m
-         |  JOIN prcn$PqTrainIters cn ON cn.cent_id = c.cent_id AND cn.m = c.m
-         |  GROUP BY s.vec_id, s.m, c.cent_id, n.sn2, cn.cn2)""".stripMargin,
-      """ccodes AS (
-        |  SELECT vec_id, m, cent_id AS code FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY vec_id, m
-        |      ORDER BY dist2, cent_id) AS rr
-        |    FROM cdist)
-        |  WHERE rr = 1)""".stripMargin)).map(materializeCte)): _*)(
+      pqTrainCtes("pr", PqRK, PqRSubDim, PqTrainIters) ++
+      Seq(embcSql, embOf("cemb", "embc"), eeOf("cee", "cemb")) ++
+      subspaceCtes("c", "cee", PqRSubDim) ++ Seq(
+      subspaceDistCte("cdist", "c", "pr", PqTrainIters),
+      subspaceCodesCte("ccodes", "cdist"))).map(materializeCte)): _*)(
       """SELECT m, code, CAST(count(*) AS BIGINT) AS n_vectors,
         |  CAST(bit_xor(('0x' || substr(md5(CAST(vec_id AS VARCHAR)),
         |    1, 15))::BIGINT) AS BIGINT) AS members_fp
@@ -1374,59 +1253,9 @@ object SimilarityQueries {
     // shortlist), counted instead of re-ranked; the full-ADC `pq`
     // control states corpus-1 per query (ADC ranks everything)
     "ann_candidates" -> withCtes((Seq(embSql, eeSql, normSql,
-      hyperSql, bucketsSql,
-      hyperSqlFor(TunedBits, "thyper"), bucketsSqlFor("thyper", "tbuckets"),
-      s"""lcand AS (
-         |  SELECT qb.vec_id AS query_id, db.vec_id AS neighbor_id
-         |  FROM buckets qb
-         |  JOIN buckets db ON qb.bucket = db.bucket AND db.vec_id != qb.vec_id
-         |  WHERE qb.vec_id % $QueryStride = 0)""".stripMargin,
-      s"""tcand AS (
-         |  SELECT qb.vec_id AS query_id, db.vec_id AS neighbor_id
-         |  FROM tbuckets qb
-         |  JOIN tbuckets db ON qb.bucket = db.bucket AND db.vec_id != qb.vec_id
-         |  WHERE qb.vec_id % $QueryStride = 0)""".stripMargin,
-      // multiprobe: its own width-[[MultiProbeBits]] bucket tier probed
-      // over the SAME literal Hamming<=2 mask list the Spark side ships
-      hyperSqlFor(MultiProbeBits, "mphyper"),
-      bucketsSqlFor("mphyper", "mpbuckets"),
-      multiprobeSqlFor("mpbuckets", "mpprobes", MultiProbeBits,
-        MultiProbeHamming),
-      """mpcand AS (
-        |  SELECT DISTINCT p.query_id, db.vec_id AS neighbor_id
-        |  FROM mpprobes p
-        |  JOIN mpbuckets db ON p.bucket = db.bucket
-        |  WHERE db.vec_id != p.query_id)""".stripMargin,
-      """icdist AS (
-        |  SELECT e.vec_id, c.vec_id AS cent_id,
-        |         ne.n2 + nc.n2 - 2 * CAST(sum(e.v * c.v) AS BIGINT) AS dist2
-        |  FROM ee e
-        |  JOIN ee c ON c.vec_id < 16 AND c.i = e.i
-        |  JOIN norm ne ON ne.vec_id = e.vec_id
-        |  JOIN norm nc ON nc.vec_id = c.vec_id
-        |  GROUP BY e.vec_id, c.vec_id, ne.n2, nc.n2)""".stripMargin,
-      """iranked AS (
-        |  SELECT vec_id, cent_id,
-        |         row_number() OVER (PARTITION BY vec_id
-        |           ORDER BY dist2, cent_id) AS crank
-        |  FROM icdist)""".stripMargin,
-      "ilists AS (SELECT vec_id AS neighbor_id, cent_id FROM iranked WHERE crank = 1)",
-      s"""iprobes AS (
-         |  SELECT vec_id AS query_id, cent_id FROM iranked
-         |  WHERE crank <= $IvfProbes AND vec_id % $QueryStride = 0)""".stripMargin,
-      """icand AS (
-        |  SELECT DISTINCT p.query_id, l.neighbor_id
-        |  FROM iprobes p JOIN ilists l ON p.cent_id = l.cent_id
-        |  WHERE l.neighbor_id != p.query_id)""".stripMargin) ++
-      kmeansRoundCtes(KmeansIters, KmeansK) ++ Seq(
-      s"klists AS (SELECT vec_id AS neighbor_id, cent_id FROM ranked$KmeansIters WHERE crank = 1)",
-      s"""kprobes AS (
-         |  SELECT vec_id AS query_id, cent_id FROM ranked$KmeansIters
-         |  WHERE crank <= $KmeansProbes AND vec_id % $QueryStride = 0)""".stripMargin,
-      """kcand AS (
-        |  SELECT DISTINCT p.query_id, l.neighbor_id
-        |  FROM kprobes p JOIN klists l ON p.cent_id = l.cent_id
-        |  WHERE l.neighbor_id != p.query_id)""".stripMargin) ++
+      hyperSql, bucketsSql) ++ lshCtes("t", TunedBits) ++ Seq(
+      lshCandCte("lcand", "buckets"), lshCandCte("tcand", "tbuckets")) ++
+      multiprobeCandCtes("mp") ++ seedIvfCtes("i") ++ kmeansIvfCtes("k") ++
       // trained-PQ shortlist — the shipped pq_rerank candidate budget
       pqTrainedCtes("pr", PqRK, PqRSubDim, PqTrainIters, PqShortlist) ++
       // IVF-PQ composed shortlist — same codebooks, kcand-bounded ADC
@@ -1437,33 +1266,11 @@ object SimilarityQueries {
          |       CAST(n_candidates AS DOUBLE) / CAST(n_queries AS DOUBLE)
          |         AS avg_candidates
          |FROM (
-         |  SELECT 'ivf' AS method, '${AnnRoles("ivf")}' AS role,
-         |    (SELECT count(DISTINCT query_id) FROM icand) AS n_queries,
-         |    (SELECT count(*) FROM icand) AS n_candidates
-         |  UNION ALL
-         |  SELECT 'ivf_kmeans', '${AnnRoles("ivf_kmeans")}',
-         |    (SELECT count(DISTINCT query_id) FROM kcand),
-         |    (SELECT count(*) FROM kcand)
-         |  UNION ALL
-         |  SELECT 'lsh', '${AnnRoles("lsh")}',
-         |    (SELECT count(DISTINCT query_id) FROM lcand),
-         |    (SELECT count(*) FROM lcand)
-         |  UNION ALL
-         |  SELECT 'lsh_tuned', '${AnnRoles("lsh_tuned")}',
-         |    (SELECT count(DISTINCT query_id) FROM tcand),
-         |    (SELECT count(*) FROM tcand)
-         |  UNION ALL
-         |  SELECT 'multiprobe', '${AnnRoles("multiprobe")}',
-         |    (SELECT count(DISTINCT query_id) FROM mpcand),
-         |    (SELECT count(*) FROM mpcand)
-         |  UNION ALL
-         |  SELECT 'pq_rerank', '${AnnRoles("pq_rerank")}',
-         |    (SELECT count(DISTINCT query_id) FROM prshort),
-         |    (SELECT count(*) FROM prshort)
-         |  UNION ALL
-         |  SELECT 'ivfpq_rerank', '${AnnRoles("ivfpq_rerank")}',
-         |    (SELECT count(DISTINCT query_id) FROM ipshort),
-         |    (SELECT count(*) FROM ipshort)
+         |${methodRows(Seq("ivf" -> "icand", "ivf_kmeans" -> "kcand",
+             "lsh" -> "lcand", "lsh_tuned" -> "tcand", "multiprobe" -> "mpcand",
+             "pq_rerank" -> "prshort", "ivfpq_rerank" -> "ipshort"),
+           Seq("n_queries", "n_candidates"))(c => Seq(
+           s"(SELECT count(DISTINCT query_id) FROM $c)", s"(SELECT count(*) FROM $c)"))}
          |  UNION ALL
          |  SELECT 'pq', '${AnnRoles("pq")}',
          |    (SELECT count(*) FROM emb WHERE vec_id % $QueryStride = 0),
@@ -1484,21 +1291,8 @@ object SimilarityQueries {
          |  SELECT CAST(vec_id AS BIGINT) AS vec_id,
          |         list_transform(embedding, x -> CAST(floor(x * 1000) AS BIGINT)) AS q
          |  FROM embeddings WHERE vec_id % $QueryStride = 0)""".stripMargin,
-      """pee AS (
-        |  SELECT vec_id, unnest(q) AS v, generate_subscripts(q, 1) AS i
-        |  FROM peval)""".stripMargin,
-      """pnorm AS (SELECT vec_id, CAST(sum(v * v) AS BIGINT) AS n2
-        |          FROM pee GROUP BY vec_id)""".stripMargin,
-      hyperSqlFor(8, "hyper"),
-      bucketsSqlFor("hyper", "tbuck"),
-      """ebuck AS (
-        |  SELECT vec_id,
-        |    CAST(sum(CASE WHEN sdot > 0 THEN 1 << CAST(j AS INT) ELSE 0 END)
-        |         AS BIGINT) AS bucket
-        |  FROM (SELECT e.vec_id, h.j, sum(e.v * h.h) AS sdot
-        |        FROM pee e JOIN hyper h ON e.i = h.i
-        |        GROUP BY e.vec_id, h.j)
-        |  GROUP BY vec_id)""".stripMargin,
+      eeOf("pee", "peval"), normOf("pnorm", "pee"), hyperSql,
+      bucketsSqlFor("hyper", "tbuck", "ee"), bucketsSqlFor("hyper", "ebuck", "pee"),
       """dcand AS (SELECT DISTINCT t.vec_id, e.vec_id AS eval_id
         |          FROM tbuck t JOIN ebuck e USING (bucket))""".stripMargin,
       """ddots AS (
@@ -1524,14 +1318,8 @@ object SimilarityQueries {
     "embed_semdedup" -> withCtes(
       Seq(embcSql, embOverCorpusSql, eeSql, normSql) ++
       kmeansRoundCtes(KmeansIters) ++ Seq(
-      s"""adist AS (
-         |  SELECT d.vec_id, d.cent_id, n.n2 + c.cn2 - 2 * d.dot AS dist2
-         |  FROM (SELECT e.vec_id, c.cent_id,
-         |          CAST(sum(e.v * c.cv) AS BIGINT) AS dot
-         |        FROM ee e JOIN cent$KmeansIters c ON e.i = c.i
-         |        GROUP BY e.vec_id, c.cent_id) d
-         |  JOIN norm n ON n.vec_id = d.vec_id
-         |  JOIN cnorm$KmeansIters c ON c.cent_id = d.cent_id)""".stripMargin,
+      centroidCte("adist", "n.n2 + c.cn2 - 2 * d.dot AS dist2", "ee", "norm",
+        KmeansIters),
       """sdassign AS (
         |  SELECT vec_id, cent_id, dist2 FROM (
         |    SELECT *, row_number() OVER (PARTITION BY vec_id
@@ -1559,81 +1347,14 @@ object SimilarityQueries {
         |  JOIN norm nm ON nm.vec_id = m.vec_id
         |  JOIN norm nx ON nx.vec_id = m.ex_id)""".stripMargin),
 
-    "dedup_embedding" -> withCtes(
-      embcSql, embOverCorpusSql,
-      eeSql, normSql,
-      """hyper AS (
-        |  SELECT j, i,
-        |    2 * (instr('0123456789abcdef',
-        |         substr(md5(CAST(j AS VARCHAR) || '_' || CAST(i AS VARCHAR)), 1, 1)) - 1) - 15 AS h
-        |  FROM (SELECT unnest(range(0, 8)) AS j),
-        |       (SELECT unnest(range(1, 65)) AS i))""".stripMargin,
-      """buckets AS (
-        |  SELECT vec_id,
-        |    CAST(sum(CASE WHEN sdot > 0 THEN 1 << CAST(j AS INT) ELSE 0 END)
-        |         AS BIGINT) AS bucket
-        |  FROM (SELECT e.vec_id, h.j, sum(e.v * h.h) AS sdot
-        |        FROM ee e JOIN hyper h ON e.i = h.i
-        |        GROUP BY e.vec_id, h.j)
-        |  GROUP BY vec_id)""".stripMargin,
-      """cand AS (
-        |  SELECT a.vec_id AS doc_a, b.vec_id AS doc_b
-        |  FROM buckets a
-        |  JOIN buckets b ON a.bucket = b.bucket AND a.vec_id < b.vec_id)""".stripMargin,
-      """cdots AS (
-        |  SELECT c.doc_a, c.doc_b, CAST(sum(qe.v * de.v) AS BIGINT) AS dot
-        |  FROM cand c
-        |  JOIN ee qe ON qe.vec_id = c.doc_a
-        |  JOIN ee de ON de.vec_id = c.doc_b AND de.i = qe.i
-        |  GROUP BY 1, 2)""".stripMargin)(
-      """SELECT doc_a, doc_b, cos FROM (
-        |  SELECT doc_a, doc_b,
-        |         CAST(dot AS DOUBLE) / sqrt(CAST(nq.n2 * nd.n2 AS DOUBLE)) AS cos
-        |  FROM cdots
-        |  JOIN norm nq ON nq.vec_id = cdots.doc_a
-        |  JOIN norm nd ON nd.vec_id = cdots.doc_b)
-        |WHERE cos >= 0.99""".stripMargin),
+    "dedup_embedding" -> dedupEmbeddingOracle(""),
 
     // the incremental form shares the FULL recompute's derivation,
     // restricted to pairs touching the batch (doc_a < doc_b and batch
     // ids sit above 1e6, so doc_b ≥ 1e6 ⟺ the pair touches the batch)
     // — incremental == from-scratch is part of the gate
-    "dedup_embedding_incremental" -> withCtes(
-      embcSql, embOverCorpusSql,
-      eeSql, normSql,
-      """hyper AS (
-        |  SELECT j, i,
-        |    2 * (instr('0123456789abcdef',
-        |         substr(md5(CAST(j AS VARCHAR) || '_' || CAST(i AS VARCHAR)), 1, 1)) - 1) - 15 AS h
-        |  FROM (SELECT unnest(range(0, 8)) AS j),
-        |       (SELECT unnest(range(1, 65)) AS i))""".stripMargin,
-      """buckets AS (
-        |  SELECT vec_id,
-        |    CAST(sum(CASE WHEN sdot > 0 THEN 1 << CAST(j AS INT) ELSE 0 END)
-        |         AS BIGINT) AS bucket
-        |  FROM (SELECT e.vec_id, h.j, sum(e.v * h.h) AS sdot
-        |        FROM ee e JOIN hyper h ON e.i = h.i
-        |        GROUP BY e.vec_id, h.j)
-        |  GROUP BY vec_id)""".stripMargin,
-      """cand AS (
-        |  SELECT a.vec_id AS doc_a, b.vec_id AS doc_b
-        |  FROM buckets a
-        |  JOIN buckets b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
-        |  WHERE b.vec_id >= 1000000)""".stripMargin,
-      """cdots AS (
-        |  SELECT c.doc_a, c.doc_b, CAST(sum(qe.v * de.v) AS BIGINT) AS dot
-        |  FROM cand c
-        |  JOIN ee qe ON qe.vec_id = c.doc_a
-        |  JOIN ee de ON de.vec_id = c.doc_b AND de.i = qe.i
-        |  GROUP BY 1, 2)""".stripMargin)(
-      """SELECT doc_a, doc_b, cos FROM (
-        |  SELECT doc_a, doc_b,
-        |         CAST(dot AS DOUBLE) / sqrt(CAST(nq.n2 * nd.n2 AS DOUBLE)) AS cos
-        |  FROM cdots
-        |  JOIN norm nq ON nq.vec_id = cdots.doc_a
-        |  JOIN norm nd ON nd.vec_id = cdots.doc_b)
-        |WHERE cos >= 0.99""".stripMargin),
-
+    "dedup_embedding_incremental" ->
+      dedupEmbeddingOracle("\n  WHERE b.vec_id >= 1000000"),
     "embed_rproj" -> withCtes(embSql, eeSql, normSql,
       """sg AS (
         |  SELECT e.vec_id, e.v, d.j,

@@ -583,20 +583,44 @@ object StreamQueries {
         EventQueries.quantileFromSamples(s, s.read.parquet(out)))
     }))
 
-  val oracles: Map[String, String] = Map(
-    "stream_incremental" -> withCtes(ChainSql.tx)(
+  /** Tx count and max tx_id per block of the blocks `where` selects. */
+  private def blockCountsOracle(where: String): String =
+    withCtes(ChainSql.tx)(
       s"""SELECT block_id, CAST(count(*) AS BIGINT) AS n_txs,
          |  max(tx_id) AS max_tx_id
-         |FROM tx WHERE block_id > $Watermark
-         |GROUP BY block_id""".stripMargin),
+         |FROM tx WHERE $where
+         |GROUP BY block_id""".stripMargin)
 
-    "stream_tip_margin" -> withCtes(ChainSql.tx)(
-      s"""SELECT block_id, CAST(count(*) AS BIGINT) AS n_txs,
-         |  max(tx_id) AS max_tx_id
-         |FROM tx
-         |WHERE block_id > $Watermark
-         |  AND block_id <= (SELECT max(block_id) FROM tx) - $TipMargin
-         |GROUP BY block_id""".stripMargin),
+  /** Every block above the watermark, once: the plain, dedup and
+    * bounded-dedup ingests all land it. */
+  private val aboveWatermarkOracle: String =
+    blockCountsOracle(s"block_id > $Watermark")
+
+  // converged post-reorg state from the SOURCE: every block above the
+  // watermark present exactly once; generation 1 (newest epoch in the
+  // recovery run's namespace) for the re-ingested orphaned range,
+  // generation 0 (a pre-recovery epoch) for every surviving block
+  private val reorgOracle: String = withCtes(ChainSql.tx)(
+    s"""SELECT block_id, CAST(count(*) AS BIGINT) AS n_txs,
+       |  max(tx_id) AS max_tx_id,
+       |  CAST(CASE WHEN block_id >
+       |      (SELECT max(block_id) FROM tx) - $ReorgDepth
+       |    THEN 1 ELSE 0 END AS BIGINT) AS ingest_generation
+       |FROM tx WHERE block_id > $Watermark
+       |GROUP BY block_id""".stripMargin)
+
+  // the page stated from the source: 25 txs strictly after the cursor
+  private val keysetPageOracle: String = withCtes(ChainSql.tx)(
+    """SELECT tx_id, block_id, tx_id_group
+      |FROM tx WHERE tx_id > 9000
+      |ORDER BY tx_id LIMIT 25""".stripMargin)
+
+  val oracles: Map[String, String] = Map(
+    "stream_incremental" -> aboveWatermarkOracle,
+
+    "stream_tip_margin" -> blockCountsOracle(
+      s"""block_id > $Watermark
+         |  AND block_id <= (SELECT max(block_id) FROM tx) - $TipMargin""".stripMargin),
 
     // per-chain margins = the chain_params fixture's (btc 6, ltc 12);
     // the chain_params oracle independently checks that the engine
@@ -617,42 +641,15 @@ object StreamQueries {
         |WHERE block_id <= tip - margin
         |GROUP BY ch.currency""".stripMargin),
 
-    // converged post-reorg state from the SOURCE: every block above the
-    // watermark present exactly once; generation 1 (newest epoch in the
-    // recovery run's namespace) for the re-ingested orphaned range,
-    // generation 0 (a pre-recovery epoch) for every surviving block
-    "stream_reorg_recover" -> withCtes(ChainSql.tx)(
-      s"""SELECT block_id, CAST(count(*) AS BIGINT) AS n_txs,
-         |  max(tx_id) AS max_tx_id,
-         |  CAST(CASE WHEN block_id >
-         |      (SELECT max(block_id) FROM tx) - $ReorgDepth
-         |    THEN 1 ELSE 0 END AS BIGINT) AS ingest_generation
-         |FROM tx WHERE block_id > $Watermark
-         |GROUP BY block_id""".stripMargin),
+    "stream_reorg_recover" -> reorgOracle,
 
     // identical converged shape for the epoch-boundary-spanning reorg:
     // the two-run ingest history changes WHICH partitions roll back,
     // never the converged chain or the recovery-namespace membership
-    "stream_reorg_multi_epoch" -> withCtes(ChainSql.tx)(
-      s"""SELECT block_id, CAST(count(*) AS BIGINT) AS n_txs,
-         |  max(tx_id) AS max_tx_id,
-         |  CAST(CASE WHEN block_id >
-         |      (SELECT max(block_id) FROM tx) - $ReorgDepth
-         |    THEN 1 ELSE 0 END AS BIGINT) AS ingest_generation
-         |FROM tx WHERE block_id > $Watermark
-         |GROUP BY block_id""".stripMargin),
+    "stream_reorg_multi_epoch" -> reorgOracle,
 
-    "stream_dedup" -> withCtes(ChainSql.tx)(
-      s"""SELECT block_id, CAST(count(*) AS BIGINT) AS n_txs,
-         |  max(tx_id) AS max_tx_id
-         |FROM tx WHERE block_id > $Watermark
-         |GROUP BY block_id""".stripMargin),
-
-    "stream_dedup_bounded" -> withCtes(ChainSql.tx)(
-      s"""SELECT block_id, CAST(count(*) AS BIGINT) AS n_txs,
-         |  max(tx_id) AS max_tx_id
-         |FROM tx WHERE block_id > $Watermark
-         |GROUP BY block_id""".stripMargin),
+    "stream_dedup" -> aboveWatermarkOracle,
+    "stream_dedup_bounded" -> aboveWatermarkOracle,
 
     "stream_attribution" ->
       s"""WITH e AS (
@@ -714,11 +711,11 @@ object StreamQueries {
 
     // stream == batch: the monitor over the maintained hourly table
     // must flag exactly the hours the batch sweep flags
-    "stream_anomaly" -> EventQueries.oraclesAll("events_anomaly"),
+    "stream_anomaly" -> EventQueries.oracles("events_anomaly"),
 
     // stream == batch: the merged epoch samples must select exactly
     // the quantiles the one-pass batch sketch selects
-    "stream_quantile" -> EventQueries.oraclesAll("events_quantile_sketch"),
+    "stream_quantile" -> EventQueries.oracles("events_quantile_sketch"),
 
     // evolution content contract stated from the SOURCE: epoch 0 has
     // no fee column (count/sum 0), epoch 1 carries tx_id % 100
@@ -732,25 +729,14 @@ object StreamQueries {
         |  CAST(count(*) AS BIGINT), CAST(sum(tx_id % 100) AS BIGINT)
         |FROM tx WHERE block_id >= 1600""".stripMargin),
 
-    // the page stated from the source: 25 txs strictly after the cursor
-    "store_keyset_page" -> withCtes(ChainSql.tx)(
-      """SELECT tx_id, block_id, tx_id_group
-        |FROM tx WHERE tx_id > 9000
-        |ORDER BY tx_id LIMIT 25""".stripMargin),
+    "store_keyset_page" -> keysetPageOracle,
 
     // the bounded form returns the SAME page (the oracle proves the
     // 2-bucket bound loses nothing on this store)
-    "store_keyset_page_bounded" -> withCtes(ChainSql.tx)(
-      """SELECT tx_id, block_id, tx_id_group
-        |FROM tx WHERE tx_id > 9000
-        |ORDER BY tx_id LIMIT 25""".stripMargin),
+    "store_keyset_page_bounded" -> keysetPageOracle,
 
     // the as-of-epoch-1 snapshot is exactly the first two block ranges
-    "store_time_travel" -> withCtes(ChainSql.tx)(
-      """SELECT block_id, CAST(count(*) AS BIGINT) AS n_txs,
-        |  max(tx_id) AS max_tx_id
-        |FROM tx WHERE block_id < 1600
-        |GROUP BY block_id""".stripMargin),
+    "store_time_travel" -> blockCountsOracle("block_id < 1600"),
 
     // post-compaction contract: the content rollup stated from the
     // source table AND the literal one-file-per-bucket layout

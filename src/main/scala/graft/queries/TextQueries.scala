@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.api.Text.predLangCase
 import graft.chain.Chain.table
 import graft.chain.ChainSql.{ccWalkCte, withCtes, withRecursiveCtes}
 import graft.ops.TextCorpus.{docWordsSql, shinglesSql}
@@ -73,16 +74,41 @@ object TextQueries {
       |        WHERE doc_id % 100 != 0) t JOIN bench USING (shingle)
       |  GROUP BY doc_id)""".stripMargin)
 
-  /** Deterministic argmax with fixed precedence en>de>fr>es, zh fallback
-    * when no stopwords hit — identical CASE in both engines (no reliance
-    * on engine-specific arg_max tie rules). */
-  private val predLangCase: String =
-    """CASE WHEN en_hits + de_hits + fr_hits + es_hits = 0 THEN 'zh'
-      |     WHEN en_hits >= de_hits AND en_hits >= fr_hits
-      |          AND en_hits >= es_hits THEN 'en'
-      |     WHEN de_hits >= fr_hits AND de_hits >= es_hits THEN 'de'
-      |     WHEN fr_hits >= es_hits THEN 'fr'
-      |     ELSE 'es' END""".stripMargin
+  /** Per-doc hit counts per language, `hit(lang)` counting one
+    * language's hits in a doc's words. */
+  private def langHitsSql(hit: String => String): String =
+    s"""(SELECT doc_id, lang,
+       |        ${hit("en")} AS en_hits, ${hit("de")} AS de_hits,
+       |        ${hit("fr")} AS fr_hits, ${hit("es")} AS es_hits
+       |      FROM words)""".stripMargin
+
+  /** Per-doc language prediction: the argmax of the `hit` counts (one
+    * CASE in both engines, [[graft.api.Text.predLangCase]]). */
+  private def langidOracle(hit: String => String): String =
+    withCtes(docWordsSql)(
+      s"""SELECT doc_id, lang, en_hits, de_hits, fr_hits, es_hits,
+         |  $predLangCase AS pred_lang,
+         |  $predLangCase = lang AS match
+         |FROM ${langHitsSql(hit)}""".stripMargin)
+
+  /** One token-count oracle for the parquet, JSONL and gzip reads. */
+  private val tokenCountOracle: String = withCtes(docWordsSql)(
+    """SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+      |  CAST(sum(len(w)) AS BIGINT) AS total_tokens,
+      |  CAST(sum(length(text)) AS BIGINT) AS total_chars,
+      |  CAST(sum(CAST(ceil(length(text) / 4.0) AS BIGINT)) AS BIGINT)
+      |    AS approx_bpe_tokens,
+      |  CAST(sum(len(w)) AS DOUBLE) / count(*) AS avg_tokens_per_doc
+      |FROM words GROUP BY source""".stripMargin)
+
+  /** Each doc's rank `rn` within its source in md5(doc_id) order — the
+    * corpus-mix selection order. */
+  private def hashRankCte(name: String): String =
+    s"""$name AS (
+       |  SELECT source, doc_id,
+       |    CAST(row_number() OVER (PARTITION BY source
+       |      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS BIGINT) AS rn
+       |  FROM words)""".stripMargin
 
   /** (doc_id, bigram) rows — ONE definition of the consecutive-word-pair
     * derivation shared by ngram_bigrams and text_lm_score (the SQL side
@@ -1436,34 +1462,15 @@ object TextQueries {
       |LEFT JOIN intr i ON i.src_a = e.src_a AND i.src_b = e.src_b""".stripMargin)
 
   val oracles: Map[String, String] = Map(
-    "text_langid" -> withCtes(docWordsSql)(
-      s"""SELECT doc_id, lang, en_hits, de_hits, fr_hits, es_hits,
-         |  $predLangCase AS pred_lang,
-         |  $predLangCase = lang AS match
-         |FROM (SELECT doc_id, lang,
-         |        ${hitsSql("en")} AS en_hits, ${hitsSql("de")} AS de_hits,
-         |        ${hitsSql("fr")} AS fr_hits, ${hitsSql("es")} AS es_hits
-         |      FROM words)""".stripMargin),
+    "text_langid" -> langidOracle(hitsSql),
 
     "text_langid_confusion" -> withCtes(docWordsSql)(
       s"""SELECT lang, $predLangCase AS pred_lang,
          |  CAST(count(*) AS BIGINT) AS n
-         |FROM (SELECT doc_id, lang,
-         |        ${hitsSql("en")} AS en_hits, ${hitsSql("de")} AS de_hits,
-         |        ${hitsSql("fr")} AS fr_hits, ${hitsSql("es")} AS es_hits
-         |      FROM words)
+         |FROM ${langHitsSql(hitsSql)}
          |GROUP BY 1, 2""".stripMargin),
 
-    "text_langid_ngram" -> withCtes(docWordsSql)({
-      def g(lang: String): String = graft.api.Text.gramHits(lang)
-      s"""SELECT doc_id, lang, en_hits, de_hits, fr_hits, es_hits,
-         |  $predLangCase AS pred_lang,
-         |  $predLangCase = lang AS match
-         |FROM (SELECT doc_id, lang,
-         |        ${g("en")} AS en_hits, ${g("de")} AS de_hits,
-         |        ${g("fr")} AS fr_hits, ${g("es")} AS es_hits
-         |      FROM words)""".stripMargin
-    }),
+    "text_langid_ngram" -> langidOracle(graft.api.Text.gramHits),
 
     "text_quality" -> withCtes(docWordsSql)(
       s"""SELECT doc_id,
@@ -1474,34 +1481,11 @@ object TextQueries {
          |  CAST(length(text) - length(replace(text, '.', '')) AS BIGINT) AS n_periods
          |FROM words""".stripMargin),
 
-    "token_count" -> withCtes(docWordsSql)(
-      """SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(len(w)) AS BIGINT) AS total_tokens,
-        |  CAST(sum(length(text)) AS BIGINT) AS total_chars,
-        |  CAST(sum(CAST(ceil(length(text) / 4.0) AS BIGINT)) AS BIGINT)
-        |    AS approx_bpe_tokens,
-        |  CAST(sum(len(w)) AS DOUBLE) / count(*) AS avg_tokens_per_doc
-        |FROM words GROUP BY source""".stripMargin),
-
+    "token_count" -> tokenCountOracle,
     // same oracle body: the JSONL round-trip must be invisible
-    "token_count_jsonl" -> withCtes(docWordsSql)(
-      """SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(len(w)) AS BIGINT) AS total_tokens,
-        |  CAST(sum(length(text)) AS BIGINT) AS total_chars,
-        |  CAST(sum(CAST(ceil(length(text) / 4.0) AS BIGINT)) AS BIGINT)
-        |    AS approx_bpe_tokens,
-        |  CAST(sum(len(w)) AS DOUBLE) / count(*) AS avg_tokens_per_doc
-        |FROM words GROUP BY source""".stripMargin),
-
+    "token_count_jsonl" -> tokenCountOracle,
     // and again through gzip: the codec must be invisible too
-    "token_count_jsonl_gz" -> withCtes(docWordsSql)(
-      """SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(len(w)) AS BIGINT) AS total_tokens,
-        |  CAST(sum(length(text)) AS BIGINT) AS total_chars,
-        |  CAST(sum(CAST(ceil(length(text) / 4.0) AS BIGINT)) AS BIGINT)
-        |    AS approx_bpe_tokens,
-        |  CAST(sum(len(w)) AS DOUBLE) / count(*) AS avg_tokens_per_doc
-        |FROM words GROUP BY source""".stripMargin),
+    "token_count_jsonl_gz" -> tokenCountOracle,
 
     // round-unrolled BPE mirror (the kmeansRoundCtes pattern): each
     // round's pair-count / top-pair / island-parity merge is one CTE
@@ -1890,11 +1874,7 @@ object TextQueries {
         |  SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
         |    greatest(1, CAST(floor(sqrt(count(*))) AS BIGINT) * 4) AS quota
         |  FROM words GROUP BY source)""".stripMargin,
-      """rk AS (
-        |  SELECT source, doc_id,
-        |    CAST(row_number() OVER (PARTITION BY source
-        |      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS BIGINT) AS rn
-        |  FROM words)""".stripMargin)(
+      hashRankCte("rk"))(
       """SELECT r.source, r.doc_id, r.rn, CAST(c.quota AS BIGINT) AS quota
         |FROM rk r JOIN cnt c USING (source)
         |WHERE r.rn <= c.quota""".stripMargin),
@@ -1910,11 +1890,7 @@ object TextQueries {
         |  SELECT source, n_docs,
         |    greatest(1, (200 * wt) // tw) AS quota
         |  FROM wts, tot)""".stripMargin,
-      """trk AS (
-        |  SELECT source, doc_id,
-        |    CAST(row_number() OVER (PARTITION BY source
-        |      ORDER BY md5(CAST(doc_id AS VARCHAR)), doc_id) AS BIGINT) AS rn
-        |  FROM words)""".stripMargin)(
+      hashRankCte("trk"))(
       """SELECT r.source, r.doc_id, r.rn, CAST(c.quota AS BIGINT) AS quota
         |FROM trk r JOIN tq c USING (source)
         |WHERE r.rn <= c.quota""".stripMargin),

@@ -21,6 +21,23 @@ class SmokeSpec extends SparkSpec {
     assert(unknown.isEmpty, s"oracles without queries: $unknown")
   }
 
+  test("no oracle's WITH list declares a CTE name twice") {
+    // DuckDB rejects a duplicate CTE name, so a shared CTE composed into
+    // one oracle twice would otherwise fail only against DuckDB. A
+    // top-level CTE starts its line: `name AS (` or `name(cols) AS (`.
+    val decl = """^(?:WITH (?:RECURSIVE )?)?(\w+)(?:\([^)]*\))? AS (?:MATERIALIZED )?\(""".r
+    val declared = SparkEntry.oracleSql.map { case (name, sql) =>
+      name -> sql.linesIterator.flatMap(decl.findFirstMatchIn(_))
+        .map(_.group(1).toLowerCase).toSeq
+    }
+    assert(declared("embed_lsh_ann").containsSlice(Seq("cand", "cdots", "ccos")))
+    val dups = declared.toSeq.sortBy(_._1).collect {
+      case (name, ctes) if ctes.distinct.size < ctes.size =>
+        s"$name: ${ctes.diff(ctes.distinct).distinct.mkString(", ")}"
+    }
+    assert(dups.isEmpty, dups.mkString("\n"))
+  }
+
   test("scale-up factor guard admits the documented range") {
     ScaleUp.checkFactor(1)
     ScaleUp.checkFactor(10)  // the default invocation and SCALE.md's curve

@@ -41,18 +41,25 @@
 #                             Chain.table and parked tiers through
 #                             Tier.read, both with ChainStore.parquet's
 #                             remembered schema
-#   7. sbt compile          — the tree compiles (r12 shipped a tree that
+#   7. oracle CTEs in one place — each shared oracle CTE listed below
+#                             (the cosine re-rank pair cdots/ccos, the CDC
+#                             base b, ...) is defined exactly once in
+#                             src/main/scala, found by a text unique to
+#                             its definition: oracles compose the named
+#                             CTE with ChainSql.withCtes, never a pasted
+#                             copy
+#   8. sbt compile          — the tree compiles (r12 shipped a tree that
 #                             didn't; this script exists so that cannot
 #                             recur)
-#   8. sbt test             — full ScalaTest suite green
-#   9. graft.Verify sf0.01  — every SparkEntry query dumps its parquet
-#  10. tools/check.py       — DuckDB oracle compare: rows + schema +
+#   9. sbt test             — full ScalaTest suite green
+#  10. graft.Verify sf0.01  — every SparkEntry query dumps its parquet
+#  11. tools/check.py       — DuckDB oracle compare: rows + schema +
 #                             driver-emulated canonical hash per query,
 #                             plus the oracle cost budget (10 s/query,
 #                             180 s/suite)
 #
 # Usage: tools/preflight.sh [--quick]
-#   --quick skips sbt test (stages 1-7,9,10 only) for mid-round iteration;
+#   --quick skips sbt test (stages 1-8,10,11 only) for mid-round iteration;
 #   the snapshot commit requires the FULL run.
 set -uo pipefail
 cd "$(dirname "$0")/.."
@@ -65,7 +72,7 @@ OUT=target/verify_out
 
 fail() { echo "PREFLIGHT: FAIL at stage $1 — do NOT commit the snapshot"; exit 1; }
 
-echo "PREFLIGHT stage 1/10: tiers in one place (ops/Tiers.scala)"
+echo "PREFLIGHT stage 1/11: tiers in one place (ops/Tiers.scala)"
 if grep -rnE '"[^"]*(_SUCCESS|_BUILT)[^"]*"|target/intermediate|FormatVersion|Tiers\.(park|parquet)\(' \
     src/main/scala --include='*.scala' \
     | grep -v '^src/main/scala/graft/ops/Tiers.scala:'
@@ -73,7 +80,7 @@ then
   fail tiers
 fi
 
-echo "PREFLIGHT stage 2/10: session setup only in Session.scala"
+echo "PREFLIGHT stage 2/11: session setup only in Session.scala"
 if grep -rn 'SparkSession\.builder' src/main/scala --include='*.scala' \
     | grep -v '^src/main/scala/graft/Session.scala:' ||
    grep -rnE 'local\[[0-9]+\]' src/main/scala --include='*.scala'
@@ -81,7 +88,7 @@ then
   fail session
 fi
 
-echo "PREFLIGHT stage 3/10: stream runner and partition overwrite in one place each"
+echo "PREFLIGHT stage 3/11: stream runner and partition overwrite in one place each"
 if grep -rn 'partitionOverwriteMode' src/main/scala --include='*.scala' \
     | grep -v '^src/main/scala/graft/chain/ChainStore.scala:' ||
    grep -rnE 'processAllAvailable\(\)|Trigger\.AvailableNow\(\)' src/main/scala \
@@ -90,7 +97,7 @@ then
   fail streams
 fi
 
-echo "PREFLIGHT stage 4/10: loop lifecycle in one place (operators/Fixpoint.scala)"
+echo "PREFLIGHT stage 4/11: loop lifecycle in one place (operators/Fixpoint.scala)"
 if grep -rnE 'Materialize\.release\(|truncateBeforeAction' src/main/scala \
     --include='*.scala' \
     | grep -vE '^src/main/scala/graft/operators/(Fixpoint|Materialize|PrefixCarry)\.scala:'
@@ -98,7 +105,7 @@ then
   fail loops
 fi
 
-echo "PREFLIGHT stage 5/10: store I/O in one place (chain/ChainStore.scala)"
+echo "PREFLIGHT stage 5/11: store I/O in one place (chain/ChainStore.scala)"
 # operators/Materialize.scala is allowed: releasing a checkpoint deletes
 # the RDD's checkpoint files, and it holds the RDD but no SparkSession
 if grep -rnE 'org\.apache\.hadoop\.fs|getFileSystem\(' src/main/scala \
@@ -108,7 +115,7 @@ then
   fail store-io
 fi
 
-echo "PREFLIGHT stage 6/10: immutable inputs read in one place (chain/ChainStore.scala)"
+echo "PREFLIGHT stage 6/11: immutable inputs read in one place (chain/ChainStore.scala)"
 # fixture tables read through Chain.table, parked tiers through Tier.read
 if grep -rnE 'read\.parquet\([^)]*\.parquet"' src/main/scala --include='*.scala' \
     | grep -v '^src/main/scala/graft/chain/' ||
@@ -118,21 +125,48 @@ then
   fail immutable-reads
 fi
 
-echo "PREFLIGHT stage 7/10: sbt compile"
+echo "PREFLIGHT stage 7/11: oracle CTEs in one place"
+# "<CTE> (<where it is named>)|<a line of its definition>", the line
+# compared without indentation or stripMargin bar: one match is the named
+# definition, a second is a pasted copy, none means the entry went stale
+ORACLE_CTES=(
+  "cdots (SimilarityQueries.dotsCte)|SELECT c.query_id, c.neighbor_id, CAST(sum(qe.v * de.v) AS BIGINT) AS dot"
+  "ccos (SimilarityQueries.cosCte)|SELECT query_id, neighbor_id,"
+  "IVF probe cand (SimilarityQueries.ivfProbeCtes)|SELECT DISTINCT p.query_id, l.neighbor_id"
+  "k-means centroid dots (SimilarityQueries.centroidCte)|FROM (SELECT e.vec_id, c.cent_id, CAST(sum(e.v * c.cv) AS BIGINT) AS dot"
+  "PQ subspace dist (SimilarityQueries.subspaceDistCte)|n.sn2 + cn.cn2 - 2 * CAST(sum(s.v * c.cv) AS BIGINT) AS dist2"
+  "CDC base b (RelQueries.cdcBaseSql)|o_orderstatus AS status,"
+  "CDC change set ch (RelQueries.cdcMergeSql)|SELECT k, 'U' AS op, CAST(price + 100 AS DECIMAL(12,2)) AS new_price,"
+  "io address dispatch (ChainSql.ioAddress)|WHEN address_type IN (1, 7, 10) THEN NULL"
+  "session gap s (EventQueries.sessionCtes)|OR ets - lag(ets) OVER w > 1800"
+)
+for entry in "${ORACLE_CTES[@]}"; do
+  hits=$(find src/main/scala -name '*.scala' -exec awk -v t="${entry#*|}" '{
+      l = $0; sub(/^[ \t]*[|]?[ \t]*/, "", l); sub(/[ \t]+$/, "", l)
+      if (l == t) print FILENAME ":" FNR }' {} +)
+  n=$(grep -c . <<< "$hits")
+  if [[ $n -ne 1 ]]; then
+    echo "oracle CTE ${entry%%|*}: $n definitions (want 1)"
+    [[ -n "$hits" ]] && echo "$hits"
+    fail oracle-ctes
+  fi
+done
+
+echo "PREFLIGHT stage 8/11: sbt compile"
 sbt -batch compile || fail compile
 
 if [[ $QUICK -eq 0 ]]; then
-  echo "PREFLIGHT stage 8/10: sbt test"
+  echo "PREFLIGHT stage 9/11: sbt test"
   sbt -batch test || fail test
 else
-  echo "PREFLIGHT stage 8/10: SKIPPED (--quick)"
+  echo "PREFLIGHT stage 9/11: SKIPPED (--quick)"
 fi
 
-echo "PREFLIGHT stage 9/10: graft.Verify @ $SF"
+echo "PREFLIGHT stage 10/11: graft.Verify @ $SF"
 rm -rf "$OUT"
 sbt -batch "runMain graft.Verify $SF $OUT" || fail verify
 
-echo "PREFLIGHT stage 10/10: tools/check.py (rows+schema+hash+budget)"
+echo "PREFLIGHT stage 11/11: tools/check.py (rows+schema+hash+budget)"
 python3 tools/check.py "$SF" "$OUT" || fail check
 
 echo "PREFLIGHT: ALL GREEN — safe to commit the snapshot"
