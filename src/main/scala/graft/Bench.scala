@@ -56,7 +56,7 @@ object Bench {
     // pre-batch media fingerprint band + cluster-label tiers
     // consumed by the incremental pHash cluster maintenance query
     "phash_base_build" ->
-      counts(phashBandBaseTable(_, _), phashClusterBaseTable(_, _)),
+      counts(phashBandBaseTable, phashClusterBaseTable),
     // full-corpus media cluster labels consumed by the batch
     // cluster rollup
     "phash_build" -> counts(phashClusterTable),
@@ -95,93 +95,115 @@ object Bench {
           graft.chain.Chain.transactions(s, dir), out)); ()
     })
 
+  type Build = (SparkSession, String) => Unit
+  type Query = (SparkSession, String) => DataFrame
+
+  /** One timed entry of a pass: its seconds, or -1 when it threw (a
+    * failed build or query must never masquerade as a fast time), the
+    * query's row count, the persistent RDDs left after it, and the
+    * engine work it ran. */
+  final case class Run(name: String, secs: Double, rows: Option[Long],
+      pins: Int, work: Work)
+
+  /** Runs one entry of a pass, its engine work measured; a query's
+    * operator-pinned inputs are freed after the timed span. */
+  private def entry(s: SparkSession, name: String)(
+      timed: => Option[(DataFrame, Long)]): Run = {
+    val ((secs, rows), work) = WorkMeter.measure(s) {
+      try {
+        val t0 = System.nanoTime()
+        val out = timed
+        val secs = (System.nanoTime() - t0) / 1e9
+        out.foreach(o => graft.operators.Materialize.releasePinnedLeaves(o._1))
+        (secs, out.map(_._2))
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+        (-1.0, None)
+      }
+    }
+    Run(name, secs, rows, s.sparkContext.getPersistentRDDs.size, work)
+  }
+
+  /** Untimed warm-up: session, codegen and parquet-footer costs are
+    * one-time and not attributable to the first entry that runs. */
+  def warmUp(s: SparkSession, sfDir: String): Unit =
+    try {
+      graft.chain.Chain.table(s, sfDir, "lineitem")
+        .groupBy("l_returnflag").count().count()
+    } catch { case _: Throwable => () }
+
+  /** One cold pass: every parked tier root and the bucketed-table cache
+    * wiped, then `builds` (entries of [[coldBuilds]], in its order) run
+    * one by one. The parked tiers are keyed by fixture mtime, so whether
+    * a build ran warm or cold would otherwise depend on what ran before
+    * it (r06 vs r07 "regressions" were cache illusions). */
+  def coldPass(s: SparkSession, sfDir: String,
+      builds: Seq[(String, Build)]): Seq[Run] = {
+    graft.ops.Tiers.wipe()
+    RefQueries.invalidateBucketedCache()
+    builds.map { case (name, build) =>
+      entry(s, name) {
+        build(s, sfDir)
+        None
+      }
+    }
+  }
+
+  /** One warm pass over `queries`: each is constructed and counted (the
+    * timed span), then its operator-pinned inputs are freed untimed, so
+    * a 400-invocation bench session stays storage-flat. */
+  def queryPass(s: SparkSession, sfDir: String,
+      queries: Seq[(String, Query)]): Seq[Run] =
+    queries.map { case (name, query) =>
+      entry(s, name) {
+        val frame = query(s, sfDir)
+        Some((frame, frame.count()))
+      }
+    }
+
+  /** Min-of-2 per entry over two passes of the same entries; a failure
+    * in EITHER pass reports the entry as -1, never the other pass's
+    * time. The two passes are interleaved (one runs every entry before
+    * the other starts), so a contention window on a shared box shorter
+    * than a pass cannot inflate both samples of one entry (r11: four
+    * headline queries read 10-30x their quiet times when sampled back
+    * to back). */
+  def minOf2(a: Seq[Run], b: Seq[Run]): Seq[(String, Double)] =
+    a.zip(b).map { case (x, y) =>
+      x.name -> (if (x.secs < 0 || y.secs < 0) -1.0 else math.min(x.secs, y.secs))
+    }
+
+  /** The entries that failed in any of `runs`, first failure first. */
+  def failures(runs: Seq[Run]): Seq[String] =
+    runs.filter(_.secs < 0).map(_.name).distinct
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.local()
-    // untimed warmup: session/codegen/parquet-footer costs are one-time
-    // and not attributable to the first query in iteration order
-    try {
-      graft.chain.Chain.table(spark, sfDir, "lineitem")
-        .groupBy("l_returnflag").count().count()
-    } catch { case _: Throwable => () }
-    // a failed build/query must never masquerade as a fast time: record
-    // failures per-entry (value -1) and count them into the summary
-    val errors = scala.collection.mutable.ArrayBuffer.empty[String]
-    // one-time builds run up front, each reported as its own entry —
-    // the queries that use them then measure query latency on the built
-    // architecture instead of burying the build in whichever query runs
-    // first: the dedup intermediate tier and the CLUSTERED BY tables.
-    def timed(name: String)(body: => Unit): (String, Double) = {
-      val t0 = System.nanoTime()
-      val ok = try { body; true } catch { case e: Throwable =>
-        System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-        errors += name; false
-      }
-      name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
-    }
-    // Deterministic cache policy: the parked tiers (graft.ops.Tier)
-    // are keyed by fixture mtime, so whether a build
-    // ran warm or cold depended on what ran before it — r06 vs r07
-    // "regressions" were cache illusions. Build entries are ALWAYS cold
-    // (tier root wiped first) and query entries always warm (builds
-    // precede them). Each cold pass runs the whole build inventory;
-    // TWO passes run and the per-entry MIN is reported — single-shot
-    // cold timings on a shared machine swung the driver's round
-    // headline 1.5× (r10: 86 s driver vs 59 s quiet rerun), and builds
-    // are ~85 % of the total.
-    def coldBuildPass(): Seq[(String, Double)] = {
-      graft.ops.Tiers.wipe()
-      graft.queries.RefQueries.invalidateBucketedCache()
-      coldBuilds.map { case (name, build) => timed(name)(build(spark, sfDir)) }
-    }
+    warmUp(spark, sfDir)
     // every entry's RAW pass samples, emitted into target/bench.json —
     // when a shared-box contention window inflates a number, the pass
     // pair makes the contamination visible in the artifact itself
     val rawPasses =
       scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
-    val pass1 = coldBuildPass()
-    val pass2 = coldBuildPass()
-    // min-of-2 per entry; a failure in EITHER pass reports the entry
-    // failed — never the other pass's time. The two build passes are
-    // ALREADY interleaved (pass 1 runs the whole inventory before pass
-    // 2 starts), so a contention window shorter than a full pass can't
-    // inflate both samples of one entry.
-    val builds = pass1.zip(pass2).map { case ((n, a), (_, b)) =>
-      rawPasses(n) = (a, b)
-      n -> (if (a < 0 || b < 0) -1.0 else math.min(a, b))
+    val runs = scala.collection.mutable.ArrayBuffer.empty[Run]
+    def twice(pass: => Seq[Run]): Seq[(String, Double)] = {
+      val a = pass
+      val b = pass
+      runs ++= a ++= b
+      a.zip(b).foreach { case (x, y) => rawPasses(x.name) = (x.secs, y.secs) }
+      minOf2(a, b)
     }
-
-    // query entries: warm (builds already ran), best-of-2 with the two
-    // samples INTERLEAVED (pass A over every entry, then pass B, min
-    // per entry) — back-to-back sampling let one multi-minute
-    // contention window on the shared driver box inflate BOTH samples
-    // of the same entries (r11: four headline queries reported 10-30×
-    // their quiet times). Pass A also absorbs residual JIT/page-cache
-    // noise. A failure in EITHER pass records the entry as failed
-    // (-1), never as a fast time.
-    def time(names: Seq[String]): Seq[(String, Double)] = {
-      def onePass(name: String): Double =
-        try {
-          val t0 = System.nanoTime()
-          val frame = SparkEntry.queries(name)(spark, sfDir)
-          frame.count()
-          val secs = (System.nanoTime() - t0) / 1e9
-          // untimed post-consumption free of operator-pinned inputs —
-          // a 400-invocation bench session stays storage-flat
-          graft.operators.Materialize.releasePinnedLeaves(frame)
-          secs
-        } catch { case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          errors += name
-          -1.0
-        }
-      val passA = names.map(n => n -> onePass(n))
-      val passB = names.map(n => n -> onePass(n))
-      passA.zip(passB).map { case ((n, a), (_, b)) =>
-        rawPasses(n) = (a, b)
-        n -> (if (a < 0 || b < 0) -1.0 else math.min(a, b))
-      }
-    }
+    // one-time builds run up front, each reported as its own entry, so
+    // the queries that use them measure query latency on the built tiers
+    // instead of burying a build in whichever query runs first. Builds
+    // are ALWAYS cold and queries always warm; builds are ~85 % of the
+    // total, and single-shot cold timings on a shared machine swung the
+    // round headline 1.5x (r10: 86 s driver vs 59 s quiet rerun)
+    val builds = twice(coldPass(spark, sfDir, coldBuilds))
+    val queries = SparkEntry.queries
+    def time(names: Seq[String]): Seq[(String, Double)] =
+      twice(queryPass(spark, sfDir, names.map(n => n -> queries(n))))
     def json(rs: Seq[(String, Double)]): String =
       rs.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
 
@@ -189,8 +211,7 @@ object Bench {
     // inventory so per-family regressions are visible in every round
     val headlineTimes = time(headline)
     val results = builds ++ headlineTimes
-    val rest = time(
-      (SparkEntry.queries.keySet -- headline.toSet).toSeq.sorted)
+    val rest = time((queries.keySet -- headline.toSet).toSeq.sorted)
     val allResults = results ++ rest
     // failed entries (-1) must not reduce the totals
     val total = results.map(_._2).filter(_ >= 0).sum
@@ -200,13 +221,14 @@ object Bench {
     // construction cost moved" from "query latency moved"
     val buildTotal = builds.map(_._2).filter(_ >= 0).sum
     val headlineQueryTotal = headlineTimes.map(_._2).filter(_ >= 0).sum
+    val errors = failures(runs.toSeq)
     val errJson =
-      errors.distinct.map("\"" + _ + "\"").mkString("[", ",", "]")
+      errors.map("\"" + _ + "\"").mkString("[", ",", "]")
     val passesJson = rawPasses
       .map { case (k, (a, b)) => s"\"$k\":[$a,$b]" }
       .mkString("{", ",", "}")
     val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","build_total_sec":$buildTotal,"headline_query_sec":$headlineQueryTotal,"queries":${json(results)},"all_total_sec":$allTotal,"all_queries":${json(allResults)},"raw_passes":$passesJson,"failed":${errors.distinct.size},"errors":$errJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","build_total_sec":$buildTotal,"headline_query_sec":$headlineQueryTotal,"queries":${json(results)},"all_total_sec":$allTotal,"all_queries":${json(allResults)},"raw_passes":$passesJson,"failed":${errors.size},"errors":$errJson,"sf":"$sfDir"}"""
     // durable copy first (the full inventory is long and consoles
     // truncate), then the compact headline line LAST so a tail-capture
     // always gets the parseable totals; the file write must never take
@@ -236,7 +258,7 @@ object Bench {
       .foreach { case (n, r, a, b) =>
         println(f"[bench] pass-skew $n: ${r}%.2fx (passA=$a%.2fs, passB=$b%.2fs)")
       }
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":${json(results)},"failed":${errors.distinct.size},"sf":"$sfDir","full":$fullPtr}""")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":${json(results)},"failed":${errors.size},"sf":"$sfDir","full":$fullPtr}""")
     spark.stop()
   }
 }

@@ -92,7 +92,7 @@ object Graft {
       watermark: Long, tipMargin: Long = 0L)
       : org.apache.spark.sql.streaming.StreamingQuery =
     streaming.IncrementalIngest.ingestContinuously(s, dir, out, watermark,
-      tipMargin = tipMargin)
+      tipMargin)
 
   /** Maintenance: compact the epoch-keyed transaction store into the
     * sealed one-file-per-bucket batch layout (atomic staged swap). */

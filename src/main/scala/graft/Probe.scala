@@ -1,11 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.graft.ListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.functions.{col, max}
 
@@ -15,16 +12,22 @@ import org.apache.spark.sql.functions.{col, max}
   *
   *  - `time [--repeat=N] <name...>`: per timed pass, wall time, rows, the
   *    block-manager pin count after `Materialize.releasePinnedLeaves`,
-  *    and the stage-metric work totals (task time, input, shuffle read
-  *    and write, stages). Input and shuffle bytes/records are the
-  *    run-to-run deterministic work numbers; task time and the stage
-  *    count vary between identical passes, so compare stages as the
-  *    min over `--repeat` passes. Bench's policy: a [[Bench.coldBuilds]]
-  *    name runs cold — each round wipes the tier root, then runs the
-  *    named builds in `coldBuilds` order (name a build's upstream too
-  *    to keep its cost out of the build's own pass); a [[SparkEntry]]
-  *    query runs warm after one untimed pass. `--repeat` is the
-  *    flatness probe: a leaking session drifts upward round over round.
+  *    and the [[WorkMeter]] totals (task time, input, shuffle read and
+  *    write, stages). Input and shuffle bytes/records are the run-to-run
+  *    deterministic work numbers only at a fixed build concurrency
+  *    (`SPARK_GRAFT_CPUS`): concurrent builds read more input than serial
+  *    ones (`graph_build` 85.8 MB vs 57.7 MB at sf0.1), and even at one
+  *    cpu count a concurrent build's input bytes can move between
+  *    passes while its records hold (`graph_build` 79.4-89.0 MB). Task
+  *    time and the stage count vary between identical passes, so compare
+  *    stages as the min over `--repeat` passes. The passes are Bench's:
+  *    a [[Bench.coldBuilds]] name runs in [[Bench.coldPass]] — each round
+  *    wipes the tier root, then runs the named builds in `coldBuilds`
+  *    order (name a build's upstream too to keep its cost out of the
+  *    build's own pass); a [[SparkEntry]] query runs in
+  *    [[Bench.queryPass]], warm after one untimed pass. `--repeat` is
+  *    the flatness probe: a leaking session drifts upward round over
+  *    round.
   *  - `explain <tag> <suffix> <query...>`: writes `.explain("formatted")`
   *    to `plans/<tag>/<q>_<suffix>.txt`, then runs the query and prints
   *    its executed plan's operator counts.
@@ -111,66 +114,29 @@ object Probe {
       s"count <sfDir> ... (got ${args.mkString(" ")})")
   }
 
-  /** Stage-metric totals since the last [[reset]], drained through the
-    * listener bus so no completed stage is missed or counted late. */
-  private object StageTotals extends SparkListener {
-    val inB, inR, swB, swR, srB, taskMs, stages = new AtomicLong
-    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-      Option(e.stageInfo.taskMetrics).foreach { m =>
-        inB.addAndGet(m.inputMetrics.bytesRead)
-        inR.addAndGet(m.inputMetrics.recordsRead)
-        swB.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        swR.addAndGet(m.shuffleWriteMetrics.recordsWritten)
-        srB.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        taskMs.addAndGet(m.executorRunTime)
-        stages.incrementAndGet()
-      }
-    def reset(s: SparkSession): Unit = {
-      ListenerBridge.drain(s.sparkContext)
-      Seq(inB, inR, swB, swR, srB, taskMs, stages).foreach(_.set(0))
-    }
-    def line(s: SparkSession): String = {
-      ListenerBridge.drain(s.sparkContext)
-      f"taskTime=${taskMs.get / 1000.0}%.1fs " +
-        f"input=${inB.get / 1e6}%.1fMB/${inR.get / 1e6}%.2fMrec " +
-        f"shufW=${swB.get / 1e6}%.1fMB/${swR.get / 1e6}%.2fMrec " +
-        f"shufR=${srB.get / 1e6}%.1fMB stages=${stages.get}"
-    }
-  }
-
   def time(s: SparkSession, sfDir: String, args: Seq[String]): Unit = {
     val (flags, names) = args.partition(_.startsWith("--repeat="))
     val repeat = flags.lastOption.fold(1)(_.stripPrefix("--repeat=").toInt)
     val builds = Bench.coldBuilds.filter { case (n, _) => names.contains(n) }
-    val warm = names.filterNot(builds.map(_._1).contains)
-    warm.filterNot(SparkEntry.queries.contains)
-      .foreach(n => sys.error(s"unknown build or query $n"))
-    ListenerBridge.addOnce(s.sparkContext, StageTotals)
-    graft.chain.Chain.table(s, sfDir, "lineitem").count()
-    def query(name: String): (DataFrame, Long) = {
-      val frame = SparkEntry.queries(name)(s, sfDir)
-      (frame, frame.count())
+    val queries = SparkEntry.queries
+    val warm = names.filterNot(builds.map(_._1).contains).map { n =>
+      n -> queries.getOrElse(n, sys.error(s"unknown build or query $n"))
     }
-    def pass(label: String)(body: => Option[(DataFrame, Long)]): Unit = {
-      StageTotals.reset(s)
-      val t0 = System.nanoTime()
-      val out = body
-      val wall = (System.nanoTime() - t0) / 1e9
-      out.foreach(o => operators.Materialize.releasePinnedLeaves(o._1))
-      val rows = out.fold("")(o => s" rows=${o._2}")
-      val pins = s.sparkContext.getPersistentRDDs.size
-      println(f"[probe] $label wall=$wall%.2fs$rows pins=$pins " +
-        StageTotals.line(s))
+    def show(r: Int)(run: Bench.Run): Unit = {
+      val w = run.work
+      println(f"[probe] ${run.name} run$r wall=${run.secs}%.2fs" +
+        run.rows.fold("")(n => s" rows=$n") + s" pins=${run.pins} " +
+        f"taskTime=${w.taskMs / 1000.0}%.1fs " +
+        f"input=${w.inputBytes / 1e6}%.1fMB/${w.inputRecords / 1e6}%.2fMrec " +
+        f"shufW=${w.shuffleWriteBytes / 1e6}%.1fMB/${w.shuffleWriteRecords / 1e6}%.2fMrec " +
+        f"shufR=${w.shuffleReadBytes / 1e6}%.1fMB stages=${w.stages}")
     }
-    for (r <- 1 to repeat if builds.nonEmpty) {
-      ops.Tiers.wipe()
-      graft.queries.RefQueries.invalidateBucketedCache()
-      for ((name, build) <- builds)
-        pass(s"$name run$r") { build(s, sfDir); None }
-    }
-    for (name <- warm) {
-      operators.Materialize.releasePinnedLeaves(query(name)._1)
-      for (r <- 1 to repeat) pass(s"$name run$r")(Some(query(name)))
+    Bench.warmUp(s, sfDir)
+    for (r <- 1 to repeat if builds.nonEmpty)
+      Bench.coldPass(s, sfDir, builds).foreach(show(r))
+    for (q <- warm) {
+      Bench.queryPass(s, sfDir, Seq(q))
+      for (r <- 1 to repeat) Bench.queryPass(s, sfDir, Seq(q)).foreach(show(r))
     }
   }
 

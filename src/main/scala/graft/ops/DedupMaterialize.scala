@@ -213,22 +213,21 @@ object DedupMaterialize {
     * pipeline holds from its previous media ingest. The incremental
     * cluster maintenance probes arriving fingerprints against these
     * rows instead of re-fingerprinting the corpus. */
-  def phashBandBaseTable(s: SparkSession, dir: String,
-      mod: Int = IncrementalBatchMod): DataFrame =
-    DedupTier.parquet(s, dir, s"phash_bands_base_m$mod")(
+  def phashBandBaseTable(s: SparkSession, dir: String): DataFrame =
+    DedupTier.parquet(s, dir, s"phash_bands_base_m$IncrementalBatchMod")(
       graft.queries.MultimodalQueries.phashBands(s, dir,
-        col("doc_id") % mod =!= 0))
+        col("doc_id") % IncrementalBatchMod =!= 0))
 
   /** Parked pre-batch MEDIA cluster labels: connected components over
     * the pre-batch verified pHash pairs, with the FULL pre-batch doc
     * universe (singletons included) so incremental folding can contract
     * any old endpoint through its label. */
-  def phashClusterBaseTable(s: SparkSession, dir: String,
-      mod: Int = IncrementalBatchMod): DataFrame =
-    DedupTier.parquet(s, dir, s"phash_clusters_base_m$mod") {
-      val bands = phashBandBaseTable(s, dir, mod)
+  def phashClusterBaseTable(s: SparkSession, dir: String): DataFrame =
+    DedupTier.parquet(s, dir, s"phash_clusters_base_m$IncrementalBatchMod") {
+      val bands = phashBandBaseTable(s, dir)
       graft.operators.ConnectedComponents.labels(
-        corpus(s, dir).filter(col("doc_id") % mod =!= 0).select("doc_id"),
+        corpus(s, dir).filter(col("doc_id") % IncrementalBatchMod =!= 0)
+          .select("doc_id"),
         graft.queries.MultimodalQueries
           .phashVerifiedPairs(bands, bands)
           .select(col("doc_a"), col("doc_b")))

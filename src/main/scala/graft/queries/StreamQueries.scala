@@ -238,7 +238,8 @@ object StreamQueries {
       // setup phase: the one-time store init and the two change-file
       // extracts are three INDEPENDENT jobs over the same base frame —
       // overlap them (guide §2.6, the bucketed_build pattern). r14
-      // phase split (CdcPhases, sf0.1): setup ~1.1–2.6 s concurrent,
+      // phase split (SCALE.md, "Round-14 stream_cdc_apply phase split",
+      // sf0.1): setup ~1.1–2.6 s concurrent,
       // streaming apply 4.5–6.6 s, readback ~0.5–1 s — locally the
       // micro-batch machinery (2 batches × checkpoint commits + 64
       // dynamic partition-dir overwrites) dominates; at 30× the store

@@ -250,13 +250,13 @@ object IncrementalIngest {
 
   /** The SAME ingest query left running: a processing-time trigger
     * instead of AvailableNow, returned as a live handle so the caller
-    * owns the lifecycle — new source files are picked up each interval
+    * owns the lifecycle — new source files are picked up every 500 ms
     * and land through the identical epoch-keyed sink (SCALE.md's
     * "same query left running = real-time sync", demonstrated as tested
     * fact in StreamingSpec). Its private checkpoint is deleted when the
     * query terminates. */
   def ingestContinuously(s: SparkSession, dir: String, out: String,
-      watermark: Long, intervalMs: Long = 500L, tipMargin: Long = 0L)
+      watermark: Long, tipMargin: Long = 0L)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     val ckpt = s"target/tmp/${Streams.freshName("ckpt_cont")}"
     val base = landingBase(s, out, watermark, Some(ckpt), 0L)
@@ -268,7 +268,7 @@ object IncrementalIngest {
         ChainStore.writeTransactionsEpoch(
           belowTip(batch.toDF(), tip, tipMargin), out, base + epoch)
       }
-      .trigger(Trigger.ProcessingTime(intervalMs)), ckpt)
+      .trigger(Trigger.ProcessingTime(500L)), ckpt)
   }
 
   /** ONE definition of the watermarked hourly window aggregation over a

@@ -39,15 +39,14 @@ object StreamJoin {
     * `out`. View-side state must outlive the attribution window, so its
     * watermark delay is window + lateness; the purchase side only needs
     * the lateness bound. */
-  def attributionJoin(s: SparkSession, dir: String, out: String,
-      windowSec: Long = AttributionWindowSec,
-      statePartitions: Int = 8): Unit = {
+  def attributionJoin(s: SparkSession, dir: String, out: String): Unit = {
     val stream = Streams.files(s, dir, "events")
-    val views = side(stream, "view", "v", s"${windowSec + 3600} seconds")
+    val views = side(stream, "view", "v",
+      s"${AttributionWindowSec + 3600} seconds")
     val purchases = side(stream, "purchase", "p", "1 hour")
     val joined = views.join(purchases,
       expr(s"""v_user = p_user AND
-              |v_ts >= p_ts - INTERVAL $windowSec SECONDS AND
+              |v_ts >= p_ts - INTERVAL $AttributionWindowSec SECONDS AND
               |v_ts <= p_ts""".stripMargin))
       .select(col("p_user").as("user_id"),
         col("v_id").as("view_id"), col("p_id").as("purchase_id"),
@@ -68,7 +67,7 @@ object StreamJoin {
     // restore the session value however the job ends — including a
     // failure in .start() itself.
     val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
+    s.conf.set("spark.sql.shuffle.partitions", "8")
     try Streams.runOnce(joined.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epoch: Long) =>
         writePairsEpoch(batch.toDF(), out, epoch)

@@ -1,7 +1,6 @@
 package graft
 
 import graft.chain.{Chain, ChainStore, GraftCatalog}
-import graft.operators.Progress
 
 /** SQL catalog registration (S7) and write-progress accounting (A7). */
 class CatalogProgressSpec extends SparkSpec with TempDirs {
@@ -25,9 +24,10 @@ class CatalogProgressSpec extends SparkSpec with TempDirs {
   test("progress listener counts written rows") {
     val out = tempDir("prog_")
     val tx = Chain.transactions(spark, sf("sf0.001"))
-    val (_, rows) = Progress.countingWrites(spark, reportEvery = 500L) {
+    val (_, work) = WorkMeter.measure(spark) {
       ChainStore.writeTransactions(tx, out)
     }
+    val rows = work.outputRecords
     assert(rows === tx.count())
   }
 }

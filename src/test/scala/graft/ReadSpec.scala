@@ -2,11 +2,7 @@ package graft
 
 import java.io.File
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.graft.ListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{AnalysisException, SparkSession}
+import org.apache.spark.sql.AnalysisException
 
 import graft.chain.Chain
 import graft.ops.{Tier, Tiers}
@@ -18,27 +14,12 @@ import graft.ops.{Tier, Tiers}
 class ReadSpec extends SparkSpec with TempDirs {
   import spark.implicits._
 
-  /** Spark jobs started on the calling thread (tagged through a local
-    * property, so other suites' jobs never count), read after the
-    * listener bus has drained. */
-  private object Jobs extends SparkListener {
-    private val Key = "graft.readspec.tag"
-    private val tags = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    override def onJobStart(e: SparkListenerJobStart): Unit =
-      Option(e.properties).flatMap(p => Option(p.getProperty(Key)))
-        .foreach(tags.add)
-    def during[T](s: SparkSession)(body: => T): (T, Int) = {
-      val sc = s.sparkContext
-      ListenerBridge.addOnce(sc, this)
-      val tag = java.util.UUID.randomUUID().toString
-      sc.setLocalProperty(Key, tag)
-      val r = try body finally sc.setLocalProperty(Key, null)
-      ListenerBridge.drain(sc)
-      (r, tags.asScala.count(_ == tag))
-    }
+  /** Spark jobs the body started, counted by the work meter (scoped to
+    * the calling thread, so other suites' jobs never count). */
+  private def jobs[T](body: => T): (T, Long) = {
+    val (r, w) = WorkMeter.measure(spark)(body)
+    (r, w.jobs)
   }
-
-  private def jobs[T](body: => T): (T, Int) = Jobs.during(spark)(body)
 
   test("a second Chain.table of an unchanged table starts no Spark job") {
     val dir = tempDir("read_")
@@ -70,12 +51,12 @@ class ReadSpec extends SparkSpec with TempDirs {
     // a session of its own, so the setting reaches no other suite
     val s2 = spark.newSession()
     Chain.table(s2, dir, "t")
-    assert(Jobs.during(s2)(Chain.table(s2, dir, "t"))._2 === 0)
+    assert(jobs(Chain.table(s2, dir, "t"))._2 === 0)
     s2.conf.set("spark.sql.parquet.binaryAsString", "true")
-    val (df, n) = Jobs.during(s2)(Chain.table(s2, dir, "t"))
+    val (df, n) = jobs(Chain.table(s2, dir, "t"))
     assert(n > 0)
     assert(df.as[(Long, String)].collect() === Array((1L, "a")))
-    assert(Jobs.during(s2)(Chain.table(s2, dir, "t"))._2 === 0)
+    assert(jobs(Chain.table(s2, dir, "t"))._2 === 0)
   }
 
   test("a missing table raises Spark's PATH_NOT_FOUND") {

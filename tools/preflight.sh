@@ -48,18 +48,24 @@
 #                             its definition: oracles compose the named
 #                             CTE with ChainSql.withCtes, never a pasted
 #                             copy
-#   8. sbt compile          — the tree compiles (r12 shipped a tree that
+#   8. work accounting in one place — no extends SparkListener, new
+#                             SparkListener or addSparkListener in
+#                             src/main/scala outside WorkMeter.scala (and
+#                             the listener-bus bridge it registers through):
+#                             jobs, stages and their metrics are counted by
+#                             the one listener, graft.WorkMeter
+#   9. sbt compile          — the tree compiles (r12 shipped a tree that
 #                             didn't; this script exists so that cannot
 #                             recur)
-#   9. sbt test             — full ScalaTest suite green
-#  10. graft.Verify sf0.01  — every SparkEntry query dumps its parquet
-#  11. tools/check.py       — DuckDB oracle compare: rows + schema +
+#  10. sbt test             — full ScalaTest suite green
+#  11. graft.Verify sf0.01  — every SparkEntry query dumps its parquet
+#  12. tools/check.py       — DuckDB oracle compare: rows + schema +
 #                             driver-emulated canonical hash per query,
 #                             plus the oracle cost budget (10 s/query,
 #                             180 s/suite)
 #
 # Usage: tools/preflight.sh [--quick]
-#   --quick skips sbt test (stages 1-8,10,11 only) for mid-round iteration;
+#   --quick skips sbt test (stages 1-9,11,12 only) for mid-round iteration;
 #   the snapshot commit requires the FULL run.
 set -uo pipefail
 cd "$(dirname "$0")/.."
@@ -72,7 +78,7 @@ OUT=target/verify_out
 
 fail() { echo "PREFLIGHT: FAIL at stage $1 — do NOT commit the snapshot"; exit 1; }
 
-echo "PREFLIGHT stage 1/11: tiers in one place (ops/Tiers.scala)"
+echo "PREFLIGHT stage 1/12: tiers in one place (ops/Tiers.scala)"
 if grep -rnE '"[^"]*(_SUCCESS|_BUILT)[^"]*"|target/intermediate|FormatVersion|Tiers\.(park|parquet)\(' \
     src/main/scala --include='*.scala' \
     | grep -v '^src/main/scala/graft/ops/Tiers.scala:'
@@ -80,7 +86,7 @@ then
   fail tiers
 fi
 
-echo "PREFLIGHT stage 2/11: session setup only in Session.scala"
+echo "PREFLIGHT stage 2/12: session setup only in Session.scala"
 if grep -rn 'SparkSession\.builder' src/main/scala --include='*.scala' \
     | grep -v '^src/main/scala/graft/Session.scala:' ||
    grep -rnE 'local\[[0-9]+\]' src/main/scala --include='*.scala'
@@ -88,7 +94,7 @@ then
   fail session
 fi
 
-echo "PREFLIGHT stage 3/11: stream runner and partition overwrite in one place each"
+echo "PREFLIGHT stage 3/12: stream runner and partition overwrite in one place each"
 if grep -rn 'partitionOverwriteMode' src/main/scala --include='*.scala' \
     | grep -v '^src/main/scala/graft/chain/ChainStore.scala:' ||
    grep -rnE 'processAllAvailable\(\)|Trigger\.AvailableNow\(\)' src/main/scala \
@@ -97,7 +103,7 @@ then
   fail streams
 fi
 
-echo "PREFLIGHT stage 4/11: loop lifecycle in one place (operators/Fixpoint.scala)"
+echo "PREFLIGHT stage 4/12: loop lifecycle in one place (operators/Fixpoint.scala)"
 if grep -rnE 'Materialize\.release\(|truncateBeforeAction' src/main/scala \
     --include='*.scala' \
     | grep -vE '^src/main/scala/graft/operators/(Fixpoint|Materialize|PrefixCarry)\.scala:'
@@ -105,7 +111,7 @@ then
   fail loops
 fi
 
-echo "PREFLIGHT stage 5/11: store I/O in one place (chain/ChainStore.scala)"
+echo "PREFLIGHT stage 5/12: store I/O in one place (chain/ChainStore.scala)"
 # operators/Materialize.scala is allowed: releasing a checkpoint deletes
 # the RDD's checkpoint files, and it holds the RDD but no SparkSession
 if grep -rnE 'org\.apache\.hadoop\.fs|getFileSystem\(' src/main/scala \
@@ -115,7 +121,7 @@ then
   fail store-io
 fi
 
-echo "PREFLIGHT stage 6/11: immutable inputs read in one place (chain/ChainStore.scala)"
+echo "PREFLIGHT stage 6/12: immutable inputs read in one place (chain/ChainStore.scala)"
 # fixture tables read through Chain.table, parked tiers through Tier.read
 if grep -rnE 'read\.parquet\([^)]*\.parquet"' src/main/scala --include='*.scala' \
     | grep -v '^src/main/scala/graft/chain/' ||
@@ -125,7 +131,7 @@ then
   fail immutable-reads
 fi
 
-echo "PREFLIGHT stage 7/11: oracle CTEs in one place"
+echo "PREFLIGHT stage 7/12: oracle CTEs in one place"
 # "<CTE> (<where it is named>)|<a line of its definition>", the line
 # compared without indentation or stripMargin bar: one match is the named
 # definition, a second is a pasted copy, none means the entry went stale
@@ -152,21 +158,31 @@ for entry in "${ORACLE_CTES[@]}"; do
   fi
 done
 
-echo "PREFLIGHT stage 8/11: sbt compile"
+echo "PREFLIGHT stage 8/12: work accounting in one place (WorkMeter.scala)"
+# org/apache/spark/graft/ListenerBridge.scala is allowed: it is the bus
+# bridge the meter registers through (the bus is private[spark])
+if grep -rnE 'extends SparkListener|new SparkListener|addSparkListener' \
+    src/main/scala --include='*.scala' \
+    | grep -vE '^src/main/scala/(graft/WorkMeter|org/apache/spark/graft/ListenerBridge)\.scala:'
+then
+  fail work-meter
+fi
+
+echo "PREFLIGHT stage 9/12: sbt compile"
 sbt -batch compile || fail compile
 
 if [[ $QUICK -eq 0 ]]; then
-  echo "PREFLIGHT stage 9/11: sbt test"
+  echo "PREFLIGHT stage 10/12: sbt test"
   sbt -batch test || fail test
 else
-  echo "PREFLIGHT stage 9/11: SKIPPED (--quick)"
+  echo "PREFLIGHT stage 10/12: SKIPPED (--quick)"
 fi
 
-echo "PREFLIGHT stage 10/11: graft.Verify @ $SF"
+echo "PREFLIGHT stage 11/12: graft.Verify @ $SF"
 rm -rf "$OUT"
 sbt -batch "runMain graft.Verify $SF $OUT" || fail verify
 
-echo "PREFLIGHT stage 11/11: tools/check.py (rows+schema+hash+budget)"
+echo "PREFLIGHT stage 12/12: tools/check.py (rows+schema+hash+budget)"
 python3 tools/check.py "$SF" "$OUT" || fail check
 
 echo "PREFLIGHT: ALL GREEN — safe to commit the snapshot"
