@@ -15,7 +15,8 @@ object Text {
     "fr" -> Seq("le", "et", "les", "des", "une"),
     "es" -> Seq("el", "los", "que", "por", "una"))
 
-  private def inList(ws: Seq[String]): String =
+  /** `ws` as a SQL `IN` list: `('a', 'b')`. */
+  private[graft] def inList(ws: Seq[String]): String =
     ws.map(w => s"'$w'").mkString("(", ", ", ")")
 
   /** Stopword hits for one language as a column expression. */

@@ -4,8 +4,8 @@ import java.io.FileNotFoundException
 import java.nio.charset.StandardCharsets.UTF_8
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{AnalysisException, DataFrame, DataFrameWriter,
-  Row, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame,
+  DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -13,9 +13,9 @@ import org.apache.spark.sql.types.StructType
   * idempotently-overwritable table storage (S5/ST3, schema.cql PK design).
   *
   * Cassandra's `(bucket, id)` primary keys become Hive-style partition
-  * directories on the bucket column + `sortWithinPartitions` on the
-  * clustering column — a point lookup prunes to one bucket directory and
-  * one parquet row group (min/max stats on the sorted id column).
+  * directories on the bucket column, each file sorted on the clustering
+  * column ([[clustered]]) — a point lookup prunes to one bucket directory
+  * and one parquet row group (min/max stats on the sorted id column).
   *
   * Idempotence (the reference's INSERT-by-PK last-write-wins, ST3) is
   * dynamic partition overwrite: re-ingesting a block range rewrites only
@@ -136,11 +136,41 @@ object ChainStore extends ChainSink {
     df.write.option("partitionOverwriteMode", "dynamic")
       .mode("overwrite").partitionBy(cols: _*)
 
+  /** The one bucket layout, schema.cql's `(bucket, id)` primary keys as
+    * files: rows hash-partitioned on the partition-directory columns
+    * `dirs`, so one task writes each directory's one file, and sorted
+    * inside each task by `dirs` first and `clustering` after, then
+    * written as [[overwritePartitions]]. Leading with every directory
+    * column is what lets the clustering order reach the files: Spark's
+    * planned write sorts its input by the partition columns unless that
+    * input already is, and its sort replaces any other (a
+    * `sortWithinPartitions(id)` alone comes out as one `Sort [bucket
+    * ASC]`). Either way each write runs exactly one Sort. */
+  private[graft] def clustered(df: DataFrame, dirs: Seq[String],
+      clustering: Column*): DataFrameWriter[Row] = {
+    val keys = dirs.map(col)
+    overwritePartitions(
+      df.repartition(keys: _*).sortWithinPartitions(keys ++ clustering: _*),
+      dirs: _*)
+  }
+
+  /** The one epoch landing: `df` tagged `ingest_epoch = epoch` and
+    * dynamic-overwritten into `path` under that partition, so replaying
+    * an epoch rewrites exactly its own directories and other epochs
+    * stay. With `buckets` the epoch sits below them in the
+    * [[clustered]] layout; without, the rows keep their partitioning. */
+  private[graft] def landEpoch(df: DataFrame, path: String, epoch: Long,
+      buckets: Seq[String], clustering: Column*): Unit = {
+    val tagged = df.withColumn("ingest_epoch", lit(epoch))
+    (if (buckets.isEmpty) overwritePartitions(tagged, "ingest_epoch")
+     else clustered(tagged, buckets :+ "ingest_epoch", clustering: _*))
+      .parquet(path)
+  }
+
   /** transaction table: partition dirs by tx_id_group, rows ordered by
     * tx_id inside each bucket. */
   def writeTransactions(tx: DataFrame, out: String): Unit =
-    overwritePartitions(tx.repartition(col("tx_id_group"))
-      .sortWithinPartitions(col("tx_id")), "tx_id_group")
+    clustered(tx, Seq("tx_id_group"), col("tx_id"))
       .parquet(s"$out/transaction")
 
   /** Streaming-epoch variant of [[writeTransactions]]: partitions on
@@ -152,10 +182,7 @@ object ChainStore extends ChainSink {
     * an epoch almost never covers whole buckets). Read the store back
     * through [[readTransactions]], which hides the epoch column. */
   def writeTransactionsEpoch(tx: DataFrame, out: String, epoch: Long): Unit =
-    overwritePartitions(tx.withColumn("ingest_epoch", lit(epoch))
-      .repartition(col("tx_id_group"))
-      .sortWithinPartitions(col("tx_id")), "tx_id_group", "ingest_epoch")
-      .parquet(s"$out/transaction")
+    landEpoch(tx, s"$out/transaction", epoch, Seq("tx_id_group"), col("tx_id"))
 
   /** Transaction store reader that works against both layouts: the batch
     * bucket-only layout and the epoch-keyed streaming layout. */
@@ -258,11 +285,7 @@ object ChainStore extends ChainSink {
     * epoch ingest into it by design. */
   def compactTransactions(s: SparkSession, out: String): Unit =
     stagedRewrite(s, out) { (df, staged) =>
-      df.drop("ingest_epoch")
-        .repartition(col("tx_id_group"))
-        .sortWithinPartitions(col("tx_id"))
-        .write.mode("overwrite")
-        .partitionBy("tx_id_group")
+      clustered(df.drop("ingest_epoch"), Seq("tx_id_group"), col("tx_id"))
         .parquet(staged)
     }
 
@@ -293,12 +316,9 @@ object ChainStore extends ChainSink {
     stagedRewrite(s, out) { (df, staged) =>
       require(df.schema.fieldNames.contains("ingest_epoch"),
         s"store at $out/transaction is not epoch-keyed: nothing to vacuum")
-      df.withColumn("ingest_epoch",
-          greatest(col("ingest_epoch").cast("long"), lit(floor)))
-        .repartition(col("tx_id_group"))
-        .sortWithinPartitions(col("tx_id"))
-        .write.mode("overwrite")
-        .partitionBy("tx_id_group", "ingest_epoch")
+      clustered(df.withColumn("ingest_epoch",
+          greatest(col("ingest_epoch").cast("long"), lit(floor))),
+        Seq("tx_id_group", "ingest_epoch"), col("tx_id"))
         .parquet(staged)
     }
   }
@@ -395,13 +415,9 @@ object ChainStore extends ChainSink {
     // the live tree is untouched until staging is complete
     import s.implicits._
     val affDf = affected.toSeq.toDF("tx_id_group", "ingest_epoch")
-    df.join(broadcast(affDf), Seq("tx_id_group", "ingest_epoch"))
-      .filter(col("block_id") <= tip)
-      .repartition(col("tx_id_group"))
-      .sortWithinPartitions(col("tx_id"))
-      .write.mode("overwrite")
-      .partitionBy("tx_id_group", "ingest_epoch")
-      .parquet(staging)
+    clustered(df.join(broadcast(affDf), Seq("tx_id_group", "ingest_epoch"))
+      .filter(col("block_id") <= tip), Seq("tx_id_group", "ingest_epoch"),
+      col("tx_id")).parquet(staging)
     fs.create(new Path(s"$staging/$StagedMarker"), true).close()
 
     if (crashAfterStaging) return // failpoint: die before touching live
@@ -435,8 +451,7 @@ object ChainStore extends ChainSink {
   /** block table: clustering ORDER BY (block_id DESC) of schema.cql:13 →
     * descending sort inside each bucket. */
   def writeBlocks(blocks: DataFrame, out: String): Unit =
-    overwritePartitions(blocks.repartition(col("block_id_group"))
-      .sortWithinPartitions(col("block_id").desc), "block_id_group")
+    clustered(blocks, Seq("block_id_group"), col("block_id").desc)
       .parquet(s"$out/block")
 
   /** hash→id index (schema.cql:36-41). The reference fans out to 16^5
@@ -467,8 +482,7 @@ object ChainStore extends ChainSink {
   /** block_transactions table: same layout as block (bucketed dirs,
     * block_id DESC inside, schema.cql:51-56). */
   def writeBlockTransactions(bt: DataFrame, out: String): Unit =
-    overwritePartitions(bt.repartition(col("block_id_group"))
-      .sortWithinPartitions(col("block_id").desc), "block_id_group")
+    clustered(bt, Seq("block_id_group"), col("block_id").desc)
       .parquet(s"$out/block_transactions")
 
   /** exchange_rates: one row per day — a single file regardless of
@@ -516,9 +530,7 @@ object ChainStore extends ChainSink {
     val tagged = chains.map { case (cur, df) =>
       df.withColumn("currency", lit(cur))
     }.reduce(_ unionByName _)
-    overwritePartitions(
-      tagged.repartition(col("currency"), col("tx_id_group"))
-        .sortWithinPartitions(col("tx_id")), "currency", "tx_id_group")
+    clustered(tagged, Seq("currency", "tx_id_group"), col("tx_id"))
       .parquet(s"$out/multichain_transaction")
   }
 

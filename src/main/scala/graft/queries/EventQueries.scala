@@ -44,6 +44,31 @@ object EventQueries {
       .withColumn("tsc", timestamp_seconds(col("ets")))
   }
 
+  /** Tumbling 1-hour windows per event_type, counts and decimal-exact
+    * value sums, over a frame with `tsc`, `event_type` and `value` — the
+    * one aggregation `events_window_agg` and the streaming
+    * [[graft.streaming.IncrementalIngest.windowedEventAgg]] run. */
+  def hourlyWindows(events: DataFrame): DataFrame =
+    events.groupBy(window(col("tsc"), "1 hour"), col("event_type"))
+      .agg(count(lit(1)).as("n_events"),
+        sum(col("value").cast(DecimalType(12, 2))).cast("double")
+          .as("sum_value"))
+      .select(unix_timestamp(col("window.start")).as("hour_ts"),
+        col("event_type"), col("n_events"), col("sum_value"))
+
+  /** Native session windows (gap [[GapSeconds]]) per user over a frame
+    * with `user_id`, `ets` and `tsc = timestamp_seconds(ets)` — the one
+    * aggregation `events_sessionize_native` and the streaming
+    * [[graft.streaming.IncrementalIngest.sessionizedEvents]] run. */
+  def sessionWindows(events: DataFrame): DataFrame =
+    events.groupBy(col("user_id"),
+        session_window(col("tsc"), s"$GapSeconds seconds"))
+      .agg(count(lit(1)).as("n_events"),
+        min(col("ets")).as("session_start"),
+        (max(col("ets")) - min(col("ets"))).as("duration"))
+      .select(col("user_id"), col("session_start"), col("n_events"),
+        col("duration"))
+
   val queries: Map[String, Q] = Map(
     // ordered funnel analysis (view → click → purchase): each stage's
     // first hit must be AT/after the previous stage's — the product
@@ -116,14 +141,7 @@ object EventQueries {
     // tumbling 1-hour windows per event_type (Structured-Streaming window
     // semantics run in batch; window.start == date_trunc('hour') for
     // aligned tumbling windows).
-    "events_window_agg" -> ((s, dir) =>
-      events(s, dir)
-        .groupBy(window(col("tsc"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n_events"),
-          sum(col("value").cast(DecimalType(12, 2))).cast("double")
-            .as("sum_value"))
-        .select(unix_timestamp(col("window.start")).as("hour_ts"),
-          col("event_type"), col("n_events"), col("sum_value"))),
+    "events_window_agg" -> ((s, dir) => hourlyWindows(events(s, dir))),
 
     // sliding windows: width 2h, slide 1h — every event lands in two
     // overlapping windows (Structured Streaming window() in batch).
@@ -220,17 +238,8 @@ object EventQueries {
     // artifact that doesn't survive merged-interval semantics); the
     // oracle replays the lag chain and projects the same columns, so
     // the two formulations are proven equivalent by the driver.
-    "events_sessionize_native" -> ((s, dir) => {
-      events(s, dir)
-        .withColumn("tsc", timestamp_seconds(col("ets")))
-        .groupBy(col("user_id"),
-          session_window(col("tsc"), s"$GapSeconds seconds"))
-        .agg(count(lit(1)).as("n_events"),
-          min(col("ets")).as("session_start"),
-          (max(col("ets")) - min(col("ets"))).as("duration"))
-        .select(col("user_id"), col("session_start"), col("n_events"),
-          col("duration"))
-    }),
+    "events_sessionize_native" -> ((s, dir) =>
+      sessionWindows(events(s, dir))),
 
     // user-behavior transition matrix (the Markov-chain feature a
     // sequence model trains on): per user, events in (ets, event_id)

@@ -12,7 +12,7 @@ import graft.streaming.IncrementalIngest
   * result must agree with the equivalent batch SQL (the oracle).
   *
   * Both checked queries go through the PRODUCTION sink path
-  * (`foreachBatch` → dynamic-overwrite partitioned parquet → read the
+  * (`Streams.sink` → dynamic-overwrite partitioned parquet → read the
   * store back): no memory sink, no driver-side collect anywhere —
   * the shape that survives a 100 TB ingest.
   */
@@ -66,6 +66,20 @@ object StreamQueries {
     val out = tmp("store")
     IncrementalIngest.ingestToStore(s, dir, out, Watermark, tipMargin)
     consumeEphemeral(s, Seq(out))(readBack(s, out))
+  }
+
+  /** The three-epoch store the maintenance entries start from: the
+    * source's block ranges [0, 800), [800, 1600) and [1600, ∞) landed as
+    * epochs 0, 1 and 2 of the transaction store at `out`. */
+  private def seedThreeEpochs(s: SparkSession, dir: String,
+      out: String): Unit = {
+    val tx = graft.chain.Chain.transactions(s, dir)
+    val bounds = Seq(0L, 800L, 1600L, Long.MaxValue)
+    (0 until 3).foreach { e =>
+      graft.chain.ChainStore.writeTransactionsEpoch(
+        tx.filter(col("block_id") >= bounds(e) &&
+          col("block_id") < bounds(e + 1)), out, e.toLong)
+    }
   }
 
   val queries: Map[String, Q] = Map(
@@ -214,7 +228,7 @@ object StreamQueries {
     }),
 
     // watermark + tumbling window through the dashboard-sink path
-    // (complete-mode foreachBatch overwrite of a parquet summary
+    // (complete-mode micro-batch overwrite of a parquet summary
     // table): AvailableNow's final commit must equal the batch
     // events_window_agg result — the two share one oracle, so the
     // batch/stream equivalence is proven by the driver compare.
@@ -295,15 +309,10 @@ object StreamQueries {
       val out = tmp("sev")
       val tx = graft.chain.Chain.transactions(s, dir)
         .select(col("tx_id"), col("block_id"))
-      tx.filter(col("block_id") < 1600L)
-        .withColumn("ingest_epoch", lit(0L))
-        .write.mode("overwrite").partitionBy("ingest_epoch")
-        .parquet(out)
-      tx.filter(col("block_id") >= 1600L)
-        .withColumn("fee", col("tx_id") % 100)
-        .withColumn("ingest_epoch", lit(1L))
-        .write.mode("append").partitionBy("ingest_epoch")
-        .parquet(out)
+      graft.chain.ChainStore.landEpoch(tx.filter(col("block_id") < 1600L),
+        out, 0L, Nil)
+      graft.chain.ChainStore.landEpoch(tx.filter(col("block_id") >= 1600L)
+        .withColumn("fee", col("tx_id") % 100), out, 1L, Nil)
       consumeEphemeral(s, Seq(out))(
         s.read.option("mergeSchema", "true").parquet(out)
           // partition-dir columns read back as int32 — restate the
@@ -407,13 +416,7 @@ object StreamQueries {
 
     "store_time_travel" -> ((s, dir) => {
       val out = tmp("store")
-      val tx = graft.chain.Chain.transactions(s, dir)
-      val bounds = Seq(0L, 800L, 1600L, Long.MaxValue)
-      (0 until 3).foreach { e =>
-        graft.chain.ChainStore.writeTransactionsEpoch(
-          tx.filter(col("block_id") >= bounds(e) &&
-            col("block_id") < bounds(e + 1)), out, e.toLong)
-      }
+      seedThreeEpochs(s, dir, out)
       consumeEphemeral(s, Seq(out))(
         graft.chain.ChainStore.readTransactionsAsOf(s, out, 1L)
           .groupBy(col("block_id"))
@@ -456,13 +459,7 @@ object StreamQueries {
     // vacuum (never in place); StoreSpec covers crash recovery.
     "store_compact" -> ((s, dir) => {
       val out = tmp("cmp")
-      val tx = graft.chain.Chain.transactions(s, dir)
-      val bounds = Seq(0L, 800L, 1600L, Long.MaxValue)
-      (0 until 3).foreach { e =>
-        graft.chain.ChainStore.writeTransactionsEpoch(
-          tx.filter(col("block_id") >= bounds(e) &&
-            col("block_id") < bounds(e + 1)), out, e.toLong)
-      }
+      seedThreeEpochs(s, dir, out)
       graft.chain.ChainStore.compactTransactions(s, out)
       consumeEphemeral(s, Seq(out))(
         s.read.parquet(s"$out/transaction")
@@ -484,13 +481,7 @@ object StreamQueries {
     // (spec-pinned) instead of returning a partial table.
     "store_vacuum" -> ((s, dir) => {
       val out = tmp("vac")
-      val tx = graft.chain.Chain.transactions(s, dir)
-      val bounds = Seq(0L, 800L, 1600L, Long.MaxValue)
-      (0 until 3).foreach { e =>
-        graft.chain.ChainStore.writeTransactionsEpoch(
-          tx.filter(col("block_id") >= bounds(e) &&
-            col("block_id") < bounds(e + 1)), out, e.toLong)
-      }
+      seedThreeEpochs(s, dir, out)
       graft.chain.ChainStore.vacuumTransactionsBelow(s, out, 1L)
       consumeEphemeral(s, Seq(out))(
         s.read.parquet(s"$out/transaction")

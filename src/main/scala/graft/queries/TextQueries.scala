@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.api.Text.predLangCase
+import graft.api.Text.{inList, predLangCase, Stops}
 import graft.chain.Chain.table
 import graft.chain.ChainSql.{ccWalkCte, withCtes, withRecursiveCtes}
 import graft.ops.TextCorpus.{docWordsSql, shinglesSql}
@@ -19,15 +19,6 @@ import graft.ops.TextCorpus.{docWordsSql, shinglesSql}
   */
 object TextQueries {
   type Q = (SparkSession, String) => DataFrame
-
-  private val Stops = Map(
-    "en" -> Seq("the", "and", "of", "to", "in"),
-    "de" -> Seq("der", "und", "die", "das", "nicht"),
-    "fr" -> Seq("le", "et", "les", "des", "une"),
-    "es" -> Seq("el", "los", "que", "por", "una"))
-
-  private def inList(ws: Seq[String]): String =
-    ws.map(w => s"'$w'").mkString("(", ", ", ")")
 
   private def hitsSql(lang: String): String =
     s"CAST(len(list_filter(w, x -> x IN ${inList(Stops(lang))})) AS BIGINT)"

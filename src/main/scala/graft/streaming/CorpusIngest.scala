@@ -14,9 +14,10 @@ import graft.ops.DedupMaterialize
   * the index, each epoch costs batch × bucket work, and the corpus
   * stays deduplicated as it grows without ever re-touching old×old.
   *
-  * Same production sink shape as [[IncrementalIngest]]: foreachBatch →
-  * epoch-partitioned dynamic overwrite, so epoch replays are idempotent
-  * and no memory sink or driver collect appears anywhere.
+  * Same production sink shape as [[IncrementalIngest]]: [[Streams.sink]]
+  * → [[ChainStore.landEpoch]]'s epoch-partitioned dynamic overwrite, so
+  * epoch replays are idempotent and no memory sink or driver collect
+  * appears anywhere.
   */
 object CorpusIngest {
 
@@ -47,22 +48,15 @@ object CorpusIngest {
     // index a deployed pipeline holds from its previous ingests
     val tierBands = DedupMaterialize.bandTable(s, dir)
       .filter(col("doc_id") % BatchMod =!= 0)
-    Streams.runOnce(corpusStream.writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         epoch: Long) =>
-          val b = batch.toDF()
-          val bands = graft.api.Dedup.lshBands(
-            graft.api.Dedup.minhashSignatures(
-              graft.ops.TextCorpus.shingles(
-                graft.ops.TextCorpus.words(b))))
-          val dupIds = graft.api.Dedup.probePairs(bands, tierBands)
-            .select(col("new_id").as("doc_id")).distinct()
-          ChainStore.overwritePartitions(b.select(col("doc_id"))
-            .join(dupIds, Seq("doc_id"), "left_anti")
-            .withColumn("ingest_epoch", lit(epoch)), "ingest_epoch")
-            .parquet(out)
-      }, None)
+    Streams.runOnce(Streams.sink(corpusStream) { (b, epoch) =>
+      val bands = graft.api.Dedup.lshBands(
+        graft.api.Dedup.minhashSignatures(
+          graft.ops.TextCorpus.shingles(graft.ops.TextCorpus.words(b))))
+      val dupIds = graft.api.Dedup.probePairs(bands, tierBands)
+        .select(col("new_id").as("doc_id")).distinct()
+      ChainStore.landEpoch(b.select(col("doc_id"))
+        .join(dupIds, Seq("doc_id"), "left_anti"), out, epoch, Nil)
+    }, None)
   }
 
   /** Kept doc ids from the landed store. */
@@ -85,15 +79,10 @@ object CorpusIngest {
     * whole corpus (stream == batch, proven by the shared brute-force
     * oracle). */
   def allPairsIngest(s: SparkSession, dir: String, out: String): Unit =
-    Streams.runOnce(Streams.files(s, dir, "documents")
+    Streams.runOnce(Streams.sink(Streams.files(s, dir, "documents")
       .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-      .filter(col("doc_id") % AllPairsBatchMod === 0)
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         epoch: Long) =>
-          applyAllPairsBatch(s, dir, out, batch.toDF(), epoch)
-      }, None)
+      .filter(col("doc_id") % AllPairsBatchMod === 0))(
+      applyAllPairsBatch(s, dir, out, _, _)), None)
 
   /** One micro-batch of [[allPairsIngest]], factored out so the spec
     * can drive multi-batch scenarios directly (the fixture is one
@@ -128,9 +117,7 @@ object CorpusIngest {
     val pairs = Text.allPairsFromPrefix(prefix, sh,
       col("a.nw") || col("b.nw"))
     def land(df: DataFrame, sub: String): Unit =
-      ChainStore.overwritePartitions(
-        df.withColumn("ingest_epoch", lit(epoch)), "ingest_epoch")
-        .parquet(s"$out/$sub")
+      ChainStore.landEpoch(df, s"$out/$sub", epoch, Nil)
     land(pairs, "pairs")
     land(batchPrefix.drop("nw"), "prefix")
     land(batchSh, "postings")
@@ -150,19 +137,10 @@ object CorpusIngest {
     * full-rebuild oracle to prove it every run. */
   def ivfIngest(s: SparkSession, dir: String, out: String): Unit = {
     val cents = graft.queries.SimilarityQueries.ivfCentroidTable(s, dir)
-    Streams.runOnce(vectorStream(s, dir).writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         epoch: Long) =>
-          val b = batch.toDF()
-          val corpus = b.unionByName(b.filter(col("vec_id") % 100 === 0)
-            .select((col("vec_id") + 1000000L).as("vec_id"),
-              col("embedding")))
-          ChainStore.overwritePartitions(graft.api.Similarity.assignLists(
-            graft.api.Similarity.quantize(corpus), cents)
-            .withColumn("ingest_epoch", lit(epoch)), "ingest_epoch")
-            .parquet(out)
-      }, None)
+    Streams.runOnce(Streams.sink(vectorStream(s, dir)) { (b, epoch) =>
+      ChainStore.landEpoch(graft.api.Similarity.assignLists(
+        graft.api.Similarity.quantize(withDups(b)), cents), out, epoch, Nil)
+    }, None)
   }
 
   /** STREAMING PQ code-tier maintenance (twin of embed_pq_incremental,
@@ -174,27 +152,24 @@ object CorpusIngest {
     * stream was chopped into batches. */
   def pqIngest(s: SparkSession, dir: String, out: String): Unit = {
     val cents = graft.queries.SimilarityQueries.pqCodebookTable(s, dir)
-    Streams.runOnce(vectorStream(s, dir).writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         epoch: Long) =>
-          val b = batch.toDF()
-          val corpus = b.unionByName(b.filter(col("vec_id") % 100 === 0)
-            .select((col("vec_id") + 1000000L).as("vec_id"),
-              col("embedding")))
-          ChainStore.overwritePartitions(graft.api.Similarity.pqCodes(
-            graft.api.Similarity.quantize(corpus), cents,
-            graft.queries.SimilarityQueries.PqRM,
-            graft.queries.SimilarityQueries.PqRSubDim)
-            .withColumn("ingest_epoch", lit(epoch)), "ingest_epoch")
-            .parquet(out)
-      }, None)
+    Streams.runOnce(Streams.sink(vectorStream(s, dir)) { (b, epoch) =>
+      ChainStore.landEpoch(graft.api.Similarity.pqCodes(
+        graft.api.Similarity.quantize(withDups(b)), cents,
+        graft.queries.SimilarityQueries.PqRM,
+        graft.queries.SimilarityQueries.PqRSubDim), out, epoch, Nil)
+    }, None)
   }
 
   /** The vector stream [[ivfIngest]] and [[pqIngest]] maintain. */
   private def vectorStream(s: SparkSession, dir: String): DataFrame =
     Streams.files(s, dir, "embeddings")
       .select(col("vec_id").cast("long").as("vec_id"), col("embedding"))
+
+  /** A vector micro-batch with the batch corpus's per-row dup injection
+    * (batch-local by construction). */
+  private def withDups(b: DataFrame): DataFrame =
+    b.unionByName(b.filter(col("vec_id") % 100 === 0)
+      .select((col("vec_id") + 1000000L).as("vec_id"), col("embedding")))
 
   /** Streaming heavy-hitter candidate ingest: each micro-batch lands
     * its own bounded Misra-Gries candidate set (≤ k tokens per epoch,
@@ -209,18 +184,11 @@ object CorpusIngest {
     * answer as the one-pass batch query — which is why
     * stream_heavy_hitters shares text_heavy_hitters' oracle. */
   def heavyHitterIngest(s: SparkSession, dir: String, out: String): Unit =
-    Streams.runOnce(Streams.files(s, dir, "documents").select(col("text"))
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         epoch: Long) =>
-          val toks = batch.toDF().select(
-            explode(expr(
-              "filter(split(text, '[^a-z0-9]+'), x -> x != '')"))
-              .as("token"))
-          ChainStore.overwritePartitions(graft.queries.TextQueries
-            .mgCandidates(s, toks)
-            .withColumn("ingest_epoch", lit(epoch)), "ingest_epoch")
-            .parquet(out)
-      }, None)
+    Streams.runOnce(Streams.sink(Streams.files(s, dir, "documents")
+        .select(col("text"))) { (batch, epoch) =>
+      val toks = batch.select(explode(expr(
+        "filter(split(text, '[^a-z0-9]+'), x -> x != '')")).as("token"))
+      ChainStore.landEpoch(graft.queries.TextQueries.mgCandidates(s, toks),
+        out, epoch, Nil)
+    }, None)
 }

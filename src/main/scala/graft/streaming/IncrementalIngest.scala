@@ -1,10 +1,12 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery,
+  Trigger}
 
 import graft.chain.{Chain, ChainStore}
+import graft.queries.EventQueries
 
 /** Incremental-ingest semantics of the reference (SURVEY.md §2.9) on
   * Structured Streaming:
@@ -18,10 +20,11 @@ import graft.chain.{Chain, ChainStore}
   *  - ST4 reorg guard: refuse to continue when the sink is ahead of the
   *    source tip (blocksci_export.py:492-495).
   *
-  * The oracle-checked queries run `ingestToStore` (`foreachBatch` →
+  * The oracle-checked queries run `ingestToStore` ([[Streams.sink]] →
   * dynamic-overwrite partitioned parquet): deterministic per-bucket
   * overwrite makes replays idempotent (ST3). The memory sink survives
-  * only in `newTxsBeyond` as the synchronous in-session demo.
+  * only in the synchronous in-session demos `newTxsBeyond` and
+  * `hourlyEventCounts`.
   */
 object IncrementalIngest {
 
@@ -109,7 +112,7 @@ object IncrementalIngest {
   /** The transaction-ingest source: the orders stream through the SAME
     * projection as the batch path, kept strictly above `watermark`. */
   private def txStream(s: SparkSession, dir: String, watermark: Long,
-      maxFilesPerTrigger: Option[Int] = None): DataFrame =
+      maxFilesPerTrigger: Option[Int]): DataFrame =
     Chain.txProjection(Streams.files(s, dir, "orders", maxFilesPerTrigger))
       .filter(col("block_id") > watermark)
 
@@ -117,25 +120,22 @@ object IncrementalIngest {
     * the source tip are considered final (conf/btc.cfg:20 `maxBlockNum: -6`). */
   val TipMargin = 6L
 
-  /** Source tip as a 1-row static frame (ST4/ST5 input). Stays a
-    * DataFrame end-to-end: the tip is applied via a broadcast stream-
-    * static join, never a driver-side action. */
-  private def tipFrame(s: SparkSession, dir: String): DataFrame =
-    Chain.transactions(s, dir)
-      .agg(max(col("block_id")).as("src_tip")).withColumn("one", lit(1))
-
   /** Confirmation-depth cut (ST5): keep rows at least `tipMargin` blocks
-    * below the source tip, computed distributively (broadcast 1-row tip
-    * dim joined on a constant key — no `.head()` on the driver). Margin
-    * 0 keeps every row at or below the tip, which is every source row —
-    * skip the join entirely. */
-  private def belowTip(df: DataFrame, tip: DataFrame,
-      tipMargin: Long): DataFrame =
-    if (tipMargin == 0L) df
-    else df.withColumn("one", lit(1))
-      .join(broadcast(tip), Seq("one"))
-      .filter(col("block_id") <= col("src_tip") - tipMargin)
-      .drop("one", "src_tip")
+    * below the source tip. The tip stays a 1-row static frame end-to-end,
+    * applied as a broadcast join on a constant key — no `.head()` on the
+    * driver. Margin 0 keeps every row at or below the tip, which is every
+    * source row — no tip is read and no join runs. */
+  private def belowTip(s: SparkSession, dir: String,
+      tipMargin: Long): DataFrame => DataFrame =
+    if (tipMargin == 0L) identity
+    else {
+      val tip = Chain.transactions(s, dir)
+        .agg(max(col("block_id")).as("src_tip")).withColumn("one", lit(1))
+      _.withColumn("one", lit(1))
+        .join(broadcast(tip), Seq("one"))
+        .filter(col("block_id") <= col("src_tip") - tipMargin)
+        .drop("one", "src_tip")
+    }
 
   /** Run the incremental ingest synchronously: stream the orders source,
     * derive tx rows with the SAME projection as the batch path, keep only
@@ -145,12 +145,38 @@ object IncrementalIngest {
   def newTxsBeyond(s: SparkSession, dir: String, watermark: Long,
       tipMargin: Long = 0L): DataFrame = {
     val name = Streams.freshName("inc")
-    Streams.runOnce(belowTip(txStream(s, dir, watermark), tipFrame(s, dir),
-      tipMargin).writeStream.format("memory").queryName(name), None)
+    Streams.runOnce(belowTip(s, dir, tipMargin)(txStream(s, dir, watermark,
+      None)).writeStream.format("memory").queryName(name), None)
     s.table(name)
   }
 
-  /** ST3 production shape: stream → `foreachBatch` → deterministic
+  /** The one transaction-ingest path: [[landingBase]] picks the epoch
+    * base, [[txStream]] through `transform` is the source, and each
+    * micro-batch, cut to the confirmation depth, lands in epoch `base +
+    * batch id` of the store at `out`. `start` runs the writer (its
+    * trigger is the one other difference between the ingests). Returns
+    * the base and what `start` returns. */
+  private def ingestTxs[R](s: SparkSession, dir: String, out: String,
+      watermark: Long, tipMargin: Long, maxFilesPerTrigger: Option[Int],
+      checkpoint: Option[String], epochBase: Long)(
+      transform: DataFrame => DataFrame)(
+      start: DataStreamWriter[Row] => R): (Long, R) = {
+    val base = landingBase(s, out, watermark, checkpoint, epochBase)
+    // ST5 inside the epoch: the margin cut is a broadcast join on the
+    // (static) batch frame — the epoch stays fully distributed
+    val cut = belowTip(s, dir, tipMargin)
+    (base, start(Streams.sink(transform(
+      txStream(s, dir, watermark, maxFilesPerTrigger))) { (batch, epoch) =>
+      ChainStore.writeTransactionsEpoch(cut(batch), out, base + epoch)
+    }))
+  }
+
+  /** The orders stream with every 97th tx re-delivered as an exact
+    * replay — what the dedup ingests must drop. */
+  private def withReplays(tx: DataFrame): DataFrame =
+    tx.unionByName(tx.filter(col("tx_id") % 97 === 0))
+
+  /** ST3 production shape: stream → [[Streams.sink]] → deterministic
     * dynamic overwrite of (bucket, epoch) partitions via the ChainStore
     * sink. Exactly-once per epoch without a transactional sink: an
     * epoch's partition set is a pure function of (its data, its batch
@@ -167,19 +193,9 @@ object IncrementalIngest {
       watermark: Long, tipMargin: Long = 0L,
       maxFilesPerTrigger: Option[Int] = None,
       checkpoint: Option[String] = None,
-      epochBase: Long = 0L): Long = {
-    val base = landingBase(s, out, watermark, checkpoint, epochBase)
-    val tip = tipFrame(s, dir)
-    Streams.runOnce(txStream(s, dir, watermark, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        // ST5 inside the epoch: the margin cut is a broadcast join on the
-        // (static) batch frame — the epoch stays fully distributed.
-        ChainStore.writeTransactionsEpoch(
-          belowTip(batch.toDF(), tip, tipMargin), out, base + epoch)
-      }, checkpoint)
-    base
-  }
+      epochBase: Long = 0L): Long =
+    ingestTxs(s, dir, out, watermark, tipMargin, maxFilesPerTrigger,
+      checkpoint, epochBase)(identity)(Streams.runOnce(_, checkpoint))._1
 
   /** ST4 recovery, step 2 — the full reorg-recovery path the reference
     * operator runs after the guard trips (blocksci_export.py:492-495
@@ -211,16 +227,9 @@ object IncrementalIngest {
     * fine for an AvailableNow catch-up run; a continuously-running
     * deployment uses [[dedupedIngestBounded]]. */
   def dedupedIngest(s: SparkSession, dir: String, out: String,
-      watermark: Long): Unit = {
-    val base = landingBase(s, out, watermark, None, 0L)
-    val tx = txStream(s, dir, watermark)
-    val replayed = tx.unionByName(tx.filter(col("tx_id") % 97 === 0))
-    Streams.runOnce(replayed.dropDuplicates("tx_hash")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        ChainStore.writeTransactionsEpoch(batch.toDF(), out, base + epoch)
-      }, None)
-  }
+      watermark: Long): Unit =
+    ingestTxs(s, dir, out, watermark, 0L, None, None, 0L)(
+      withReplays(_).dropDuplicates("tx_hash"))(Streams.runOnce(_, None))
 
   /** Bounded-state streaming dedup — the continuous-deployment form:
     * event time = the tx timestamp, `delay` of allowed lateness, and
@@ -234,80 +243,61 @@ object IncrementalIngest {
     * StreamingSpec exercises both sides of that boundary. */
   def dedupedIngestBounded(s: SparkSession, dir: String, out: String,
       watermark: Long, delay: String = "1 hour",
-      maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val base = landingBase(s, out, watermark, None, 0L)
-    val tx = txStream(s, dir, watermark, maxFilesPerTrigger)
-    val replayed = tx.unionByName(tx.filter(col("tx_id") % 97 === 0))
-    Streams.runOnce(replayed
-      .withColumn("tsc", timestamp_seconds(col("ts")))
-      .withWatermark("tsc", delay)
-      .dropDuplicatesWithinWatermark("tx_hash")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        ChainStore.writeTransactionsEpoch(batch.drop("tsc"), out, base + epoch)
-      }, None)
-  }
+      maxFilesPerTrigger: Option[Int] = None): Unit =
+    ingestTxs(s, dir, out, watermark, 0L, maxFilesPerTrigger, None, 0L)(
+      withReplays(_)
+        .withColumn("tsc", timestamp_seconds(col("ts")))
+        .withWatermark("tsc", delay)
+        .dropDuplicatesWithinWatermark("tx_hash")
+        .drop("tsc"))(Streams.runOnce(_, None))
 
   /** The SAME ingest query left running: a processing-time trigger
     * instead of AvailableNow, returned as a live handle so the caller
     * owns the lifecycle — new source files are picked up every 500 ms
-    * and land through the identical epoch-keyed sink (SCALE.md's
-    * "same query left running = real-time sync", demonstrated as tested
-    * fact in StreamingSpec). Its private checkpoint is deleted when the
-    * query terminates. */
+    * and land through the identical epoch-keyed sink, with the same ST5
+    * margin cut as the catch-up path (SCALE.md's "same query left
+    * running = real-time sync", demonstrated as tested fact in
+    * StreamingSpec). Its private checkpoint is deleted when the query
+    * terminates. */
   def ingestContinuously(s: SparkSession, dir: String, out: String,
-      watermark: Long, tipMargin: Long = 0L)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      watermark: Long, tipMargin: Long = 0L): StreamingQuery = {
     val ckpt = s"target/tmp/${Streams.freshName("ckpt_cont")}"
-    val base = landingBase(s, out, watermark, Some(ckpt), 0L)
-    val tip = tipFrame(s, dir)
-    Streams.startOwningCheckpoint(s, txStream(s, dir, watermark).writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        // same ST5 margin cut as the batch catch-up path — switching
-        // trigger modes must not silently widen what lands in the store
-        ChainStore.writeTransactionsEpoch(
-          belowTip(batch.toDF(), tip, tipMargin), out, base + epoch)
-      }
-      .trigger(Trigger.ProcessingTime(500L)), ckpt)
+    ingestTxs(s, dir, out, watermark, tipMargin, None, Some(ckpt), 0L)(
+      identity)(w => Streams.startOwningCheckpoint(s,
+        w.trigger(Trigger.ProcessingTime(500L)), ckpt))._2
   }
 
-  /** ONE definition of the watermarked hourly window aggregation over a
-    * streaming events source — counts + decimal-exact sums, the same
-    * Catalyst expressions as the batch `events_window_agg` query, so the
-    * two sinks below provably aggregate identically (the repo's shared-
-    * projection convention, cf. Chain.txProjection). */
+  /** The watermarked hourly window aggregation over a streaming events
+    * source: [[graft.queries.EventQueries.hourlyWindows]], the same
+    * function the batch `events_window_agg` query calls, so the two
+    * sinks below and the batch query aggregate identically (the repo's
+    * shared-projection convention, cf. Chain.txProjection). */
   private def windowedEventAggFrame(s: SparkSession, dir: String)
       : DataFrame = {
-    import org.apache.spark.sql.types.DecimalType
     val stream = Streams.files(s, dir, "events")
-    stream
+    EventQueries.hourlyWindows(stream
       .withColumn("tsc", timestamp_seconds(
         graft.functions.TimeColumns.epochSeconds(stream)))
-      .withWatermark("tsc", "1 hour")
-      .groupBy(window(col("tsc"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast(DecimalType(12, 2))).cast("double")
-          .as("sum_value"))
-      .select(unix_timestamp(col("window.start")).as("hour_ts"),
-        col("event_type"), col("n_events"), col("sum_value"))
+      .withWatermark("tsc", "1 hour"))
   }
 
+  /** Complete-mode `frame` run once into a parquet table at `out` that
+    * each commit overwrites whole, checkpointed beside it. */
+  private def overwriteEachCommit(frame: DataFrame, out: String): Unit =
+    Streams.runOnce(Streams.sink(frame)((batch, _) =>
+      batch.write.mode("overwrite").parquet(out)).outputMode("complete"),
+      Some(s"$out-ckpt"))
+
   /** The windowed aggregation through the PRODUCTION dashboard-sink
-    * path: complete-mode `foreachBatch` overwriting a parquet summary
-    * table per commit — the standard "continuously maintained aggregate
-    * table" deployment, AvailableNow here so the final overwrite equals
-    * the batch answer exactly (it shares the batch `events_window_agg`
+    * path: a complete-mode sink overwriting a parquet summary table per
+    * commit — the standard "continuously maintained aggregate table"
+    * deployment, AvailableNow here so the final overwrite equals the
+    * batch answer exactly (it shares the batch `events_window_agg`
     * oracle). No memory sink, no driver collect; the summary is
     * |windows|×|types| rows, so the per-commit overwrite stays tiny at
     * any input scale. */
   def windowedEventAgg(s: SparkSession, dir: String, out: String): Unit =
-    Streams.runOnce(windowedEventAggFrame(s, dir).writeStream
-      .outputMode("complete")
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         _: Long) =>
-          batch.toDF().write.mode("overwrite").parquet(out)
-      }, Some(s"$out-ckpt"))
+    overwriteEachCommit(windowedEventAggFrame(s, dir), out)
 
   /** The same aggregation run synchronously into a memory sink for
     * test-side parity checks (complete mode so the still-open tail
@@ -327,32 +317,21 @@ object IncrementalIngest {
     * the engine maintains incrementally (an arriving event extends any
     * session whose end it touches, merging neighbors; watermark evicts
     * sessions once no event can reach them). Same complete-mode
-    * foreachBatch overwrite deployment as [[windowedEventAgg]], and
-    * AvailableNow makes the final overwrite equal the batch answer —
-    * it shares `events_sessionize_native`'s oracle, so stream == batch
-    * is driver-proven. Projection mirrors the batch query exactly. */
+    * overwrite deployment as [[windowedEventAgg]], and AvailableNow
+    * makes the final overwrite equal the batch answer — it shares
+    * `events_sessionize_native`'s oracle, so stream == batch is
+    * driver-proven. The aggregation is
+    * [[graft.queries.EventQueries.sessionWindows]], the batch query's
+    * own. */
   def sessionizedEvents(s: SparkSession, dir: String, out: String,
       maxFilesPerTrigger: Option[Int] = None,
       watermarkDelay: String = "1 hour"): Unit = {
     val stream = Streams.files(s, dir, "events", maxFilesPerTrigger)
-    val frame = stream
+    overwriteEachCommit(EventQueries.sessionWindows(stream
+      .withColumn("user_id", col("user_id").cast("long"))
       .withColumn("ets", graft.functions.TimeColumns.epochSeconds(stream))
       .withColumn("tsc", timestamp_seconds(col("ets")))
-      .withWatermark("tsc", watermarkDelay)
-      .groupBy(col("user_id").cast("long").as("user_id"),
-        session_window(col("tsc"), "1800 seconds"))
-      .agg(count(lit(1)).as("n_events"),
-        min(col("ets")).as("session_start"),
-        (max(col("ets")) - min(col("ets"))).as("duration"))
-      .select(col("user_id"), col("session_start"), col("n_events"),
-        col("duration"))
-    Streams.runOnce(frame.writeStream
-      .outputMode("complete")
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         _: Long) =>
-          batch.toDF().write.mode("overwrite").parquet(out)
-      }, Some(s"$out-ckpt"))
+      .withWatermark("tsc", watermarkDelay)), out)
   }
 
   /** Hash-bucket count of the CDC store — the co-partitioning unit a
@@ -368,9 +347,8 @@ object IncrementalIngest {
   /** Write the initial CDC store: keyed rows under hash-bucket
     * partition dirs, the layout [[cdcApply]] prunes and overwrites. */
   def cdcStoreInit(df: DataFrame, store: String): Unit =
-    ChainStore.overwritePartitions(
-      df.withColumn("kb", cdcBucket(col("k"))).repartition(col("kb")), "kb")
-      .parquet(store)
+    ChainStore.clustered(df.withColumn("kb", cdcBucket(col("k"))), Seq("kb"),
+      col("k")).parquet(store)
 
   /** Streaming CDC apply — the lakehouse MERGE run continuously, and
     * BUCKET-SCOPED: each micro-batch of change rows (op = U/D/I,
@@ -386,31 +364,28 @@ object IncrementalIngest {
     * the buckets being read can be rewritten; per-key convergence
     * needs no cross-batch ordering because each key carries at most
     * one op, and replays are idempotent because ops carry absolute
-    * values. foreachBatch runs on a cloned session, so the store read
+    * values. A micro-batch runs on a cloned session, so the store read
     * goes through the batch frame's session. */
   def cdcApply(s: SparkSession, changesDir: String, store: String): Unit =
-    Streams.runOnce(Streams.files(s, changesDir, "changes", Some(1))
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         _: Long) =>
-          val b = batch.toDF().withColumn("kb", cdcBucket(col("k")))
-          val touched = b.select(col("kb")).distinct()
-            .collect().map(_.getLong(0))
-          if (touched.nonEmpty) {
-            val cur = b.sparkSession.read.parquet(store)
-              .filter(col("kb").isin(touched: _*))
-            val merged = cur.join(b, Seq("kb", "k"), "full_outer")
-              .filter(col("op").isNull || col("op") =!= "D")
-              .select(col("kb"), col("k"),
-                when(col("op").isNotNull, col("new_price"))
-                  .otherwise(col("price")).as("price"),
-                when(col("op").isNotNull, col("new_status"))
-                  .otherwise(col("status")).as("status"))
-            ChainStore.overwritePartitions(graft.operators.Materialize
-              .truncate(merged.repartition(col("kb"))), "kb").parquet(store)
-          }
-      }, Some(s"$store-ckpt"))
+    Streams.runOnce(Streams.sink(
+        Streams.files(s, changesDir, "changes", Some(1))) { (batch, _) =>
+      val b = batch.withColumn("kb", cdcBucket(col("k")))
+      val touched = b.select(col("kb")).distinct()
+        .collect().map(_.getLong(0))
+      if (touched.nonEmpty) {
+        val cur = b.sparkSession.read.parquet(store)
+          .filter(col("kb").isin(touched: _*))
+        val merged = cur.join(b, Seq("kb", "k"), "full_outer")
+          .filter(col("op").isNull || col("op") =!= "D")
+          .select(col("kb"), col("k"),
+            when(col("op").isNotNull, col("new_price"))
+              .otherwise(col("price")).as("price"),
+            when(col("op").isNotNull, col("new_status"))
+              .otherwise(col("status")).as("status"))
+        ChainStore.overwritePartitions(graft.operators.Materialize
+          .truncate(merged.repartition(col("kb"))), "kb").parquet(store)
+      }
+    }, Some(s"$store-ckpt"))
 
   /** Per-micro-batch bottom-k (priority, value) quantile samples through
     * the idempotent epoch sink — the streaming face of
@@ -428,15 +403,10 @@ object IncrementalIngest {
     * convention. */
   def quantileSampleIngest(s: SparkSession, dir: String, out: String,
       maxFilesPerTrigger: Option[Int] = None): Unit =
-    Streams.runOnce(Streams.files(s, dir, "events", maxFilesPerTrigger)
-      .select(col("event_id"), col("event_type"), col("value"))
-      .writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-         epoch: Long) =>
-          ChainStore.overwritePartitions(graft.queries.EventQueries
-            .samplePairs(s, batch.toDF())
-            .withColumn("ingest_epoch", lit(epoch)), "ingest_epoch")
-            .parquet(out)
-      }, None)
+    Streams.runOnce(Streams.sink(
+        Streams.files(s, dir, "events", maxFilesPerTrigger)
+          .select(col("event_id"), col("event_type"), col("value"))) {
+      (batch, epoch) => ChainStore.landEpoch(
+        EventQueries.samplePairs(s, batch), out, epoch, Nil)
+    }, None)
 }

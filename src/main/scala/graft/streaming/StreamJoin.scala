@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * pipeline runs (views joined to the purchases they preceded).
   *
   * Results land through the same production sink shape as the ingest
-  * paths: `foreachBatch` → (bucket, epoch)-keyed dynamic-overwrite
+  * paths: [[Streams.sink]] → (bucket, epoch)-keyed dynamic-overwrite
   * parquet — no memory sink, no driver collect; epoch replays are
   * idempotent and distinct epochs sharing a user bucket stay additive.
   *
@@ -68,23 +68,18 @@ object StreamJoin {
     // failure in .start() itself.
     val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
     s.conf.set("spark.sql.shuffle.partitions", "8")
-    try Streams.runOnce(joined.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], epoch: Long) =>
-        writePairsEpoch(batch.toDF(), out, epoch)
-      }, None)
+    try Streams.runOnce(Streams.sink(joined)(writePairsEpoch(_, out, _)),
+      None)
     finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
   }
 
   /** (user bucket, epoch)-keyed dynamic overwrite — same additive/
     * idempotent contract as ChainStore.writeTransactionsEpoch. */
   private def writePairsEpoch(df: DataFrame, out: String, epoch: Long): Unit =
-    graft.chain.ChainStore.overwritePartitions(
-      df.withColumn("user_group", (col("user_id") / 100L).cast("long"))
-        .withColumn("ingest_epoch", lit(epoch))
-        .repartition(col("user_group"))
-        .sortWithinPartitions(col("user_id"), col("purchase_id"),
-          col("view_id")), "user_group", "ingest_epoch")
-      .parquet(s"$out/pairs")
+    graft.chain.ChainStore.landEpoch(
+      df.withColumn("user_group", (col("user_id") / 100L).cast("long")),
+      s"$out/pairs", epoch, Seq("user_group"),
+      col("user_id"), col("purchase_id"), col("view_id"))
 
   /** Store reader (epoch/bucket columns hidden). */
   def readPairs(s: SparkSession, out: String): DataFrame =

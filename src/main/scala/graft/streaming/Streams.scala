@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery,
   StreamingQueryListener, Trigger}
 import org.apache.spark.sql.streaming.StreamingQueryListener._
@@ -8,9 +8,10 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
 /** The run-once lifecycle every catch-up stream shares — Structured
   * Streaming's contract of a run-once trigger, a checkpoint and an
   * idempotent sink (the reference's single `--continue` resume path,
-  * blocksci_export.py:489-505). Sources come from [[files]], runs go
-  * through [[runOnce]]; the sinks' idempotent partition write is
-  * [[graft.chain.ChainStore.overwritePartitions]].
+  * blocksci_export.py:489-505). Sources come from [[files]], every
+  * micro-batch sink is a [[sink]], runs go through [[runOnce]]; the
+  * sinks' idempotent partition writes are
+  * [[graft.chain.ChainStore.overwritePartitions]] and its epoch landing.
   */
 private[graft] object Streams {
 
@@ -30,6 +31,16 @@ private[graft] object Streams {
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     reader.parquet(s"$dir/$table*.parquet")
   }
+
+  /** `frame`'s writer that hands each micro-batch and its batch id to
+    * `write` — the one sink every stream lands through. Replaying a batch
+    * passes the same id again, so a `write` whose output is a function
+    * of (batch, id) is idempotent. */
+  def sink(frame: DataFrame)(write: (DataFrame, Long) => Unit)
+      : DataStreamWriter[Row] =
+    frame.writeStream.foreachBatch { (batch: Dataset[Row], id: Long) =>
+      write(batch, id)
+    }
 
   /** Run `writer` with AvailableNow over everything available, blocking
     * until the query has ended on its own (stopping it while its last

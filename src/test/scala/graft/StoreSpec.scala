@@ -27,6 +27,50 @@ class StoreSpec extends SparkSpec with TempDirs {
       tx.select(sum("tx_id")).as[Long].head())
   }
 
+  test("every bucket file keeps its clustering order: block and " +
+      "block_transactions descend in block_id, transaction ascends in " +
+      "tx_id") {
+    val dir = sf("sf0.01")
+    def files(table: String): Seq[String] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+        else Seq(f).filter(_.getName.endsWith(".parquet"))
+      walk(new java.io.File(table)).map(_.getPath).sorted
+    }
+    // each file read on its own (one file, one partition: row order kept)
+    def assertSorted(table: String, id: String, desc: Boolean): Unit = {
+      val fs = files(table)
+      assert(fs.nonEmpty, s"no parquet file under $table")
+      val unsorted = fs.filterNot { f =>
+        val ids = spark.read.parquet(f).select(col(id).cast("long"))
+          .as[Long].collect().toSeq
+        ids == (if (desc) ids.sorted.reverse else ids.sorted)
+      }
+      assert(unsorted.isEmpty, s"${unsorted.size} of ${fs.size} files " +
+        s"under $table out of $id order: ${unsorted.take(3)}")
+    }
+    val eout = tempDir("clustered_export_")
+    Export.run(spark, Export.Args(config = dir, out = eout))
+    assertSorted(s"$eout/block", "block_id", desc = true)
+    assertSorted(s"$eout/block_transactions", "block_id", desc = true)
+    assertSorted(s"$eout/transaction", "tx_id", desc = false)
+    // a source whose partitions arrive in DESCENDING tx_id order, so a
+    // lost sort cannot hide behind the order the source happens to have
+    // (pinned by a local checkpoint: the optimizer drops an orderBy that
+    // a shuffle follows)
+    val tx = Chain.transactions(spark, dir).orderBy(col("tx_id").desc)
+      .localCheckpoint()
+    val sout = tempDir("clustered_epochs_")
+    ChainStore.writeTransactionsEpoch(tx.filter(col("tx_id") % 2 === 0),
+      sout, 0L)
+    ChainStore.writeTransactionsEpoch(tx.filter(col("tx_id") % 2 === 1),
+      sout, 1L)
+    assertSorted(s"$sout/transaction", "tx_id", desc = false)
+    // compaction merges both epochs of a bucket into one file, in order
+    ChainStore.compactTransactions(spark, sout)
+    assertSorted(s"$sout/transaction", "tx_id", desc = false)
+  }
+
   test("compaction seals an epoch store: same rows, one file per bucket") {
     val dir = sf("sf0.001")
     val cout = tempDir("compact_")

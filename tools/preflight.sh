@@ -12,14 +12,19 @@
 #                             outside Session.scala, and no local[<n>]
 #                             literal anywhere in it: every entry point
 #                             takes its session from Session.local
-#   3. stream lifecycle     — no partitionOverwriteMode in src/main/scala
+#   3. stream lifecycle     — no partitionOverwriteMode,
+#                             sortWithinPartitions( or
+#                             withColumn("ingest_epoch" in src/main/scala
 #                             outside chain/ChainStore.scala, and no
-#                             processAllAvailable() or
-#                             Trigger.AvailableNow() call outside
+#                             foreachBatch, processAllAvailable() or
+#                             Trigger.AvailableNow() outside
 #                             streaming/Streams.scala: run-once streams go
-#                             through Streams.runOnce, partitioned
+#                             through Streams.runOnce, micro-batch sinks
+#                             through Streams.sink, partitioned
 #                             overwrites through
-#                             ChainStore.overwritePartitions
+#                             ChainStore.overwritePartitions, bucketed
+#                             files through ChainStore.clustered and
+#                             epoch landings through ChainStore.landEpoch
 #   4. loop lifecycle       — no Materialize.release( or
 #                             truncateBeforeAction in src/main/scala
 #                             outside operators/{Fixpoint,Materialize,
@@ -94,11 +99,13 @@ then
   fail session
 fi
 
-echo "PREFLIGHT stage 3/12: stream runner and partition overwrite in one place each"
-if grep -rn 'partitionOverwriteMode' src/main/scala --include='*.scala' \
+echo "PREFLIGHT stage 3/12: stream runner, micro-batch sink, partition overwrite, bucket layout and epoch landing in one place each"
+if grep -rnE 'partitionOverwriteMode|sortWithinPartitions\(|withColumn\("ingest_epoch"' \
+    src/main/scala --include='*.scala' \
     | grep -v '^src/main/scala/graft/chain/ChainStore.scala:' ||
-   grep -rnE 'processAllAvailable\(\)|Trigger\.AvailableNow\(\)' src/main/scala \
-    --include='*.scala' | grep -v '^src/main/scala/graft/streaming/Streams.scala:'
+   grep -rnE 'foreachBatch|processAllAvailable\(\)|Trigger\.AvailableNow\(\)' \
+    src/main/scala --include='*.scala' \
+    | grep -v '^src/main/scala/graft/streaming/Streams.scala:'
 then
   fail streams
 fi
