@@ -65,6 +65,53 @@ class ApiSpec extends SparkSpec with TempDirs {
       (0L, 3L, 3L, 3000000L)))
   }
 
+  /** A quantized frame straight from integer components (no float
+    * rounding between the hand arithmetic and the test). */
+  private def intVectors(rows: (Long, Seq[Long])*) =
+    rows.toDF("vec_id", "q")
+      .withColumn("n2", expr("aggregate(q, 0L, (acc, x) -> acc + x * x)"))
+
+  test("Similarity.kmeansCentroids matches hand-computed Lloyd rounds") {
+    // seeds = vec_id < 3: c0 = (0,0), c1 = (10,0), c2 = (0,0)
+    val e = intVectors(0L -> Seq(0L, 0L), 1L -> Seq(10L, 0L),
+      2L -> Seq(0L, 0L), 3L -> Seq(1L, 1L), 4L -> Seq(9L, 3L),
+      5L -> Seq(5L, 1L))
+    def cents(iters: Int) = {
+      val c = Similarity.kmeansCentroids(e, k = 3, iters = iters)
+      assert(c.columns.toSeq === Seq("cent_id", "cq", "cn2"))
+      c.as[(Long, Seq[Long], Long)].collect().toSet
+    }
+    assert(cents(0) === Set((0L, Seq(0L, 0L), 0L), (1L, Seq(10L, 0L), 100L),
+      (2L, Seq(0L, 0L), 0L)))
+    // round 1: vec 2 and vec 3 tie c0/c2 and vec 5 ties all three at
+    // dist² 26 — cent_id breaks every tie, so c2 empties and vanishes.
+    // c0 = floor((0+0+1+5)/4, (0+0+1+1)/4) = (1, 0),
+    // c1 = floor((10+9)/2, (0+3)/2) = (9, 1)
+    assert(cents(1) === Set((0L, Seq(1L, 0L), 1L), (1L, Seq(9L, 1L), 82L)))
+    // round 2: vec 5 moves to c1 (dist² 16 < 17):
+    // c0 = floor(1/3, 1/3) = (0, 0), c1 = floor(24/3, 4/3) = (8, 1)
+    assert(cents(2) === Set((0L, Seq(0L, 0L), 0L), (1L, Seq(8L, 1L), 65L)))
+  }
+
+  test("Similarity.pqTrainedCentroids matches hand-computed Lloyd rounds") {
+    // 2 subspaces of 1 component each, seeds = vec_id < 2:
+    // subspace 0 (x): c0 = 0, c1 = 1; subspace 1 (y): c0 = c1 = 5
+    val e = intVectors(0L -> Seq(0L, 5L), 1L -> Seq(1L, 5L),
+      2L -> Seq(2L, 0L), 3L -> Seq(3L, 7L), 4L -> Seq(10L, 4L))
+    def cents(iters: Int) =
+      Similarity.pqTrainedCentroids(e, k = 2, m = 2, subDim = 1, iters)
+        .as[(Long, Int, Seq[Long], Long)].collect().toSet
+    // round 1, x: {0} → 0 and {1, 2, 3, 10} → 16/4 = 4;
+    // y: every point ties c0/c1, so c1 empties and vanishes and
+    // c0 = floor(21/5) = 4
+    assert(cents(1) === Set((0L, 0, Seq(0L), 0L), (1L, 0, Seq(4L), 16L),
+      (0L, 1, Seq(4L), 16L)))
+    // round 2, x: 2 ties c0 = 0 / c1 = 4 at dist² 4 and goes to c0:
+    // {0, 1, 2} → 1, {3, 10} → floor(13/2) = 6; y stays 4
+    assert(cents(2) === Set((0L, 0, Seq(1L), 1L), (1L, 0, Seq(6L), 36L),
+      (0L, 1, Seq(4L), 16L)))
+  }
+
   test("Similarity.ivfPqShortlist: shortlist ⊆ IVF candidates, " +
       "budget-bounded, ADC-ordered") {
     // 8 vectors in 2 clear clusters (dims 1-2 vs 3-4); 2 IVF lists
