@@ -112,80 +112,101 @@ object Similarity {
       .drop("mask")
 
   /** Deterministic distributed k-means (Lloyd) over a quantized frame:
-    * seed centroids = the first `k` vectors, then `iters` rounds of
-    * assign (broadcast centroid arrays + fused codegen dot product, one
-    * corpus pass) and integer-floor mean update. All arithmetic is
-    * exact, so the trained centroids are reproducible across engines
-    * and cluster sizes. Returns (cent_id, cq, cn2) for [[ivfCandidates]]. */
+    * seed centroids = the vectors with `vec_id < k`, then `iters`
+    * rounds of [[lloyd]] with the whole vector as the one subspace. All
+    * arithmetic is exact, so the trained centroids are reproducible
+    * across engines and cluster sizes. Returns (cent_id, cq, cn2) for
+    * [[ivfCandidates]]. */
   def kmeansCentroids(e: DataFrame, k: Int, iters: Int): DataFrame = {
     require(k >= 1 && iters >= 0, s"bad k=$k / iters=$iters")
-    val ee = e.select(col("vec_id"), posexplode(col("q")).as(Seq("pos", "v")))
-      .withColumn("i", col("pos") + 1).drop("pos")
-    var cents = e.filter(col("vec_id") < k)
-      .select(col("vec_id").as("cent_id"), col("q").as("cq"),
-        col("n2").as("cn2"))
-    for (_ <- 0 until iters) {
-      // argmin as a lexicographic min(struct(dist2, cent_id)): identical
-      // tie-breaking to `ORDER BY dist2, cent_id` but map-side
-      // combinable — the shuffle carries one candidate per (vec,
-      // mapper) instead of sorting every vec × centroid row in a
-      // ranking window
-      val assigned = e.crossJoin(broadcast(cents))
-        .withColumn("dist2", col("n2") + col("cn2") -
-          lit(2L) * VectorFunctions.dot_product_long(col("q"), col("cq")))
-        .groupBy(col("vec_id"))
-        .agg(min(struct(col("dist2"), col("cent_id"))).as("m"))
-        .select(col("vec_id"), col("m.cent_id").as("cent_id"))
-      val updated = ee.join(assigned, Seq("vec_id"))
-        .groupBy(col("cent_id"), col("i"))
+    lloyd(whole(e), asCentroids(whole(e.filter(col("vec_id") < k))), iters)
+  }
+
+  /** A quantized frame as points (vec_id, sq, sn2) of one subspace. */
+  private def whole(e: DataFrame): DataFrame =
+    e.select(col("vec_id"), col("q").as("sq"), col("n2").as("sn2"))
+
+  /** Points (vec_id, [m,] sq, sn2) as centroids (cent_id, [m,] cq, cn2). */
+  private def asCentroids(points: DataFrame): DataFrame =
+    points.withColumnRenamed("vec_id", "cent_id")
+      .withColumnRenamed("sq", "cq").withColumnRenamed("sn2", "cn2")
+
+  /** The subspace key of a points frame: `m` for [[pqSubvectors]], none
+    * for whole vectors. A whole-vector frame carries no constant `m`:
+    * grouping by one would leave its assignments partitioned by
+    * (vec_id, m), and the IVF candidate step would shuffle them again. */
+  private def subspace(points: DataFrame): Seq[String] =
+    points.columns.toSeq.intersect(Seq("m"))
+
+  /** Exact integer squared L2 of every point (vec_id, [m,] sq, sn2) to
+    * every (broadcast) centroid (cent_id, [m,] cq, cn2) of its subspace:
+    * dist² = |sq|² + |cq|² − 2·sq·cq (fused-codegen dot) →
+    * (vec_id, [m,] cent_id, dist2). */
+  private def dists(points: DataFrame, centroids: DataFrame): DataFrame = {
+    val sub = subspace(points)
+    points.join(broadcast(centroids), sub)
+      .withColumn("dist2", col("sn2") + col("cn2") -
+        lit(2L) * VectorFunctions.dot_product_long(col("sq"), col("cq")))
+      .select(("vec_id" +: sub :+ "cent_id" :+ "dist2").map(col): _*)
+  }
+
+  /** Each point's nearest centroid of its subspace → (vec_id, [m,]
+    * cent_id, dist2). The argmin is a lexicographic
+    * min(struct(dist2, cent_id)): the same dist2-then-cent_id tie-break
+    * as `ORDER BY dist2, cent_id`, but map-side combinable — the shuffle
+    * carries one candidate per (point, mapper) instead of sorting every
+    * point × centroid row in a ranking window. Per-point independent
+    * given frozen centroids, which is what makes IVF and PQ index
+    * MAINTENANCE ingest-sized: a new batch assigns against the
+    * broadcast centroids and appends. */
+  private def nearest(points: DataFrame, centroids: DataFrame): DataFrame =
+    dists(points, centroids)
+      .groupBy(("vec_id" +: subspace(points)).map(col): _*)
+      .agg(min(struct(col("dist2"), col("cent_id"))).as("mn"))
+      .withColumn("cent_id", col("mn.cent_id"))
+      .withColumn("dist2", col("mn.dist2")).drop("mn")
+
+  /** `iters` deterministic Lloyd rounds over points (vec_id, [m,] sq,
+    * sn2) from `seeds` (cent_id, [m,] cq, cn2): each round one
+    * assignment pass ([[nearest]]) and one integer-floor mean update per
+    * (centroid, subspace, component). Empty centroids vanish. Each round
+    * is collected into a literal frame: the centroids are k·m rows,
+    * exactly the payload the next round broadcasts anyway, and the
+    * collect severs the lineage, so plan depth stays O(1) in `iters`
+    * instead of re-evaluating every prior round under each broadcast
+    * (the arithmetic is exact, so determinism is unaffected). */
+  private def lloyd(points: DataFrame, seeds: DataFrame,
+      iters: Int): DataFrame = {
+    val s = points.sparkSession
+    val sub = subspace(points)
+    val comps = points.select(("vec_id" +: sub).map(col) :+
+      posexplode(col("sq")).as(Seq("pos", "v")): _*)
+    (0 until iters).foldLeft(seeds) { (cents, _) =>
+      val updated = comps.join(nearest(points, cents), "vec_id" +: sub)
+        .groupBy(("cent_id" +: sub :+ "pos").map(col): _*)
         .agg(expr("CAST(floor(sum(v) / count(*)) AS BIGINT)").as("cv"))
-        .groupBy(col("cent_id"))
-        .agg(transform(array_sort(collect_list(struct(col("i"), col("cv")))),
+        .groupBy(("cent_id" +: sub).map(col): _*)
+        .agg(transform(array_sort(collect_list(struct(col("pos"), col("cv")))),
           x => x.getField("cv")).as("cq"))
         .withColumn("cn2", expr("aggregate(cq, 0L, (acc, x) -> acc + x * x)"))
-      // materialize the round: centroids are k×dim bigints, so collecting
-      // them into a literal frame is a bounded driver action (exactly the
-      // payload the next round broadcasts anyway). Severs the lineage —
-      // plan depth stays O(1) in iters instead of re-evaluating every
-      // prior round under each broadcast; determinism is unaffected since
-      // the arithmetic is exact.
-      val s = e.sparkSession
-      cents = s.createDataFrame(
+      s.createDataFrame(
         s.sparkContext.parallelize(updated.collect().toIndexedSeq, 1),
         updated.schema)
     }
-    cents
   }
 
-  /** IVF candidate generation: every vector joins the inverted list of
-    * its nearest centroid (exact integer L2 via dist² = |v|² + |c|² −
-    * 2·v·c); each query probes its `probes` nearest lists. `centroids`
-    * is (cent_id, cq, cn2) — seed vectors or k-means output — and is
-    * broadcast, so list assignment is one pass over the corpus and the
-    * candidate step is an equi-join on cent_id. */
-  /** Exact integer squared L2 of every row to every (broadcast)
-    * centroid. */
-  private def centroidDists(frame: DataFrame,
-      centroids: DataFrame): DataFrame =
-    frame.crossJoin(broadcast(centroids))
-      .withColumn("dist2", col("n2") + col("cn2") -
-        lit(2L) * VectorFunctions.dot_product_long(col("q"), col("cq")))
-      .select(col("vec_id"), col("cent_id"), col("dist2"))
-
-  /** Inverted-list assignment: each vector to its nearest centroid —
-    * map-side-combinable min(struct) argmin (same dist2-then-cent_id
-    * tie-break as a ranking window, without shuffle-sorting corpus × k
-    * rows). Per-vector independent given frozen centroids, which is
-    * what makes IVF index MAINTENANCE ingest-sized: a new batch
-    * assigns against the broadcast centroids and appends. */
+  /** Inverted-list assignment: each vector to its [[nearest]] centroid
+    * of (cent_id, cq, cn2) — seed vectors or [[kmeansCentroids]]
+    * output, broadcast. */
   def assignLists(e: DataFrame, centroids: DataFrame): DataFrame =
-    centroidDists(e, centroids).groupBy(col("vec_id"))
-      .agg(min(struct(col("dist2"), col("cent_id"))).as("m"))
-      .select(col("vec_id"), col("m.cent_id").as("cent_id"))
+    nearest(whole(e), centroids).select(col("vec_id"), col("cent_id"))
 
+  /** IVF candidate generation: every vector joins the inverted list of
+    * its nearest centroid ([[assignLists]], exact integer L2); each
+    * query probes its `probes` nearest lists, so the candidate step is
+    * an equi-join on cent_id. */
   def ivfCandidates(e: DataFrame, centroids: DataFrame,
       isQuery: Column, probes: Int = 2): DataFrame = {
-    def dists(frame: DataFrame): DataFrame = centroidDists(frame, centroids)
     // list assignment over the FULL corpus
     val lists = assignLists(e, centroids)
       .select(col("vec_id").as("neighbor_id"), col("cent_id"))
@@ -194,7 +215,7 @@ object Similarity {
     // cheaply rather than dragging every corpus row through the sort
     val byVec = Window.partitionBy(col("vec_id"))
       .orderBy(col("dist2"), col("cent_id"))
-    val probeSet = dists(e.filter(isQuery))
+    val probeSet = dists(whole(e.filter(isQuery)), centroids)
       .withColumn("crank", row_number().over(byVec))
       .filter(col("crank") <= probes)
       .select(col("vec_id").as("query_id"), col("cent_id"))
@@ -213,74 +234,35 @@ object Similarity {
         expr(s"slice(q, m * $subDim + 1, $subDim)").as("sq"))
       .withColumn("sn2", expr("aggregate(sq, 0L, (acc, x) -> acc + x * x)"))
 
-  /** Per-subspace PQ codebooks seeded from the first `k` vectors'
-    * subvectors (the same deterministic seed rule as the IVF seed
+  /** Per-subspace PQ codebooks seeded from the subvectors of the vectors
+    * with `vec_id < k` (the same deterministic seed rule as the IVF seed
     * centroids) → (cent_id, m, cq, cn2); k·m rows, always broadcast. */
   def pqCentroids(e: DataFrame, k: Int = 16, m: Int = 4,
       subDim: Int = 16): DataFrame =
-    pqSubvectors(e.filter(col("vec_id") < k), m, subDim)
-      .select(col("vec_id").as("cent_id"), col("m"),
-        col("sq").as("cq"), col("sn2").as("cn2"))
+    asCentroids(pqSubvectors(e.filter(col("vec_id") < k), m, subDim))
 
   /** TRAINED per-subspace PQ codebooks: the [[pqCentroids]] seeds
-    * refined by `iters` deterministic Lloyd rounds, each round one
-    * assignment pass (broadcast codebooks, exact integer L2 argmin
-    * with the dist2-then-cent_id tie-break) and one integer-floor mean
-    * update per (centroid, subspace, component). Same exact-arithmetic
-    * discipline as [[kmeansCentroids]] — bit-identical across engines
-    * and cluster sizes — and the same per-round driver materialization
-    * (k·m codebook rows are exactly the payload the next round
-    * broadcasts). Empty codewords vanish, like empty k-means clusters.
+    * refined by `iters` rounds of the same [[lloyd]] loop k-means runs,
+    * over [[pqSubvectors]] — bit-identical across engines and cluster
+    * sizes. Empty codewords vanish, like empty k-means clusters.
     * Training cost per round is one corpus scan; at 100 TB the
     * codebooks train on a sample and freeze, like the IVF centroids. */
   def pqTrainedCentroids(e: DataFrame, k: Int, m: Int, subDim: Int,
       iters: Int): DataFrame = {
     require(k >= 1 && iters >= 0, s"bad k=$k / iters=$iters")
-    val sub = pqSubvectors(e, m, subDim)
-    val se = sub.select(col("vec_id"), col("m"),
-      posexplode(col("sq")).as(Seq("pos", "v")))
-    var cents = pqCentroids(e, k, m, subDim)
-    for (_ <- 0 until iters) {
-      val assigned = pqDists(sub, cents)
-        .groupBy(col("vec_id"), col("m"))
-        .agg(min(struct(col("dist2"), col("cent_id"))).as("mn"))
-        .select(col("vec_id"), col("m"), col("mn.cent_id").as("cent_id"))
-      val updated = se.join(assigned, Seq("vec_id", "m"))
-        .groupBy(col("cent_id"), col("m"), col("pos"))
-        .agg(expr("CAST(floor(sum(v) / count(*)) AS BIGINT)").as("cv"))
-        .groupBy(col("cent_id"), col("m"))
-        .agg(transform(array_sort(collect_list(struct(col("pos"), col("cv")))),
-          x => x.getField("cv")).as("cq"))
-        .withColumn("cn2", expr("aggregate(cq, 0L, (acc, x) -> acc + x * x)"))
-      val s = e.sparkSession
-      cents = s.createDataFrame(
-        s.sparkContext.parallelize(updated.collect().toIndexedSeq, 1),
-        updated.schema)
-    }
-    cents
+    lloyd(pqSubvectors(e, m, subDim), pqCentroids(e, k, m, subDim), iters)
   }
 
-  /** Exact integer L2 of every subvector to every centroid of its
-    * subspace: dist² = |sq|² + |cq|² − 2·sq·cq (fused-codegen dot). */
-  private def pqDists(sub: DataFrame, cents: DataFrame): DataFrame =
-    sub.join(broadcast(cents), Seq("m"))
-      .withColumn("dist2", col("sn2") + col("cn2") -
-        lit(2L) * VectorFunctions.dot_product_long(col("sq"), col("cq")))
-      .select(col("vec_id"), col("m"), col("cent_id"), col("dist2"))
-
-  /** PQ encode: each vector → its per-subspace nearest-centroid id —
+  /** PQ encode: each vector → its per-subspace [[nearest]] centroid id —
     * `m` small codes instead of `dim` bigints (the 16× compression that
-    * lets a 100 TB corpus ADC-rank from an in-memory code tier). The
-    * argmin is a map-side-combinable min(struct), same tie-break as
-    * `ORDER BY dist2, cent_id`; the shuffle carries (vec_id, m, code)
-    * triples only. Encode once and park (like the dedup band tier) —
-    * every query then starts from the code scan. */
+    * lets a 100 TB corpus ADC-rank from an in-memory code tier); the
+    * shuffle carries (vec_id, m, code) triples only. Encode once and
+    * park (like the dedup band tier) — every query then starts from the
+    * code scan. */
   def pqCodes(e: DataFrame, cents: DataFrame, m: Int = 4,
       subDim: Int = 16): DataFrame =
-    pqDists(pqSubvectors(e, m, subDim), cents)
-      .groupBy(col("vec_id"), col("m"))
-      .agg(min(struct(col("dist2"), col("cent_id"))).as("mn"))
-      .select(col("vec_id"), col("m"), col("mn.cent_id").as("code"))
+    nearest(pqSubvectors(e, m, subDim), cents)
+      .select(col("vec_id"), col("m"), col("cent_id").as("code"))
 
   /** Asymmetric-distance (ADC) top-k: each query's exact distance to
     * every centroid becomes a broadcast lookup table (|queries|·m·k
@@ -289,7 +271,7 @@ object Similarity {
     * decompressed. The per-(query, neighbor) sum is map-side combined
     * (m rows → 1); at 100 TB the candidate set comes from an IVF probe
     * (ivfCandidates) rather than the full corpus, and the final ranking
-    * shuffle can be bounded with TopKAgg exactly like the brute-force
+    * shuffle can be bounded with BottomKAgg exactly like the brute-force
     * twin. Returns (query_id, neighbor_id, rank, adist2) — adist2 is
     * exact integer, so results are engine- and partitioning-independent. */
   def pqAdcTopK(e: DataFrame, cents: DataFrame, isQuery: Column,
@@ -325,7 +307,7 @@ object Similarity {
     val cand = ivfCandidates(e, ivfCents, isQuery, probes)
     val codes = pqCodes(e, pqCents, m, subDim)
       .withColumnRenamed("vec_id", "neighbor_id")
-    val lut = pqDists(pqSubvectors(e.filter(isQuery), m, subDim), pqCents)
+    val lut = dists(pqSubvectors(e.filter(isQuery), m, subDim), pqCents)
       .select(col("vec_id").as("query_id"), col("m"),
         col("cent_id").as("code"), col("dist2").as("pdist2"))
     val w = Window.partitionBy(col("query_id"))
@@ -342,7 +324,7 @@ object Similarity {
   private def pqAdcRanked(e: DataFrame, cents: DataFrame, isQuery: Column,
       m: Int, subDim: Int): DataFrame = {
     val codes = pqCodes(e, cents, m, subDim)
-    val lut = pqDists(pqSubvectors(e.filter(isQuery), m, subDim), cents)
+    val lut = dists(pqSubvectors(e.filter(isQuery), m, subDim), cents)
       .select(col("vec_id").as("query_id"), col("m"),
         col("cent_id").as("code"), col("dist2").as("pdist2"))
     val w = Window.partitionBy(col("query_id"))
@@ -393,13 +375,7 @@ object Similarity {
     * deterministic except the final cosine division. */
   def semDedup(e: DataFrame, centroids: DataFrame,
       threshold: Double): DataFrame = {
-    val assigned = e.crossJoin(broadcast(centroids))
-      .withColumn("dist2", col("n2") + col("cn2") -
-        lit(2L) * VectorFunctions.dot_product_long(col("q"), col("cq")))
-      .groupBy(col("vec_id"))
-      .agg(min(struct(col("dist2"), col("cent_id"))).as("m"))
-      .select(col("vec_id"), col("m.cent_id").as("cent_id"),
-        col("m.dist2").as("dist2"))
+    val assigned = nearest(whole(e), centroids)
     val exemplar = assigned
       .groupBy(col("cent_id"))
       .agg(min(struct(col("dist2"), col("vec_id"))).as("m"))

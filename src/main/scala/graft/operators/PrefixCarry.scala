@@ -31,51 +31,19 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   * input once. On a session with a checkpoint directory configured the
   * pin is a reliable `checkpoint()` (survives executor loss — the
   * cluster-deployment requirement); otherwise an eager local
-  * checkpoint, like every iterative operator here. Callers pass either
-  * a bounded summary (the as-of carries: one row per time bucket) or a
-  * frame that is itself the product being built (the shard manifest,
-  * the shuffle order), where one materialization is the job's cost
-  * anyway.
+  * checkpoint, like every iterative operator here.
   *
-  * Freeing the pin: the `*Carried` variants return the pinned frame
-  * alongside the result, so a caller that materializes the result can
-  * [[Materialize.release]] the input deterministically —
-  * [[Carried.seal]] does both for SMALL results (the as-of carries),
-  * keeping a session that runs many carries storage-flat instead of
-  * GC-dependent. Product-sized consumers keep the lazy result over the
-  * single pinned copy (footprint-optimal: sealing would just swap an
-  * input-sized copy for a result-sized one) and release post-
-  * consumption where a consumption point exists (the parked-tier
-  * builds do; harness-returned query frames free on GC).
+  * Freeing the pin: [[exclusiveCarry]]'s callers pass bounded summaries
+  * (the as-of carries: one row per time bucket), so it returns its
+  * result SEALED — collected into a driver-local relation, with the pin
+  * released at once — and a session running many carries stays
+  * storage-flat instead of GC-dependent. The prefix-sum and rank scans
+  * build products (the shard manifest, the shuffle order) and return
+  * the lazy result over the single pinned copy; a caller that
+  * materializes it frees the pin with [[Materialize.releasePinnedLeaves]]
+  * (the parked-tier builds and the query harness do).
   */
 object PrefixCarry {
-
-  /** A two-phase-scan result plus the operator's pinned input. The
-    * result plan READS the pinned frame — release the pin only after
-    * the result is materialized (written, collected, or sealed). */
-  final case class Carried(result: DataFrame, pinned: DataFrame) {
-
-    /** For SMALL results (bounded summaries): collapse the result to a
-      * driver-local relation, then free the pinned input NOW —
-      * deterministic release instead of waiting for the driver to GC
-      * the operator's checkpoint (on a large heap: possibly never),
-      * and ZERO block-manager residue, so a session running many
-      * carries is storage-flat. The result must fit on the driver —
-      * the same bound its consumers already assume (they `broadcast()`
-      * it), and the returned LocalRelation makes that broadcast a
-      * local no-shuffle build. */
-    def seal(): DataFrame = {
-      val s = result.sparkSession
-      val rows = result.collect() // before release: the plan reads the pin
-      Materialize.release(pinned)
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
-    }
-
-    /** Release the pinned input after the caller has fully consumed
-      * `result` (written it to a table, collected it). The result
-      * plan must not be re-executed afterwards. */
-    def releasePinned(): Unit = Materialize.release(pinned)
-  }
 
   /** Append column `prefix_sum` = the EXCLUSIVE running sum of `value`
     * (long) in `ord` order — the serial cumsum made distributed with
@@ -91,13 +59,7 @@ object PrefixCarry {
     * (ties across the boundary columns would make tied rows' sums
     * partition-placement-dependent). */
   def exclusivePrefixSum(df: DataFrame, ords: Seq[String],
-      value: String): DataFrame =
-    exclusivePrefixSumCarried(df, ords, value).result
-
-  /** [[exclusivePrefixSum]] exposing the pinned input for deterministic
-    * release (see [[Carried]]). */
-  def exclusivePrefixSumCarried(df: DataFrame, ords: Seq[String],
-      value: String): Carried = {
+      value: String): DataFrame = {
     val s = df.sparkSession
     val ordCols = ords.map(col)
     val ranged = Materialize.truncate(df
@@ -125,44 +87,32 @@ object PrefixCarry {
     val wIn = Window.partitionBy(col("__pid"))
       .orderBy(ordCols.map(_.asc): _*)
       .rowsBetween(Window.unboundedPreceding, -1)
-    val result = ranged
+    ranged
       .withColumn("__in",
         coalesce(sum(col(value)).over(wIn), lit(0L)))
       .join(broadcast(base), Seq("__pid"))
       .withColumn("prefix_sum", col("__in") + col("__base"))
       .drop("__pid", "__in", "__base")
-    Carried(result, ranged)
   }
 
   /** Global 1-based rank under the total order `ords` — the terasort
     * primitive (deterministic global positions with NO single-partition
     * sort): an exclusive prefix COUNT plus one. */
   def globalRank(df: DataFrame, ords: Seq[String]): DataFrame =
-    globalRankCarried(df, ords).result
-
-  /** [[globalRank]] exposing the pinned input for deterministic release
-    * (see [[Carried]]). */
-  def globalRankCarried(df: DataFrame, ords: Seq[String]): Carried = {
-    val c = exclusivePrefixSumCarried(
-      df.withColumn("__one", lit(1L)), ords, "__one")
-    Carried(
-      c.result.withColumn("rank", col("prefix_sum") + 1L)
-        .drop("__one", "prefix_sum"),
-      c.pinned)
-  }
+    exclusivePrefixSum(df.withColumn("__one", lit(1L)), ords, "__one")
+      .withColumn("rank", col("prefix_sum") + 1L)
+      .drop("__one", "prefix_sum")
 
   /** Append column `carry` = the latest (backward) / earliest (forward)
     * non-null `payload` over rows strictly before / after the current
     * row in `ord` order. `ord` must be non-null; ties within `ord` are
-    * not supported (callers pass distinct-keyed summaries). */
+    * not supported (callers pass distinct-keyed summaries). The result
+    * is SEALED: collected into a driver-local relation before the
+    * pinned input is released, so it must fit on the driver — the
+    * bound its consumers already assume (they `broadcast()` it, and
+    * the local relation makes that broadcast a no-shuffle build). */
   def exclusiveCarry(df: DataFrame, ord: String, payload: String,
-      forward: Boolean = false): DataFrame =
-    exclusiveCarryCarried(df, ord, payload, forward).result
-
-  /** [[exclusiveCarry]] exposing the pinned input for deterministic
-    * release (see [[Carried]]). */
-  def exclusiveCarryCarried(df: DataFrame, ord: String, payload: String,
-      forward: Boolean = false): Carried = {
+      forward: Boolean = false): DataFrame = {
     val s = df.sparkSession
     val ranged = Materialize.truncate(df
       .repartitionByRange(col(ord))
@@ -205,6 +155,8 @@ object PrefixCarry {
       .join(broadcast(cross), Seq("__pid"), "left")
       .withColumn("carry", coalesce(col("__in"), col("__cross")))
       .drop("__pid", "__in", "__cross")
-    Carried(result, ranged)
+    val rows = result.collect() // before release: the plan reads the pin
+    Materialize.release(ranged)
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), result.schema)
   }
 }

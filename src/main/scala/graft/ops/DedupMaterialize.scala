@@ -104,12 +104,11 @@ object DedupMaterialize {
       // park the manifest, then free the scan's pinned input — the
       // parquet write IS the consumption point, so release is
       // deterministic here (no GC dependence)
-      val c = graft.operators.PrefixCarry.exclusivePrefixSumCarried(
-        toks, Seq("doc_id"), "n_tokens")
-      c.result
+      val manifest = graft.operators.PrefixCarry.exclusivePrefixSum(
+          toks, Seq("doc_id"), "n_tokens")
         .withColumnRenamed("prefix_sum", "stream_offset")
-        .write.mode("overwrite").parquet(root)
-      c.releasePinned()
+      manifest.write.mode("overwrite").parquet(root)
+      graft.operators.Materialize.releasePinnedLeaves(manifest)
     }
     Tier.read(s, root)
   }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.expressions.Window
 
 import graft.chain.Chain.table
 import graft.chain.ChainSql.withCtes
+import graft.functions.BottomKAgg
 
 /** Event-stream analytics over the `events` fixture: JSON extraction,
   * tumbling time-window aggregation, and gap-based sessionization — the
@@ -393,7 +394,7 @@ object EventQueries {
     // mergeable quantile sketch (p50/p90/p99 of `value` per event type)
     // from a DETERMINISTIC hash-priority sample: each row's priority is
     // its 60-bit md5 hash, each group keeps the 256 smallest
-    // (priority, value) pairs via the map-side-bounded BottomKPairsAgg
+    // (priority, value) pairs via the map-side-bounded BottomKAgg
     // — O(k) state per group per mapper however large the group, the
     // same semilattice shape as the KMV sketch, so at 100 TB the
     // per-type sample is parked-tier mergeable and a new batch absorbs
@@ -431,18 +432,31 @@ object EventQueries {
   private[graft] def samplePairs(s: SparkSession, e: DataFrame)
       : DataFrame = {
     import s.implicits._
-    val agg = new graft.functions.BottomKPairsAgg(256)
     e.filter(col("value").isNotNull)
       .select(col("event_type"),
         expr("CAST(conv(substr(md5(CAST(event_id AS STRING)), 1, 15)," +
           " 16, 10) AS BIGINT)").as("p"),
         col("value"))
       .as[(String, Long, Double)]
-      .groupByKey(_._1).mapValues(r => (r._2, r._3))
-      .agg(agg.toColumn.name("sk")).toDF("event_type", "sk")
+      .groupByKey(_._1).mapValues(r => samplePair(r._2, r._3))
+      .agg(new BottomKAgg[(Long, Double)](256).toColumn.name("sk"))
+      .toDF("event_type", "sk")
       .select(col("event_type"), explode(col("sk")).as("pair"))
       .select(col("event_type"), col("pair._1").as("p"),
         col("pair._2").as("v"))
+  }
+
+  /** One (priority, value) sample element, normalized so JVM pair
+    * equality (the sample's distinct set) matches SQL comparison
+    * semantics in the oracle engine: -0.0 folds to 0.0 (equal in SQL,
+    * unequal under Double.equals), and NaN values are refused (SQL's
+    * comparison rules for NaN have no JVM-equality mirror — callers
+    * filter them alongside nulls). */
+  private[graft] def samplePair(p: Long, v: Double): (Long, Double) = {
+    require(!v.isNaN, "NaN value: filter NaN rows before sampling " +
+      "(SQL DISTINCT/comparison semantics for NaN diverge from JVM " +
+      "equality, so the sample would not be engine-portable)")
+    (p, if (v == 0.0) 0.0 else v)
   }
 
   /** Re-prune a union of sample-row frames to the bottom-256 and SELECT
@@ -453,11 +467,11 @@ object EventQueries {
   private[graft] def quantileFromSamples(s: SparkSession,
       rows: DataFrame): DataFrame = {
     import s.implicits._
-    val agg = new graft.functions.BottomKPairsAgg(256)
     rows.select(col("event_type"), col("p"), col("v"))
       .as[(String, Long, Double)]
-      .groupByKey(_._1).mapValues(r => (r._2, r._3))
-      .agg(agg.toColumn.name("sk")).toDF("event_type", "sk")
+      .groupByKey(_._1).mapValues(r => samplePair(r._2, r._3))
+      .agg(new BottomKAgg[(Long, Double)](256).toColumn.name("sk"))
+      .toDF("event_type", "sk")
       .select(col("event_type"),
         size(col("sk")).cast("long").as("n_sample"),
         expr("array_sort(transform(sk, x -> x._2))").as("vals"))

@@ -496,12 +496,11 @@ object RefQueries {
       // cumulative carry over the summary via the two-phase distributed
       // scan (range-partitioned window + one-edge-row-per-partition
       // driver prefix) — no single-partition sort at ANY chain length.
-      // The summary is one row per bucket, so seal(): materialize the
-      // tiny carry and free the operator's pinned input NOW — repeated
-      // as-of queries stay storage-flat instead of GC-dependent
-      val carry = graft.operators.PrefixCarry.exclusiveCarryCarried(
+      // The summary is one row per bucket, so the carry comes back
+      // sealed: repeated as-of queries stay storage-flat
+      val carry = graft.operators.PrefixCarry.exclusiveCarry(
           u.select(col("b")).distinct()
-            .join(perBucket, Seq("b"), "left"), "b", "lastr").seal()
+            .join(perBucket, Seq("b"), "left"), "b", "lastr")
         .select(col("b"), col("carry").getField("usdx16").as("carry_usdx16"))
       inBucket.filter(col("ord") === 1)
         .join(broadcast(carry), Seq("b"), "left")
@@ -535,12 +534,12 @@ object RefQueries {
       val perBucket = pub
         .groupBy(floor(col("block_id") / BlockBucketSize).as("b"))
         .agg(min(struct(col("block_id"), col("usdx16"))).as("firstr"))
-      // suffix carry = the same two-phase scan run forward; seal() as in
-      // rate_asof — bucket-summary-sized result, deterministic release
-      val carry = graft.operators.PrefixCarry.exclusiveCarryCarried(
+      // suffix carry = the same two-phase scan run forward, sealed as
+      // in rate_asof
+      val carry = graft.operators.PrefixCarry.exclusiveCarry(
           u.select(col("b")).distinct()
             .join(perBucket, Seq("b"), "left"), "b", "firstr",
-          forward = true).seal()
+          forward = true)
         .select(col("b"), col("carry").getField("usdx16").as("carry_usdx16"))
       inBucket.filter(col("ord") === 0)
         .join(broadcast(carry), Seq("b"), "left")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.expressions.Window
 
 import graft.chain.Chain.table
 import graft.chain.ChainSql.withCtes
+import graft.functions.{BottomKAgg, ScoredId}
 
 /** Approximate-nearest-neighbor search over the embeddings table.
   *
@@ -145,12 +146,10 @@ object SimilarityQueries {
       .select("query_id", "neighbor_id").distinct()
   }
 
-  /** IVF candidates over the SEED centroids (first 16 vectors). */
+  /** IVF candidates over the SEED centroids (vec_id < 16). */
   private def ivfSeedCandidates(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
-    val cents = e.filter(col("vec_id") < 16)
-      .select(col("vec_id").as("cent_id"), col("q").as("cq"),
-        col("n2").as("cn2"))
+    val cents = graft.api.Similarity.kmeansCentroids(e, k = 16, iters = 0)
     graft.api.Similarity.ivfCandidates(
       e, cents, col("vec_id") % QueryStride === 0, probes = IvfProbes)
   }
@@ -409,7 +408,7 @@ object SimilarityQueries {
     "embed_lsh_multiprobe" -> ((s, dir) =>
       cosTopK(emb(s, dir), multiprobeCandidates(s, dir, MultiProbeBits), 3)),
 
-    // brute-force top-5 again, but through the bounded TopKAgg instead of
+    // brute-force top-5 again, but through the bounded BottomKAgg instead of
     // a ranking window: partial top-k prunes candidates map-side, so the
     // shuffle carries ≤ k rows per (query, mapper) — the 100 TB shape.
     // Shares embed_cosine_topk's oracle → equivalence proven by the
@@ -428,9 +427,9 @@ object SimilarityQueries {
           col("dot").cast("double") / sqrt((col("n2") * col("qn")).cast("double")))
         .select(col("query_id"), col("cos"), col("vec_id"))
         .as[(Long, Double, Long)]
-      val topk = new graft.functions.TopKAgg(5)
+      val topk = new BottomKAgg[ScoredId](5)
       scored.groupByKey(_._1)
-        .mapValues(r => graft.functions.TopKAgg.ScoredId(r._2, r._3))
+        .mapValues(r => ScoredId(r._2, r._3))
         .agg(topk.toColumn.name("top"))
         .flatMap { case (qid, top) =>
           top.iterator.zipWithIndex.map { case (sc, i) =>
@@ -440,7 +439,7 @@ object SimilarityQueries {
         .toDF("query_id", "neighbor_id", "rank", "cos")
     }),
 
-    // IVF-style ANN: 16 deterministic centroids (the first vectors),
+    // IVF-style ANN: 16 deterministic centroids (vec_id < 16),
     // inverted lists by nearest centroid (exact integer L2), queries
     // probe their 2 nearest lists, exact cosine re-rank top-3. The
     // centroid set is where k-means would plug in; the join/shuffle
@@ -810,7 +809,7 @@ object SimilarityQueries {
        |  WHERE rank <= 3)""".stripMargin)
 
   /** Oracle CTE chain for `iters` deterministic Lloyd rounds: seed
-    * centroids cent0 = the first 16 vectors, then per round r the
+    * centroids cent0 = the vectors with vec_id < k, then per round r the
     * argmin assignment (ranked{r} / assign{r}) and the integer-floor
     * mean update (cent{r+1} / cnorm{r+1}); the final ranked{iters}
     * drives the IVF lists/probes. Mirrors Similarity.kmeansCentroids
@@ -867,8 +866,9 @@ object SimilarityQueries {
        |  FROM ${p}probes p JOIN ${p}lists l ON p.cent_id = l.cent_id
        |  WHERE l.neighbor_id != p.query_id)""".stripMargin)
 
-  /** IVF over the first 16 vectors as fixed centroids (the SQL twin of
-    * [[ivfAnn]]): `<p>cdist` → `<p>ranked`, probed by [[ivfProbeCtes]]. */
+  /** IVF over the vectors with vec_id < 16 as fixed centroids (the SQL
+    * twin of [[ivfAnn]]): `<p>cdist` → `<p>ranked`, probed by
+    * [[ivfProbeCtes]]. */
   private def seedIvfCtes(p: String): Seq[String] = Seq(
     s"""${p}cdist AS (
        |  SELECT e.vec_id, c.vec_id AS cent_id,

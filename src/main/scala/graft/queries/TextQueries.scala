@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.api.Text.{inList, predLangCase, Stops}
 import graft.chain.Chain.table
 import graft.chain.ChainSql.{ccWalkCte, withCtes, withRecursiveCtes}
+import graft.functions.{BottomKAgg, ScoredId}
 import graft.ops.TextCorpus.{docWordsSql, shinglesSql}
 
 /** Text-analysis operators for the training-data pipeline: language ID
@@ -302,7 +303,7 @@ object TextQueries {
     * via the map-side-bounded BottomKAgg. */
   private def kmvSketch(s: SparkSession, d: DataFrame): DataFrame = {
     import s.implicits._
-    val agg = new graft.functions.BottomKAgg(64)
+    val agg = new BottomKAgg[Long](64)
     d.select(col("source"), col("h")).as[(String, Long)]
       .groupByKey(_._1).mapValues(_._2)
       .agg(agg.toColumn.name("sk")).toDF("source", "sk")
@@ -825,13 +826,12 @@ object TextQueries {
     // inverted index build (token → posting list): doc_freq over the
     // full corpus plus a TRUNCATED posting segment (first 20 doc ids) —
     // the head segment of the segmented posting tier a search index
-    // materializes. Runs through the bounded PostingHeadAgg: a stopword
-    // token's aggregation buffer is pruned to k map-side, so neither
-    // the row NOR the agg state is unbounded (collect_list + slice
-    // would bound only the row).
+    // materializes. The head runs through the bounded BottomKAgg next to
+    // a count in the same aggregation: a stopword token's aggregation
+    // buffer is pruned to k map-side, so neither the row NOR the agg
+    // state is unbounded (collect_list + slice would bound only the row).
     "inverted_index" -> ((s, dir) => {
       import s.implicits._
-      val agg = new graft.functions.PostingHeadAgg(20)
       docWords(s, dir)
         .select(col("doc_id"),
           explode(expr("filter(split(text, '[^a-z0-9]+'), x -> x != '')"))
@@ -839,10 +839,10 @@ object TextQueries {
         .distinct()
         .select(col("token"), col("doc_id")).as[(String, Long)]
         .groupByKey(_._1).mapValues(_._2)
-        .agg(agg.toColumn.name("o"))
-        .toDF("token", "o")
-        .select(col("token"), col("o.doc_freq").as("doc_freq"),
-          concat_ws(",", transform(col("o.postings"), d => d.cast("string")))
+        .agg(count(lit(1)).as[Long], new BottomKAgg[Long](20).toColumn)
+        .toDF("token", "doc_freq", "postings")
+        .select(col("token"), col("doc_freq"),
+          concat_ws(",", transform(col("postings"), d => d.cast("string")))
             .as("postings_head"))
     }),
 
@@ -1123,7 +1123,7 @@ object TextQueries {
     // md5-uniform in (0,1] (computed as w·2⁶⁰/h on exact integers — one
     // multiply, one divide, bit-identical in both engines), each source
     // keeps its k=10 highest priorities through the map-side-bounded
-    // TopKAgg (≤k+1 rows per mapper reach the shuffle — no per-stratum
+    // BottomKAgg (≤k+1 rows per mapper reach the shuffle — no per-stratum
     // sort of all docs), and the (k+1)-th priority is the threshold τ
     // that makes the sample ESTIMATE subset sums: ŵ = max(w, τ) for
     // included docs is unbiased. The length-weighted doc sample a
@@ -1138,11 +1138,10 @@ object TextQueries {
         .withColumn("priority",
           col("w").cast("double") * lit(M).cast("double")
             / col("h").cast("double"))
-      val agg = new graft.functions.TopKAgg(11)
+      val agg = new BottomKAgg[ScoredId](11)
       val top = docs
         .select(col("source"), col("priority"), col("doc_id"))
-        .map(r => (r.getString(0),
-          graft.functions.TopKAgg.ScoredId(r.getDouble(1), r.getLong(2))))
+        .map(r => (r.getString(0), ScoredId(r.getDouble(1), r.getLong(2))))
         .groupByKey(_._1).mapValues(_._2)
         .agg(agg.toColumn.name("top")).toDF("source", "top")
       top.select(col("source"),

@@ -11,12 +11,9 @@ import graft.operators.PageRank
 class PageRankSpec extends SparkSpec {
   import spark.implicits._
 
-  private def ranks(edges: Seq[(String, String)], iters: Int): Map[String, Long] = {
-    val e = edges.toDF("src", "dst")
-    val n = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-    PageRank.run(n, e, iters).as[(String, Long)].collect().toMap
-  }
+  private def ranks(edges: Seq[(String, String)], iters: Int): Map[String, Long] =
+    PageRank.runFromEdges(edges.toDF("src", "dst"), iters)
+      .as[(String, Long)].collect().toMap
 
   test("star graph matches hand-computed floor arithmetic") {
     // a->b, a->c, b->c: outdeg(a)=2, outdeg(b)=1

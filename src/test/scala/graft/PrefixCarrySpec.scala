@@ -66,7 +66,7 @@ class PrefixCarrySpec extends SparkSpec with TempDirs {
     }
   }
 
-  test("pin takes the RELIABLE checkpoint path under a set dir; seal deletes it") {
+  test("carry under a set checkpoint dir is right and leaves no checkpoint files") {
     CheckpointDirLock.synchronized {
       val sc = spark.sparkContext
       assert(sc.getCheckpointDir.isEmpty,
@@ -74,18 +74,8 @@ class PrefixCarrySpec extends SparkSpec with TempDirs {
       val dir = tempDir("graft_pc_ckpt_")
       try {
         sc.setCheckpointDir(dir)
-        val c = PrefixCarry.exclusiveCarryCarried(fixture, "ord", "payload")
-        val ckptFile = c.pinned.queryExecution.analyzed match {
-          case l: org.apache.spark.sql.execution.LogicalRDD =>
-            l.rdd.getCheckpointFile
-          case other => fail(s"pinned frame is not a LogicalRDD: $other")
-        }
-        assert(ckptFile.isDefined,
-          "with a checkpoint dir set the pin must be a RELIABLE " +
-            "checkpoint (executor loss survivable), not a local one")
-        val sealedCarry = c.seal()
         // correctness is unchanged through the reliable path + seal
-        val got = sealedCarry
+        val got = PrefixCarry.exclusiveCarry(fixture, "ord", "payload")
           .select(col("ord"), col("carry").getField("pv").as("c"))
           .collect().map(r => r.getLong(0) ->
             (if (r.isNullAt(1)) None else Some(r.getLong(1)))).toMap
@@ -93,12 +83,14 @@ class PrefixCarrySpec extends SparkSpec with TempDirs {
           val want = (0L until i).filter(_ % 7 == 0).lastOption.map(_ * 10)
           assert(got(i) === want, s"ord $i")
         }
-        // seal must delete the pin's checkpoint FILES (ContextCleaner
+        // the seal must delete the pin's checkpoint FILES (ContextCleaner
         // never does by default) — the session leaks one rdd-N dir per
         // carry otherwise
-        val p = new org.apache.hadoop.fs.Path(ckptFile.get)
-        assert(!p.getFileSystem(sc.hadoopConfiguration).exists(p),
-          "seal left the pinned input's checkpoint files behind")
+        val ckpt = new java.io.File(new java.net.URI(sc.getCheckpointDir.get))
+        assert(ckpt.isDirectory, s"no checkpoint dir at $ckpt")
+        val left = ckpt.listFiles().toSeq.filter(_.getName.startsWith("rdd-"))
+        assert(left.isEmpty,
+          s"the carry left checkpoint files behind: ${left.mkString(", ")}")
       } finally sc.setCheckpointDir(null)
     }
   }
@@ -106,15 +98,15 @@ class PrefixCarrySpec extends SparkSpec with TempDirs {
   test("sealed carries leave the session storage-flat") {
     val before = spark.sparkContext.getPersistentRDDs.size
     (1 to 5).foreach { _ =>
-      val c = PrefixCarry.exclusiveCarryCarried(fixture, "ord", "payload")
-      assert(c.seal().count() === 200)
+      assert(PrefixCarry.exclusiveCarry(fixture, "ord", "payload")
+        .count() === 200)
     }
     val after = spark.sparkContext.getPersistentRDDs.size
     // ≤, not ==: ContextCleaner may concurrently GC-release OTHER
     // suites' leftovers, shrinking the count below the baseline — the
     // invariant under test is only that sealed carries add nothing
     assert(after <= before,
-      s"${after - before} pinned inputs survived their seal() — " +
+      s"${after - before} pinned inputs survived their seal — " +
         "repeat-invocation sessions would grow with query count")
   }
 

@@ -5,6 +5,7 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 
 import graft.chain.Chain
+import graft.functions.{BottomKAgg, ScoredId}
 
 /** Property-based invariants (SURVEY.md §5): prefix-lookup roundtrip,
   * range-partition conservation, dedup keeps max. Generators are driven
@@ -46,22 +47,21 @@ class PropertySpec extends SparkSpec {
       }
   }
 
-  test("TopKAgg equals sort-and-take under random merges") {
-    import graft.functions.TopKAgg
+  test("BottomKAgg top-k over ScoredId equals sort-and-take under random merges") {
     samples(Gen.listOfN(200,
       Gen.zip(Gen.choose(0, 4), Gen.choose(0.0, 1.0), Gen.choose(0L, 500L))),
       5).foreach { rows0 =>
       val rows = rows0.map { case (g, c, id) => (g.toLong, c, id) }
       val ds = rows.toDF("g", "cos", "id")
         .as[(Long, Double, Long)]
-      val topk = new TopKAgg(3)
+      val topk = new BottomKAgg[ScoredId](3)
       val got = ds.groupByKey(_._1)
-        .mapValues(r => TopKAgg.ScoredId(r._2, r._3))
+        .mapValues(r => ScoredId(r._2, r._3))
         .agg(topk.toColumn.name("top"))
         .collect().toMap
       val want = rows.groupBy(_._1).map { case (g, rs) =>
-        g -> rs.map(r => TopKAgg.ScoredId(r._2, r._3))
-          .sorted(TopKAgg.ord).take(3)
+        g -> rs.map(r => ScoredId(r._2, r._3))
+          .sorted(ScoredId.ord).take(3)
       }
       assert(got.view.mapValues(_.toSeq).toMap === want)
     }
@@ -370,7 +370,7 @@ class PropertySpec extends SparkSpec {
     samples(Gen.zip(setGen, setGen), 8).foreach { case (a, b) =>
       val k = 8
       def bottomK(xs: Seq[Long]): Seq[Long] = {
-        val agg = new graft.functions.BottomKAgg(k)
+        val agg = new BottomKAgg[Long](k)
         xs.toDF("h").as[Long].groupByKey(_ => true).mapValues(identity)
           .agg(agg.toColumn.name("sk")).collect().head._2
       }
@@ -381,13 +381,13 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("BottomKPairsAgg is the k smallest distinct pairs, merge-invariant") {
+  test("BottomKAgg over pairs is the k smallest distinct pairs, merge-invariant") {
     val pairGen = Gen.zip(Gen.choose(0L, 50L), Gen.choose(0, 9).map(_ / 2.0))
     samples(Gen.zip(Gen.listOfN(60, pairGen), Gen.listOfN(60, pairGen)), 8)
       .foreach { case (a, b) =>
         val k = 8
         def bottomK(xs: Seq[(Long, Double)]): Seq[(Long, Double)] = {
-          val agg = new graft.functions.BottomKPairsAgg(k)
+          val agg = new BottomKAgg[(Long, Double)](k)
           xs.toDF("p", "v").as[(Long, Double)]
             .groupByKey(_ => true).mapValues(identity)
             .agg(agg.toColumn.name("sk")).collect().head._2
@@ -403,17 +403,42 @@ class PropertySpec extends SparkSpec {
       }
   }
 
-  test("BottomKPairsAgg folds -0.0 to 0.0 and refuses NaN payloads") {
-    val agg = new graft.functions.BottomKPairsAgg(4)
+  test("quantile sample pairs fold -0.0 to 0.0 and refuse NaN payloads") {
+    val agg = new BottomKAgg[(Long, Double)](4)
+    val pair = graft.queries.EventQueries.samplePair _
     // -0.0 and 0.0 are one pair under SQL comparison — the sample must
     // keep one copy, not two JVM-distinct ones
-    val b = agg.reduce(agg.reduce(agg.zero, (1L, -0.0)), (1L, 0.0))
+    val b = agg.reduce(agg.reduce(agg.zero, pair(1L, -0.0)), pair(1L, 0.0))
     val out = agg.finish(b)
     assert(out === Seq((1L, 0.0)))
     assert(java.lang.Double.doubleToRawLongBits(out.head._2) == 0L,
       "-0.0 normalized to +0.0")
     intercept[IllegalArgumentException] {
-      agg.reduce(agg.zero, (1L, Double.NaN))
+      agg.reduce(agg.zero, pair(1L, Double.NaN))
+    }
+  }
+
+  test("posting head: doc_freq is exact and postings the k smallest ids, " +
+      "whatever the partitioning and merge order") {
+    // the inverted_index aggregation: a count next to the bottom-k ids
+    // over a (token, doc_id) set, at several partitionings and input
+    // orders; every token holds far more than 4k ids, so buffers prune
+    // both map-side and at merge
+    val k = 5
+    samples(Gen.listOfN(400, Gen.zip(Gen.choose(0, 3), Gen.choose(0L, 300L))),
+      4).zipWithIndex.foreach { case (rows0, i) =>
+      val rows = rows0.map { case (t, id) => (s"t${t % (i + 2)}", id) }.distinct
+      val want = rows.groupBy(_._1).map { case (t, rs) =>
+        t -> ((rs.size.toLong, rs.map(_._2).sorted.take(k)))
+      }
+      for (parts <- Seq(1, 3, 7); order <- Seq(rows, rows.reverse)) {
+        val got = order.toDF("token", "doc_id").repartition(parts)
+          .as[(String, Long)]
+          .groupByKey(_._1).mapValues(_._2)
+          .agg(count(lit(1)).as[Long], new BottomKAgg[Long](k).toColumn)
+          .collect().map { case (t, n, ids) => t -> ((n, ids)) }.toMap
+        assert(got === want, s"parts=$parts")
+      }
     }
   }
 

@@ -25,11 +25,18 @@
 #                             ChainStore.overwritePartitions, bucketed
 #                             files through ChainStore.clustered and
 #                             epoch landings through ChainStore.landEpoch
-#   4. loop lifecycle       — no Materialize.release( or
-#                             truncateBeforeAction in src/main/scala
-#                             outside operators/{Fixpoint,Materialize,
+#   4. loop lifecycle and kernels in one place — no
+#                             Materialize.release( or truncateBeforeAction
+#                             in src/main/scala outside
+#                             operators/{Fixpoint,Materialize,
 #                             PrefixCarry}.scala: iterative loops truncate
-#                             and release through operators.Fixpoint
+#                             and release through operators.Fixpoint; no
+#                             `4 * k` buffer bound outside
+#                             functions/BottomKAgg.scala (every bounded
+#                             top/bottom-k is the one BottomKAgg); and at
+#                             most one struct(col("dist2"), col("cent_id"))
+#                             argmin (every nearest-centroid assignment is
+#                             Similarity.nearest)
 #   5. store I/O in one place — no org.apache.hadoop.fs or
 #                             getFileSystem( in src/main/scala outside
 #                             chain/ChainStore.scala: store probes, marker
@@ -110,12 +117,23 @@ then
   fail streams
 fi
 
-echo "PREFLIGHT stage 4/12: loop lifecycle in one place (operators/Fixpoint.scala)"
+echo "PREFLIGHT stage 4/12: loop lifecycle (operators/Fixpoint.scala), bounded k (functions/BottomKAgg.scala) and nearest centroid (api/Similarity.scala) in one place"
 if grep -rnE 'Materialize\.release\(|truncateBeforeAction' src/main/scala \
     --include='*.scala' \
     | grep -vE '^src/main/scala/graft/operators/(Fixpoint|Materialize|PrefixCarry)\.scala:'
 then
   fail loops
+fi
+if grep -rn '4 \* k' src/main/scala --include='*.scala' \
+    | grep -v '^src/main/scala/graft/functions/BottomKAgg.scala:'
+then
+  fail bounded-k
+fi
+argmins=$(grep -rnF 'struct(col("dist2"), col("cent_id"))' src/main/scala \
+  --include='*.scala')
+if [[ $(grep -c . <<< "$argmins") -gt 1 ]]; then
+  echo "$argmins"
+  fail nearest-centroid
 fi
 
 echo "PREFLIGHT stage 5/12: store I/O in one place (chain/ChainStore.scala)"
